@@ -23,7 +23,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -35,6 +34,7 @@ from zacks_estimates_financial_statements_spark.functions import tokenize  # noq
 from zacks_estimates_financial_statements_spark.functions import web  # noqa: E402
 from zacks_estimates_financial_statements_spark.operators import (  # noqa: E402
     curation, dedup, graph, multimodal, similarity, sketches, temporal)
+from zacks_estimates_financial_statements_spark.util import persist  # noqa: E402
 
 DEC = "decimal(38,6)"
 
@@ -2593,8 +2593,6 @@ def q_incremental_cc(spark, sf):
     relabel map touches merged components. The oracle is the full
     transitive closure over ALL documents — the driver thereby attests
     incremental == full recompute."""
-    from pyspark.storagelevel import StorageLevel
-
     docs = _t(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") >= 100)
     batch = docs.filter(F.col("doc_id") < 100)
@@ -2605,9 +2603,9 @@ def q_incremental_cc(spark, sf):
     # jobs before the final probe job runs), so the duplicated
     # shingle→hash→signature lineage was paid in full wall-clock,
     # not parallel-hidden. Persist the index across both; released
-    # via the standard ``release_cache`` hook bench/gates call.
-    index = (dedup.minhash_index(corpus, "doc_id", "text", k=12, bands=4)
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    # when the caller's ``cache_scope`` exits.
+    index = persist(dedup.minhash_index(corpus, "doc_id", "text", k=12,
+                                        bands=4))
     cpairs = dedup.minhash_pairs_from_index(index, "doc_id", k=12)
     cc = graph.connected_components(cpairs)
     # duplicate-id contract: a CC label index is KEYED — one row per
@@ -2630,10 +2628,8 @@ def q_incremental_cc(spark, sf):
                  .join(batch_labels, "node", "left")
                  .select("node", F.coalesce("component", "node")
                          .alias("component")))
-    out = (merged.union(batch_all)
-           .select(F.col("node").alias("doc_id"), "component"))
-    out.release_cache = index.unpersist
-    return out
+    return (merged.union(batch_all)
+            .select(F.col("node").alias("doc_id"), "component"))
 
 
 ORACLE_INCREMENTAL_CC = f"""
@@ -5525,12 +5521,9 @@ def q_bpe_encode(spark, sf):
     # collect materializes it; the encode job reads the cache), so the
     # corpus regex-tokenizes twice (counts + the position-carrying
     # occurrence join) instead of three times.
-    wc = TK.bpe_word_counts(docs, "text").persist(
-        StorageLevel.MEMORY_AND_DISK)
+    wc = persist(TK.bpe_word_counts(docs, "text"))
     merges = TK.bpe_train(docs, "text", n_merges=6, words=wc)
-    out = TK.bpe_encode(docs, "doc_id", "text", merges, words=wc)
-    out.release_cache = wc.unpersist
-    return out
+    return TK.bpe_encode(docs, "doc_id", "text", merges, words=wc)
 
 
 def _oracle_bpe_encode(n_merges: int = 6) -> str:
@@ -5573,13 +5566,10 @@ def q_tokenizer_fertility(spark, sf):
     from zacks_estimates_financial_statements_spark.functions import tokenize as TK
     docs = _t(spark, sf, "documents")
     # same shared word-count relation as q_bpe_encode (r14)
-    wc = TK.bpe_word_counts(docs, "text").persist(
-        StorageLevel.MEMORY_AND_DISK)
+    wc = persist(TK.bpe_word_counts(docs, "text"))
     merges = TK.bpe_train(docs, "text", n_merges=6, words=wc)
     enc = TK.bpe_encode(docs, "doc_id", "text", merges, words=wc)
-    out = TK.tokenizer_fertility(docs, enc, "doc_id", "text", "lang")
-    out.release_cache = wc.unpersist
-    return out
+    return TK.tokenizer_fertility(docs, enc, "doc_id", "text", "lang")
 
 
 def _oracle_tokenizer_fertility() -> str:
@@ -5843,10 +5833,7 @@ def q_fuzzy_match(spark, sf):
                      .alias("dirty_name")))
     pairs = linkage.fuzzy_join(dirty, part.select("p_partkey", "p_name"),
                                "dirty_name", "p_name", max_dist=1)
-    out = linkage.best_match(pairs, "dirty_id", "p_partkey")
-    # propagate fuzzy_join's cache-release hook (r13)
-    out.release_cache = pairs.release_cache
-    return out
+    return linkage.best_match(pairs, "dirty_id", "p_partkey")
 
 
 # r11 Unicode contract: Spark levenshtein counts CODEPOINT edits,
@@ -6763,8 +6750,6 @@ def q_unigram_encode(spark, sf):
     vocab = tokenize.unigram_seed_vocab(docs, "text", vocab_size=20,
                                         max_piece_len=4,
                                         cache_freqs=True)
-    # pass the seed relation itself (not a .select copy) so its
-    # release_cache hook chains through unigram_encode's (r13)
     return tokenize.unigram_encode(docs, "doc_id", "text", vocab)
 
 

@@ -17,14 +17,14 @@ which is the standard way to benchmark Spark plans honestly.
 
 Two more honesty rules (round 8):
 
-- **Cold cache per measurement.** After each timed query the harness
-  calls the query's ``release_cache()`` hook (if any) and clears the
-  catalog cache: Spark's CacheManager matches persisted plans by
-  CANONICALIZED form, so a query that persists internally silently
-  reuses the PREVIOUS pass's cache and its per-pass times form a
-  staircase whose median measures N, not the code (measured:
-  ``perplexity_buckets`` 3.7 → 1.8 → 0.8 s across three passes of one
-  run).
+- **Cold cache per measurement.** Each query runs in its own
+  ``cache_scope()``, which releases every persist the query made, and
+  the catalog cache is cleared after it: Spark's CacheManager matches
+  persisted plans by CANONICALIZED form, so a query that persists
+  internally silently reuses the PREVIOUS pass's cache and its
+  per-pass times form a staircase whose median measures N, not the
+  code (measured: ``perplexity_buckets`` 3.7 → 1.8 → 0.8 s across
+  three passes of one run).
 - **Host-speed probe per pass.** A fixed synthetic workload runs once
   per round-robin pass; its per-pass times ride the JSON
   (``calibration_per_pass``) and the median-vs-baseline ratio is
@@ -262,6 +262,7 @@ def main() -> None:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import cache_scope
     spark = get_spark(app_name="zacks-spark-bench",
                       master=f"local[{cpus}]",
                       extra_conf={"spark.ui.enabled": "false",
@@ -295,11 +296,9 @@ def main() -> None:
     for name in tracked:
         t0 = time.time()
         try:
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            release = getattr(df, "release_cache", None)
-            if release is not None:
-                release()
+            with cache_scope():
+                df = qs[name](spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001 — warm pass is best-effort
             print(f"# warm {name}: FAILED {str(exc)[:120]}",
                   file=sys.stderr)
@@ -319,24 +318,21 @@ def main() -> None:
               f"{cal_per_pass[-1]:.2f}s", file=sys.stderr)
         for name in tracked:
             fn = qs[name]
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
+            with cache_scope():
+                t0 = time.time()
+                df = fn(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                dt = time.time() - t0
             samples[name].append(dt)
             print(f"# pass {it + 1}/{n_iters} {name}: {dt:.2f}s",
                   file=sys.stderr)
             # Honesty: a query must not inherit the previous pass's
-            # caches. Functions with an explicit unpersist contract
-            # (perplexity_buckets, dsir_select) release here; the
-            # catalog clear catches persists without a hook (e.g. an
-            # IVF index built inside the query). Without this, a
-            # cache-carrying query's per-pass times form a staircase
-            # (measured: perplexity_buckets 3.7 -> 1.8 -> 0.8 within
-            # one run) and its median measures N, not the code.
-            release = getattr(df, "release_cache", None)
-            if release is not None:
-                release()
+            # caches. The scope above released the query's persists;
+            # the catalog clear catches anything cached outside it.
+            # Without this, a cache-carrying query's per-pass times
+            # form a staircase (measured: perplexity_buckets 3.7 ->
+            # 1.8 -> 0.8 within one run) and its median measures N,
+            # not the code.
             spark.catalog.clearCache()
     cal_sec = round(statistics.median(cal_per_pass), 3)
 

@@ -1075,25 +1075,6 @@ def test_train_classifier_releases_training_caches(spark):
     assert after - before <= 2, (before, after)
 
 
-def test_dsir_and_perplexity_release_cache_handles(spark):
-    raw, target = _dsir_corpus(spark)
-    sel = curation.dsir_select(raw, target, "doc_id", "text",
-                               n=5, buckets=512)
-    ids = sorted(r["doc_id"] for r in sel.collect())
-    sel.release_cache()
-    # post-release the plan still recomputes correctly, just un-cached
-    assert sorted(r["doc_id"] for r in sel.collect()) == ids
-
-    docs = spark.createDataFrame(
-        [(i, "spark table join filter group " * (1 + i % 3), "en")
-         for i in range(9)],
-        "doc_id bigint, text string, lang string")
-    pb = curation.perplexity_buckets(docs, "doc_id", "text", "lang")
-    n = pb.count()
-    pb.release_cache()
-    assert pb.count() == n
-
-
 # ------------------------------------------------------- temperature mixture
 
 def _tm_corpus(spark):
@@ -1959,23 +1940,21 @@ def test_url_features_panel(spark):
 def test_unigram_caches_match_uncached_and_release(spark):
     """r13 persists: the opt-in freqs cache in unigram_seed_vocab and
     the vocab cache in unigram_encode change no values, and the
-    chained release hook drops them without touching lineage."""
+    enclosing cache_scope drops them without touching lineage."""
     from zacks_estimates_financial_statements_spark.functions import tokenize as TK
+    from zacks_estimates_financial_statements_spark.util import cache_scope
 
     df = spark.createDataFrame(
         [(i, "abab cdcd abcd unk " * (1 + i % 3)) for i in range(12)],
         "doc_id bigint, text string")
     plain = sorted(map(tuple, TK.unigram_seed_vocab(
         df, "text", vocab_size=4, max_piece_len=3).collect()))
-    seed = TK.unigram_seed_vocab(df, "text", vocab_size=4,
-                                 max_piece_len=3, cache_freqs=True)
-    assert sorted(map(tuple, seed.collect())) == plain
-    enc = TK.unigram_encode(df, "doc_id", "text", seed)
-    assert callable(getattr(enc, "release_cache", None))
-    cached_rows = sorted(map(tuple, enc.collect()))
-    enc.release_cache()  # chains: vocab + the seed's freqs
+    with cache_scope():
+        seed = TK.unigram_seed_vocab(df, "text", vocab_size=4,
+                                     max_piece_len=3, cache_freqs=True)
+        assert sorted(map(tuple, seed.collect())) == plain
+        enc = TK.unigram_encode(df, "doc_id", "text", seed)
+        cached_rows = sorted(map(tuple, enc.collect()))
+        assert seed.storageLevel.useMemory   # unigram_encode's vocab cache
+    assert not seed.storageLevel.useMemory
     assert sorted(map(tuple, enc.collect())) == cached_rows
-    # the uncached seed carries no hook
-    assert getattr(TK.unigram_seed_vocab(
-        df, "text", vocab_size=4, max_piece_len=3),
-        "release_cache", None) is None

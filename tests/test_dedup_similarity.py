@@ -1195,19 +1195,3 @@ def test_minhash_pairs_from_index_matches_sweep(docs):
     derived = sorted(map(tuple, dedup.minhash_pairs_from_index(
         index, "doc_id", k=12).collect()))
     assert derived == direct
-
-
-def test_cdc_chunks_release_cache_hook(spark):
-    """r13 persist: cdc_chunks caches its tokenized relation across
-    the winner-resolution and chunking consumers and must expose the
-    standard release hook; rows are identical before and after
-    release (the hook only drops the cache, never the lineage)."""
-    df = spark.createDataFrame(
-        [(i, f"alpha beta w{i} gamma delta epsilon zeta eta theta "
-             f"iota kappa lambda mu nu xi omicron pi rho")
-         for i in range(30)], "doc_id bigint, text string")
-    out = dedup.cdc_chunks(df, "doc_id", "text", w=3, avg_words=4)
-    assert callable(getattr(out, "release_cache", None))
-    cached_rows = sorted(map(tuple, out.collect()))
-    out.release_cache()
-    assert sorted(map(tuple, out.collect())) == cached_rows

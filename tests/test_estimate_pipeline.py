@@ -114,3 +114,17 @@ def test_eps_history_conflict_keeps_first(spark, stores):
     assert all(r["reported"] != Decimal("9.990000") for r in hist)
     # but rank_score gets a second snapshot (date in PK)
     assert stores["rank_score"].read().count() == 2
+
+
+def test_failed_upsert_releases_loader_caches(spark, stores):
+    """A write that raises mid-fan-out must not leave the loader's
+    persisted batches cached for the rest of the session."""
+    from zacks_estimates_financial_statements_spark.operators.writer import (
+        ConcurrentWriteError,
+    )
+    parsed = _parsed(spark, [("AAPL", D(2025, 1, 15), estimate_page())])
+    spark.catalog.clearCache()
+    with stores["eps_history"].write_lock():   # another writer holds it
+        with pytest.raises(ConcurrentWriteError):
+            pipe.load_estimates(parsed, stores)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

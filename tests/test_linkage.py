@@ -50,19 +50,3 @@ def test_best_match_deterministic_fold(spark):
     got = {r["did"]: (r["cid"], r["dist"], r["n_candidates"])
            for r in linkage.best_match(pairs, "did", "cid").collect()}
     assert got == {1: (11, 1, 3), 2: (20, 0, 1)}
-
-
-def test_fuzzy_join_release_cache_hook(spark):
-    """r13 persist: fuzzy_join caches its distinct-key relations and
-    the matched pair set (each referenced 2-3x in the final join) and
-    must expose the standard release hook; rows are identical before
-    and after release (the hook only drops caches, never lineage)."""
-    dirty = spark.createDataFrame(
-        [(i * 10, n[:-1]) for i, n in enumerate(CLEAN)],
-        "did long, dname string")
-    pairs = linkage.fuzzy_join(dirty, _clean_df(spark), "dname", "cname",
-                               max_dist=1)
-    assert callable(getattr(pairs, "release_cache", None))
-    cached_rows = sorted(map(tuple, pairs.collect()))
-    pairs.release_cache()
-    assert sorted(map(tuple, pairs.collect())) == cached_rows

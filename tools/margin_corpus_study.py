@@ -2,8 +2,9 @@
 the measured backing for "candidate tiers pluggable" beyond
 broadcast-sized query sides (round-8 verdict ask #5).
 
-The round-7 study (tools/margin_study.py) proved RESULT quality of
-IVF-fed margins with 30 broadcast-sized queries; this one proves the
+The round-7 study (PERFORMANCE.md, "margin_topk with ANN candidates")
+proved RESULT quality of IVF-fed margins with 30 broadcast-sized
+queries; this one proves the
 SCALE path: the query side is a full corpus-sized relation (the
 testdata embeddings ×1 at sf0.1, ×10 via the synth-scale recipe —
 re-id'd, per-copy sign-perturbed so copies are near but not equal),

@@ -3,7 +3,9 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet tables; compares row count, column names,
 and an order-insensitive value hash (columns sorted by name, rows sorted,
-values canonicalized to strings).
+values canonicalized to strings). Each query runs in one
+``util.cache_scope()``; a query that leaves anything in the CacheManager
+after its scope exits fails with ``cache leak``.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...] [--json OUT]
 
@@ -104,6 +106,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import cache_scope
     extra = {"spark.ui.enabled": "false",
              "spark.ui.showConsoleProgress": "false"}
     # Honored for oversized runs only (the synth-sf1 attestation OOMs
@@ -167,13 +170,19 @@ def main() -> int:
                          "oracle_rows": oracle_rows,
                          "err": err, "mode": mode}
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()   # start the battery from an empty cache
     for name in names:
         t0 = time.time()
-        sdf = None
         try:
-            sdf = qs[name](spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            with cache_scope():
+                sdf = qs[name](spark, sf_dir)
+                srows = [tuple(r) for r in sdf.collect()]
+                scols = sdf.columns
+            # leak gate: every persist a query makes must go through
+            # util.persist so its scope releases it; one that bypasses
+            # the helper is still cached here
+            leaked = not cache_manager.isEmpty()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {str(exc)[:300]}")
             record(name, err=f"spark: {str(exc)[:200]}")
@@ -181,16 +190,15 @@ def main() -> int:
             continue
         finally:
             # bench.py's honesty rule, applied to the battery too: a
-            # query must not leave its internal persist registered for
-            # a LATER query's canonically-equal subtree to silently
-            # reuse (CacheManager matches by canonicalized plan)
-            release = getattr(sdf, "release_cache", None)
-            if release is not None:
-                try:
-                    release()
-                except Exception:  # noqa: BLE001
-                    pass
+            # query must not leave a persist registered for a LATER
+            # query's canonically-equal subtree to silently reuse
+            # (CacheManager matches by canonicalized plan)
             spark.catalog.clearCache()
+        if leaked:
+            print(f"FAIL {name}: cache leak")
+            record(name, spark_rows=len(srows), err="cache leak")
+            failures += 1
+            continue
         if name not in osql:
             print(f"SKIP {name}: no oracle (rows={len(srows)})")
             record(name, rows_match=len(srows) >= 0,

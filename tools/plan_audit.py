@@ -264,6 +264,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import cache_scope
     spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
                       extra_conf={"spark.ui.enabled": "false",
                                   "spark.ui.showConsoleProgress": "false"})
@@ -271,10 +272,10 @@ def main() -> int:
     rows = []
     bad = 0
     for name, fn in mod.queries().items():
-        df = None
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            with cache_scope():
+                df = fn(spark, sf_dir)
+                plan = df._jdf.queryExecution().executedPlan().toString()
             a = audit(plan, name)
         except Exception as exc:  # noqa: BLE001
             a = {"bhj": "-", "smj": "-", "bnlj": "-", "exchanges": "-",
@@ -284,12 +285,6 @@ def main() -> int:
             # drop per-query persist registrations so a later query's
             # canonically-equal subtree is audited as its REAL plan,
             # not as an InMemoryTableScan of this query's cache
-            release = getattr(df, "release_cache", None)
-            if release is not None:
-                try:
-                    release()
-                except Exception:  # noqa: BLE001
-                    pass
             spark.catalog.clearCache()
         if a["flags"] != "-":
             bad += 1

@@ -87,6 +87,7 @@ def main() -> int:
     bench_spec.loader.exec_module(bench)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import cache_scope
     extra = {"spark.ui.enabled": "false",
              "spark.ui.showConsoleProgress": "false",
              # headroom for the synthesized-sf1 decade; the
@@ -121,18 +122,13 @@ def main() -> int:
         med = {}
         for sf in (args.small, args.big):
             def force():
-                df = qs[name](spark, sf)
-                df.write.format("noop") \
-                    .mode("overwrite").save()  # full eval, no count-pruning
+                with cache_scope():
+                    df = qs[name](spark, sf)
+                    df.write.format("noop") \
+                        .mode("overwrite").save()  # full eval, no count-pruning
                 # bench.py's per-pass honesty rule: release internal
                 # persists or pass N measures pass N-1's cache
                 # (CacheManager matches canonicalized plans)
-                release = getattr(df, "release_cache", None)
-                if release is not None:
-                    try:
-                        release()
-                    except Exception:  # noqa: BLE001
-                        pass
                 spark.catalog.clearCache()
             force()  # warm (plan + page cache)
             ts = []
@@ -172,14 +168,9 @@ def main() -> int:
         print("|---|---|---|---|")
         for name in names:
             def force_low():
-                df = qs[name](low, args.big)
-                df.write.format("noop").mode("overwrite").save()
-                release = getattr(df, "release_cache", None)
-                if release is not None:
-                    try:
-                        release()
-                    except Exception:  # noqa: BLE001
-                        pass
+                with cache_scope():
+                    df = qs[name](low, args.big)
+                    df.write.format("noop").mode("overwrite").save()
                 low.catalog.clearCache()
             force_low()   # warm
             ts = []

@@ -69,6 +69,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import cache_scope
     spark = get_spark(
         app_name="shuffle-audit",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
@@ -99,27 +100,21 @@ def main() -> int:
     rows, flagged = {}, []
     for name in names:
         before = {(s["stageId"], s["attemptId"]) for s in stages()}
-        df = None
         try:
-            t0 = time.time()
-            df = qs[name](spark, args.sf_dir)
-            df.write.format("noop") \
-                .mode("overwrite").save()  # full eval, no count-pruning
-            wall = time.time() - t0
+            with cache_scope():
+                t0 = time.time()
+                df = qs[name](spark, args.sf_dir)
+                df.write.format("noop") \
+                    .mode("overwrite").save()  # full eval, no count-pruning
+                wall = time.time() - t0
         except Exception as exc:  # noqa: BLE001
             rows[name] = {"err": str(exc)[:120]}
             flagged.append((name, "ERR"))
             continue
         finally:
-            # per-query honesty (bench.py's rule): release internal
-            # persists so no later query's shuffle numbers are measured
-            # against this query's leftover cache
-            release = getattr(df, "release_cache", None)
-            if release is not None:
-                try:
-                    release()
-                except Exception:  # noqa: BLE001
-                    pass
+            # per-query honesty (bench.py's rule): no later query's
+            # shuffle numbers are measured against this query's
+            # leftover cache
             spark.catalog.clearCache()
         time.sleep(0.3)
         inb = shw = spill = inr = shr = 0

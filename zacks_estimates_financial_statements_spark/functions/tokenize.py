@@ -33,9 +33,9 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions.text import simple_lower
+from zacks_estimates_financial_statements_spark.util import cache_scope, persist
 
 UNK = "<unk>"
 
@@ -413,9 +413,9 @@ def unigram_seed_vocab(df: DataFrame, text_col: str,
     # at sf0.1 (measured +0.5 s: the parallel replays hide behind
     # local cores while the cache write/read cost is fixed) — callers
     # that re-reference the vocab (unigram_encode, unigram_train)
-    # enable it and release via the standard ``release_cache`` hook.
+    # enable it; the caller's ``cache_scope`` releases it.
     if cache_freqs:
-        freqs = freqs.persist(StorageLevel.MEMORY_AND_DISK)
+        freqs = persist(freqs)
     chars = freqs.filter(F.length("piece") == 1)
     multi = (freqs.filter(F.length("piece") >= 2)
              .orderBy(F.col("freq").desc(), F.col("piece"))
@@ -426,8 +426,6 @@ def unigram_seed_vocab(df: DataFrame, text_col: str,
            .select("piece", "freq",
                    F.round(-F.log(F.col("freq") / F.col("__tot")), 6)
                    .alias("cost")))
-    if cache_freqs:
-        out.release_cache = freqs.unpersist
     return out
 
 
@@ -475,7 +473,7 @@ def unigram_encode(df: DataFrame, id_col: str, text_col: str,
     # (max-piece-length probe + both candidate legs); cache it so its
     # lineage — which may itself scan the corpus, e.g. a seed vocab —
     # is evaluated exactly once, at the eager probe below (r13)
-    vocab = vocab.persist(StorageLevel.MEMORY_AND_DISK)
+    vocab = persist(vocab)
     max_l = vocab.agg(F.max(F.length("piece"))).collect()[0][0] or 1
     pieces = _viterbi_pieces(dw, vocab, float(unk_cost), int(max_l))
     joined = w.join(pieces, w["__w"] == pieces["w"]).drop("w")
@@ -489,14 +487,6 @@ def unigram_encode(df: DataFrame, id_col: str, text_col: str,
                    F.coalesce("pieces", F.array().cast("array<string>"))
                    .alias("pieces"))
            .withColumn("n_pieces", F.size("pieces")))
-    vocab_release = getattr(vocab, "release_cache", None)
-
-    def _release() -> None:
-        vocab.unpersist()
-        if vocab_release is not None:
-            vocab_release()
-
-    out.release_cache = _release
     return out
 
 
@@ -622,15 +612,13 @@ def unigram_train(df: DataFrame, text_col: str, vocab_size: int = 200,
     words = mat(w.groupBy("__w").agg(F.count("*").alias("__wf")))
     dw = (words.select(F.col("__w").alias("w"), F.col("__wf"))
           .withColumn("n", F.length("w")))
-    seed = unigram_seed_vocab(df, text_col, vocab_size, max_piece_len,
-                              cache_freqs=True)
-    vocab = mat(seed.select("piece", F.col("freq").alias("count"),
-                            "cost"))
-    seed_release = getattr(seed, "release_cache", None)
-    if seed_release is not None:
-        # the eager checkpoint above just evaluated the seed exactly
-        # once; its internal cache has no further consumer
-        seed_release()
+    # the eager checkpoint evaluates the seed exactly once; its
+    # internal cache has no further consumer once the scope exits
+    with cache_scope():
+        seed = unigram_seed_vocab(df, text_col, vocab_size,
+                                  max_piece_len, cache_freqs=True)
+        vocab = mat(seed.select("piece", F.col("freq").alias("count"),
+                                "cost"))
     for _ in range(n_iters):
         segs = _viterbi_pieces(dw.select("w", "n"), vocab,
                                unk_cost=1e9, max_l=max_piece_len)

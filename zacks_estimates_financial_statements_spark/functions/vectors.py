@@ -59,11 +59,6 @@ def euclidean(a: Column, b: Column) -> Column:
     )
 
 
-def mean_component(a: Column) -> Column:
-    """Mean of the vector's components (used for cheap LSH-style bucketing)."""
-    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double")) / F.size(a)
-
-
 def sign_bits(a: Column, dims: int) -> Column:
     """First-``dims`` sign bits packed into a bigint — a trivial random-
     hyperplane-free SRP sketch usable as an LSH bucket key (components of a
@@ -143,12 +138,6 @@ def cosine_fast(a: str, b: str, dims: int = EMB_DIMS) -> Column:
             f"SQRT({_normsq_fold(a)}) * SQRT({_normsq_fold(b)}), 0.0D)")
     return F.expr(f"CASE WHEN size({a}) = {dims} AND size({b}) = {dims} "
                   f"THEN {flat} ELSE {fold} END")
-
-
-def dot_fast(a: str, b: str, dims: int = EMB_DIMS) -> Column:
-    """``dot`` over SQL fragments, flat when both arrays are ``dims``."""
-    return F.expr(f"CASE WHEN size({a}) = {dims} AND size({b}) = {dims} "
-                  f"THEN {_dot_flat(a, b, dims)} ELSE {_dot_fold(a, b)} END")
 
 
 def norm_sql(a: str, dims: int = EMB_DIMS) -> str:

@@ -31,10 +31,3 @@ def write_bucketed(df: DataFrame, table: str, key: list[str],
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
-
-
-def join_is_shuffle_free(joined: DataFrame) -> bool:
-    """True when the executed plan contains no Exchange under the join —
-    the bucketing contract held (used by tests and plan audits)."""
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" not in plan

@@ -27,11 +27,10 @@ from __future__ import annotations
 from typing import Iterable, Mapping
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions.text import simple_lower
 from zacks_estimates_financial_statements_spark.operators.dedup import hash60
-from zacks_estimates_financial_statements_spark.util import dec6
+from zacks_estimates_financial_statements_spark.util import cache_scope, dec6, persist
 
 #: bucket resolution for hash-based assignment: the keyed 60-bit hash is
 #: reduced mod 1e6, so split weights / sample fractions are honored to
@@ -1074,11 +1073,11 @@ def bigram_lm_perplexity(df: DataFrame, id_col: str, text_col: str,
     # each of which would otherwise replay the regex tokenize — the
     # most expensive projection in the lineage. Persist it once (r14,
     # the kn_perplexity single-scan pattern); the downstream bigram /
-    # posexplode derivations replay from the cache. Released via the
-    # output's ``release_cache`` hook (chained by perplexity_buckets).
-    toks = (df.select(F.col(id_col), _word_array(text_col).alias("__t"))
-            .filter(F.size("__t") >= 2)
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    # posexplode derivations replay from the cache. Released when the
+    # caller's ``cache_scope`` exits.
+    toks = persist(df.select(F.col(id_col),
+                             _word_array(text_col).alias("__t"))
+                   .filter(F.size("__t") >= 2))
     n1 = F.size("__t") - 1
     # explode_OUTER everywhere below: the >= 2 filter already
     # guarantees non-empty arrays, and plain explode triggers
@@ -1116,7 +1115,6 @@ def bigram_lm_perplexity(df: DataFrame, id_col: str, text_col: str,
            .agg(F.count("*").alias("n_bigrams"),
                 F.round(F.exp(F.sum("__nll").cast("double")
                               / F.count("*")), 6).alias("ppl")))
-    out.release_cache = toks.unpersist
     return out
 
 
@@ -1166,16 +1164,14 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
     # job) and then the probe — so without a persist the regex-heavy
     # tokenize → bigram lineage replays per consumer. Persist it once;
     # the model side projects (w1, w2) from the cache, the probe reads
-    # (id, w1, w2). Released via the output's ``release_cache`` hook
-    # (bench and every gate tool call it per query).
-    bi = (toks.select(
+    # (id, w1, w2). Released when the caller's ``cache_scope`` exits.
+    bi = persist(toks.select(
         F.col(id_col),
         F.explode_outer(F.arrays_zip(
             F.slice("__t", 1, n1).alias("w1"),
             F.slice("__t", 2, n1).alias("w2"))).alias("__b"))
         .select(F.col(id_col), F.col("__b.w1").alias("w1"),
-                F.col("__b.w2").alias("w2"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+                F.col("__b.w2").alias("w2")))
     # ONE corpus aggregation feeds every model (r13, third-decade
     # exponent fix): the bigram-TYPE relation C(w1 w2) determines all
     # four KN count models exactly — C(w1 ·) = Σ_w2 C(w1 w2) (a token
@@ -1225,7 +1221,6 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
            .agg(F.count("*").alias("n_bigrams"),
                 F.round(F.exp(F.sum("__nll").cast("double")
                               / F.count("*")), 6).alias("ppl")))
-    out.release_cache = bi.unpersist
     return out
 
 
@@ -1573,9 +1568,10 @@ def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
 
     raw_part = (raw.select(F.col(id_col), F.col(text_col))
                 .repartition(F.col(id_col)))
-    feats = (grams(raw_part).groupBy(id_col, "bucket")
-             .agg(F.count("*").alias("__c"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    # the lazy result reads the persisted ``feats`` until the caller's
+    # ``cache_scope`` exits; recomputation after that stays correct
+    feats = persist(grams(raw_part).groupBy(id_col, "bucket")
+                    .agg(F.count("*").alias("__c")))
     raw_tot = feats.groupBy("bucket").agg(F.sum("__c").alias("__cr"))
     tgt_tot = grams(target).groupBy("bucket").agg(
         F.count("*").alias("__ct"))
@@ -1607,11 +1603,6 @@ def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
             "key", F.round(F.col("log_weight") + F.col("gumbel"), 6))
     out = scored if n is None else \
         scored.orderBy(F.col("key").desc(), F.col(id_col)).limit(n)
-    # The lazy result still reads the persisted ``feats``: its blocks
-    # live until the caller is done with the selection. Call
-    # ``out.release_cache()`` then (the ANN index's unpersist
-    # contract) — recomputation stays correct, just un-cached.
-    out.release_cache = feats.unpersist
     return out
 
 
@@ -1647,18 +1638,15 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
     reuse a subtree consumed by two differently-shaped sinks, so
     without it the whole LM-scoring plan — the most expensive stage —
     executes twice (once for the cuts, once for the labeling join).
-    The returned labels read the same cache; call
-    ``out.release_cache()`` when done with the bucketing (the ANN
-    index's unpersist contract).
+    The returned labels read the same cache until the caller's
+    ``cache_scope`` exits.
     """
     q1, q2 = cuts
     if not 0.0 <= q1 < q2 <= 1.0:
         raise ValueError(f"cuts must satisfy 0 <= q1 < q2 <= 1: {cuts}")
     ppl = bigram_lm_perplexity(df, id_col, text_col, alpha=alpha)
-    ppl_release = getattr(ppl, "release_cache", None)
-    scored = (ppl.join(df.select(F.col(id_col), F.col(strata_col)),
-                       id_col)
-              .persist(StorageLevel.MEMORY_AND_DISK))
+    scored = persist(ppl.join(df.select(F.col(id_col), F.col(strata_col)),
+                              id_col))
     agg1 = F.percentile("ppl", q1) if exact else \
         F.percentile_approx("ppl", q1)
     agg2 = F.percentile("ppl", q2) if exact else \
@@ -1674,13 +1662,6 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
                    .when(F.col("ppl") <= F.col("middle_cut"),
                          F.lit(mid))
                    .otherwise(F.lit(hi)).alias("bucket")))
-
-    def _release(blocking: bool = False) -> None:
-        scored.unpersist(blocking)
-        if ppl_release is not None:   # chain the LM's token cache
-            ppl_release(blocking)
-
-    out.release_cache = _release
     return out
 
 
@@ -1762,72 +1743,64 @@ def train_quality_classifier(df: DataFrame, id_col: str, text_col: str,
     # tokenized the corpus twice (labels and feats each replayed the
     # base lineage); this shape pays one exchange and one tokenization
     # (measured 4.2 → 2.0 s at sf0.1, values identical).
-    fp = F.md5(F.encode(F.concat_ws(" ", "__t"), "UTF-8"))
-    base = (df.select(F.col(id_col),
-                      _word_array(text_col).alias("__t"),
+    # The returned weights are an eager localCheckpoint, so they no
+    # longer reference the training caches: the scope releases all of
+    # them on return.
+    with cache_scope():
+        fp = F.md5(F.encode(F.concat_ws(" ", "__t"), "UTF-8"))
+        base = persist(
+            df.select(F.col(id_col), _word_array(text_col).alias("__t"),
                       F.col(label_col).cast("double").alias("__y"))
             .filter(F.size("__t") > 0)
             .withColumn("__fp", fp)
             .groupBy(id_col)
             .agg(F.min(F.struct("__fp", "__y", "__t")).alias("__m"))
             .select(F.col(id_col), F.col("__m.__t").alias("__t"),
-                    F.col("__m.__y").alias("__y"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    labels = (base.select(id_col, "__y")
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    feats = (base.select(F.col(id_col), F.size("__t").alias("__n"),
-                         F.explode("__t").alias("__tok"))
-             .select(F.col(id_col), "__n",
-                     (hash60(F.col("__tok")) % F.lit(dim))
-                     .alias("bucket"))
-             .groupBy(id_col, "bucket", "__n")
-             .agg(F.count("*").alias("__c"))
-             .select(F.col(id_col), "bucket",
-                     _r6(F.col("__c") / F.col("__n")).alias("__x"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    n_docs = labels.count()
-    if n_docs == 0:
-        # Eager empty result so ALL caches release here too.
+                    F.col("__m.__y").alias("__y")))
+        labels = persist(base.select(id_col, "__y"))
+        feats = persist(
+            base.select(F.col(id_col), F.size("__t").alias("__n"),
+                        F.explode("__t").alias("__tok"))
+            .select(F.col(id_col), "__n",
+                    (hash60(F.col("__tok")) % F.lit(dim)).alias("bucket"))
+            .groupBy(id_col, "bucket", "__n")
+            .agg(F.count("*").alias("__c"))
+            .select(F.col(id_col), "bucket",
+                    _r6(F.col("__c") / F.col("__n")).alias("__x")))
+        n_docs = labels.count()
+        if n_docs == 0:
+            return df.sparkSession.createDataFrame(
+                [], "bucket bigint, weight double")
+        w = mat(feats.select("bucket").distinct()
+                .withColumn("weight", F.lit(0.0)))
+        # labels (count above) and feats (the seed-weight checkpoint)
+        # are materialized — the token-array cache has served both
         base.unpersist()
-        labels.unpersist()
-        feats.unpersist()
-        return df.sparkSession.createDataFrame(
-            [], "bucket bigint, weight double")
-    w = mat(feats.select("bucket").distinct()
-            .withColumn("weight", F.lit(0.0)))
-    # labels (count above) and feats (the seed-weight checkpoint) are
-    # materialized — the token-array cache has served both consumers
-    base.unpersist()
-    dec = "decimal(38,12)"
-    for _ in range(n_iter):
-        margins = (feats.join(F.broadcast(w), "bucket")
-                   .groupBy(id_col)
-                   .agg(F.sum(F.round(F.col("__x") * F.col("weight"), 12)
-                              .cast(dec)).alias("__m")))
-        resid = (margins.join(labels, id_col)
-                 .select(F.col(id_col),
-                         (F.round(F.lit(1.0)
-                                  / (F.lit(1.0)
-                                     # ansi-ok: __m is numeric (margin); negation after double cast
-                                     + F.exp(-F.col("__m").cast("double"))),
-                                  6) - F.col("__y")).alias("__r")))
-        grads = (feats.join(resid, id_col)
-                 .groupBy("bucket")
-                 .agg(_r6(
-                     F.sum(F.round(F.col("__x") * F.col("__r"), 12)
-                           .cast(dec)).cast("double") / n_docs)
-                     .alias("__g")))
-        w = mat(w.join(grads, "bucket", "left")
-                .select("bucket",
-                        _r6(F.col("weight")
-                            - lr * F.coalesce("__g", F.lit(0.0)))
-                        .alias("weight")))
-    # The final eager localCheckpoint means the returned weights no
-    # longer reference the training caches — release them NOW rather
-    # than leaking executor storage for the rest of the session.
-    labels.unpersist()
-    feats.unpersist()
-    return w
+        dec = "decimal(38,12)"
+        for _ in range(n_iter):
+            margins = (feats.join(F.broadcast(w), "bucket")
+                       .groupBy(id_col)
+                       .agg(F.sum(F.round(F.col("__x") * F.col("weight"),
+                                          12).cast(dec)).alias("__m")))
+            resid = (margins.join(labels, id_col)
+                     .select(F.col(id_col),
+                             (F.round(F.lit(1.0)
+                                      / (F.lit(1.0)
+                                         # ansi-ok: __m is numeric (margin); negation after double cast
+                                         + F.exp(-F.col("__m").cast("double"))),
+                                      6) - F.col("__y")).alias("__r")))
+            grads = (feats.join(resid, id_col)
+                     .groupBy("bucket")
+                     .agg(_r6(
+                         F.sum(F.round(F.col("__x") * F.col("__r"), 12)
+                               .cast(dec)).cast("double") / n_docs)
+                         .alias("__g")))
+            w = mat(w.join(grads, "bucket", "left")
+                    .select("bucket",
+                            _r6(F.col("weight")
+                                - lr * F.coalesce("__g", F.lit(0.0)))
+                            .alias("weight")))
+        return w
 
 
 def temperature_mixture(df: DataFrame, strata_col: str, text_col: str,

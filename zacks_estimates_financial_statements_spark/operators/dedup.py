@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from zacks_estimates_financial_statements_spark.functions import text as T
 from zacks_estimates_financial_statements_spark.functions.text import simple_lower
 from zacks_estimates_financial_statements_spark.functions import vectors as V
+from zacks_estimates_financial_statements_spark.util import persist
 
 
 def hash60(col, salt=None):
@@ -1255,8 +1256,6 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
         raise ValueError(f"w must be >= 1, got {w}")
     if avg_words < 2:
         raise ValueError(f"avg_words must be >= 2, got {avg_words}")
-    from pyspark.storagelevel import StorageLevel
-
     toks = (df.select(F.col(id_col), T.word_tokens(F.col(text_col))
                       .alias("__t0"))
             .select(F.col(id_col),
@@ -1271,9 +1270,8 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
     # across differently-shaped exchanges, so the corpus tokenize +
     # full-text md5 ran ~6x per execution (6 scans in the committed
     # plan). One MEMORY_AND_DISK cache of (id, tokens, fp) replaces
-    # all replays; released via the standard ``release_cache`` hook.
-    toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-    cached = toks
+    # all replays; released when the caller's ``cache_scope`` exits.
+    toks = persist(toks)
     winner = toks.groupBy(id_col).agg(F.min("__fp").alias("__fp"))
     toks = toks.join(winner, [id_col, "__fp"]).drop("__fp")
     n = F.size("__t")
@@ -1307,11 +1305,9 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
            .agg(F.concat_ws(" ", F.transform(
                F.array_sort(F.collect_set(F.struct("__p", "__w"))),
                lambda s: s["__w"])).alias("chunk_text")))
-    out = agg.select(
+    return agg.select(
         F.col(id_col), "chunk_idx",
         F.col("__s").cast("bigint").alias("start_word"),
         (F.col("__e") - F.col("__s") + 1).cast("bigint")
         .alias("n_words"),
         F.md5("chunk_text").alias("chunk_hash"), "chunk_text")
-    out.release_cache = cached.unpersist
-    return out

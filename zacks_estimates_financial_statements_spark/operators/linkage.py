@@ -27,9 +27,9 @@ expression.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions.text import ascii_fold
+from zacks_estimates_financial_statements_spark.util import persist
 
 
 def linkage_key(col: Column) -> Column:
@@ -102,14 +102,12 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
     # All three relations are bounded — distinct-KEY scale for the
     # key sides, match-fan-in scale for the pairs — so the caches are
     # small and each input is left with exactly two scans
-    # (distinct-key build + row relation). Released via the standard
-    # ``release_cache`` hook on the returned DataFrame.
-    lall = (left.select(lk).distinct()
-            .withColumn("__lnorm", linkage_key(lk))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    rall = (right.select(rk).distinct()
-            .withColumn("__rnorm", linkage_key(rk))
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    # (distinct-key build + row relation). Released when the caller's
+    # ``cache_scope`` exits.
+    lall = persist(left.select(lk).distinct()
+                   .withColumn("__lnorm", linkage_key(lk)))
+    rall = persist(right.select(rk).distinct()
+                   .withColumn("__rnorm", linkage_key(rk)))
     lkeys = lall.filter(ln.isNotNull() & (ln != ""))
     rkeys = rall.filter(rn.isNotNull() & (rn != ""))
     l = lkeys.withColumn("__lpre", F.substring(ln, 1, block_chars)) \
@@ -131,21 +129,12 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
                  .select(right_key)
     exact = (lempty.join(rempty, lk == rk)
              .withColumn("dist", F.lit(0)))
-    matched = (matched.unionByName(exact)
-               .persist(StorageLevel.MEMORY_AND_DISK))
+    matched = persist(matched.unionByName(exact))
     lrows = (left.join(matched.select(left_key).distinct(),
                        left_key, "semi").distinct())
     rrows = (right.join(matched.select(right_key).distinct(),
                         right_key, "semi").distinct())
-    out = lrows.join(matched, left_key).join(rrows, right_key)
-
-    def _release() -> None:
-        matched.unpersist()
-        lall.unpersist()
-        rall.unpersist()
-
-    out.release_cache = _release
-    return out
+    return lrows.join(matched, left_key).join(rrows, right_key)
 
 
 def best_match(pairs: DataFrame, left_id: str, right_id: str) -> DataFrame:

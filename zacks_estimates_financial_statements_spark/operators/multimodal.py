@@ -720,50 +720,6 @@ def video_near_dup_pairs(media: DataFrame, every_ms: int = 1000,
             .withColumnRenamed("media_b", "video_b"))
 
 
-def synthesize_video_corpus(ids: DataFrame, id_col: str = "media_id",
-                            content_key_col: str = "content_key",
-                            size: int = 32) -> DataFrame:
-    """Deterministic STRUCTURED MJPEG-in-MP4 corpus: frame pixels are
-    gradient patterns of the CONTENT KEY (not the id), so distinct ids
-    sharing a key are planted near-duplicate videos. Gradients (not the
-    flat colors of ``synthesize_mjpeg_media``) because dHash measures
-    horizontal gradient sign — every flat frame hashes to 0. Each video
-    has ``2 + key % 3`` frames at 2 fps. Returns MEDIA_SCHEMA rows."""
-    import pandas as pd  # noqa: F401 — engine requirement for mapInPandas
-
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-    ensure_package_on_executors(ids.sparkSession)
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from zacks_estimates_financial_statements_spark.functions import codecs
-
-        def pattern(key: int, i: int) -> "np.ndarray":
-            y, x = np.indices((size, size))
-            img = ((x * (key + 3) + y * (2 * key + 1) + i * 7)
-                   % 128 * 2).astype(np.uint8)
-            return np.stack([img] * 3, axis=-1)
-
-        for pdf in batches:
-            rows = []
-            for mid, key in zip(pdf[id_col], pdf[content_key_col]):
-                key = int(key)
-                frames = [pattern(key, i) for i in range(2 + key % 3)]
-                rows.append({"media_id": int(mid), "kind": "video",
-                             "payload": codecs.encode_mjpeg_mp4(
-                                 frames, fps=2),
-                             "mime": "video/mp4", "width": size,
-                             "height": size, "duration_ms": None})
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in MEDIA_SCHEMA])
-
-    return (ids.select(F.col(id_col), F.col(content_key_col))
-            .mapInPandas(fn, MEDIA_SCHEMA))
-
-
 AUDIO_FP_SCHEMA = ("media_id long, frame_idx int, fp long, "
                    "decode_error string")
 
@@ -885,47 +841,6 @@ def audio_near_dup_pairs(media: DataFrame, frame_ms: int = 100,
     return sequence_near_dup_pairs(
         audio_fingerprints(media, frame_ms), "fp",
         max_hamming=max_hamming, min_overlap=min_overlap)
-
-
-def synthesize_audio_corpus(ids: DataFrame, id_col: str = "media_id",
-                            content_key_col: str = "content_key",
-                            rate: int = 8000,
-                            n_windows: int = 8) -> DataFrame:
-    """Deterministic PCM-WAV corpus: samples are seeded broadband noise
-    of the CONTENT KEY (MT19937 is platform-stable), so distinct ids
-    sharing a key are planted near-duplicate clips; ids additionally
-    render at key-dependent volume (sign-of-difference hashes are
-    volume-invariant — the property the detector banks on). Returns
-    MEDIA_SCHEMA rows."""
-    import pandas as pd  # noqa: F401 — engine requirement for mapInPandas
-
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-    ensure_package_on_executors(ids.sparkSession)
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from zacks_estimates_financial_statements_spark.functions import codecs
-
-        win = rate // 10  # the detector's frame_ms=100 grid
-        for pdf in batches:
-            rows = []
-            for mid, key in zip(pdf[id_col], pdf[content_key_col]):
-                mid, key = int(mid), int(key)
-                x = np.random.RandomState(key).randn(n_windows * win)
-                x = x / np.abs(x).max() * (0.4 + 0.1 * (mid % 5))
-                rows.append({"media_id": mid, "kind": "audio",
-                             "payload": codecs.encode_wav(x, rate),
-                             "mime": "audio/wav", "width": None,
-                             "height": None,
-                             "duration_ms": 1000 * n_windows // 10})
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in MEDIA_SCHEMA])
-
-    return (ids.select(F.col(id_col), F.col(content_key_col))
-            .mapInPandas(fn, MEDIA_SCHEMA))
 
 
 # ---------------------------------------------------------------------------

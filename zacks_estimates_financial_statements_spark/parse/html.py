@@ -116,17 +116,3 @@ def parse_html(text: str) -> Node:
     builder.feed(text)
     builder.close()
     return builder.root
-
-
-def table_cell(scope: Node, table_index: int, part: str, row: int, col: int) -> str:
-    """sxpath ``(table k) part (tr row) (cell col)`` under ``scope``:
-    the k-th direct ``<table>`` child, its ``<thead>``/``<tbody>``, the
-    row-th ``<tr>``, the col-th ``<th>``/``<td>``; returns trimmed text.
-
-    ``part`` is ``"thead"`` (cells are ``<th>``) or ``"tbody"`` (``<td>``).
-    """
-    cell_tag = "th" if part == "thead" else "td"
-    table = scope.nth("table", table_index)
-    section = table.nth(part, 1)
-    tr = section.nth("tr", row)
-    return tr.nth(cell_tag, col).text().strip()

@@ -37,6 +37,7 @@ import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions import expressions as E
 from zacks_estimates_financial_statements_spark.operators.writer import TableStore
@@ -47,6 +48,7 @@ from zacks_estimates_financial_statements_spark.schemas import (
     CASH_FLOW_STATEMENT_COLS,
     INCOME_STATEMENT_COLS,
 )
+from zacks_estimates_financial_statements_spark.util import cache_scope, persist
 
 _DATE_FMT = {"income": "M/dd/yy", "balance": "M/dd/yyyy",
              "cash_flow": "M/dd/yyyy", "cash_flow_legacy": "M/dd/yyyy"}
@@ -229,9 +231,9 @@ def load_statement(raw: DataFrame, kind: str,
         eq = stores["balance_sheet_equity"].read()
         pk = ["act_symbol", "date", "period"]
         stored = a.join(li, pk).join(eq, pk)
-        accepted = apply_sni_chain(candidates, stored, kind)
-        accepted = accepted.persist()
-        try:
+        with cache_scope():
+            accepted = persist(apply_sni_chain(candidates, stored, kind),
+                               StorageLevel.MEMORY_AND_DISK_DESER)
             accepted.count()
             base = ["act_symbol", "date", "period"]
             stores["balance_sheet_assets"].upsert_ignore(
@@ -240,8 +242,6 @@ def load_statement(raw: DataFrame, kind: str,
                 accepted.select(*base, *BALANCE_SHEET_LIABILITIES_COLS))
             stores["balance_sheet_equity"].upsert_ignore(
                 accepted.select(*base, *BALANCE_SHEET_EQUITY_COLS))
-        finally:
-            accepted.unpersist()
         return
 
     table = "income_statement" if kind == "income" else "cash_flow_statement"

@@ -1,12 +1,16 @@
-"""Deployment helpers + shared numeric-domain guards."""
+"""Deployment helpers, the cache lifecycle (``cache_scope``/``persist``)
+and shared numeric-domain guards."""
 
 from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
+from contextlib import contextmanager
 
-from pyspark.sql import Column, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
 
 _SHIPPED_ATTR = "_zacks_estimates_financial_statements_spark_pyfiles_shipped"
 
@@ -99,6 +103,38 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
                         zf.write(full, rel)
     sc.addPyFile(zip_path)
     setattr(sc, _SHIPPED_ATTR, True)
+
+
+_scopes = threading.local()
+
+
+@contextmanager
+def cache_scope():
+    """One unit of work's cache lifetime: every DataFrame ``persist``-ed
+    while the scope is the innermost open one on this thread is
+    unpersisted when it exits, also when an exception leaves it.
+    Nested scopes release only their own registrations."""
+    stack = _scopes.__dict__.setdefault("stack", [])
+    held: list[DataFrame] = []
+    stack.append(held)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in held:
+            df.unpersist()
+
+
+def persist(df: DataFrame,
+            level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
+    """``df.persist(level)``, registered with the innermost open
+    ``cache_scope`` of this thread; outside any scope the cache lives
+    until the caller unpersists it or clears the catalog cache."""
+    df = df.persist(level)
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df
 
 
 def broadcast_threshold_bytes(spark: SparkSession) -> int:
