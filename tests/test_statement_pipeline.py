@@ -149,10 +149,10 @@ def test_legacy_cash_flow_load(spark, tmp_path):
     stores = {"cash_flow_statement": TableStore(spark, str(tmp_path), "cash_flow_statement")}
     av = _vals(CASH_FLOW_STATEMENT_COLS)
     html = cash_flow_page(ANNUAL_DATES, QTR_DATES, av, av, legacy=True)
-    df = spark.createDataFrame([("AAPL", D(2024, 6, 1), html)],
+    # a folder before the 2024-02-01 layout change parses as legacy
+    df = spark.createDataFrame([("AAPL", D(2024, 1, 20), html)],
                                "act_symbol string, folder_date date, content string")
-    pipe.load_statement(parse_statements(df, "cash_flow_legacy"),
-                        "cash_flow_legacy", stores)
+    pipe.load_statement(parse_statements(df, "cash_flow"), "cash_flow", stores)
     rows = stores["cash_flow_statement"].read().collect()
     assert len(rows) == 5 and {r["period"] for r in rows} == {"Year"}
     r23 = [r for r in rows if r["date"] == D(2023, 12, 31)][0]

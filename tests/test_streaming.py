@@ -735,3 +735,160 @@ def test_statements_stream_mid_batch_crash_recovery(spark, tmp_path):
                                      tb, ckb, kinds=["balance"]):
         q.awaitTermination(120)
     assert _table_snapshot(spark, tb, tables3) == want
+
+
+def _income_html(base):
+    from fixtures import _INCOME_FIELDS, income_statement_page
+
+    v = {f: [str(base + i * 1000 + c) for c in range(5)]
+         for i, f in enumerate(_INCOME_FIELDS)}
+    return income_statement_page(
+        ["12/31/23", "12/31/22", "12/31/21", "12/31/20", "12/31/19"],
+        ["3/31/24", "12/31/23", "9/30/23", "6/30/23", "3/31/23"], v, v)
+
+
+def _write_docs(raw, dataset, day, suffix, html, symbols, mtime):
+    """One dated folder of documents. The file stream lists files by
+    modification time, so ``mtime`` sets where the folder falls in the
+    batch."""
+    import os
+
+    d = raw / dataset / day
+    d.mkdir(parents=True)
+    for s in symbols:
+        (d / f"{s}{suffix}").write_text(html)
+        os.utime(d / f"{s}{suffix}", (mtime, mtime))
+
+
+def test_multi_date_stream_keeps_earliest_folder(spark, tmp_path):
+    """One availableNow pass over two dated folders leaves the same tables
+    as one runner call per folder, oldest first: the later folder is a
+    re-scrape with changed values, and first-write-wins keeps the earlier
+    folder's rows — in the statement sni walk and in eps_history, the one
+    estimate table whose key has no folder date. The later folder's files
+    are listed first (older mtimes, as when archived folders are restored
+    out of order): the result must follow folder dates, not listing
+    order."""
+    from fixtures import estimate_page
+
+    from zacks_estimates_financial_statements_spark import runner
+    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
+
+    symbols = ["AAPL", "MSFT", "NVDA", "ZZZZ"]
+    raw = tmp_path / "raw"
+    mtimes = [1_700_000_100, 1_700_000_000]  # earlier folder listed last
+    income_days = {"2024-06-01": 100, "2024-06-08": 200}
+    for (day, base), mtime in zip(income_days.items(), mtimes):
+        _write_docs(raw, "income-statement", day, ".income-statement.html",
+                    _income_html(base), symbols, mtime)
+    estimate_days = {"2025-01-15": ["1.05", "0.98", "0.92", "0.88"],
+                     "2025-01-22": ["2.05", "1.98", "1.92", "1.88"]}
+    for (day, reported), mtime in zip(estimate_days.items(), mtimes):
+        html = estimate_page(surprise={"reported": reported,
+                                       "estimate": reported})
+        _write_docs(raw, "estimates", day, ".detailed-estimates.html", html,
+                    symbols, mtime)
+
+    streamed, batch = str(tmp_path / "ts"), str(tmp_path / "tb")
+    queries = [S.run_estimates_stream(spark, str(raw), streamed,
+                                      str(tmp_path / "ck" / "est"))]
+    queries += S.run_statements_stream(spark, str(raw), streamed,
+                                       str(tmp_path / "ck" / "stmt"),
+                                       kinds=["income"])
+    for q in queries:
+        q.awaitTermination(120)
+    for day in sorted(income_days):
+        runner.run_statements(spark, str(raw), batch, day, kinds=["income"])
+    for day in sorted(estimate_days):
+        runner.run_estimates(spark, str(raw), batch, day)
+
+    names = ["income_statement", "eps_history"]
+    want = _table_snapshot(spark, batch, names)
+    assert len(want["income_statement"]) == 40
+    assert len(want["eps_history"]) == 16
+    assert _table_snapshot(spark, streamed, names) == want
+    sales = {r["sales"] for r in TableStore(spark, streamed, "income_statement")
+             .read().filter("period = 'Year' and date = '2023-12-31'").collect()}
+    assert sales == {100_000_000}  # the 2024-06-01 value, x1e6
+
+
+def test_cash_flow_stream_spans_layout_eras(spark, tmp_path):
+    """One cash-flow stream pass over a legacy-layout folder (before
+    2024-02-01) and a current-layout folder equals one runner call per
+    folder: the parser picks each document's era, and the legacy folder's
+    annual rows win the keys both folders carry."""
+    from fixtures import cash_flow_page
+
+    from zacks_estimates_financial_statements_spark import runner
+    from zacks_estimates_financial_statements_spark.schemas import (
+        CASH_FLOW_STATEMENT_COLS,
+    )
+
+    def page(base, legacy):
+        v = {f: [str(base + i * 1000 + c) for c in range(5)]
+             for i, f in enumerate(CASH_FLOW_STATEMENT_COLS)}
+        return cash_flow_page(
+            ["12/31/2023", "12/31/2022", "12/31/2021", "12/31/2020",
+             "12/31/2019"],
+            ["3/31/2024", "12/31/2023", "9/30/2023", "6/30/2023",
+             "3/31/2023"], v, v, legacy=legacy)
+
+    symbols = ["AAPL", "MSFT"]
+    raw = tmp_path / "raw"
+    days = {"2024-01-20": page(100, True), "2024-06-01": page(500, False)}
+    for (day, html), mtime in zip(days.items(), [1_700_000_100, 1_700_000_000]):
+        _write_docs(raw, "cash-flow-statement", day,
+                    ".cash-flow-statement.html", html, symbols, mtime)
+
+    streamed, batch = str(tmp_path / "ts"), str(tmp_path / "tb")
+    for q in S.run_statements_stream(spark, str(raw), streamed,
+                                     str(tmp_path / "ck"),
+                                     kinds=["cash_flow"]):
+        q.awaitTermination(120)
+    for day in sorted(days):
+        runner.run_statements(spark, str(raw), batch, day, kinds=["cash_flow"])
+
+    want = _table_snapshot(spark, batch, ["cash_flow_statement"])
+    # 5 legacy annual rows + 5 current quarterly rows per symbol
+    assert len(want["cash_flow_statement"]) == 20
+    assert _table_snapshot(spark, streamed, ["cash_flow_statement"]) == want
+
+
+def test_package_ships_once_under_concurrent_first_calls():
+    """Streaming queries started together make their first
+    ``ensure_package_on_executors`` calls from several threads at once;
+    the package must be added once, not once per racing thread (a second
+    add of a half-written zip fails the executors' fetch)."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from zacks_estimates_financial_statements_spark import util
+
+    added = []
+
+    class Context:
+        def addPyFile(self, path):
+            time.sleep(0.05)  # widen the window between check and set
+            added.append(path)
+
+    fake = SimpleNamespace(sparkContext=Context())
+    start = threading.Barrier(8)
+
+    def first_call():
+        start.wait(timeout=10)
+        util.ensure_package_on_executors(fake)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=first_call) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(added) == 1

@@ -20,7 +20,10 @@ Positional maps (file:line in /root/reference/):
   1-11; dates ``M/dd/yyyy``.
 - cash-flow legacy layout (cash-flow-statement-transform-load.rkt:14-57):
   sections ``#cash_flow_operation`` / ``#cash_flow_use``, annual columns
-  only.
+  only. The reference keeps both cash-flow loaders and the folder date
+  picks one; here ``parse_statement_doc`` picks the extractor per
+  document from its folder date (``CASH_FLOW_LEGACY_BEFORE``), like the
+  estimate parser's score eras, so a batch may span the layout change.
 
 Recency gate (P8): the whole document is skipped when the gate column's
 most-recent date is within 15 days of the folder date ("data most likely
@@ -81,6 +84,9 @@ _KINDS = {
     "cash_flow": (CASH_FLOW_STATEMENT_COLS, "annual", "%m/%d/%Y"),
     "cash_flow_legacy": (CASH_FLOW_STATEMENT_COLS, "annual", "%m/%d/%Y"),
 }
+
+#: the legacy cash-flow page layout retired on this folder date
+CASH_FLOW_LEGACY_BEFORE = datetime.date(2024, 2, 1)
 
 
 def statement_fields(kind: str) -> list[str]:
@@ -176,7 +182,11 @@ def _gate_date_raw(root: Node, kind: str) -> str:
 def parse_statement_doc(act_symbol: str, folder_date: datetime.date,
                         content: str, kind: str) -> list[dict]:
     """One document → up to 10 raw rows (5 annual + 5 quarterly; legacy
-    cash-flow: 5 annual only), or error/skip marker rows."""
+    cash-flow: 5 annual only), or error/skip marker rows. A ``cash_flow``
+    document dated before ``CASH_FLOW_LEGACY_BEFORE`` is read with the
+    legacy extractor."""
+    if kind == "cash_flow" and folder_date < CASH_FLOW_LEGACY_BEFORE:
+        kind = "cash_flow_legacy"
     fields, gate_period, date_fmt = _KINDS[kind]
     base = {"act_symbol": act_symbol, "folder_date": folder_date,
             "parse_error": None, "period": None, "date_raw": None,
@@ -222,8 +232,8 @@ def parse_statement_doc(act_symbol: str, folder_date: datetime.date,
 
 def parse_statements(docs: DataFrame, kind: str) -> DataFrame:
     """(act_symbol, folder_date, content) → per-(period, report-date) raw
-    rows for one statement ``kind`` ∈ {income, balance, cash_flow,
-    cash_flow_legacy}."""
+    rows for one statement ``kind`` ∈ {income, balance, cash_flow}; the
+    cash-flow layout era is chosen per document from its folder date."""
     import pandas as pd
 
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors

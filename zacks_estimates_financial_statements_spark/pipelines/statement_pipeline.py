@@ -37,6 +37,7 @@ import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions import expressions as E
@@ -50,15 +51,23 @@ from zacks_estimates_financial_statements_spark.schemas import (
 )
 from zacks_estimates_financial_statements_spark.util import cache_scope, persist
 
+#: statement kind → (raw dataset dir, destination tables)
+STATEMENT_KINDS = {
+    "income": ("income-statement", ["income_statement"]),
+    "balance": ("balance-sheet", ["balance_sheet_assets",
+                                  "balance_sheet_liabilities",
+                                  "balance_sheet_equity"]),
+    "cash_flow": ("cash-flow-statement", ["cash_flow_statement"]),
+}
+
 _DATE_FMT = {"income": "M/dd/yy", "balance": "M/dd/yyyy",
-             "cash_flow": "M/dd/yyyy", "cash_flow_legacy": "M/dd/yyyy"}
+             "cash_flow": "M/dd/yyyy"}
 
 _KIND_COLS = {
     "income": INCOME_STATEMENT_COLS,
     "balance": (BALANCE_SHEET_ASSETS_COLS + BALANCE_SHEET_LIABILITIES_COLS
                 + BALANCE_SHEET_EQUITY_COLS),
     "cash_flow": CASH_FLOW_STATEMENT_COLS,
-    "cash_flow_legacy": CASH_FLOW_STATEMENT_COLS,
 }
 
 #: unscaled (per-share) columns per kind — everything else is ×1e6 (F7)
@@ -66,7 +75,6 @@ _UNSCALED = {
     "income": {"diluted_eps_before_non_recurring_items", "diluted_net_eps"},
     "balance": {"book_value_per_share"},
     "cash_flow": {"diluted_net_eps"},
-    "cash_flow_legacy": {"diluted_net_eps"},
 }
 
 #: income columns compared as IS NULL for quarterly candidates
@@ -77,7 +85,8 @@ _INCOME_NULL_QUARTERLY = ("income_before_depreciation_and_amortization",
 
 def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
     """Parsed raw rows → typed, scaled candidate rows with reference cast
-    validity applied (invalid rows dropped = per-row rollback)."""
+    validity applied (invalid rows dropped = per-row rollback). The
+    ``folder_date`` rides along to order the sni walk."""
     cols = _KIND_COLS[kind]
     unscaled = _UNSCALED[kind]
     date_col = E.parse_statement_date(F.col("date_raw"), _DATE_FMT[kind])
@@ -95,8 +104,9 @@ def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
         for c in cols
     ]
     return (raw.filter(validity)
-            .select(F.col("act_symbol"), date_col.alias("date"),
-                    period_col.alias("period"), *typed))
+            .select(F.col("act_symbol"), F.col("folder_date"),
+                    date_col.alias("date"), period_col.alias("period"),
+                    *typed))
 
 
 def _sni_compare_sets(kind: str) -> list[list[str]]:
@@ -147,18 +157,20 @@ def _three_valued_all(pairs) -> bool | None:
 
 def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
                     kind: str) -> DataFrame:
-    """Sequential sni evaluation per (act_symbol, period) group, oldest
-    date first, against stored ∪ previously-accepted rows. Returns the
-    accepted candidate rows."""
+    """Sequential sni evaluation per (act_symbol, period) group against
+    stored ∪ previously-accepted rows, in the reference's order: folder by
+    folder, oldest date first — so a batch spanning several folder dates
+    keeps the earliest folder's row for a key, as one run per folder
+    would. Returns the accepted candidate rows without ``folder_date``."""
     import pandas as pd
 
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
 
     ensure_package_on_executors(candidates.sparkSession)
 
-    cols = _KIND_COLS[kind]
     compare_sets = _sni_compare_sets(kind)
-    out_schema = candidates.schema
+    out_schema = StructType([f for f in candidates.schema.fields
+                             if f.name != "folder_date"])
 
     # only stored rows of symbols present in the batch matter; semi-join
     # keeps the shuffled state small at scale
@@ -167,10 +179,13 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
         "act_symbol", "left_semi")
 
     tagged = (candidates.withColumn("__src", F.lit("cand"))
-              .unionByName(stored_slim.withColumn("__src", F.lit("stored"))))
+              .unionByName(stored_slim.withColumn("__src", F.lit("stored")),
+                           allowMissingColumns=True))
+    drop = ["__src", "folder_date"]
 
     def process(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        cand = pdf[pdf["__src"] == "cand"].sort_values("date")
+        cand = pdf[pdf["__src"] == "cand"].sort_values(
+            ["folder_date", "date"], kind="stable")
         landed: dict[tuple, dict] = {}
         for _, r in pdf[pdf["__src"] == "stored"].iterrows():
             landed[(r["date"], r["period"])] = r
@@ -198,8 +213,8 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
                 accepted.append(r)
                 landed[key] = r
         if not accepted:
-            return pd.DataFrame(columns=list(pdf.columns)).drop(columns="__src")
-        return pd.DataFrame(accepted).drop(columns="__src")
+            return pd.DataFrame(columns=list(pdf.columns)).drop(columns=drop)
+        return pd.DataFrame(accepted).drop(columns=drop)
 
     grouped = tagged.groupBy("act_symbol", "period").applyInPandas(
         lambda pdf: process(pdf), schema=out_schema)

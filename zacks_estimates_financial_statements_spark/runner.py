@@ -31,6 +31,7 @@ import glob
 import json
 import os
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 from zacks_estimates_financial_statements_spark import export as X
 from zacks_estimates_financial_statements_spark.operators.writer import TableStore
@@ -41,28 +42,17 @@ from zacks_estimates_financial_statements_spark.pipelines import (
     estimate_pipeline,
     statement_pipeline,
 )
+from zacks_estimates_financial_statements_spark.pipelines.estimate_pipeline import (
+    ESTIMATE_TABLES,
+)
+from zacks_estimates_financial_statements_spark.pipelines.statement_pipeline import (
+    STATEMENT_KINDS,
+)
 from zacks_estimates_financial_statements_spark.session import get_spark
 from zacks_estimates_financial_statements_spark.sources.raw_zone import (
     read_calendar_files,
     read_documents,
 )
-
-from zacks_estimates_financial_statements_spark.pipelines.estimate_pipeline import (  # noqa: E402,E501
-    ESTIMATE_TABLES,
-)
-
-#: statement kind → (raw dataset dir, destination tables)
-STATEMENT_KINDS = {
-    "income": ("income-statement", ["income_statement"]),
-    "balance": ("balance-sheet", ["balance_sheet_assets",
-                                  "balance_sheet_liabilities",
-                                  "balance_sheet_equity"]),
-    "cash_flow": ("cash-flow-statement", ["cash_flow_statement"]),
-}
-
-#: the legacy cash-flow page layout retired on this date (the reference
-#: keeps both loaders; the date keys which one a folder needs)
-CASH_FLOW_LEGACY_BEFORE = datetime.date(2024, 2, 1)
 
 
 def _stores(spark, root: str, names: list[str]) -> dict[str, TableStore]:
@@ -77,32 +67,22 @@ def run_estimates(spark, raw: str, tables: str, date: str) -> dict:
 
 
 def run_statements(spark, raw: str, tables: str, date: str,
-                   kinds: list[str] | None = None,
-                   parallel: bool = True) -> dict:
+                   kinds: list[str] | None = None) -> dict:
     """The three statement kinds read disjoint raw datasets and write
-    disjoint destination tables, so they load concurrently by default
-    (thread-pool job submission; the balance sheet's 3-table coupling
-    stays inside its kind). ``parallel=False`` restores the loop."""
+    disjoint destination tables, so they load concurrently (thread-pool
+    job submission; the balance sheet's 3-table coupling stays inside
+    its kind)."""
     def one(kind: str) -> tuple[str, dict]:
         dataset, dest = STATEMENT_KINDS[kind]
         docs = read_documents(spark, raw, dataset, date)
-        parse_kind = kind
-        if (kind == "cash_flow"
-                and datetime.date.fromisoformat(date) < CASH_FLOW_LEGACY_BEFORE):
-            parse_kind = "cash_flow_legacy"
-        raw_rows = parse_statements(docs, parse_kind)
         statement_pipeline.load_statement(
-            raw_rows, parse_kind, _stores(spark, tables, dest))
+            parse_statements(docs, kind), kind, _stores(spark, tables, dest))
         return kind, {t: TableStore(spark, tables, t).read().count()
                       for t in dest}
 
     todo = kinds or list(STATEMENT_KINDS)
-    if parallel and len(todo) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(todo)) as ex:
-            return dict(ex.map(one, todo))
-    return dict(one(k) for k in todo)
+    with ThreadPoolExecutor(max_workers=len(todo)) as ex:
+        return dict(ex.map(one, todo))
 
 
 def run_earnings_calendar(spark, raw: str, tables: str, date: str) -> dict:

@@ -32,8 +32,9 @@ Components:
   The calendar *load* stays batch-only on purpose: ``merge_calendar`` is
   run-scoped (last-file-wins within one complete folder), and a file
   stream may split a folder across microbatches, silently changing the
-  winner — document-level loads (estimates, statements) have no such
-  cross-file ordering dependency, so only they get streaming loaders.
+  winner — document-level loads (estimates, statements) order their
+  cross-folder conflicts by folder date (the earliest folder wins, as in
+  one run per folder), so only they get streaming loaders.
 - ``windowed_event_counts``  — event-time tumbling-window aggregation with
   watermarked late-data handling.
 - ``sessionize_events``      — custom stateful operator
@@ -47,10 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from zacks_estimates_financial_statements_spark.parse.calendars import clean_payload
+from zacks_estimates_financial_statements_spark.parse.calendars import parse_calendar_rows
 from zacks_estimates_financial_statements_spark.util import dec6
-
-CAL_PAYLOAD_SCHEMA = "struct<data: array<array<string>>>"
 
 
 def stream_calendar_files(spark: SparkSession, folder_glob: str) -> DataFrame:
@@ -71,16 +70,9 @@ def stream_calendar_files(spark: SparkSession, folder_glob: str) -> DataFrame:
 
 
 def stream_calendar_rows(spark: SparkSession, folder_glob: str) -> DataFrame:
-    """Parsed positional calendar rows from the stream — same cleanup chain
-    as the batch parser (T8)."""
-    files = stream_calendar_files(spark, folder_glob)
-    parsed = files.select(
-        "event_date", "path",
-        F.from_json(clean_payload(F.col("content")), CAL_PAYLOAD_SCHEMA).alias("j"))
-    return parsed.select(
-        "event_date", "path",
-        F.posexplode_outer(F.col("j.data")).alias("row_idx", "row")) \
-        .filter(F.col("row").isNotNull())
+    """Parsed positional calendar rows from the stream — the batch
+    parser (T8) over the file stream."""
+    return parse_calendar_rows(stream_calendar_files(spark, folder_glob))
 
 
 def stream_documents(spark: SparkSession, base: str,
@@ -105,34 +97,29 @@ def stream_documents(spark: SparkSession, base: str,
         F.col("value").alias("content"))
 
 
-def stream_estimate_documents(spark: SparkSession, base: str) -> DataFrame:
-    return stream_documents(spark, base, "estimates")
-
-
 def run_estimates_stream(spark: SparkSession, base: str, tables_root: str,
                          checkpoint: str):
     """Incremental estimates transform-load: each microbatch of newly
     crawled documents flows through the SAME parse + validity gate +
-    6-table fan-out as the batch runner (``foreachBatch``); the loader's
-    idempotent PK upserts make the at-least-once replay of a restarted
-    batch a no-op — the streaming analog of the reference's
-    ``ON CONFLICT DO NOTHING`` re-runs. Returns the started query
-    (``trigger(availableNow=True)`` — one incremental pass per
-    invocation, matching the reference's cron cadence)."""
+    6-table fan-out call as the batch runner (``foreachBatch``); the
+    loader's idempotent PK upserts make the at-least-once replay of a
+    restarted batch a no-op — the streaming analog of the reference's
+    ``ON CONFLICT DO NOTHING`` re-runs. A microbatch may span several
+    folder dates; the loader keeps the earliest folder's row per key.
+    Returns the started query (``trigger(availableNow=True)`` — one
+    incremental pass per invocation, matching the reference's cron
+    cadence)."""
     from zacks_estimates_financial_statements_spark.operators.writer import TableStore
     from zacks_estimates_financial_statements_spark.parse.estimates import parse_estimates
-    from zacks_estimates_financial_statements_spark.pipelines.estimate_pipeline import (
-        ESTIMATE_TABLES,
-        load_estimates,
-    )
+    from zacks_estimates_financial_statements_spark.pipelines import estimate_pipeline
 
-    stores = {t: TableStore(spark, tables_root, t) for t in ESTIMATE_TABLES}
+    stores = {t: TableStore(spark, tables_root, t)
+              for t in estimate_pipeline.ESTIMATE_TABLES}
 
     def _load(batch_df: DataFrame, _epoch: int) -> None:
-        load_estimates(parse_estimates(batch_df), stores)
+        estimate_pipeline.load_estimates(parse_estimates(batch_df), stores)
 
-    docs = stream_estimate_documents(spark, base)
-    return (docs.writeStream
+    return (stream_documents(spark, base, "estimates").writeStream
             .foreachBatch(_load)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
@@ -143,46 +130,23 @@ def run_statements_stream(spark: SparkSession, base: str, tables_root: str,
                           checkpoint_root: str, kinds=None):
     """Incremental statements transform-load: one checkpointed stream
     per kind (disjoint raw datasets and destination tables), each
-    microbatch routed through the batch loader. The cash-flow era
-    dispatch is per-row: a microbatch spanning the 2024-02-01 layout
-    change splits on folder_date and parses each side with its era's
-    extractor. Returns the started queries."""
-    import datetime as _dt
-
+    microbatch through the same parse + load call as the batch runner.
+    A microbatch may span several folder dates: the parser picks the
+    cash-flow layout era per document, and the sni walk keeps the
+    earliest folder's row per key. Returns the started queries."""
     from zacks_estimates_financial_statements_spark.operators.writer import TableStore
     from zacks_estimates_financial_statements_spark.parse.statements import parse_statements
-    from zacks_estimates_financial_statements_spark.pipelines.statement_pipeline import (
-        load_statement,
-    )
+    from zacks_estimates_financial_statements_spark.pipelines import statement_pipeline
 
-    #: kind → (raw dataset, destination tables) — mirrors runner.py
-    kind_map = {
-        "income": ("income-statement", ["income_statement"]),
-        "balance": ("balance-sheet", ["balance_sheet_assets",
-                                      "balance_sheet_liabilities",
-                                      "balance_sheet_equity"]),
-        "cash_flow": ("cash-flow-statement", ["cash_flow_statement"]),
-    }
-    legacy_before = _dt.date(2024, 2, 1)
     queries = []
-    for kind in kinds or list(kind_map):
-        dataset, dest = kind_map[kind]
+    for kind in kinds or list(statement_pipeline.STATEMENT_KINDS):
+        dataset, dest = statement_pipeline.STATEMENT_KINDS[kind]
         stores = {t: TableStore(spark, tables_root, t) for t in dest}
 
         def _load(batch_df: DataFrame, _epoch: int, kind=kind,
                   stores=stores) -> None:
-            if kind == "cash_flow":
-                legacy = batch_df.filter(
-                    F.col("folder_date") < F.lit(legacy_before))
-                current = batch_df.filter(
-                    F.col("folder_date") >= F.lit(legacy_before))
-                load_statement(parse_statements(legacy, "cash_flow_legacy"),
-                               "cash_flow_legacy", stores)
-                load_statement(parse_statements(current, "cash_flow"),
-                               "cash_flow", stores)
-            else:
-                load_statement(parse_statements(batch_df, kind), kind,
-                               stores)
+            statement_pipeline.load_statement(
+                parse_statements(batch_df, kind), kind, stores)
 
         queries.append(
             stream_documents(spark, base, dataset).writeStream

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 _SHIPPED_ATTR = "_zacks_estimates_financial_statements_spark_pyfiles_shipped"
+_ship_lock = threading.Lock()
 
 #: Exact-aggregation domain bound (r12, --extreme-rate contract fuzz).
 #: The engine routes exact double aggregation through decimal(38,6)
@@ -83,26 +84,29 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     worker processes fail with ModuleNotFoundError. Zipping the package
     once per session and calling ``addPyFile`` fixes this for every
     deployment mode (local, YARN, k8s) — the standard way to ship an
-    uninstalled Python package.
+    uninstalled Python package. The first calls can come from several
+    threads at once (streaming queries started together), so one lock
+    guards the zip and the flag.
     """
     sc = spark.sparkContext
-    if getattr(sc, _SHIPPED_ATTR, False):
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(tempfile.gettempdir(),
-                            f"{pkg_name}-{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(pkg_name,
-                                           os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    setattr(sc, _SHIPPED_ATTR, True)
+    with _ship_lock:
+        if getattr(sc, _SHIPPED_ATTR, False):
+            return
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        pkg_name = os.path.basename(pkg_dir)
+        zip_path = os.path.join(tempfile.gettempdir(),
+                                f"{pkg_name}-{os.getpid()}.zip")
+        if not os.path.exists(zip_path):
+            with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+                for root, _dirs, files in os.walk(pkg_dir):
+                    for f in files:
+                        if f.endswith(".py"):
+                            full = os.path.join(root, f)
+                            rel = os.path.join(pkg_name,
+                                               os.path.relpath(full, pkg_dir))
+                            zf.write(full, rel)
+        sc.addPyFile(zip_path)
+        setattr(sc, _SHIPPED_ATTR, True)
 
 
 _scopes = threading.local()
