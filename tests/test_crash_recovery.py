@@ -1,6 +1,6 @@
-"""Mid-batch crash recovery for the remaining sink families (r10
-verdict #3): ``TableStore.merge_upsert``, the calendar loaders' W4/W5
-merge, and the ``write_training_shards`` export.
+"""Mid-batch crash recovery for the batch sinks: the calendar
+loaders' W4/W5 merge (a ``TableStore`` versioned overwrite) and the
+``write_training_shards`` export.
 
 The streaming sinks' kill-mid-batch tests live in
 ``test_streaming.py`` (dedup gate, estimates fan-out, balance-sheet
@@ -11,7 +11,9 @@ before the commit (pointer flip / final rename) — and proves
 1. the crash is observable as NO state change (readers still see the
    pre-crash table: the version pointer is the atomicity unit), and
 2. a plain re-run converges to the uninterrupted twin's end-state
-   (idempotence: the retry needs no cleanup step).
+   (idempotence: the retry needs no cleanup step) — for the store this
+   includes vacuum: the retry's GC removes the version dir the crash
+   orphaned.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from zacks_estimates_financial_statements_spark.operators.writer import TableStore
 
@@ -33,64 +34,20 @@ def _rows(store):
     return sorted(map(tuple, store.read().collect()))
 
 
+def _version_dirs(store):
+    return sorted(e for e in os.listdir(store.path) if e.startswith("v-"))
+
+
 class _Boom(RuntimeError):
     pass
-
-
-def test_merge_upsert_mid_commit_crash_recovery(spark, tmp_path):
-    """Kill merge_upsert between the version write and the pointer
-    flip: the new version dir exists on disk but the table still reads
-    as the pre-merge state; retrying the same merge converges to the
-    uninterrupted end-state."""
-    initial = spark.createDataFrame(
-        [("AAPL", D(2024, 5, 8), "amc"), ("MSFT", D(2024, 5, 9), "bmo")],
-        "act_symbol string, date date, `when` string")
-    batch = spark.createDataFrame(
-        [("AAPL", D(2024, 5, 8), "bmo"),   # replaces stored row (same PK)
-         ("ORCL", D(2024, 5, 10), "amc")],  # new key inserts
-        "act_symbol string, date date, `when` string")
-    pk = ("act_symbol", "date")
-
-    # uninterrupted twin
-    twin = TableStore(spark, str(tmp_path / "ta"), "earnings_calendar")
-    twin.overwrite(initial)
-    twin.merge_upsert(batch, pk=pk)
-    want = _rows(twin)
-    assert ("AAPL", D(2024, 5, 8), "bmo") in set(want)
-
-    store = TableStore(spark, str(tmp_path / "tb"), "earnings_calendar")
-    store.overwrite(initial)
-    before = _rows(store)
-    n_versions_before = len(store.versions())
-
-    real_flip = TableStore._flip
-
-    def faulty_flip(self, version):
-        raise _Boom("injected crash between version write and flip")
-
-    TableStore._flip = faulty_flip
-    try:
-        with pytest.raises(_Boom):
-            store.merge_upsert(batch, pk=pk)
-    finally:
-        TableStore._flip = real_flip
-
-    # the crash really was mid-commit: the merged version dir was
-    # fully written (an orphan, pending GC) but the pointer — hence
-    # every reader — still shows the pre-merge state
-    assert len(store.versions()) == n_versions_before + 1
-    assert _rows(store) == before
-
-    # plain retry, no cleanup: converges to the uninterrupted twin
-    store.merge_upsert(batch, pk=pk)
-    assert _rows(store) == want
 
 
 def test_calendar_merge_mid_commit_crash_recovery(spark, tmp_path):
     """Kill the earnings-calendar loader's fused W4/W5/W1 merge at the
     pointer flip: the stored calendar is unchanged (no half-applied
-    window delete), and re-running the SAME loader run converges to
-    the uninterrupted end-state."""
+    window delete), the merged version is an orphan dir next to the
+    live one, and re-running the SAME loader run converges to the
+    uninterrupted end-state and vacuums the orphan."""
     from zacks_estimates_financial_statements_spark.pipelines import (
         calendar_pipeline as pipe,
     )
@@ -140,8 +97,18 @@ def test_calendar_merge_mid_commit_crash_recovery(spark, tmp_path):
     # W4/W5 is a single versioned overwrite: a crash cannot leave the
     # window half-deleted — the table is byte-for-byte the pre-state
     assert _rows(store) == before
+    # the crash really was mid-commit: the merged version dir was fully
+    # written (an orphan, pending GC) but the pointer still names the
+    # pre-crash version
+    live = store.current_version()
+    orphans = [v for v in _version_dirs(store) if v != live]
+    assert live in _version_dirs(store) and len(orphans) == 1
 
     assert _rows(run(tmp_path / "raw", tmp_path / "tb")) == want
+    # the retry's flip vacuums both the superseded live version and the
+    # orphan: only the new live version remains
+    assert _version_dirs(store) == [store.current_version()]
+    assert store.current_version() not in (live, orphans[0])
 
 
 def test_training_shards_mid_rename_crash_recovery(spark, tmp_path):

@@ -674,6 +674,23 @@ def test_bpe_train_matches_reference_implementation(spark):
     assert TK.bpe_train(df, "text", n_merges=8, max_local_vocab=0) == want
 
 
+def test_bpe_train_rejects_min_word_count_with_words(spark):
+    """A prebuilt ``words=`` relation is already filtered, so a
+    ``min_word_count`` next to it would be silently ignored: the call
+    must raise instead. The same threshold applied where the relation
+    is built is honored."""
+    from zacks_estimates_financial_statements_spark.functions import tokenize as TK
+
+    df = spark.createDataFrame(
+        [("low low low lower lower newest",)], "text string")
+    words = TK.bpe_word_counts(df, "text")
+    with pytest.raises(ValueError, match="min_word_count"):
+        TK.bpe_train(df, "text", n_merges=2, min_word_count=2, words=words)
+    assert TK.bpe_train(df, "text", n_merges=2, min_word_count=2) == \
+        TK.bpe_train(df, "text", n_merges=2,
+                     words=TK.bpe_word_counts(df, "text", 2))
+
+
 def test_char_entropy_and_compression_ratio_rank_garbage(spark):
     """Both quality signals must separate natural-ish text from
     repeated-character padding, and entropy must match the closed

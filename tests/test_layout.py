@@ -1,5 +1,4 @@
-"""Z-order layout: Morton key correctness and measured multi-dimensional
-row-group pruning vs a single-column sort."""
+"""Z-order layout: Morton key correctness and scaling."""
 
 from __future__ import annotations
 
@@ -35,34 +34,6 @@ def test_scale_to_bits_clamps_and_spans(spark):
     # clamped to [0, 255]; endpoints hit exactly; midpoint ~ half
     assert got[0] == 0 and got[1] == 0 and got[4] == 255
     assert got[3] == 255 and abs(got[2] - 127) <= 1
-
-
-def test_write_zordered_prunes_both_dimensions(spark, tmp_path):
-    """The point of the layout: after Z-ordering on (x, y), a range
-    filter on EITHER column skips most row groups via parquet min-max
-    stats; an x-sorted layout prunes only x."""
-    n = 1 << 14
-    df = (spark.range(n)
-          .select((F.col("id") % 128).alias("x"),
-                  (F.hash(F.col("id")) % 128 + 128).alias("y_raw"),
-                  F.col("id").alias("payload"))
-          .withColumn("y", F.col("y_raw") % 128).drop("y_raw"))
-    zpath, xpath = str(tmp_path / "z"), str(tmp_path / "x")
-    layout.write_zordered(df, zpath, [("x", 0, 127), ("y", 0, 127)],
-                          bits=7, n_files=16)
-    (df.repartitionByRange(16, "x").sortWithinPartitions("x")
-     .write.parquet(xpath))
-
-    # same narrow band on each dimension
-    z_x = layout.rowgroup_prune_fraction(zpath, "x", 10, 30)
-    z_y = layout.rowgroup_prune_fraction(zpath, "y", 10, 30)
-    lin_x = layout.rowgroup_prune_fraction(xpath, "x", 10, 30)
-    lin_y = layout.rowgroup_prune_fraction(xpath, "y", 10, 30)
-    assert lin_x > 0.5          # single-dim sort prunes its own column
-    assert lin_y == 0.0         # ...and nothing on the other
-    assert z_x > 0.3 and z_y > 0.3   # Z-order prunes BOTH
-    # round-trip is loss-free
-    assert spark.read.parquet(zpath).count() == n
 
 
 def test_zorder_key_rejects_long_overflow(spark):

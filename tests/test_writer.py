@@ -45,17 +45,16 @@ def test_upsert_ignore_idempotent(spark, store):
     assert len(rows) == 3
 
 
-def test_upsert_batch_dedup_deterministic(spark, store):
-    # two rows with same PK in ONE batch: order_by picks the winner
+def test_upsert_batch_dedup_keeps_one_row_per_pk(spark, store):
+    # two rows with same PK in ONE batch: exactly one of them lands
     batch = spark.createDataFrame(
-        [("AAPL", D(2024, 5, 1), "Before market open", 2),
-         ("AAPL", D(2024, 5, 1), "After market close", 1)],
-        "act_symbol string, date date, `when` string, seq int")
-    store.upsert_ignore(batch, pk=("act_symbol", "date"),
-                        order_by=[F.col("seq")])
-    rows = store.read().drop("seq").collect()
+        [("AAPL", D(2024, 5, 1), "Before market open"),
+         ("AAPL", D(2024, 5, 1), "After market close")],
+        "act_symbol string, date date, `when` string")
+    store.upsert_ignore(batch, pk=("act_symbol", "date"))
+    rows = store.read().collect()
     assert len(rows) == 1
-    assert rows[0]["when"] == "After market close"
+    assert rows[0]["when"] in ("Before market open", "After market close")
 
 
 def test_replace_window(spark, store):
@@ -257,25 +256,23 @@ def test_compact_consolidates_small_files(spark, tmp_path):
     assert _rows(store) == rows_before
 
 
-def test_version_retention_and_time_travel(spark, tmp_path):
-    store = TableStore(spark, str(tmp_path), "earnings_calendar",
-                       keep_versions=2)
+def test_superseded_version_vacuumed_after_flip(spark, tmp_path):
+    """W7: the flip vacuums the superseded version right away, as the
+    reference vacuums after each load; only the live version stays."""
+    import os
+
+    store = TableStore(spark, str(tmp_path), "earnings_calendar")
     df1 = spark.createDataFrame(
         [("AAA", D(2025, 1, 1), "Before market open")],
         "act_symbol string, date date, when string")
     store.overwrite(df1)
     v1 = store.current_version()
-    store.overwrite(df1.withColumn("when", F.lit("After market close")))
-    # previous version still readable (time travel within the window)
-    assert store.versions()[-1] == store.current_version()
-    assert v1 in store.versions()
     assert store.read(version=v1).collect()[0]["when"] == "Before market open"
+    store.overwrite(df1.withColumn("when", F.lit("After market close")))
     assert store.read().collect()[0]["when"] == "After market close"
-    # third write evicts v1
-    store.overwrite(df1)
-    assert v1 not in store.versions()
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="not retained"):
+    assert [e for e in os.listdir(store.path) if e.startswith("v-")] == \
+        [store.current_version()]
+    with pytest.raises(ValueError, match="not retained"):
         store.read(version=v1)
 
 
@@ -322,179 +319,10 @@ def test_stale_lock_reclaimed_live_lock_respected(spark, store):
     os.unlink(lock)
 
 
-def test_version_diff_added_removed_changed(spark, tmp_path):
-    store = TableStore(spark, str(tmp_path), "earnings_calendar",
-                       keep_versions=3)
-    df1 = spark.createDataFrame(
-        [("AAA", D(2025, 1, 1), "Before market open"),
-         ("BBB", D(2025, 1, 2), "After market close"),
-         ("CCC", D(2025, 1, 3), "Before market open")],
-        "act_symbol string, date date, when string")
-    store.overwrite(df1)
-    v1 = store.current_version()
-    df2 = spark.createDataFrame(
-        [("AAA", D(2025, 1, 1), "Before market open"),   # unchanged
-         ("BBB", D(2025, 1, 2), "Before market open"),   # changed
-         ("DDD", D(2025, 1, 4), "After market close")],  # added; CCC gone
-        "act_symbol string, date date, when string")
-    store.overwrite(df2)
-
-    got = {(r.act_symbol, r.change)
-           for r in store.diff(v1).collect()}
-    assert got == {("BBB", "changed"), ("CCC", "removed"),
-                   ("DDD", "added")}
-    # diffing a version against itself is empty
-    assert store.diff(v1, v1).count() == 0
-
-
-def test_merge_upsert_last_write_wins(spark, tmp_path):
-    store = TableStore(spark, str(tmp_path), "earnings_calendar",
-                       keep_versions=2)
-    df1 = spark.createDataFrame(
-        [("AAA", D(2025, 1, 1), "Before market open"),
-         ("BBB", D(2025, 1, 2), "After market close")],
-        "act_symbol string, date date, when string")
-    store.merge_upsert(df1, pk=("act_symbol", "date"))
-    v1 = store.current_version()
-
-    # batch updates AAA, inserts CCC, and carries an intra-batch tie on
-    # CCC resolved by order_by
-    df2 = spark.createDataFrame(
-        [("AAA", D(2025, 1, 1), "After market close"),
-         ("CCC", D(2025, 1, 3), "loser"),
-         ("CCC", D(2025, 1, 3), "winner")],
-        "act_symbol string, date date, when string")
-    store.merge_upsert(df2, pk=("act_symbol", "date"),
-                       order_by=[F.desc("when")])
-    got = {r.act_symbol: r.when for r in store.read().collect()}
-    assert got == {"AAA": "After market close",
-                   "BBB": "After market close",
-                   "CCC": "winner"}
-    # the merge is a version flip: diff audits exactly what changed
-    d = {(r.act_symbol, r.change) for r in store.diff(v1).collect()}
-    assert d == {("AAA", "changed"), ("CCC", "added")}
-    # idempotent replay: merging the same batch again changes nothing
-    store.merge_upsert(df2, pk=("act_symbol", "date"),
-                       order_by=[F.desc("when")])
-    assert {r.act_symbol: r.when
-            for r in store.read().collect()} == got
-
-
-def test_diff_spans_schema_evolution(spark, tmp_path):
-    store = TableStore(spark, str(tmp_path), "earnings_calendar",
-                       keep_versions=3, partition_by=None)
-    v1df = spark.createDataFrame(
-        [("AAA", D(2025, 1, 1), "x", "extra")],
-        "act_symbol string, date date, when string, note string")
-    store.overwrite(v1df)
-    v1 = store.current_version()
-    # v2 drops `note`: same surviving values, but the row must read as
-    # changed (a column it had is gone), not crash or read equal
-    store.overwrite(spark.createDataFrame(
-        [("AAA", D(2025, 1, 1), "x")],
-        "act_symbol string, date date, when string"))
-    d = {(r.act_symbol, r.change)
-         for r in store.diff(v1, pk=("act_symbol", "date")).collect()}
-    assert d == {("AAA", "changed")}
-
-
-def test_optimize_zorder_and_file_manifest(spark, tmp_path):
-    """OPTIMIZE ZORDER rewrites the live version so BOTH clustered
-    columns' row-group ranges become prunable, data survives
-    bit-identical, and the manifest reports the tightened stats."""
-    from pyspark.sql import functions as F
-
-    from zacks_estimates_financial_statements_spark.operators import layout
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-
-    store = TableStore(spark, str(tmp_path), "zopt", partition_by=None,
-                       keep_versions=2)
-    df = (spark.range(1 << 13)
-          .select(F.col("id"),
-                  (F.col("id") % 128).alias("x"),
-                  (F.hash("id") % 128 + 128).alias("yr"))
-          .withColumn("y", F.col("yr") % 128).drop("yr"))
-    store.overwrite(df)
-    before = {tuple(r) for r in store.read().collect()}
-
-    store.optimize_zorder([("x", 0, 127), ("y", 0, 127)], bits=7,
-                          n_files=16)
-    live = store._live_dir()
-    assert {tuple(r) for r in store.read().collect()} == before
-    assert layout.rowgroup_prune_fraction(live, "x", 10, 30) > 0.3
-    assert layout.rowgroup_prune_fraction(live, "y", 10, 30) > 0.3
-
-    man = store.file_manifest()
-    rows = man.filter(F.col("column") == "x").collect()
-    assert len(rows) >= 16          # one row per (row group, column)
-    assert all(r["n_rows"] > 0 and r["bytes"] > 0 for r in rows)
-    # stats are tight: at least one group's x-range excludes [10, 30]
-    assert any(int(r["max_value"]) < 10 or int(r["min_value"]) > 30
-               for r in rows)
-
-
-def test_version_tags_snapshot_reads(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-
-    store = TableStore(spark, str(tmp_path), "tagged", partition_by=None,
-                       keep_versions=3)
-    store.overwrite(spark.range(5).select(F.col("id")))
-    store.tag("run-a")
-    store.overwrite(spark.range(9).select(F.col("id")))
-    assert store.read().count() == 9
-    assert store.read_tag("run-a").count() == 5   # snapshot survives
-    assert store.tags()["run-a"].startswith("v-")
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        store.read_tag("missing")
-    with pytest.raises(ValueError):
-        store.tag("bad name!")
-    with pytest.raises(ValueError):
-        store.tag("run.tmp-1")   # temp-file marker: would never list
-    # vacuum past the tag: dangling is reported, read refuses
-    store.keep_versions = 1
-    store.overwrite(spark.range(2).select(F.col("id")))
-    store.overwrite(spark.range(3).select(F.col("id")))
-    assert store.tags()["run-a"].startswith("!")
-    with pytest.raises(ValueError):
-        store.read_tag("run-a")
-
-
-def test_purge_rows_across_stores(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from zacks_estimates_financial_statements_spark.operators.writer import (
-        TableStore,
-        purge_rows,
-    )
-
-    a = TableStore(spark, str(tmp_path), "ev_a", partition_by=None)
-    b = TableStore(spark, str(tmp_path), "ev_b", partition_by=None)
-    c = TableStore(spark, str(tmp_path), "no_user", partition_by=None)
-    a.overwrite(spark.range(10).select(F.col("id").alias("user_id"),
-                                       (F.col("id") * 2).alias("v")))
-    b.overwrite(spark.range(20).select((F.col("id") % 5).alias("user_id"),
-                                       F.col("id").alias("event")))
-    c.overwrite(spark.range(4).select(F.col("id").alias("other")))
-    condemned = spark.createDataFrame([(1,), (3,), (3,)], "user_id long")
-    removed = purge_rows([a, b, c], condemned, on=["user_id"])
-    assert removed == {"ev_a": 2, "ev_b": 8, "no_user": -1}
-    assert a.read().filter("user_id in (1, 3)").count() == 0
-    assert b.read().filter("user_id in (1, 3)").count() == 0
-    assert c.read().count() == 4
-    # idempotent: a replayed purge is a no-op
-    again = purge_rows([a, b], condemned, on=["user_id"])
-    assert again == {"ev_a": 0, "ev_b": 0}
-
-
 def test_snapshot_pin_survives_flip_and_gc(spark, tmp_path):
     """A reader that pinned version N keeps reading N across a
-    concurrent writer's pointer flip + vacuum (keep_versions=1); once
-    the pin is released, the next GC reclaims the old version."""
+    concurrent writer's pointer flip + vacuum; once the pin is
+    released, the next GC reclaims the old version."""
     import os
 
     import pytest
@@ -502,8 +330,7 @@ def test_snapshot_pin_survives_flip_and_gc(spark, tmp_path):
 
     from zacks_estimates_financial_statements_spark.operators.writer import TableStore
 
-    store = TableStore(spark, str(tmp_path), "pinned", partition_by=None,
-                       keep_versions=1)
+    store = TableStore(spark, str(tmp_path), "pinned")
     store.overwrite(spark.range(5).select(F.col("id")))
     with store.snapshot() as snap:
         v0 = snap.version
@@ -534,8 +361,7 @@ def test_snapshot_stale_pin_is_reaped(spark, tmp_path):
         TableStore,
     )
 
-    store = TableStore(spark, str(tmp_path), "stalepin", partition_by=None,
-                       keep_versions=1)
+    store = TableStore(spark, str(tmp_path), "stalepin")
     store.overwrite(spark.range(5).select(F.col("id")))
     v0 = store.current_version()
     # forge a pin from a dead pid on this host

@@ -209,6 +209,11 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 6,
     """
     if words is None:   # ``words=``: see bpe_word_counts
         words = bpe_word_counts(df, text_col, min_word_count)
+    elif min_word_count != 1:
+        raise ValueError(
+            "bpe_train: min_word_count applies only when bpe_train counts "
+            "the words itself; pass it to bpe_word_counts when building "
+            "words= instead")
     seg = (words.select(
         "cnt",
         F.concat(F.lit("  "),

@@ -328,9 +328,9 @@ def minhash_index(df: DataFrame, id_col: str, text_col: str,
     hash indices b, b+bands, …, ascending — matching the sorted
     "lpad(idx):minhash" pair order of the SQL twin); one aggregation
     feeds both the buckets and any later Jaccard estimate. Write this
-    table partitioned/bucketed by ``bucket`` (operators/bucketing.py)
-    and incremental ingestion probes it without ever re-sketching or
-    re-shuffling the stored corpus (``incremental_minhash_pairs``).
+    table partitioned by ``bucket`` and incremental ingestion probes it
+    without ever re-sketching or re-shuffling the stored corpus
+    (``incremental_minhash_pairs``).
     """
     per_doc = _minhash_wide(df, id_col, text_col, k, shingle_k)
     rows_per_band = k // bands

@@ -1,4 +1,4 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering for
+"""Multi-dimensional data layout: Z-order (Morton) clustering keys for
 file-skipping at scale.
 
 Parquet scan pruning works off per-file / per-row-group min-max
@@ -6,29 +6,23 @@ statistics; sorting by ONE column makes those ranges tight for that
 column only. Interleaving the bits of several columns into a Z-order
 key (Morton 1966; the technique behind Delta/Iceberg ``OPTIMIZE
 ZORDER BY``) and range-partitioning + sorting by that key keeps the
-min-max ranges of EVERY participating column tight in every file, so
-selective filters on any of them (or any conjunction) skip most of a
-100 TB table — the layout is decided once at write time, the benefit is
-free at every subsequent read.
+min-max ranges of EVERY participating column tight in every file.
 
 Spark-first shape: the key is a FLAT sum of shift/mask terms built at
 plan-construction time (``sum(((v >> b) & 1) << (b*k + i))``) — pure
 JVM codegen expressions, no UDF, no higher-order-function lambda (which
-CLAUDE.md notes can fall out of whole-stage codegen). Writing is
-``repartitionByRange(zkey)`` (range exchange with sampled bounds →
-files tile the Z-curve) + ``sortWithinPartitions`` (tight ranges inside
-each file, and parquet gets sorted runs to encode cheaply).
+CLAUDE.md notes can fall out of whole-stage codegen). The registry's
+``zorder_key`` query computes the key over events.
 
 Column normalization needs explicit ``(lo, hi)`` ranges: a data-derived
-min/max would make the layout non-deterministic across deliveries and
-is an extra full scan. Values are clamped, out-of-range rows simply
-land at the curve's edge — layout is best-effort, never a correctness
-gate.
+min/max would make the key non-deterministic across deliveries and is
+an extra full scan. Values are clamped, out-of-range rows simply land
+at the curve's edge.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def scale_to_bits(col: Column, lo: int, hi: int, bits: int) -> Column:
@@ -64,52 +58,3 @@ def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     for t in terms[1:]:
         out = out + t
     return out
-
-
-def zorder_key_int(cols: list[tuple[Column, int, int]],
-                   bits: int = 16) -> Column:
-    """Convenience: scale each ``(col, lo, hi)`` to ``bits`` bits then
-    interleave. Integer-exact end to end."""
-    scaled = [scale_to_bits(c, lo, hi, bits).cast("long")
-              for c, lo, hi in cols]
-    return zorder_key(scaled, bits)
-
-
-def write_zordered(df: DataFrame, path: str,
-                   cols: list[tuple[str, int, int]], bits: int = 12,
-                   n_files: int | None = None) -> None:
-    """Write ``df`` as parquet clustered on the Z-curve of ``cols``
-    (``(name, lo, hi)`` each): range-exchange on the Morton key with
-    sampled bounds so files tile the curve evenly (skew in key space
-    becomes file-count, not file-size, variance), sort inside each
-    partition, drop the key. ``n_files`` defaults to the session's
-    shuffle parallelism."""
-    zk = zorder_key_int(
-        [(F.col(c), lo, hi) for c, lo, hi in cols], bits)
-    tagged = df.withColumn("__zkey", zk)
-    n = n_files or tagged.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions")
-    (tagged.repartitionByRange(int(n), F.col("__zkey"))
-     .sortWithinPartitions("__zkey")
-     .drop("__zkey")
-     .write.mode("overwrite").parquet(path))
-
-
-def rowgroup_prune_fraction(path: str, col: str, lo, hi) -> float:
-    """Fraction of row groups a ``col BETWEEN lo AND hi`` scan can skip
-    using parquet min-max stats — the layout-quality metric
-    ``write_zordered`` optimizes. Driver-side metadata read only."""
-    import pyarrow.parquet as pq
-
-    ds = pq.ParquetDataset(path)
-    total = skipped = 0
-    for frag in ds.fragments:
-        md = frag.metadata
-        idx = {md.schema.column(i).path: i
-               for i in range(md.num_columns)}[col]
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            total += 1
-            if st is not None and (st.max < lo or st.min > hi):
-                skipped += 1
-    return skipped / total if total else 0.0

@@ -6,12 +6,17 @@ Semantics implemented:
 - ``upsert_ignore``   — W1: ``INSERT … ON CONFLICT (pk) DO NOTHING``
   (estimate-transform-load.rkt:195 et al.): dedup the batch on PK, anti-join
   against the stored PKs, append only the new keys. Re-runs are no-ops.
+- ``overwrite``       — wholesale rewrite (the calendar loaders' fused
+  W4/W5/W1 merge lands through it).
 - ``replace_window``  — W4/W5 fused (earnings-calendar-transform-load.rkt:45-51,
   :79-87): keep stored rows NOT matching a predicate, union the new batch,
   rewrite.
 - ``delete_where``    — W6/J3 (earnings-calendar-transform-load.rkt:109-148):
   anti-join the stored table against a condemned-keys DataFrame, rewrite.
-- ``validate``        — enum-domain + NOT-NULL enforcement (Spark has neither
+- W7 ``vacuum``       — every pointer flip drops the superseded versions
+  (``_gc``); ``compact`` rewrites the live version with one file per
+  partition value (``runner compact``).
+- ``split_valid``     — enum-domain + NOT-NULL enforcement (Spark has neither
   CHECK constraints nor enums); invalid rows are split out, never thrown,
   mirroring W2/W3's "bad document never lands" outcome via filtering
   (SURVEY §7.3).
@@ -42,7 +47,6 @@ Atomicity & scale:
 from __future__ import annotations
 
 import contextlib
-import re
 import datetime
 import os
 import shutil
@@ -67,15 +71,17 @@ _PIN_PREFIX = "_PIN_"
 
 _HOSTNAME = socket.gethostname()
 
+#: write-lock / reader-pin lease: a holder older than this (or whose
+#: recorded pid is dead on this host) may be taken over instead of
+#: requiring manual removal after a crash.
+_LEASE_SECONDS = 3600.0
+
 #: upper bound on distinct partition values collected from a batch for
 #: stored-side partition pruning in ``upsert_ignore``. Real loader
 #: batches touch one or a handful of dates; a batch touching more
 #: partitions than this skips the literal predicate (the broad scan is
 #: then legitimate) instead of building a megabyte IN-list.
 _MAX_PRUNE_PARTITIONS = 1000
-
-
-_TAG_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]{0,63}")
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -101,7 +107,8 @@ class _Snapshot:
 #: by the snapshot/event date makes the per-date dump scans, the calendar
 #: horizon deletes (date >= folder_date), and incremental upserts prune
 #: to the touched partitions. At 100 TB this is the difference between a
-#: metadata-bounded operation and a full-table scan.
+#: metadata-bounded operation and a full-table scan. At most one column
+#: per table; tables not listed here are unpartitioned.
 DEFAULT_PARTITIONING: dict[str, tuple[str, ...]] = {
     "rank_score": ("date",),
     "eps_estimate": ("date",),
@@ -129,28 +136,15 @@ class TableStore:
 
     The pointer flip makes rewrites atomic for readers on any filesystem
     with atomic rename (local, HDFS; on object stores the pointer object
-    PUT is atomic).
+    PUT is atomic). The partition layout is ``DEFAULT_PARTITIONING[name]``.
     """
 
     spark: SparkSession
     root: str
     name: str
-    #: "auto" → DEFAULT_PARTITIONING[name]; None/() → unpartitioned;
-    #: or an explicit tuple of columns.
-    partition_by: tuple[str, ...] | str | None = "auto"
-    #: how many version dirs to retain (newest-first, including the live
-    #: one). 1 = reference behavior (vacuum right after the flip); more
-    #: keeps a short time-travel window readable via ``read(version=)``.
-    keep_versions: int = 1
-    #: write-lock lease: a lock older than this (or whose recorded pid is
-    #: dead on this host) may be taken over by a new writer instead of
-    #: requiring manual removal after a crash.
-    lease_seconds: float = 3600.0
 
     def _partition_cols(self) -> tuple[str, ...]:
-        if self.partition_by == "auto":
-            return DEFAULT_PARTITIONING.get(self.name, ())
-        return tuple(self.partition_by or ())
+        return DEFAULT_PARTITIONING.get(self.name, ())
 
     @property
     def path(self) -> str:
@@ -176,26 +170,15 @@ class TableStore:
 
     # -- read ---------------------------------------------------------------
 
-    def versions(self) -> list[str]:
-        """Retained version dir names, oldest → newest (by mtime); the
-        last entry is normally the live one."""
-        if not os.path.isdir(self.path):
-            return []
-        vs = [e for e in os.listdir(self.path) if e.startswith("v-")]
-        return sorted(vs, key=lambda v: os.path.getmtime(
-            os.path.join(self.path, v)))
-
     def read(self, version: str | None = None) -> DataFrame:
-        """Current table contents (or a retained ``version`` — time
-        travel within the ``keep_versions`` window); empty
-        (schema-correct) DF if never written."""
+        """Current table contents (or a retained ``version``, which only
+        ``snapshot()`` pins); empty (schema-correct) DF if never
+        written."""
         if version is not None:
             vdir = os.path.join(self.path, version)
             if not os.path.isdir(vdir):
-                raise ValueError(
-                    f"version {version} of table {self.name} is not "
-                    f"retained (keep_versions={self.keep_versions}; "
-                    f"have: {self.versions()})")
+                raise ValueError(f"version {version} of table {self.name} "
+                                 "is not retained")
             return self.spark.read.parquet(vdir)
         live = self._live_dir()
         if live is None:
@@ -241,15 +224,15 @@ class TableStore:
         os.replace(tmp, self._pointer_path())  # atomic on POSIX
 
     def _gc(self, keep: str) -> None:
-        """Drop superseded version dirs beyond the retention window
-        (reference W7 ``vacuum`` analog; ``keep_versions`` > 1 leaves a
-        short readable history). Versions held by a live reader pin
-        (``snapshot()``) are never dropped; stale pins — dead pid on
-        this host, or lease-expired — are reaped here, so a crashed
-        reader cannot hold retention hostage."""
-        retained = set(self.versions()[-max(self.keep_versions, 1):])
-        retained.add(keep)
-        for entry in os.listdir(self.path):
+        """Drop every version dir but the live one ``keep`` right after
+        the flip (reference W7 ``vacuum``) — including orphans a crash
+        between version write and flip left behind. Versions held by a
+        live reader pin (``snapshot()``) are never dropped; stale pins —
+        dead pid on this host, or lease-expired — are reaped here, so a
+        crashed reader cannot hold retention hostage."""
+        retained = {keep}
+        entries = os.listdir(self.path)
+        for entry in entries:
             if not entry.startswith(_PIN_PREFIX):
                 continue
             pin = os.path.join(self.path, entry)
@@ -258,8 +241,8 @@ class TableStore:
                     os.unlink(pin)
             else:
                 retained.add(entry[len(_PIN_PREFIX):].split(".", 1)[0])
-        for entry in self.versions():
-            if entry not in retained:
+        for entry in entries:
+            if entry.startswith("v-") and entry not in retained:
                 shutil.rmtree(os.path.join(self.path, entry),
                               ignore_errors=True)
 
@@ -300,201 +283,26 @@ class TableStore:
             with contextlib.suppress(OSError):
                 os.unlink(pin)
 
-    def tag(self, name: str, version: str | None = None) -> None:
-        """Name a retained version (``None`` = the live one) — the
-        cheap reproducibility primitive: a training run records
-        ``store.tag("run-2026-08-14")`` and any later job reads the
-        exact snapshot via ``read_tag`` regardless of subsequent
-        upserts (while the version stays within ``keep_versions``).
-        Tags are one-pointer files, atomic like the live pointer."""
-        version = version or self.current_version()
-        if version is None or not os.path.isdir(
-                os.path.join(self.path, version)):
-            raise ValueError(f"cannot tag: version {version!r} of table "
-                             f"{self.name} is not retained")
-        if not _TAG_RE.fullmatch(name) or ".tmp-" in name:
-            # ".tmp-" is the temp-file marker tags()/read_tag() skip; a
-            # tag named e.g. "run.tmp-1" would write but never list.
-            raise ValueError(f"invalid tag name {name!r}")
-        tmp = os.path.join(self.path, f"_TAG_{name}.tmp-{uuid.uuid4().hex[:6]}")
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, os.path.join(self.path, f"_TAG_{name}"))
-
-    def tags(self) -> dict[str, str]:
-        """{tag: version}; tags whose version was vacuumed are
-        reported with a ``!`` prefix on the version (dangling)."""
-        out = {}
-        if not os.path.isdir(self.path):
-            return out
-        live = set(self.versions())
-        for entry in sorted(os.listdir(self.path)):
-            if entry.startswith("_TAG_") and ".tmp-" not in entry:
-                with open(os.path.join(self.path, entry)) as f:
-                    v = f.read().strip()
-                out[entry[5:]] = v if v in live else "!" + v
-        return out
-
-    def read_tag(self, name: str) -> DataFrame:
-        """Snapshot read via tag — raises if the tag is missing or its
-        version fell out of the retention window."""
-        v = self.tags().get(name)
-        if v is None:
-            raise ValueError(f"table {self.name} has no tag {name!r}")
-        if v.startswith("!"):
-            raise ValueError(
-                f"tag {name!r} points at vacuumed version {v[1:]} "
-                f"(raise keep_versions to retain tagged snapshots)")
-        return self.read(version=v)
-
-    def compact(self, files_per_partition: int = 1) -> None:
+    def compact(self) -> None:
         """Rewrite the live version with consolidated files — the plain-
         Parquet analog of Delta ``OPTIMIZE`` for the small-file buildup
         that incremental ``upsert_ignore`` appends create (each append
         adds files; at scale a dump or scan then reads thousands of tiny
         files per partition). Partitioned tables repartition on their
-        partition columns so each value lands in ~``files_per_partition``
-        files; unpartitioned tables coalesce outright."""
+        partition columns so each value lands in one file; unpartitioned
+        tables coalesce to one file."""
         with self.write_lock():
             df = self.read()
             parts = self._partition_cols()
             if parts:
                 df = df.repartition(*[F.col(c) for c in parts])
             else:
-                df = df.coalesce(max(files_per_partition, 1))
+                df = df.coalesce(1)
             self._overwrite_locked(df)
-
-    def optimize_zorder(self, cols: list[tuple[str, int, int]],
-                        bits: int = 12, n_files: int | None = None) -> None:
-        """Delta/Iceberg ``OPTIMIZE ZORDER BY`` analog: rewrite the live
-        version clustered on the Morton curve of ``cols`` (``(name, lo,
-        hi)`` integer-range triples — see operators/layout.py), so
-        selective filters on ANY clustered column skip most files via
-        parquet min-max stats. Like ``compact``, the rewrite lands as a
-        new version behind the atomic pointer flip — readers never see
-        partial state, and the layout benefit is permanent until the
-        next rewrite.
-
-        Partitioned tables keep their partition layout and cluster
-        WITHIN partitions; the in-file sort leads with the partition
-        columns because a ``partitionBy`` writer injects its own sort
-        otherwise, destroying the Z-order (the same trap as the
-        partitioned CSV export)."""
-        from zacks_estimates_financial_statements_spark.operators import layout
-
-        with self.write_lock():
-            df = self.read()
-            zk = layout.zorder_key_int(
-                [(F.col(c), lo, hi) for c, lo, hi in cols], bits)
-            tagged = df.withColumn("__zkey", zk)
-            n = int(n_files or tagged.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-            parts = list(self._partition_cols())
-            keys = [F.col(p) for p in parts] + [F.col("__zkey")]
-            arranged = (tagged.repartitionByRange(n, *keys)
-                        .sortWithinPartitions(*parts, "__zkey")
-                        .drop("__zkey"))
-            self._overwrite_locked(arranged)
-
-    def file_manifest(self) -> "DataFrame":
-        """Iceberg-style manifest of the LIVE version: one row per
-        parquet row group — file, rows, bytes, and per-column min/max
-        rendered as text — the metadata a human (or a layout test)
-        reads to see what a filter could skip. Footer parsing runs
-        DISTRIBUTED (mapInPandas over the file list): at 100 TB a table
-        has ~10⁵-10⁶ files and the driver should never open them all.
-        """
-        import pyarrow.parquet  # noqa: F401 — fail fast if unavailable
-
-        from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-        spark = self.spark
-        ensure_package_on_executors(spark)
-        live = self._live_dir()
-        if live is None:
-            raise ValueError(f"table {self.name} has no live version")
-        paths = []
-        for root, _dirs, files in os.walk(live):
-            paths.extend(os.path.join(root, f) for f in files
-                         if f.endswith(".parquet"))
-        pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-        def fn(batches):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            for b in batches:
-                rows = []
-                for p in b["path"]:
-                    md = pq.ParquetFile(p).metadata
-                    names = [md.schema.column(i).path
-                             for i in range(md.num_columns)]
-                    for g in range(md.num_row_groups):
-                        rg = md.row_group(g)
-                        for i, cname in enumerate(names):
-                            st = rg.column(i).statistics
-                            rows.append({
-                                "file": os.path.relpath(p, live),
-                                "row_group": g,
-                                "n_rows": rg.num_rows,
-                                "bytes": rg.total_byte_size,
-                                "column": cname,
-                                "min_value": None if st is None
-                                else str(st.min),
-                                "max_value": None if st is None
-                                else str(st.max)})
-                yield pd.DataFrame(rows, columns=[
-                    "file", "row_group", "n_rows", "bytes", "column",
-                    "min_value", "max_value"])
-
-        return pdf.mapInPandas(
-            fn, "file string, row_group int, n_rows long, bytes long, "
-                "column string, min_value string, max_value string")
-
-    def diff(self, old_version: str, new_version: str | None = None,
-             pk: tuple[str, ...] | None = None) -> DataFrame:
-        """Time-travel diff between two retained versions: one row per
-        primary key that was ``added``, ``removed`` or ``changed``
-        (non-key columns differ), tagged in a ``change`` column with the
-        key columns. ``new_version=None`` diffs against the live table.
-
-        The comparison is a single full-outer join on the primary key;
-        non-key equality is one md5 over the concatenated canonical
-        string forms (null-tagged, unit-separated), so the shuffle
-        carries (key, hash) pairs — never the wide rows twice. This is
-        the audit primitive a versioned store owes its operators: what
-        did that load actually change?
-        """
-        pk = tuple(pk or PRIMARY_KEYS[self.name])
-        old = self.read(version=old_version)
-        new = self.read(version=new_version)
-        # value-column universe spans BOTH schemas, so a column added or
-        # dropped between versions hashes as null on the side lacking it
-        # (schema evolution reads as 'changed', never as a crash or a
-        # silently-equal row)
-        val_cols = sorted((set(old.columns) | set(new.columns)) - set(pk))
-
-        def keyed(df: DataFrame, tag: str) -> DataFrame:
-            # distinct sentinels: a NULL value ("\x00") is not the same
-            # as the column being absent from this version ("\x02")
-            cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                    if c in df.columns else F.lit("\x02")
-                    for c in val_cols]
-            h = F.md5(F.concat_ws("\x1f", *cols))
-            return df.select(*pk, h.alias(f"__h_{tag}"))
-
-        j = keyed(old, "old").join(keyed(new, "new"), list(pk), "full_outer")
-        change = (F.when(F.col("__h_old").isNull(), F.lit("added"))
-                  .when(F.col("__h_new").isNull(), F.lit("removed"))
-                  .when(F.col("__h_old") != F.col("__h_new"),
-                        F.lit("changed")))
-        return (j.withColumn("change", change)
-                .filter(F.col("change").isNotNull())
-                .select(*pk, "change"))
 
     def _lock_is_stale(self, lock: str) -> bool:
         """A holder is provably dead when it ran on this host and its pid
-        is gone, or when its lease (``at`` + ``lease_seconds``) expired —
+        is gone, or when its lease (``at`` + ``_LEASE_SECONDS``) expired —
         the cross-host case, where liveness can't be probed. Unparsable
         lock files fall back to the file mtime for the lease check."""
         try:
@@ -522,7 +330,7 @@ class TableStore:
                                 - os.path.getmtime(lock)))
             except OSError:
                 return False
-        return age > self.lease_seconds
+        return age > _LEASE_SECONDS
 
     @contextlib.contextmanager
     def write_lock(self):
@@ -534,7 +342,7 @@ class TableStore:
 
         The lock is a LEASE: it records pid/host/timestamp, and a new
         writer may take over when the holder is provably dead (same host,
-        pid gone) or the lease aged past ``lease_seconds`` — so a crashed
+        pid gone) or the lease aged past ``_LEASE_SECONDS`` — so a crashed
         pipeline no longer needs manual lock removal. Takeover claims the
         stale file via atomic rename before recreating it, so two
         simultaneous reclaimers can't each unlink the other's fresh lock;
@@ -561,7 +369,7 @@ class TableStore:
                     holder = "unknown"
                 raise ConcurrentWriteError(
                     f"table {self.name} is locked by another writer "
-                    f"({holder}); lease expires {self.lease_seconds}s "
+                    f"({holder}); lease expires {_LEASE_SECONDS}s "
                     f"after its 'at' stamp, or remove {lock} manually"
                 ) from None
         try:
@@ -613,30 +421,21 @@ class TableStore:
         stored = self.read()
         parts = [c for c in self._partition_cols() if c in deduped.columns]
         if parts:
-            vals = (deduped.select(*parts).distinct()
+            part = parts[0]   # DEFAULT_PARTITIONING: one column at most
+            vals = (deduped.select(part).distinct()
                     .limit(_MAX_PRUNE_PARTITIONS + 1).collect())
             if len(vals) <= _MAX_PRUNE_PARTITIONS:
-                if len(parts) == 1:
-                    pred = F.col(parts[0]).isin([r[0] for r in vals])
-                else:
-                    pred = F.lit(False)
-                    for r in vals:
-                        conj = F.lit(True)
-                        for c in parts:
-                            conj = conj & F.col(c).eqNullSafe(F.lit(r[c]))
-                        pred = pred | conj
-                stored = stored.filter(pred)
+                stored = stored.filter(F.col(part).isin([r[0] for r in vals]))
         existing_keys = stored.select(*pk).distinct()
         return deduped.join(existing_keys, on=list(pk), how="left_anti")
 
     def upsert_ignore(self, batch: DataFrame,
-                      pk: tuple[str, ...] | None = None,
-                      order_by: list | None = None) -> None:
+                      pk: tuple[str, ...] | None = None) -> None:
         """W1 — first-write-wins idempotent insert.
 
-        1. dedup the batch on PK (``order_by`` gives a deterministic
-           winner; default: arbitrary-but-stable via row_number over the
-           batch's own column order),
+        1. dedup the batch on PK, one arbitrary row per key (a loader
+           that needs a specific winner, e.g. the earliest folder date,
+           dedups before it calls this),
         2. anti-join against stored PKs, with the stored side partition-
            pruned to the batch's partition values and column-pruned to
            the PK (see ``_fresh_rows`` for the at-scale rationale),
@@ -645,8 +444,7 @@ class TableStore:
         pk = pk or PRIMARY_KEYS[self.name]
         from pyspark.sql import Window
 
-        ob = order_by if order_by else [F.lit(1)]
-        w = Window.partitionBy(*[F.col(c) for c in pk]).orderBy(*ob)
+        w = Window.partitionBy(*[F.col(c) for c in pk]).orderBy(F.lit(1))
         deduped = (batch.withColumn("__rn", F.row_number().over(w))
                    .filter(F.col("__rn") == 1).drop("__rn"))
 
@@ -665,39 +463,6 @@ class TableStore:
                 writer = writer.partitionBy(*parts)
             writer.parquet(live)
 
-    def merge_upsert(self, batch: DataFrame,
-                     pk: tuple[str, ...] | None = None,
-                     order_by: list | None = None) -> None:
-        """Last-write-wins MERGE: batch rows REPLACE stored rows sharing
-        their primary key; new keys insert. (``upsert_ignore`` is the
-        reference's first-write-wins ``ON CONFLICT DO NOTHING``; this is
-        the ``DO UPDATE`` complement an engine user expects.)
-
-        The stored side never re-reads the batch keys wide: survivors
-        are the stored rows anti-joined on the PK (column-pruned key
-        set, AQE picks the join strategy), unioned with the deduped
-        batch, written as a NEW VERSION + pointer flip — the store's
-        atomicity unit is the version, so readers see the merge all at
-        once and ``diff()`` can audit exactly what it changed.
-        ``order_by`` breaks intra-batch PK ties deterministically.
-        """
-        pk = tuple(pk or PRIMARY_KEYS[self.name])
-        from pyspark.sql import Window
-
-        ob = order_by if order_by else [F.lit(1)]
-        w = Window.partitionBy(*[F.col(c) for c in pk]).orderBy(*ob)
-        deduped = (batch.withColumn("__rn", F.row_number().over(w))
-                   .filter(F.col("__rn") == 1).drop("__rn"))
-        with self.write_lock():
-            if self._live_dir() is None:
-                self._overwrite_locked(deduped)
-                return
-            batch_keys = deduped.select(*pk).distinct()
-            survivors = self.read().join(batch_keys, on=list(pk),
-                                         how="left_anti")
-            self._overwrite_locked(
-                survivors.unionByName(deduped.select(*survivors.columns)))
-
     def replace_window(self, batch: DataFrame, keep_condition) -> None:
         """W4/W5 — windowed replace: stored rows satisfying
         ``keep_condition`` survive; everything else is replaced by the batch.
@@ -711,55 +476,21 @@ class TableStore:
             kept = existing.filter(keep_condition)
             self._overwrite_locked(kept.unionByName(batch))
 
-    def delete_where(self, condemned_keys: DataFrame,
-                     on: list[str] | None = None, condition=None) -> None:
+    def delete_where(self, condemned_keys: DataFrame, on: list[str]) -> None:
         """W6/J3 — delete-via-join: remove stored rows matching
-        ``condemned_keys`` (equi on ``on`` plus optional extra
-        ``condition``), via left_anti + rewrite.
+        ``condemned_keys`` (equi on ``on``), via left_anti + rewrite.
 
-        The condemned set is small by design (stale calendar keys, a
-        purge list) but arrives from OUTSIDE this plan, so the
-        broadcast hint is size-gated (``util.maybe_broadcast``): an
-        oversized key set degrades to an un-hinted join AQE can plan,
-        instead of OOMing every executor through a forced broadcast."""
+        The condemned set is small by design (stale calendar keys) but
+        arrives from OUTSIDE this plan, so the broadcast hint is
+        size-gated (``util.maybe_broadcast``): an oversized key set
+        degrades to an un-hinted join AQE can plan, instead of OOMing
+        every executor through a forced broadcast."""
         from zacks_estimates_financial_statements_spark.util import maybe_broadcast
 
         with self.write_lock():
-            existing = self.read()
-            keys = maybe_broadcast(condemned_keys)
-            if on is not None and condition is None:
-                kept = existing.join(keys, on=on, how="left_anti")
-            else:
-                kept = existing.join(keys, on=condition, how="left_anti")
+            kept = self.read().join(maybe_broadcast(condemned_keys), on=on,
+                                    how="left_anti")
             self._overwrite_locked(kept)
-
-
-def purge_rows(stores: "list[TableStore]", condemned_keys: DataFrame,
-               on: list[str]) -> dict[str, int]:
-    """Right-to-be-forgotten across a table set: delete every stored
-    row matching ``condemned_keys`` (equi on ``on``) from EACH store
-    that carries those key columns; stores without them are skipped
-    (reported as -1). Returns {table: rows_removed}.
-
-    Each table's delete is the store's own ``delete_where`` — a
-    broadcast anti-join + atomic version flip, so per-table the purge
-    is partition-pruned and readers never see partial state. Cross-
-    table atomicity is intentionally NOT promised (that would need a
-    global lock across stores); the operation is idempotent, so a
-    crashed purge re-runs to completion — the same replay contract as
-    the loaders.
-    """
-    out: dict[str, int] = {}
-    condemned = condemned_keys.select(*on).distinct()
-    for store in stores:
-        cols = set(store.read().columns)
-        if not set(on) <= cols:
-            out[store.name] = -1
-            continue
-        before = store.read().count()
-        store.delete_where(condemned, on=on)
-        out[store.name] = before - store.read().count()
-    return out
 
 
 # ---------------------------------------------------------------------------
