@@ -2955,7 +2955,7 @@ dl AS (
   -- duplicate-id contract (bm25_score): postings key on the id — rows
   -- of one id MERGE (their token streams concatenate), so the length
   -- relation is one row per id; ids are expected unique upstream
-  -- (dedup_exact), the index is merely deterministic when they are not
+  -- (exact_dup_groups), the index is merely deterministic when they are not
   SELECT d.doc_id, coalesce(c.cnt, 0) AS dl
   FROM (SELECT DISTINCT doc_id FROM documents
         WHERE doc_id IS NOT NULL) d LEFT JOIN (

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from zacks_estimates_financial_statements_spark.functions import tokenize
 from zacks_estimates_financial_statements_spark.operators import (
-    curation, dedup, linkage)
+    curation, dedup, linkage, similarity)
 from zacks_estimates_financial_statements_spark.util import cache_scope, persist
 
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -44,6 +44,16 @@ def _dsir_select(spark):
                                 "doc_id", "text", n=5, buckets=512)
 
 
+def _ivf_topk(spark):
+    corpus = spark.createDataFrame(
+        [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(8)])
+         for i in range(40)], "vec_id bigint, embedding array<float>")
+    queries = corpus.filter("vec_id < 3").selectExpr(
+        "vec_id AS query_id", "embedding AS query_vec")
+    index = similarity.ivf_build(corpus, n_centroids=4)
+    return similarity.topk_ivf(None, queries, k=3, nprobe=2, index=index)
+
+
 #: every operator that persists an internal relation its lazy result
 #: reads -> (builder, a column to compose a filter on)
 OPERATORS = {
@@ -59,6 +69,7 @@ OPERATORS = {
     "perplexity_buckets": (lambda s: curation.perplexity_buckets(
         _docs(s), "doc_id", "text", "lang"), "bucket"),
     "unigram_encode": (_unigram_encode, "n_pieces"),
+    "ivf_build": (_ivf_topk, "cosine"),
 }
 
 

@@ -1,11 +1,10 @@
-"""Mid-batch crash recovery for the batch sinks: the calendar
-loaders' W4/W5 merge (a ``TableStore`` versioned overwrite) and the
-``write_training_shards`` export.
+"""Mid-batch crash recovery for the batch sink: the calendar loaders'
+W4/W5 merge (a ``TableStore`` versioned overwrite).
 
 The streaming sinks' kill-mid-batch tests live in
-``test_streaming.py`` (dedup gate, estimates fan-out, balance-sheet
-3-table transaction). These cover the BATCH sinks: each test kills
-the write at its sharpest point — after the data is durably written,
+``test_streaming.py`` (estimates fan-out, balance-sheet 3-table
+transaction). This covers the BATCH sink: the test kills the write at
+its sharpest point — after the data is durably written,
 before the commit (pointer flip / final rename) — and proves
 
 1. the crash is observable as NO state change (readers still see the
@@ -19,7 +18,6 @@ before the commit (pointer flip / final rename) — and proves
 from __future__ import annotations
 
 import datetime
-import glob
 import json
 import os
 
@@ -111,50 +109,3 @@ def test_calendar_merge_mid_commit_crash_recovery(spark, tmp_path):
     assert store.current_version() not in (live, orphans[0])
 
 
-def test_training_shards_mid_rename_crash_recovery(spark, tmp_path):
-    """Kill write_training_shards mid-way through the part-file rename
-    loop (after the distributed staging write committed, after the
-    first shard renamed): the output dir is visibly partial, and a
-    plain re-run produces the byte-identical shard set of an
-    uninterrupted run — the determinism contract doubling as the
-    recovery contract."""
-    from zacks_estimates_financial_statements_spark import export as E
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text", "source").limit(120))
-    shards = 4
-
-    out_a = str(tmp_path / "shards_a")
-    want_paths = E.write_training_shards(docs, out_a, "doc_id",
-                                         shards=shards, compress=False)
-    want = [open(p, "rb").read() for p in want_paths]
-
-    out_b = str(tmp_path / "shards_b")
-    real_move = E.shutil.move
-    calls = {"n": 0}
-
-    def faulty_move(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise _Boom("injected crash mid shard-rename loop")
-        return real_move(src, dst)
-
-    E.shutil.move = faulty_move
-    try:
-        with pytest.raises(_Boom):
-            E.write_training_shards(docs, out_b, "doc_id",
-                                    shards=shards, compress=False)
-    finally:
-        E.shutil.move = real_move
-    assert calls["n"] == 2
-    # genuinely partial: one shard landed, the staging dir remains
-    landed = glob.glob(os.path.join(out_b, "shard-*.jsonl"))
-    assert len(landed) == 1
-    assert os.path.isdir(os.path.join(out_b, "_staging"))
-
-    got_paths = E.write_training_shards(docs, out_b, "doc_id",
-                                        shards=shards, compress=False)
-    assert [os.path.basename(p) for p in got_paths] == \
-        [os.path.basename(p) for p in want_paths]
-    assert [open(p, "rb").read() for p in got_paths] == want
-    assert not os.path.isdir(os.path.join(out_b, "_staging"))

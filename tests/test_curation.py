@@ -691,10 +691,10 @@ def test_bpe_train_rejects_min_word_count_with_words(spark):
                      words=TK.bpe_word_counts(df, "text", 2))
 
 
-def test_char_entropy_and_compression_ratio_rank_garbage(spark):
-    """Both quality signals must separate natural-ish text from
-    repeated-character padding, and entropy must match the closed
-    form on a hand-computable distribution."""
+def test_char_entropy_ranks_garbage(spark):
+    """The entropy signal must separate natural-ish text from
+    repeated-character padding and match the closed form on a
+    hand-computable distribution."""
     import math
 
     from zacks_estimates_financial_statements_spark.operators import curation
@@ -712,13 +712,6 @@ def test_char_entropy_and_compression_ratio_rank_garbage(spark):
     assert ent[1]["n_chars"] == 4 and ent[1]["n_distinct_chars"] == 2
     assert ent[2]["entropy"] == 0.0
     assert ent[3]["entropy"] > 2.5  # natural-ish text
-
-    cr = {r["doc_id"]: r for r in
-          curation.compression_ratio(df, "doc_id", "text").collect()}
-    assert cr[2]["ratio"] < 0.1 < cr[3]["ratio"]
-    assert cr[4]["ratio"] is None and cr[4]["raw_bytes"] == 0
-    assert cr[3]["raw_bytes"] == len(
-        "the quick brown fox jumps over the lazy dog " * 6)
 
 
 def test_rrf_fuse_hand_computed(spark):

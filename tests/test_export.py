@@ -194,164 +194,3 @@ def test_runner_dump_dolt_forwards_gc(monkeypatch, tmp_path):
     assert rc == 0 and seen["gc"] is True
 
 
-def test_write_training_shards_deterministic(spark, tmp_path):
-    from zacks_estimates_financial_statements_spark import export as E
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text", "source").limit(200)
-    out1 = str(tmp_path / "shards1")
-    paths = E.write_training_shards(docs, out1, "doc_id", shards=4)
-    assert [os.path.basename(p) for p in paths] == \
-        [f"shard-{i:05d}.jsonl.gz" for i in range(4)]
-
-    import gzip
-    import json as J
-    seen = {}
-    for i, p in enumerate(paths):
-        with gzip.open(p, "rt") as fh:
-            rows = [J.loads(line) for line in fh]
-        ids = [r["doc_id"] for r in rows]
-        assert ids == sorted(ids)          # in-shard order by id
-        for r in rows:
-            seen[r["doc_id"]] = i
-    assert len(seen) == 200                # no loss, no dup
-
-    # determinism: a second run shards identically
-    out2 = str(tmp_path / "shards2")
-    paths2 = E.write_training_shards(docs.repartition(7), out2,
-                                     "doc_id", shards=4)
-    for i, p in enumerate(paths2):
-        with gzip.open(p, "rt") as fh:
-            for line in fh:
-                assert seen[J.loads(line)["doc_id"]] == i
-
-
-def test_jsonl_roundtrip_and_quarantine(spark, tmp_path):
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    from zacks_estimates_financial_statements_spark import export as E
-    from zacks_estimates_financial_statements_spark.sources import jsonl
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text", "source").limit(50)
-    out = str(tmp_path / "shards")
-    E.write_training_shards(docs, out, "doc_id", shards=2)
-
-    schema = StructType([StructField("doc_id", LongType()),
-                         StructField("text", StringType()),
-                         StructField("source", StringType())])
-    # shards written by the engine read back loss-free
-    good, quar, release = jsonl.read_jsonl(spark, out + "/*.jsonl.gz",
-                                           schema)
-    assert good.count() == 50 and quar.count() == 0
-    a = {r.doc_id: r.text for r in good.collect()}
-    b = {r.doc_id: r.text for r in docs.collect()}
-    assert a == b
-    # the scratch copy persists DISK_ONLY (never steals executor memory)
-    # and release() drops it. Other fixtures may hold their own cached
-    # RDDs in the shared session, so assert on the DELTA: at least one
-    # disk-only, zero-memory entry exists now and is gone after release.
-    def disk_only_ids():
-        return {info.id() for info in
-                spark.sparkContext._jsc.sc().getRDDStorageInfo()
-                if info.storageLevel().useDisk()
-                and not info.storageLevel().useMemory()}
-    before = disk_only_ids()
-    assert before
-    release()
-    assert disk_only_ids() < before
-
-    # damaged delivery: parseable rows flow, broken lines quarantine RAW
-    bad = tmp_path / "damaged.jsonl"
-    bad.write_text('{"doc_id": 1, "text": "ok", "source": "s"}\n'
-                   '{"doc_id": 2, "text": "trunca\n'
-                   'not json at all\n'
-                   '{"doc_id": 3, "text": "fine", "source": "s"}\n')
-    good2, quar2, release2 = jsonl.read_jsonl(spark, str(bad), schema)
-    assert {r.doc_id for r in good2.collect()} == {1, 3}
-    raws = sorted(r.raw_line for r in quar2.collect())
-    assert raws == ['not json at all', '{"doc_id": 2, "text": "trunca']
-    release2()
-
-    import pytest as _pytest
-    poisoned = StructType(list(schema.fields)
-                          + [StructField("_corrupt_record", StringType())])
-    with _pytest.raises(ValueError, match="_corrupt_record"):
-        jsonl.read_jsonl(spark, str(bad), poisoned)
-
-
-def test_write_training_shards_emits_empty_shards(spark, tmp_path):
-    import gzip
-
-    from zacks_estimates_financial_statements_spark import export as E
-
-    docs = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")],
-                                 ["doc_id", "text"])
-    out = str(tmp_path / "sparse")
-    paths = E.write_training_shards(docs, out, "doc_id", shards=8)
-    # contract: exactly `shards` files, positionally indexable
-    assert [os.path.basename(p) for p in paths] == \
-        [f"shard-{i:05d}.jsonl.gz" for i in range(8)]
-    total = 0
-    for p in paths:
-        with gzip.open(p, "rt") as fh:   # empty shards are valid gzip
-            total += sum(1 for _ in fh)
-    assert total == 3
-
-
-def test_webdataset_shards_roundtrip_and_determinism(spark, tmp_path):
-    import hashlib
-    import json as J
-    import tarfile
-
-    from zacks_estimates_financial_statements_spark import export as E
-
-    rows = [(i, f"text of document {i}", bytes([i % 251] * (10 + i)),
-             f"src{i % 3}") for i in range(23)]
-    df = spark.createDataFrame(
-        rows, "doc_id: long, text: string, payload: binary, source: string")
-    out1 = str(tmp_path / "wds1")
-    paths = E.write_webdataset_shards(
-        df, out1, "doc_id", shards=3, text_col="text",
-        media_col="payload", media_ext="img", meta_cols=["source"])
-    assert [p.split("/")[-1] for p in paths] == \
-        [f"shard-{i:05d}.tar" for i in range(3)]
-
-    got = {}
-    for p in paths:
-        with tarfile.open(p) as tf:
-            members = tf.getnames()
-            # samples are contiguous and keys sorted within a shard
-            keys = [m.split(".")[0] for m in members]
-            assert keys == sorted(keys)
-            for m in members:
-                got[m] = tf.extractfile(m).read()
-    # loss-free: every sample's three files round-trip
-    for i, text, payload, source in rows:
-        key = f"{i:012d}"
-        assert got[f"{key}.txt"].decode() == text
-        assert got[f"{key}.img"] == payload
-        assert J.loads(got[f"{key}.json"]) == {"source": source}
-    assert len(got) == 3 * 23
-
-    # determinism: a re-run (different partitioning) is byte-identical
-    out2 = str(tmp_path / "wds2")
-    E.write_webdataset_shards(
-        df.repartition(7), out2, "doc_id", shards=3, text_col="text",
-        media_col="payload", media_ext="img", meta_cols=["source"])
-    for i in range(3):
-        h1 = hashlib.md5(open(f"{out1}/shard-{i:05d}.tar", "rb")
-                         .read()).hexdigest()
-        h2 = hashlib.md5(open(f"{out2}/shard-{i:05d}.tar", "rb")
-                         .read()).hexdigest()
-        assert h1 == h2, i
-
-    # empty-shard contract: more shards than docs still yields n files
-    out3 = str(tmp_path / "wds3")
-    p3 = E.write_webdataset_shards(
-        df.limit(1), out3, "doc_id", shards=4, text_col="text")
-    assert len(p3) == 4
-    for p in p3:
-        with tarfile.open(p) as tf:   # every file is a valid tar
-            tf.getnames()

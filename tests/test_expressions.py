@@ -77,22 +77,12 @@ def test_next_quarter_end(spark):
 
 
 def test_enum_codecs(spark):
-    assert _col_vals(spark, ["current-quarter", "next-year", "bogus"],
-                     E.decode_estimate_period) == ["Current Quarter", "Next Year", None]
     assert _col_vals(spark, ["annual", "quarterly"],
                      E.decode_statement_period) == ["Year", "Quarter"]
     assert _col_vals(spark, ["amc", "bmo", "--"],
                      E.decode_when) == ["After market close", "Before market open", None]
     assert _col_vals(spark, ["Strong Buy", "Hold", "Strong Sell", "junk"],
                      E.to_integer_rank) == [1, 3, 5, None]
-
-
-def test_to_integer_rank_sql_registration(spark):
-    E.register_sql_functions(spark)
-    rows = spark.sql(
-        "SELECT to_integer_rank('Buy') AS a, to_integer_rank('Sell') AS b"
-    ).collect()
-    assert (rows[0]["a"], rows[0]["b"]) == (2, 4)
 
 
 def test_scale_millions_and_statement_cell(spark):

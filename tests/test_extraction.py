@@ -20,45 +20,6 @@ def test_strip_html_tags_kitchen_sink(spark):
     assert got == 'Hello & welcome to <Spark>, "world" \'ok\' spaced out'
 
 
-def test_extract_main_text_drops_chrome_keeps_content(spark):
-    art = ("This is the first substantial paragraph of the article body "
-           "carrying the actual content a training corpus wants.")
-    art2 = ("A second long paragraph continues the story with more than "
-            "enough characters to clear the minimum block threshold.")
-    html = (
-        '<html><body>'
-        '<nav><a href="/">Home</a> <a href="/a">About</a> '
-        '<a href="/c">Contact</a> <a href="/d">More</a></nav>'
-        '<header><h1>Site Title Banner That Is Quite Long Indeed '
-        'Truly</h1></header>'
-        f'<article><p>{art}</p><p>{art2}</p>'
-        '<p>short</p>'   # under min_block_chars -> dropped
-        '<li><a href="/x">A menu item that is basically one long link '
-        'with trailing words</a> tail</li>'   # link-dense -> dropped
-        '</article>'
-        '<footer>(c) 2026 footer boilerplate навигация legal text here '
-        'long enough to pass length</footer>'
-        '<script>tracking();</script>'
-        '</body></html>')
-    df = spark.createDataFrame([(1, html), (2, "<html><body></body></html>"),
-                                (3, None)],
-                               "doc_id: long, h: string")
-    out = {r.doc_id: r for r in
-           extraction.extract_main_text(df, "doc_id", "h").collect()}
-    assert out[1].extract_error is None
-    blocks = out[1].main_text.split("\n")
-    assert blocks == [art, art2]
-    assert out[1].n_blocks == 2
-    assert out[1].total_chars == len(out[1].main_text)
-    # chrome text never leaks
-    assert "footer" not in out[1].main_text
-    assert "Home" not in out[1].main_text
-    assert "menu item" not in out[1].main_text
-    # empty and NULL documents succeed with zero blocks
-    assert out[2].main_text == "" and out[2].n_blocks == 0
-    assert out[3].main_text == "" and out[3].extract_error is None
-
-
 # ------------------------------------------------------------- link extraction
 
 def test_extract_links_quotes_positions_and_scheme_gate(spark):

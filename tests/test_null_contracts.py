@@ -38,7 +38,8 @@ def test_corpus_diff_null_text_is_unchanged_not_added(spark):
 def test_shingles_null_words_yield_no_shingles(spark):
     df = spark.createDataFrame([("a b c d",), (None,), ("",)], "t string")
     out = df.select(
-        T.shingles(F.col("t"), 3).alias("s")).collect()
+        T.shingles_from_words(
+            F.split(T.normalize_text(F.col("t")), " "), 3).alias("s")).collect()
     assert out[0]["s"] == ["a b c", "b c d"]
     assert out[1]["s"] is None          # NULL text: no shingles at all
     assert out[2]["s"] == [""]          # empty text: the '' shingle

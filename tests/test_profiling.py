@@ -40,24 +40,6 @@ def test_profile_table_single_shuffle(spark):
     assert plan.count("Exchange") == 1 and "Join" not in plan
 
 
-def test_profile_drift_flags(spark):
-    base = spark.createDataFrame(
-        [(i, "k%d" % (i % 50), None if i % 100 == 0 else float(i))
-         for i in range(1000)],
-        "id long, k string, v double")
-    # drifted: v nulls jump to 20%, k cardinality collapses to 2
-    cur = spark.createDataFrame(
-        [(i, "k%d" % (i % 2), None if i % 5 == 0 else float(i))
-         for i in range(1000)],
-        "id long, k string, v double")
-    drift = {r["column"]: r.asDict() for r in profiling.profile_drift(
-        profiling.profile_table(base, exact=True),
-        profiling.profile_table(cur, exact=True)).collect()}
-    assert drift["v"]["null_drift"] and not drift["id"]["null_drift"]
-    assert drift["k"]["distinct_drift"] and not drift["id"]["distinct_drift"]
-    assert abs(drift["v"]["null_rate_delta"] - 0.19) < 1e-6
-
-
 def test_robust_outliers_flags_planted_anomaly(spark):
     """A single wild value in an otherwise tight bucket is flagged; the
     tight values are not; MAD is immune to the outlier itself (a

@@ -76,11 +76,6 @@ def test_char_entropy_empty_and_whitespace(spark):
     assert got[0]["entropy"] == 0.0
 
 
-def test_compression_ratio_empty(spark):
-    e = _empty(spark, "doc_id long, text string")
-    assert curation.compression_ratio(e, "doc_id", "text").count() == 0
-
-
 def test_zorder_single_value_range(spark):
     from zacks_estimates_financial_statements_spark.operators import layout
 

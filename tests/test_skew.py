@@ -1,40 +1,8 @@
-"""Skew operators: detection and salted-join equivalence."""
+"""Skew operators: the bloom semi-join's exactness and plan shape."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from zacks_estimates_financial_statements_spark.operators import skew
-
-
-def _skewed_df(spark):
-    hot = spark.range(5000).select(F.lit(1).alias("k"), F.col("id").alias("v"))
-    cold = spark.range(200).select((F.col("id") % 50 + 2).alias("k"),
-                                   F.col("id").alias("v"))
-    return hot.unionByName(cold)
-
-
-def test_skewed_keys_detects_hot_key(spark):
-    df = _skewed_df(spark)
-    hot = skew.skewed_keys(df, ["k"], ratio=8.0, min_rows=1000).collect()
-    assert [r["k"] for r in hot] == [1]
-
-
-def test_salted_join_matches_plain_join(spark):
-    large = _skewed_df(spark)
-    dim = spark.range(60).select(F.col("id").alias("k"),
-                                 F.concat(F.lit("d"), F.col("id")).alias("name"))
-    plain = large.join(dim, ["k"], "inner")
-    salted = skew.salted_join(large, dim, ["k"], "inner", buckets=8)
-    assert salted.count() == plain.count()
-    a = {(r["k"], r["v"], r["name"]) for r in plain.collect()}
-    b = {(r["k"], r["v"], r["name"]) for r in salted.collect()}
-    assert a == b
-    # left join keeps unmatched large rows exactly once
-    dim_small = dim.filter("k < 5")
-    pl = large.join(dim_small, ["k"], "left")
-    sl = skew.salted_join(large, dim_small, ["k"], "left", buckets=8)
-    assert pl.count() == sl.count()
 
 
 def test_bloom_semi_join_exact_and_sound(spark):

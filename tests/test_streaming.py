@@ -1,48 +1,14 @@
-"""Structured Streaming extension: incremental calendar file pickup,
-watermarked windowed aggregation, stateful sessionization."""
+"""Structured Streaming: the raw-zone document loaders, watermarked
+windowed aggregation, streaming dedup and attribution, and the stateful
+fetch scheduler."""
 
 from __future__ import annotations
 
 import datetime
-import json
 
 from zacks_estimates_financial_statements_spark.streaming import raw_zone_stream as S
 
 D = datetime.datetime
-
-
-def _write_day_file(base, folder, event_date, rows):
-    d = base / folder
-    d.mkdir(parents=True, exist_ok=True)
-    (d / f"{event_date}.json").write_text(
-        "window.app_data = " + json.dumps({"data": rows}))
-
-
-def test_stream_calendar_incremental_pickup(spark, tmp_path):
-    raw = tmp_path / "earnings-calendar"
-    _write_day_file(raw, "2024-05-10", "2024-05-15", [["AAPL", "", "", "amc"]])
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def run_once():
-        rows = S.stream_calendar_rows(spark, str(raw) + "/*/")
-        q = (rows.selectExpr("event_date", "row[0] as act_symbol")
-             .writeStream.format("parquet")
-             .option("path", out)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return {(r["event_date"], r["act_symbol"])
-                for r in spark.read.parquet(out).collect()}
-
-    got = run_once()
-    assert got == {(datetime.date(2024, 5, 15), "AAPL")}
-    # second day-file arrives; only the new file is processed on rerun
-    _write_day_file(raw, "2024-05-11", "2024-05-16", [["MSFT", "", "", "bmo"]])
-    got = run_once()
-    assert got == {(datetime.date(2024, 5, 15), "AAPL"),
-                   (datetime.date(2024, 5, 16), "MSFT")}
 
 
 def test_windowed_event_counts_batch_parity(spark):
@@ -55,43 +21,6 @@ def test_windowed_event_counts_batch_parity(spark):
            for r in S.windowed_event_counts(events).collect()}
     assert out[("2024-05-01 10:00:00", "click")] == (2, "3.000000")
     assert out[("2024-05-01 11:00:00", "view")] == (1, "3.000000")
-
-
-def _await_rows(spark, q, table, n, timeout_s=90):
-    """Poll a memory sink until ``n`` rows arrive (state-timeout queries
-    never self-terminate under availableNow), then stop the query."""
-    import time
-
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        if spark.sql(f"select count(*) from {table}").collect()[0][0] >= n:
-            break
-        time.sleep(0.5)
-    q.stop()
-
-
-def test_sessionize_events_stream(spark, tmp_path):
-    src = tmp_path / "events_src"
-    src.mkdir()
-    events = spark.createDataFrame(
-        [(1, D(2024, 5, 1, 10, 0)), (1, D(2024, 5, 1, 10, 10)),
-         (1, D(2024, 5, 1, 12, 0)),   # > 30 min gap -> new session
-         (2, D(2024, 5, 1, 9, 0))],
-        "user_id long, ts timestamp")
-    events.write.parquet(str(src / "batch1"))
-
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .parquet(str(src) + "/*"))
-    sessions = S.sessionize_events(stream, gap_seconds=1800)
-    q = (sessions.writeStream.format("memory").queryName("sessions")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    _await_rows(spark, q, "sessions", 1)
-    got = sorted((r["user_id"], str(r["session_start"]), r["n_events"])
-                 for r in spark.sql("select * from sessions").collect())
-    # the 10:00-10:10 session closed when the 12:00 event arrived; the
-    # still-open sessions (12:00 and user 2) remain in state
-    assert got == [(1, "2024-05-01 10:00:00", 2)]
 
 
 def test_dedup_events_stream_and_batch(spark, tmp_path):
@@ -115,55 +44,6 @@ def test_dedup_events_stream_and_batch(spark, tmp_path):
     q.awaitTermination(120)
     got = spark.sql("select event_id from dedup_out").collect()
     assert sorted(r["event_id"] for r in got) == [1, 2, 3]
-
-
-def test_sessionize_stream_batch_parity(spark, tmp_path):
-    """The applyInPandasWithState sessionizer and the window-function
-    batch twin must produce identical sessions. A far-future sentinel
-    event per user forces every real session closed in the stream."""
-    import random
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    rng = random.Random(42)
-    rows = []
-    for user in range(1, 4):
-        t = 1_700_000_000 + user
-        for _ in range(12):
-            t += rng.choice([60, 300, 900, 2400, 7200])  # mixed gaps
-            rows.append((user, datetime.datetime.utcfromtimestamp(t)))
-    sentinel = datetime.datetime(2030, 1, 1)
-    stream_rows = rows + [(u, sentinel) for u in range(1, 4)]
-
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = (F.col("ts").cast("long")
-           - F.lag(F.col("ts").cast("long")).over(w)) > 1800
-    sess = (ev.withColumn("ns", F.when(gap.isNull() | ~gap, 0).otherwise(1))
-            .withColumn("sid", F.sum("ns").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)))
-            .groupBy("user_id", "sid")
-            .agg(F.min("ts").alias("s"), F.max("ts").alias("e"),
-                 F.count(F.lit(1)).alias("n")))
-    batch = {(r["user_id"], r["s"], r["e"], r["n"])
-             for r in sess.collect()}
-
-    src = tmp_path / "ev"
-    spark.createDataFrame(stream_rows, "user_id long, ts timestamp") \
-        .write.parquet(str(src))
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .parquet(str(src)))
-    q = (S.sessionize_events(stream, gap_seconds=1800)
-         .writeStream.format("memory").queryName("parity_sessions")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    _await_rows(spark, q, "parity_sessions", len(batch))
-    streamed = {(r["user_id"], r["session_start"], r["session_end"],
-                 r["n_events"])
-                for r in spark.sql("select * from parity_sessions").collect()
-                if r["session_start"] < sentinel}
-    assert streamed == batch and len(batch) > 5
 
 
 def test_estimates_stream_incremental_load(spark, tmp_path):
@@ -231,131 +111,6 @@ def test_statements_stream_incremental_load(spark, tmp_path):
     assert got == {"AAPL", "MSFT"}
 
 
-def test_dedup_gate_stream_admits_and_quarantines(spark, tmp_path):
-    import json as J
-
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-    from zacks_estimates_financial_statements_spark.streaming.raw_zone_stream import (
-        run_dedup_gate_stream,
-    )
-
-    inbox = tmp_path / "inbox"
-    inbox.mkdir()
-    tables = str(tmp_path / "tables")
-    ck = str(tmp_path / "ck")
-
-    def drop(name, rows):
-        (inbox / name).write_text(
-            "\n".join(J.dumps(r) for r in rows) + "\n")
-
-    base = "the quick brown fox jumps over the lazy dog again today"
-    drop("b1.jsonl", [
-        {"doc_id": 1, "text": base},
-        {"doc_id": 2, "text": "completely different first-batch text here"},
-    ])
-    q = run_dedup_gate_stream(spark, str(inbox / "*.jsonl"), tables, ck)
-    q.awaitTermination(120)
-
-    corpus = TableStore(spark, tables, "gate_corpus")
-    assert {r.doc_id for r in corpus.read().collect()} == {1, 2}
-
-    # batch 2: one exact dup of doc 1, one fresh doc
-    drop("b2.jsonl", [
-        {"doc_id": 10, "text": base},
-        {"doc_id": 11, "text": "a genuinely new document in batch two"},
-    ])
-    q = run_dedup_gate_stream(spark, str(inbox / "*.jsonl"), tables, ck)
-    q.awaitTermination(120)
-
-    assert {r.doc_id for r in corpus.read().collect()} == {1, 2, 11}
-    rej = {r.doc_id: (r.matched_id, r.est_jaccard) for r in
-           TableStore(spark, tables, "gate_rejects").read().collect()}
-    assert rej == {10: (1, 1.0)}
-    # the admitted doc's signatures joined the index (probed next batch)
-    idx_ids = {r.doc_id for r in
-               TableStore(spark, tables, "gate_index").read().collect()}
-    assert idx_ids == {1, 2, 11}
-
-
-def test_dedup_gate_stream_within_batch(spark, tmp_path):
-    import json as J
-
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-    from zacks_estimates_financial_statements_spark.streaming.raw_zone_stream import (
-        run_dedup_gate_stream,
-    )
-
-    inbox = tmp_path / "inbox"
-    inbox.mkdir()
-    text = "one single batch carrying two identical documents inside it"
-    (inbox / "b1.jsonl").write_text("\n".join(J.dumps(r) for r in [
-        {"doc_id": 1, "text": text},
-        {"doc_id": 2, "text": text},                      # intra-batch dup
-        {"doc_id": 3, "text": "an unrelated document rides along fine"},
-    ]) + "\n")
-    q = run_dedup_gate_stream(spark, str(inbox / "*.jsonl"),
-                              str(tmp_path / "tables"),
-                              str(tmp_path / "ck"),
-                              dedup_within_batch=True)
-    q.awaitTermination(120)
-    corpus = {r.doc_id for r in TableStore(
-        spark, str(tmp_path / "tables"), "gate_corpus").read().collect()}
-    assert corpus == {1, 3}                               # keeper = min id
-    rej = {r.doc_id: (r.matched_id, r.est_jaccard) for r in TableStore(
-        spark, str(tmp_path / "tables"), "gate_rejects").read().collect()}
-    assert rej == {2: (1, None)}
-
-
-def test_dedup_gate_stream_quality_gate(spark, tmp_path):
-    """min_quality routes junk to gate_lowquality BEFORE any sketch
-    work; surviving docs still dedup against the stored index."""
-    import json as J
-
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-    from zacks_estimates_financial_statements_spark.streaming.raw_zone_stream import (
-        run_dedup_gate_stream,
-    )
-
-    inbox = tmp_path / "inbox"
-    inbox.mkdir()
-    tables = str(tmp_path / "tables")
-    ck = str(tmp_path / "ck")
-    good = ("the quick brown fox jumps over the lazy dog and then runs "
-            "into the forest while the sun sets over the quiet hills")
-    (inbox / "b1.jsonl").write_text("\n".join(J.dumps(r) for r in [
-        {"doc_id": 1, "text": good},
-        {"doc_id": 2, "text": "!!! ### $$$ %%%"},   # symbol soup
-    ]) + "\n")
-    q = run_dedup_gate_stream(spark, str(inbox / "*.jsonl"), tables, ck,
-                              min_quality=0.3)
-    q.awaitTermination(120)
-
-    corpus = TableStore(spark, tables, "gate_corpus")
-    assert {r.doc_id for r in corpus.read().collect()} == {1}
-    lowq = {r.doc_id: r.quality for r in
-            TableStore(spark, tables, "gate_lowquality").read().collect()}
-    assert set(lowq) == {2} and lowq[2] < 0.3
-    # the junk doc never reached the index
-    assert {r.doc_id for r in
-            TableStore(spark, tables, "gate_index").read().collect()} == {1}
-
-    # batch 2: a dup of doc 1 (quarantined by dedup) + junk (by quality)
-    (inbox / "b2.jsonl").write_text("\n".join(J.dumps(r) for r in [
-        {"doc_id": 10, "text": good},
-        {"doc_id": 11, "text": "!!! ??? ,,, ;;;"},
-    ]) + "\n")
-    q = run_dedup_gate_stream(spark, str(inbox / "*.jsonl"), tables, ck,
-                              min_quality=0.3)
-    q.awaitTermination(120)
-    assert {r.doc_id for r in corpus.read().collect()} == {1}
-    rej = {r.doc_id for r in
-           TableStore(spark, tables, "gate_rejects").read().collect()}
-    assert rej == {10}
-    assert set(r.doc_id for r in
-               TableStore(spark, tables, "gate_lowquality").read()
-               .collect()) == {2, 11}
-
-
 def test_attribution_stream_batch_parity(spark, tmp_path):
     """The watermarked stream-stream interval join must emit the same
     attribution pairs as the batch twin, across microbatch boundaries
@@ -405,51 +160,6 @@ def test_attribution_stream_batch_parity(spark, tmp_path):
     got = {(r["conversion_id"], r["impression_id"], r["n_candidates"])
            for r in folded.collect()}
     assert got == {(20, 11, 2), (21, 12, 1)}
-
-
-def test_profile_monitor_stream_flags_drift(spark, tmp_path):
-    """Two microbatches: the second's null spike and cardinality
-    collapse must land in profile_drift with that epoch; both batches'
-    profiles land in profile_history."""
-    import json
-
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-
-    src = tmp_path / "in"
-    src.mkdir()
-    with open(src / "a.jsonl", "w") as f:
-        for i in range(200):
-            f.write(json.dumps({"doc_id": i, "text": f"alpha {i}",
-                                "source": f"s{i % 50}"}) + "\n")
-    tables, ckpt = str(tmp_path / "t"), str(tmp_path / "c")
-    schema = "doc_id long, text string, source string"
-
-    def run_once():
-        q = S.run_profile_monitor_stream(spark, str(src) + "/*.jsonl",
-                                         tables, ckpt, schema)
-        q.awaitTermination(120)
-
-    run_once()
-    hist = TableStore(spark, tables, "profile_history").read()
-    assert {r["column"] for r in hist.collect()} == \
-        {"doc_id", "text", "source"}
-    assert not TableStore(spark, tables, "profile_drift").exists()
-
-    # batch 2: 30% null text, source collapses to one value
-    with open(src / "b.jsonl", "w") as f:
-        for i in range(200, 400):
-            f.write(json.dumps({
-                "doc_id": i,
-                "text": None if i % 3 == 0 else f"beta {i}",
-                "source": "s0"}) + "\n")
-    run_once()
-    hist2 = TableStore(spark, tables, "profile_history").read()
-    assert hist2.select("epoch").distinct().count() == 2
-    flagged = {r["column"]: r for r in
-               TableStore(spark, tables, "profile_drift").read().collect()}
-    assert flagged["text"]["null_drift"]
-    assert flagged["source"]["distinct_drift"]
-    assert "doc_id" not in flagged
 
 
 # ------------------------------------------------------- politeness scheduler
@@ -518,86 +228,6 @@ def _table_snapshot(spark, tables, names):
         else:
             out[name] = []
     return out
-
-
-def test_dedup_gate_stream_mid_batch_crash_recovery(spark, tmp_path):
-    """Kill the dedup-gate foreachBatch MID-epoch — after the epoch's
-    first table write (rejects) commits, before corpus/index — restart
-    from the checkpoint, and prove the end-state equals an
-    uninterrupted run. This is the exactly-once-EFFECT claim the
-    PK-upsert design makes (module docstring recovery contract): the
-    failed epoch is not committed, the file source replays it, and the
-    already-written prefix upserts as a no-op."""
-    import json as J
-
-    import pytest
-    from pyspark.errors import StreamingQueryException
-
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-    from zacks_estimates_financial_statements_spark.streaming.raw_zone_stream import (
-        run_dedup_gate_stream,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again today"
-    batches = [
-        [{"doc_id": 1, "text": base},
-         {"doc_id": 2, "text": "completely different first-batch text here"}],
-        [{"doc_id": 10, "text": base},  # near-dup of 1 -> rejects write
-         {"doc_id": 11, "text": "a genuinely new document in batch two"}],
-    ]
-    names = ["gate_corpus", "gate_index", "gate_rejects"]
-
-    def drop_all(inbox):
-        inbox.mkdir()
-        for i, rows in enumerate(batches):
-            p = inbox / f"b{i}.jsonl"
-            p.write_text("\n".join(J.dumps(r) for r in rows) + "\n")
-            # pin file order so batch replay order is deterministic
-            import os
-            os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    # uninterrupted twin
-    drop_all(tmp_path / "inbox_a")
-    q = run_dedup_gate_stream(spark, str(tmp_path / "inbox_a" / "*.jsonl"),
-                              str(tmp_path / "ta"), str(tmp_path / "cka"))
-    q.awaitTermination(120)
-    want = _table_snapshot(spark, str(tmp_path / "ta"), names)
-    assert [r[0] for r in want["gate_rejects"]] == [10]
-
-    # faulted run: epoch 0 does 2 upserts (corpus, index); epoch 1 does
-    # rejects, corpus, index — crash entering its SECOND write (call 4)
-    drop_all(tmp_path / "inbox_b")
-    tables_b, ck_b = str(tmp_path / "tb"), str(tmp_path / "ckb")
-    real = TableStore.upsert_ignore
-    calls = {"n": 0}
-
-    def faulty(self, *a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 4:
-            raise RuntimeError("injected mid-batch crash")
-        return real(self, *a, **kw)
-
-    TableStore.upsert_ignore = faulty
-    try:
-        q = run_dedup_gate_stream(spark, str(tmp_path / "inbox_b" / "*.jsonl"),
-                                  tables_b, ck_b)
-        with pytest.raises(StreamingQueryException):
-            q.awaitTermination(120)
-    finally:
-        TableStore.upsert_ignore = real
-    assert calls["n"] == 4
-    # the crash really was mid-batch: epoch 1's rejects write landed,
-    # its corpus/index writes did not
-    partial = _table_snapshot(spark, tables_b, names)
-    assert [r[0] for r in partial["gate_rejects"]] == [10]
-    assert sorted(r[0] for r in partial["gate_corpus"]) == [1, 2]
-
-    # restart from the checkpoint: epoch 1 replays whole; PK upserts
-    # make the already-written rejects row a no-op
-    q = run_dedup_gate_stream(spark, str(tmp_path / "inbox_b" / "*.jsonl"),
-                              tables_b, ck_b)
-    q.awaitTermination(120)
-    assert _table_snapshot(spark, tables_b, names) == want
 
 
 def test_estimates_stream_mid_batch_crash_recovery(spark, tmp_path):

@@ -67,7 +67,9 @@ def test_fingerprint_invariance(spark):
 
 def test_shingles(spark):
     df = spark.createDataFrame([("a b c d",), ("a b",)], "t string")
-    out = [r[0] for r in df.select(T.shingles(F.col("t"), 3).alias("s")).collect()]
+    words = F.split(T.normalize_text(F.col("t")), " ")
+    out = [r[0] for r in df.select(
+        T.shingles_from_words(words, 3).alias("s")).collect()]
     assert out[0] == ["a b c", "b c d"]
     assert out[1] == ["a b"]
 
@@ -81,32 +83,10 @@ def _media_df(spark):
         M.MEDIA_SCHEMA)
 
 
-def test_image_feature_plumbing(spark):
-    feats = M.decode_image_features(_media_df(spark), dims=4).collect()
-    by_id = {r["media_id"]: r for r in feats}
-    assert set(by_id) == {1, 2}
-    assert len(by_id[1]["features"]) == 4
-    assert abs(sum(by_id[1]["features"]) - 1.0) < 1e-6
-    assert by_id[2]["n_bytes"] == 0
-    # determinism
-    again = {r["media_id"]: r["features"]
-             for r in M.decode_image_features(_media_df(spark), dims=4).collect()}
-    assert again[1] == by_id[1]["features"]
-
-
 def test_video_frame_sampling(spark):
     frames = M.sample_video_frames(_media_df(spark), every_ms=1000).collect()
     assert [(r["media_id"], r["frame_idx"], r["ts_ms"]) for r in frames] == \
         [(3, 0, 0), (3, 1, 1000), (3, 2, 2000), (3, 3, 3000)]
-
-
-def test_metadata_projection_prunes_payload(spark, tmp_path):
-    path = str(tmp_path / "media")
-    _media_df(spark).write.parquet(path)
-    meta = M.media_metadata_only(spark.read.parquet(path))
-    plan = meta._jdf.queryExecution().executedPlan().toString()
-    assert "payload" not in plan  # column pruned at the scan
-    assert meta.count() == 4
 
 
 # ---------------------------------------------------------------------------
@@ -114,64 +94,42 @@ def test_metadata_projection_prunes_payload(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _real_media_df(spark):
+def test_real_image_decode_ppm_and_bmp():
     import numpy as np
+    import pytest
 
     from zacks_estimates_financial_statements_spark.functions import codecs
 
     img = np.zeros((4, 6, 3), dtype=np.uint8)
     img[:2] = 255  # top half white, bottom half black
+    # all three encodings decode to the same pixels
+    for enc in (codecs.encode_ppm, codecs.encode_bmp, codecs.encode_png):
+        assert np.array_equal(codecs.decode_image(enc(img)), img)
+    # no in-container codec -> NotImplementedError (callers stub/quarantine)
+    with pytest.raises(NotImplementedError):
+        codecs.decode_image(b"\x89PNG fake")
+    # truncated PPM -> a decode error, not a silent image
+    with pytest.raises(ValueError):
+        codecs.decode_image(b"P6\n2 2\n255\n\x00")
+
+
+def test_real_audio_decode_wav():
+    import numpy as np
+
+    from zacks_estimates_financial_statements_spark.functions import codecs
+
     wav = codecs.encode_wav(
         np.sin(2 * np.pi * 440 * np.arange(8000) / 8000.0), rate=8000)
-    rows = [
-        (10, "image", bytearray(codecs.encode_ppm(img)), "image/x-ppm",
-         None, None, None),
-        (11, "image", bytearray(codecs.encode_bmp(img)), "image/bmp",
-         None, None, None),
-        (12, "image", bytearray(b"\x89PNG fake"), "image/png",
-         9, 9, None),
-        (13, "image", bytearray(b"P6\n2 2\n255\n\x00"), "image/x-ppm",
-         None, None, None),  # truncated -> quarantine
-        (14, "image", bytearray(codecs.encode_png(img)), "image/png",
-         None, None, None),  # REAL PNG: stdlib inflate + unfilter
-        (20, "audio", bytearray(wav), "audio/wav", None, None, None),
-        (21, "audio", bytearray(b"\x00" * 16), "audio/mp3",
-         None, None, None),
-    ]
-    return spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-
-
-def test_real_image_decode_ppm_and_bmp(spark):
-    feats = {r["media_id"]: r for r in
-             M.decode_image_features(_real_media_df(spark), dims=4).collect()}
-    for mid in (10, 11, 14):  # all three encodings decode to the same pixels
-        r = feats[mid]
-        assert (r["width"], r["height"]) == (6, 4)
-        assert r["decode_error"] is None
-        # half black (bin 0), half white (top bin)
-        assert abs(r["features"][0] - 0.5) < 1e-6
-        assert abs(r["features"][3] - 0.5) < 1e-6
-    assert feats[14]["features"] == feats[10]["features"]
-    # no in-container codec -> flagged stub fallback, metadata passthrough
-    assert feats[12]["decode_error"].startswith("stub:byte-histogram")
-    assert (feats[12]["width"], feats[12]["height"]) == (9, 9)
-    # truncated PPM -> quarantined, features NULL
-    assert feats[13]["features"] is None
-    assert feats[13]["decode_error"]
-
-
-def test_real_audio_decode_wav(spark):
-    out = {r["media_id"]: r for r in
-           M.decode_audio_features(_real_media_df(spark)).collect()}
-    sine = out[20]
-    assert sine["decode_error"] is None
-    assert sine["duration_ms"] == 1000
-    assert sine["sample_rate"] == 8000 and sine["n_channels"] == 1
-    assert abs(sine["rms"] - 0.7071) < 0.01   # sine RMS = 1/sqrt(2)
-    assert abs(sine["peak"] - 1.0) < 0.01
+    assert codecs.sniff(wav) == "wav"
+    samples, rate = codecs.decode_wav(wav)
+    assert rate == 8000 and samples.shape == (8000, 1)  # 1 s, mono
+    mono = samples[:, 0]
+    assert abs(np.sqrt((mono ** 2).mean()) - 0.7071) < 0.01  # 1/sqrt(2)
+    assert abs(np.abs(mono).max() - 1.0) < 0.01
     # 440 Hz -> 880 zero crossings/s -> rate 880/8000
-    assert abs(sine["zero_crossing_rate"] - 0.11) < 0.005
-    assert out[21]["decode_error"].startswith("no codec")
+    zc = (np.signbit(mono[1:]) != np.signbit(mono[:-1])).mean()
+    assert abs(zc - 0.11) < 0.005
+    assert codecs.sniff(b"\x00" * 16) != "wav"
 
 
 def test_codec_roundtrip_and_resize():
@@ -341,37 +299,25 @@ def test_jpeg_unsupported_variants_flagged():
     assert C.sniff(C.encode_jpeg(flat)) == "jpeg"
 
 
-def test_video_metadata_real_bmff_parse(spark):
+def test_video_metadata_real_bmff_parse():
+    import pytest
+
     from zacks_estimates_financial_statements_spark.functions import codecs as C
 
     good = C.encode_mp4_stub(640, 360, 12500, with_audio=True)
     v1 = C.encode_mp4_stub(1920, 1080, 98765, timescale=90000,
                            version=1, brand=b"mp42")
-    media = spark.createDataFrame(
-        [(10, "video", bytearray(good), "video/mp4", None, None, None),
-         (11, "video", bytearray(v1), "video/mp4", None, None, None),
-         (12, "video", bytearray(b"not a movie at all"), "video/mp4",
-          None, None, None),
-         (13, "audio", bytearray(b"\x00" * 8), "audio/wav",
-          None, None, 2000)],
-        M.MEDIA_SCHEMA)
-    rows = {r["media_id"]: r
-            for r in M.parse_video_metadata(media).collect()}
-    assert set(rows) == {10, 11, 12}  # the audio row is not scanned
-    r = rows[10]
+    r = C.parse_mp4_metadata(good)
     assert (r["brand"], r["duration_ms"], r["n_tracks"]) == ("isom", 12500, 2)
     assert (r["width"], r["height"]) == (640, 360)
-    assert r["has_video"] and r["has_audio"] and r["decode_error"] is None
-    r1 = rows[11]
+    assert r["has_video"] and r["has_audio"]
+    r1 = C.parse_mp4_metadata(v1)
     assert (r1["brand"], r1["duration_ms"]) == ("mp42", 98765)
     assert (r1["width"], r1["height"]) == (1920, 1080)
     assert r1["has_video"] and not r1["has_audio"]
-    # junk is quarantined per row, not fatal
-    assert rows[12]["decode_error"] and rows[12]["duration_ms"] is None
-    # strict mode raises instead
-    import pytest as _pytest
-    with _pytest.raises(Exception):
-        M.parse_video_metadata(media, strict=True).collect()
+    # junk raises (callers quarantine the row)
+    with pytest.raises(ValueError):
+        C.parse_mp4_metadata(b"not a movie at all")
 
 
 def test_mp4_parser_handles_truncation_and_largesize():
@@ -697,13 +643,12 @@ def test_hashable_corpora_closed_form_hashes(spark):
             f"audio {r['media_id']} window {t}"
 
 
-# -- external video decoder hook (r11) ---------------------------------
+# -- non-MJPEG video ---------------------------------------------------
 
 def _avc1_mp4(colors):
     """An MP4 whose stsd fourcc claims 'avc1' but whose samples are the
-    JPEG bytes encode_mjpeg_mp4 wrote — enough to prove the DISPATCH:
-    without a registered decoder the payload quarantines; with one, the
-    plugin's frames flow through the validated interface."""
+    JPEG bytes encode_mjpeg_mp4 wrote: a well-formed container whose
+    video codec has no decoder in this process."""
     import numpy as np
 
     from zacks_estimates_financial_statements_spark.functions import codecs as C
@@ -717,67 +662,14 @@ def _avc1_mp4(colors):
     return mp4[:i + 16] + b"avc1" + mp4[i + 20:]
 
 
-def test_external_video_decoder_hook(spark):
-    from zacks_estimates_financial_statements_spark.functions import codecs as C
-
-    # nested defs: cloudpickle serializes them BY VALUE into the
-    # operator's registry snapshot — a module-level test function would
-    # pickle by reference and the executor worker can't import tests
-    def _demux_passthrough_decoder(payload):
-        # stand-in for a real plugin (PyAV/ffmpeg): demux the sample
-        # table and return the samples — which in the avc1-relabeled
-        # fixture ARE baseline JPEGs, so validation passes
-        from zacks_estimates_financial_statements_spark.functions import codecs as CC
-
-        tr = [t for t in CC.parse_mp4_samples(payload)
-              if t["handler"] == b"vide" and t["samples"]][0]
-        return [(ts, payload[off:off + size])
-                for off, size, ts in tr["samples"]]
-
-    def _garbage_decoder(payload):
-        return [(0, b"not a jpeg at all")]
-
-    colors = [20, 60, 100, 140]
-    mp4 = _avc1_mp4(colors)
+def test_non_mjpeg_video_codec_quarantines(spark):
+    """A video codec other than MJPEG raises NotImplementedError inside
+    the frame sampler, and every sampled tick becomes a ``stub:`` row
+    naming the codec."""
+    mp4 = _avc1_mp4([20, 60, 100, 140])
     media = spark.createDataFrame(
         [(40, "video", bytearray(mp4), "video/mp4", None, None, None)],
         M.MEDIA_SCHEMA)
-
-    # 1. unregistered codec: the quarantine contract is unchanged
     rows = M.sample_video_frames(media, every_ms=1000).collect()
     assert rows and all(r["source"].startswith("stub:") for r in rows)
     assert any("avc1" in r["source"] for r in rows)
-
-    # 2. registered decoder: real frames, provenance-tagged 'ext:avc1'
-    C.register_video_decoder("avc1", _demux_passthrough_decoder)
-    try:
-        rows = (M.sample_video_frames(media, every_ms=1000)
-                .orderBy("frame_idx").collect())
-        assert [r["source"] for r in rows] == ["ext:avc1"] * 2
-        # ticks 0/1000 ms at 2 fps land on samples 0 and 2
-        for r, want in zip(rows, (colors[0], colors[2])):
-            arr = C.decode_jpeg(bytes(r["frame_bytes"]))
-            assert arr.shape == (16, 24, 3) and int(arr[8, 12, 0]) == want
-        # the near-dup tier hashes ext frames like mjpeg ones
-        fp = M.video_fingerprints(media, every_ms=1000).collect()
-        assert any(r["decode_error"] is None for r in fp)
-    finally:
-        C.unregister_video_decoder("avc1")
-
-    # 3. a misbehaving plugin degrades to quarantine, never bad frames
-    C.register_video_decoder("avc1", _garbage_decoder)
-    try:
-        rows = M.sample_video_frames(media, every_ms=1000).collect()
-        assert rows and all(r["source"].startswith("stub:") for r in rows)
-        assert any("invalid frames" in r["source"] for r in rows)
-    finally:
-        C.unregister_video_decoder("avc1")
-
-    # 4. direct-interface checks: snapshot dict drives dispatch, and a
-    # bad fourcc is rejected at registration time
-    tag, frames = C.extract_video_frames(
-        mp4, {b"avc1": _demux_passthrough_decoder})
-    assert tag == "ext:avc1" and len(frames) == 4
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="fourcc"):
-        C.register_video_decoder("h264x", _demux_passthrough_decoder)

@@ -1,5 +1,5 @@
 """WARC source: gzip-member framing, record grammar, HTTP unwrap,
-quarantine semantics, file-source scan (sources/warc.py)."""
+quarantine semantics (sources/warc.py)."""
 
 from __future__ import annotations
 
@@ -91,15 +91,3 @@ def test_warc_short_body_is_record_error_not_crash(spark):
     assert "short body" in row["parse_error"]
 
 
-def test_read_warc_scans_files_distributed(spark, tmp_path):
-    (tmp_path / "a.warc.gz").write_bytes(W.build_warc_bytes(_records()))
-    (tmp_path / "b.warc.gz").write_bytes(W.build_warc_bytes(_records()[:1]))
-    (tmp_path / "ignore.txt").write_text("not a warc")
-    out = W.read_warc(spark, str(tmp_path))
-    rows = out.collect()
-    assert len(rows) == 4
-    # the usual crawl feed: response records with clean parses
-    feed = out.filter("parse_error IS NULL AND warc_type = 'response'")
-    assert feed.count() == 2
-    assert {r["path"].rsplit("/", 1)[-1] for r in rows} == \
-        {"a.warc.gz", "b.warc.gz"}

@@ -57,23 +57,6 @@ def test_upsert_batch_dedup_keeps_one_row_per_pk(spark, store):
     assert rows[0]["when"] in ("Before market open", "After market close")
 
 
-def test_replace_window(spark, store):
-    folder_date = D(2024, 5, 10)
-    store.upsert_ignore(spark.createDataFrame(
-        [("AAPL", D(2024, 5, 5), None),     # past: kept
-         ("MSFT", D(2024, 5, 15), None),    # future: replaced
-         ("NVDA", D(2024, 6, 1), None)],    # future: replaced
-        "act_symbol string, date date, `when` string"))
-    new = spark.createDataFrame(
-        [("MSFT", D(2024, 5, 16), "Before market open")],
-        "act_symbol string, date date, `when` string")
-    # W4: delete stored date >= folder_date, then insert the new horizon
-    store.replace_window(new, keep_condition=F.col("date") < F.lit(folder_date))
-    rows = _rows(store)
-    assert rows == [("AAPL", D(2024, 5, 5), None),
-                    ("MSFT", D(2024, 5, 16), "Before market open")]
-
-
 def test_delete_where_equi_and_condition(spark, store):
     store.upsert_ignore(spark.createDataFrame(
         [("AAPL", D(2024, 5, 1), None), ("AAPL", D(2024, 8, 1), None),

@@ -39,6 +39,29 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def median_seconds(spark, query, sf: str, n: int) -> float:
+    """One warm pass, then the median of ``n`` timed passes of ``query``
+    through a noop sink. Each pass runs in one ``cache_scope()`` and ends
+    with ``clearCache()``: bench.py's per-pass honesty rule, or pass N
+    measures pass N-1's cache (CacheManager matches canonicalized
+    plans)."""
+    from zacks_estimates_financial_statements_spark.util import cache_scope
+
+    def once():
+        with cache_scope():
+            # full eval, no count-pruning
+            query(spark, sf).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+
+    once()  # warm (plan + page cache)
+    ts = []
+    for _ in range(n):
+        t0 = time.time()
+        once()
+        ts.append(time.time() - t0)
+    return statistics.median(ts)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--small", default="/root/testdata/sf0.01")
@@ -52,8 +75,9 @@ def main() -> int:
                          "directory is missing")
     ap.add_argument("--cores-leg", type=int, default=None, metavar="C",
                     help="after the two-scale table, re-time the --big "
-                         "queries in a fresh local[C] session (shuffle "
-                         "partitions scaled to C) and gate core-scaling: "
+                         "queries in fresh local[C] and local[CPUS] "
+                         "sessions (shuffle partitions max(2*cores, 8) "
+                         "in each) and gate core-scaling: "
                          "sub-second sf0.1 queries cannot distinguish "
                          "parallel from serial work (r13 verdict: every "
                          "8-vs-32-core ratio sat at ~1), so this leg "
@@ -87,7 +111,6 @@ def main() -> int:
     bench_spec.loader.exec_module(bench)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
-    from zacks_estimates_financial_statements_spark.util import cache_scope
     extra = {"spark.ui.enabled": "false",
              "spark.ui.showConsoleProgress": "false",
              # headroom for the synthesized-sf1 decade; the
@@ -119,24 +142,8 @@ def main() -> int:
     print("| query | small s | big s | ratio | exp |")
     print("|---|---|---|---|---|")
     for name in names:
-        med = {}
-        for sf in (args.small, args.big):
-            def force():
-                with cache_scope():
-                    df = qs[name](spark, sf)
-                    df.write.format("noop") \
-                        .mode("overwrite").save()  # full eval, no count-pruning
-                # bench.py's per-pass honesty rule: release internal
-                # persists or pass N measures pass N-1's cache
-                # (CacheManager matches canonicalized plans)
-                spark.catalog.clearCache()
-            force()  # warm (plan + page cache)
-            ts = []
-            for _ in range(args.n):
-                t0 = time.time()
-                force()
-                ts.append(time.time() - t0)
-            med[sf] = statistics.median(ts)
+        med = {sf: median_seconds(spark, qs[name], sf, args.n)
+               for sf in (args.small, args.big)}
         ratio = med[args.big] / med[args.small]
         exp = math.log10(ratio)
         out[name] = {"small_s": round(med[args.small], 3),
@@ -150,40 +157,32 @@ def main() -> int:
         else 1
 
     if args.cores_leg:
-        # Fresh low-core session for the SAME --big queries. Shuffle
-        # partitions scale with the core count in BOTH directions of
-        # the comparison (a constant tuned for either count would
-        # penalize the other; AQE re-coalesces, so the number only
+        # Each core count gets its own fresh session, with shuffle
+        # partitions scaled to it (a constant tuned for either count
+        # would penalize the other; AQE re-coalesces, so the number only
         # sets the pre-coalesce task grain).
         high_cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         spark.stop()
-        low = get_spark(
-            master=f"local[{args.cores_leg}]",
-            extra_conf={**extra,
-                        "spark.sql.shuffle.partitions":
-                            str(max(args.cores_leg * 2, 8))})
+        t = {}
+        for cores in (args.cores_leg, high_cores):
+            session = get_spark(
+                master=f"local[{cores}]",
+                extra_conf={**extra, "spark.sql.shuffle.partitions":
+                            str(max(cores * 2, 8))})
+            t[cores] = {name: median_seconds(session, qs[name], args.big,
+                                             args.n)
+                        for name in names}
+            session.stop()
         cores_out = {}
         print(f"\n| query | t{args.cores_leg}c | t{high_cores}c "
               f"| speedup |")
         print("|---|---|---|---|")
         for name in names:
-            def force_low():
-                with cache_scope():
-                    df = qs[name](low, args.big)
-                    df.write.format("noop").mode("overwrite").save()
-                low.catalog.clearCache()
-            force_low()   # warm
-            ts = []
-            for _ in range(args.n):
-                t0 = time.time()
-                force_low()
-                ts.append(time.time() - t0)
-            t_low = statistics.median(ts)
-            t_high = out[name]["big_s"]
+            t_low, t_high = t[args.cores_leg][name], t[high_cores][name]
             speedup = t_low / t_high if t_high else float("nan")
             gated = t_low >= args.cores_floor
             cores_out[name] = {"t_low": round(t_low, 3),
-                               "t_high": t_high,
+                               "t_high": round(t_high, 3),
                                "speedup": round(speedup, 2),
                                "gated": gated}
             flag = ""

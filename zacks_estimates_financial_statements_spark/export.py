@@ -312,161 +312,3 @@ def publish(table: str, csv_files: list[str], dolt_dir: str,
     return cmds
 
 
-def write_training_shards(df: DataFrame, out_dir: str, id_col: str,
-                          shards: int, compress: bool = True) -> list[str]:
-    """Write the corpus as deterministically-sharded JSONL — the
-    interchange format training loaders consume. Shard assignment is
-    ``hash60(id) % shards`` (the same keyed-md5 used by hash_split), so
-    a re-run on the same ids yields byte-identical shard membership
-    regardless of partitioning or cluster size, and a loader can map
-    any id back to its shard without an index. Rows within a shard are
-    ordered by id for reproducibility.
-
-    One distributed job: repartition on the shard key, sort within
-    partitions, write JSON (gzip by default — JSONL shards are cold
-    storage), then rename Spark's part files to ``shard-NNNNN.jsonl[.gz]``.
-    Returns the shard paths in shard order.
-    """
-    if shards < 1:
-        raise ValueError(f"shards must be >= 1, got {shards}")
-    from zacks_estimates_financial_statements_spark.operators.dedup import hash60
-
-    shard = (hash60(F.concat(F.lit("shard|"),
-                             F.col(id_col).cast("string")))
-             % shards).cast("int")
-    staged = (df.withColumn("__shard", shard)
-              .repartition(F.col("__shard"))
-              .sortWithinPartitions("__shard", id_col))
-    tmp = os.path.join(out_dir, "_staging")
-    writer = staged.write.mode("overwrite").partitionBy("__shard")
-    if compress:
-        writer = writer.option("compression", "gzip")
-    writer.json(tmp)
-
-    os.makedirs(out_dir, exist_ok=True)
-    ext = ".jsonl.gz" if compress else ".jsonl"
-    dirs = {int(os.path.basename(d).split("=", 1)[1]): d
-            for d in glob.glob(os.path.join(tmp, "__shard=*"))}
-    written = []
-    for sid in range(shards):
-        target = os.path.join(out_dir, f"shard-{sid:05d}{ext}")
-        parts = sorted(glob.glob(os.path.join(dirs[sid], "part-*"))) \
-            if sid in dirs else []
-        if len(parts) == 1:
-            shutil.move(parts[0], target)
-        elif parts:  # defensive: concatenate in part order
-            with open(target, "wb") as out:
-                for p in parts:
-                    with open(p, "rb") as fh:
-                        shutil.copyfileobj(fh, out)
-        else:
-            # a shard the hash assigned no rows still gets its file —
-            # the contract is exactly `shards` files, loaders index by
-            # position (a valid empty gzip member when compressed)
-            if compress:
-                import gzip
-                gzip.open(target, "wb").close()
-            else:
-                open(target, "wb").close()
-        written.append(target)
-    shutil.rmtree(tmp)
-    return written
-
-
-def write_webdataset_shards(df: DataFrame, out_dir: str, id_col: str,
-                            shards: int,
-                            text_col: str | None = None,
-                            media_col: str | None = None,
-                            media_ext: str = "bin",
-                            meta_cols: list[str] | None = None,
-                            ) -> list[str]:
-    """Write a (possibly multimodal) corpus as WebDataset-style tar
-    shards — the sequential-read format multimodal training loaders
-    consume (github.com/webdataset conventions): each sample is a group
-    of files sharing a zero-padded key prefix (``<key>.txt`` for text,
-    ``<key>.<media_ext>`` for the binary payload, ``<key>.json`` for
-    metadata), concatenated into ``shard-NNNNN.tar`` files.
-
-    Shard assignment reuses ``write_training_shards``' keyed-md5 hash
-    (same ids → same shard membership forever), samples sort by id
-    within each shard, and tar members are written with zeroed
-    mtime/uid/gid — so a re-run produces byte-identical shards, which
-    makes shard-level content hashes a valid dataset fingerprint.
-
-    One distributed job: repartition on the shard key, sort within
-    partitions, then each task streams its shard(s) to a tar with
-    stdlib ``tarfile`` — samples never aggregate into one row or pass
-    through the driver. Empty shards still get their (empty) tar: the
-    contract is exactly ``shards`` position-indexed files.
-    """
-    if shards < 1:
-        raise ValueError(f"shards must be >= 1, got {shards}")
-    if text_col is None and media_col is None:
-        raise ValueError("at least one of text_col/media_col is required")
-    from zacks_estimates_financial_statements_spark.operators.dedup import hash60
-
-    cols = [F.col(id_col).cast("long").alias("__id")]
-    if text_col is not None:
-        cols.append(F.col(text_col).alias("__text"))
-    if media_col is not None:
-        cols.append(F.col(media_col).alias("__media"))
-    meta_cols = list(meta_cols or [])
-    if meta_cols:
-        cols.append(F.to_json(F.struct(*meta_cols)).alias("__meta"))
-    shard = (hash60(F.concat(F.lit("shard|"),
-                             F.col(id_col).cast("string")))
-             % shards).cast("int").alias("__shard")
-    staged = (df.select(shard, *cols)
-              .repartition(shards, "__shard")
-              .sortWithinPartitions("__shard", "__id"))
-
-    os.makedirs(out_dir, exist_ok=True)
-    has_text, has_media = text_col is not None, media_col is not None
-
-    def write_partition(rows) -> None:
-        import io
-        import tarfile
-
-        tf, current = None, None
-        try:
-            for row in rows:
-                sid = row["__shard"]
-                if sid != current:
-                    if tf is not None:
-                        tf.close()
-                    current = sid
-                    tf = tarfile.open(
-                        os.path.join(out_dir, f"shard-{sid:05d}.tar"),
-                        "w", format=tarfile.USTAR_FORMAT)
-
-                def add(name: str, payload: bytes) -> None:
-                    info = tarfile.TarInfo(name)
-                    info.size = len(payload)
-                    info.mtime = 0
-                    info.uid = info.gid = 0
-                    info.uname = info.gname = ""
-                    tf.addfile(info, io.BytesIO(payload))
-
-                key = f"{row['__id']:012d}"
-                if has_text:
-                    add(f"{key}.txt",
-                        ("" if row["__text"] is None
-                         else row["__text"]).encode("utf-8"))
-                if has_media and row["__media"] is not None:
-                    add(f"{key}.{media_ext}", bytes(row["__media"]))
-                if "__meta" in row and row["__meta"] is not None:
-                    add(f"{key}.json", row["__meta"].encode("utf-8"))
-        finally:
-            if tf is not None:
-                tf.close()
-
-    staged.foreachPartition(write_partition)
-    written = []
-    for sid in range(shards):
-        target = os.path.join(out_dir, f"shard-{sid:05d}.tar")
-        if not os.path.exists(target):
-            tarfile_empty = open(target, "wb")
-            tarfile_empty.write(b"\0" * 1024)   # two zero blocks = empty tar
-            tarfile_empty.close()
-        written.append(target)
-    return written

@@ -834,32 +834,6 @@ def resize_nn(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return arr[ri][:, ci]
 
 
-def image_features(arr: np.ndarray, dims: int) -> list[float]:
-    """L1-normalized luma histogram with ``dims`` bins over the decoded
-    pixels — a real content-derived feature vector (two images with the
-    same bytes always match; brightness shifts move mass across bins)."""
-    hist, _ = np.histogram(luma(arr), bins=dims, range=(0.0, 256.0))
-    total = hist.sum() or 1
-    return (hist / total).astype(float).tolist()
-
-
-def audio_features(samples: np.ndarray, rate: int) -> dict:
-    """Real signal statistics from decoded PCM: duration, RMS, peak,
-    zero-crossing rate (mean over channels)."""
-    frames = samples.shape[0]
-    mono = samples.mean(axis=1) if samples.size else samples.reshape(0)
-    zc = (np.signbit(mono[1:]) != np.signbit(mono[:-1])).mean() \
-        if frames > 1 else 0.0
-    return {
-        "duration_ms": int(round(frames * 1000.0 / rate)) if rate else 0,
-        "sample_rate": int(rate),
-        "n_channels": int(samples.shape[1]) if samples.ndim == 2 else 1,
-        "rms": float(np.sqrt((mono ** 2).mean())) if frames else 0.0,
-        "peak": float(np.abs(mono).max()) if frames else 0.0,
-        "zero_crossing_rate": float(zc),
-    }
-
-
 # ---------------------------------------------------------------------------
 # MP4 / ISO-BMFF container metadata (pure stdlib box walker)
 # ---------------------------------------------------------------------------
@@ -1138,85 +1112,6 @@ def extract_mjpeg_frames(data: bytes) -> list[tuple[int, bytes]]:
                 f"sample at {off}+{size} is not a JPEG (corrupt tables?)")
         frames.append((ts_ms, chunk))
     return frames
-
-
-# -- external video decoder hook (r11) --------------------------------
-#
-# Non-MJPEG video (H.264/HEVC/AV1 …) is PERMANENTLY out of scope for
-# in-container decode: a correct pure-Python H.264 decoder is not a
-# reasonable build, and this container ships no media libraries. The
-# stated contract is QUARANTINE (NotImplementedError per payload,
-# callers emit flagged stub/quarantine rows) — plus this hook, the one
-# sanctioned way to widen it: register a decoder for a sample-entry
-# fourcc (e.g. PyAV/ffmpeg on a real cluster) and the video operators
-# use it through the same validated interface, falling back to the
-# same quarantine when no decoder is registered.
-#
-# Executor contract: registration is driver-side module state, and
-# Python workers are separate processes — operators snapshot the
-# registry at PLAN BUILD time (``video_decoder_snapshot()``) and carry
-# it in the mapInPandas closure, so decoders must be cloudpickle-able
-# (top-level functions, not bound to unpicklable resources).
-_EXTERNAL_VIDEO_DECODERS: dict[bytes, object] = {}
-
-
-def _fourcc(key: "bytes | str") -> bytes:
-    raw = key.encode("ascii") if isinstance(key, str) else bytes(key)
-    if len(raw) != 4:
-        raise ValueError(f"fourcc must be 4 bytes, got {raw!r}")
-    return raw
-
-
-def register_video_decoder(fourcc: "bytes | str", fn) -> None:
-    """Register ``fn(payload: bytes) -> list[(ts_ms, jpeg_bytes)]`` as
-    the decoder for one stsd sample-entry fourcc (e.g. ``'avc1'``).
-    The returned frames must be decode-ordered, self-contained baseline
-    JPEGs (they feed ``decode_jpeg`` exactly like MJPEG samples); a
-    decoder that returns anything else fails per-payload validation
-    and the row quarantines — a misbehaving plugin degrades to the
-    same contract as a corrupt payload, never to silent bad frames."""
-    _EXTERNAL_VIDEO_DECODERS[_fourcc(fourcc)] = fn
-
-
-def unregister_video_decoder(fourcc: "bytes | str") -> None:
-    _EXTERNAL_VIDEO_DECODERS.pop(_fourcc(fourcc), None)
-
-
-def video_decoder_snapshot() -> dict[bytes, object]:
-    """The current registry, copied — operators capture this into
-    executor closures at plan build time."""
-    return dict(_EXTERNAL_VIDEO_DECODERS)
-
-
-def extract_video_frames(data: bytes, decoders: dict | None = None
-                         ) -> tuple[str, list[tuple[int, bytes]]]:
-    """Frame extraction across every codec this process can decode:
-    MJPEG in-container (``extract_mjpeg_frames``), anything else via a
-    registered external decoder. Returns ``(source_tag, frames)`` —
-    ``'mjpeg'`` or ``'ext:<fourcc>'`` — so callers can label rows with
-    the provenance of the decode. Raises NotImplementedError when the
-    codec has neither path (callers quarantine, same as before) and
-    ValueError when the payload or a plugin's output is malformed."""
-    try:
-        return "mjpeg", extract_mjpeg_frames(data)
-    except NotImplementedError as exc:
-        reg = _EXTERNAL_VIDEO_DECODERS if decoders is None else decoders
-        video = [t for t in parse_mp4_samples(data)
-                 if t["handler"] == b"vide" and t["samples"]]
-        codec = video[0]["codec"] if video else None
-        fn = reg.get(codec) if codec else None
-        if fn is None:
-            raise exc
-        frames = fn(data)
-        tag = codec.decode("ascii", "replace")
-        ok = (isinstance(frames, list) and frames and all(
-            isinstance(t, int) and sniff(bytes(b)) == "jpeg"
-            for t, b in frames))
-        if not ok:
-            raise ValueError(
-                f"external decoder for '{tag}' returned invalid frames "
-                "(need non-empty [(ts_ms:int, baseline-jpeg bytes)])")
-        return f"ext:{tag}", [(t, bytes(b)) for t, b in frames]
 
 
 def encode_mjpeg_mp4(frames: list[np.ndarray], fps: int = 5,

@@ -151,13 +151,6 @@ def next_quarter_end(date_col: Column) -> Column:
 # Enum codecs (F12, F13)
 # ---------------------------------------------------------------------------
 
-_ESTIMATE_PERIOD_DECODE = {
-    "current-quarter": "Current Quarter",
-    "next-quarter": "Next Quarter",
-    "current-year": "Current Year",
-    "next-year": "Next Year",
-}
-
 _STATEMENT_PERIOD_DECODE = {"annual": "Year", "quarterly": "Quarter"}
 
 _WHEN_DECODE = {"amc": "After market close", "bmo": "Before market open"}
@@ -170,12 +163,6 @@ def _map_literal(col: Column, mapping: dict, default=None) -> Column:
     for k, v in mapping.items():
         expr = F.when(col == k, F.lit(v)) if expr is None else expr.when(col == k, F.lit(v))
     return expr.otherwise(F.lit(default))
-
-
-def decode_estimate_period(col: Column) -> Column:
-    """F12 — ``'current-quarter'`` → ``'Current Quarter'`` etc.
-    (estimate-transform-load.rkt:220-225)."""
-    return _map_literal(col, _ESTIMATE_PERIOD_DECODE)
 
 
 def decode_statement_period(col: Column) -> Column:
@@ -194,16 +181,6 @@ def to_integer_rank(col: Column) -> Column:
     """F13 — ``zacks.to_integer_rank``: 'Strong Buy'→1 … 'Strong Sell'→5,
     anything else NULL (schema.sql:280-293)."""
     return _map_literal(col, _RANK_TO_INT).cast("int")
-
-
-def register_sql_functions(spark) -> None:
-    """Expose the kit to Spark SQL (``SELECT to_integer_rank(rank) …``)
-    as a pure-SQL function so it stays inside codegen (no Python UDF)."""
-    cases = " ".join(f"WHEN '{k}' THEN {v}" for k, v in _RANK_TO_INT.items())
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION to_integer_rank(rank STRING) "
-        f"RETURNS INT RETURN CASE rank {cases} END"
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -249,17 +249,6 @@ def shingles_from_words(words: Column, k: int = 3) -> Column:
     )
 
 
-def shingles(col: Column, k: int = 3) -> Column:
-    """Word k-shingles of the normalized text as ``array<string>``
-    (consecutive k-grams joined by single spaces). Documents shorter than
-    k words yield a single shingle of the whole text.
-
-    For hot paths, materialize ``split(normalize_text(col), " ")`` into
-    its own projection and use ``shingles_from_words`` (see its warning).
-    """
-    return shingles_from_words(F.split(normalize_text(col), " "), k)
-
-
 def readability_scores(text: Column) -> list[Column]:
     """Flesch readability panel (Flesch 1948 / Kincaid et al. 1975 —
     the readability axis corpus-quality filters bucket on, alongside

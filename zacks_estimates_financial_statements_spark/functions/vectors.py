@@ -47,18 +47,6 @@ def sq_l2(a: Column, b: Column) -> Column:
     )
 
 
-def euclidean(a: Column, b: Column) -> Column:
-    """Euclidean (L2) distance."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                       * (x.cast("double") - y.cast("double"))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def sign_bits(a: Column, dims: int) -> Column:
     """First-``dims`` sign bits packed into a bigint — a trivial random-
     hyperplane-free SRP sketch usable as an LSH bucket key (components of a

@@ -538,7 +538,7 @@ def token_budget_fill(df: DataFrame, strata_col: str, text_col: str,
     copies by a nondeterministic window tie (r9 ADVICE). ``n_tokens``
     joins the window order as the final tie-break so two divergent
     copies fill in a deterministic, twin-mirrorable order. True
-    logical dedup is ``dedup_exact``'s job upstream.
+    logical dedup is ``exact_dup_groups``' job upstream.
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
@@ -1304,51 +1304,6 @@ def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             .groupBy(id_col, "n_chars")
             .agg(F.count(F.lit(1)).alias("n_distinct_chars"),
                  F.round(F.sum(term).cast("double"), 6).alias("entropy")))
-
-
-def compression_ratio(df: DataFrame, id_col: str, text_col: str,
-                      level: int = 6) -> DataFrame:
-    """Per-document zlib compression ratio (compressed/raw bytes) — the
-    Gopher-style redundancy signal ``char_entropy`` approximates:
-    boilerplate and repeated spans compress far below natural text
-    (~0.4), so a low-ratio band is a cheap dedup-adjacent gate.
-
-    DEFLATE is a sequential bit-level codec Catalyst cannot express, so
-    this is the legitimate Python case: one bounded ``mapInPandas``
-    pass, zlib from the stdlib, fixed ``level`` for determinism (ratio
-    values are zlib-build-dependent in the last percent — treat as a
-    signal, not a portable hash; hence fixture tests, no SQL oracle).
-
-    Output: id, raw_bytes, compressed_bytes, ratio (round 6).
-    """
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-    from zacks_estimates_financial_statements_spark.util import pandas_safe_id
-
-    ensure_package_on_executors(df.sparkSession)
-    # integral ids ride as strings (util.pandas_safe_id, r12)
-    df, id_type, restore = pandas_safe_id(df, id_col)
-    out_schema = (f"{id_col} {id_type}, raw_bytes bigint, "
-                  "compressed_bytes bigint, ratio double")
-
-    def batches(it):
-        import zlib
-
-        import pandas as pd
-
-        for pdf in it:
-            raw = pdf[text_col].fillna("").str.encode("utf-8")
-            rb = raw.str.len()
-            cb = raw.map(lambda b: len(zlib.compress(b, level)))
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "raw_bytes": rb.astype("int64"),
-                "compressed_bytes": cb.astype("int64"),
-                "ratio": (cb / rb.where(rb > 0)).round(6),
-            })
-
-    return restore(
-        df.select(id_col, text_col).mapInPandas(batches, out_schema))
 
 
 def leakage_safe_split(df: DataFrame, id_col: str, pairs: DataFrame,

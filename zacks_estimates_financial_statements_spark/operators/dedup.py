@@ -11,8 +11,8 @@ DuckDB: ``('0x' || substr(md5(..),1,15))::bigint``.
 
 Operators:
 
-- ``exact_dup_groups`` / ``dedup_exact`` — full-row (or fingerprint) hash
-  groupBy; one shuffle on the hash, min-id winner is deterministic.
+- ``exact_dup_groups`` — full-row (or fingerprint) hash groupBy; one
+  shuffle on the hash, min-id winner is deterministic.
 - ``minhash_signatures`` / ``minhash_near_dup_pairs`` — MinHash + banded
   LSH: shingle → k minhashes → band buckets → bucket self-join. The
   pair-join runs on band-bucket keys only (no all-pairs blowup); at 100 TB
@@ -90,16 +90,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str,
             .agg(F.count("*").alias("group_size"),
                  F.min(id_col).alias("keep_id"),
                  F.sort_array(F.collect_list(id_col)).alias("doc_ids")))
-
-
-def dedup_exact(df: DataFrame, id_col: str, text_col: str,
-                normalized: bool = True) -> DataFrame:
-    """Keep the min-id representative of each duplicate group — one
-    shuffle on the fingerprint, map-side combinable."""
-    fp = T.fingerprint(F.col(text_col)) if normalized else F.md5(F.col(text_col))
-    w = Window.partitionBy(fp).orderBy(F.col(id_col))
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1).drop("__rn"))
 
 
 #: Largest group cap for which the j-generator may run INSIDE
@@ -469,7 +459,7 @@ def minhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     bucket would otherwise go quadratic): buckets with more cohabitants
     are dropped from candidate generation. Such buckets are near-always
     pathological content whose members are also exact/fingerprint dups —
-    route those through ``dedup_exact`` instead. ``None`` disables the
+    route those through ``exact_dup_groups`` instead. ``None`` disables the
     guard. The SQL oracle twin omits the cap (identical below the cap).
     """
     buckets = minhash_index(df, id_col, text_col, k=k, bands=bands,
@@ -1022,7 +1012,7 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     paper (~sqrt(N) clusters) so the expected cluster stays bounded,
     and ``max_cluster_size`` drops degenerate hot clusters (their
     members are near-always exact/fingerprint dups — route those
-    through ``dedup_exact``). ``kmeans_iters=0`` (deterministic seed
+    through ``exact_dup_groups``). ``kmeans_iters=0`` (deterministic seed
     centroids) is the oracle-reproducible path; Lloyd refinement
     improves cluster balance on real corpora.
     """
@@ -1069,7 +1059,7 @@ def paragraph_dedup(df: DataFrame, id_col: str, text_col: str,
     copies put two different paragraphs at one (id, pidx) address, so
     the reassembly sort breaks the pidx tie with the paragraph text
     itself (``array_sort`` over struct(pidx, para)) — deterministic
-    and twin-mirrorable; true version resolution is ``dedup_exact`` /
+    and twin-mirrorable; true version resolution is ``exact_dup_groups`` /
     the writer's last-write-wins upstream.
 
     Plan shape: paragraphs explode once (``posexplode_outer`` — plain

@@ -1,23 +1,11 @@
 """HTML → training-text extraction for web corpora.
 
 Crawl deliveries are HTML; training text is what's left after stripping
-markup and navigation boilerplate. Two tiers, mirroring the dedup
-ladder's cheap-first discipline:
-
-- ``strip_html_tags`` — pure native expressions (script/style/comment
-  removal, tag strip, common-entity decode, whitespace collapse): a
-  zero-shuffle codegen projection at any corpus size, and closed-form
-  in ANSI SQL for the DuckDB oracle twin. The right default for
-  already-clean or text-dominant pages.
-- ``extract_main_text`` — readability-style main-content extraction
-  (Arc90 heuristic family: drop chrome containers, keep text blocks
-  with low link density) over the in-repo mini-DOM
-  (``parse/html.py``, the same parser the reference-parity HTML
-  pipeline uses — reference: estimate-retrieval.rkt's html->xexp
-  usage) in ONE bounded ``mapInPandas`` pass — the legitimate Python
-  case: DOM construction is not expressible in Spark SQL. Broken
-  documents quarantine with ``extract_error`` instead of failing the
-  job, matching the media codecs' convention.
+markup and navigation boilerplate. ``strip_html_tags`` does it with
+pure native expressions (script/style/comment removal, tag strip,
+common-entity decode, whitespace collapse): a zero-shuffle codegen
+projection at any corpus size, and closed-form in ANSI SQL for the
+DuckDB oracle twin.
 
 All regex patterns are restricted to constructs with identical
 semantics in Java regex (Spark) and RE2 (DuckDB): inline flags,
@@ -31,11 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from zacks_estimates_financial_statements_spark.functions.text import WS_CHARS, WS_RUN
-
-#: block-level containers that are navigation/boilerplate chrome, not
-#: content — dropped wholesale by the DOM tier
-CHROME_TAGS = ("script", "style", "nav", "header", "footer", "aside",
-               "noscript", "form")
 
 #: entity decode table — the half-dozen entities that dominate real
 #: HTML; `&amp;` must decode LAST or `&amp;lt;` would double-decode
@@ -105,91 +88,6 @@ def strip_html_tags(col: Column) -> Column:
     for ent, ch in _ENTITIES:
         x = F.regexp_replace(x, ent, ch)
     return F.trim(F.regexp_replace(x, WS_RUN, " "))
-
-
-def extract_main_text(df: DataFrame, id_col: str, html_col: str,
-                      min_block_chars: int = 25,
-                      max_link_density: float = 0.5) -> DataFrame:
-    """Readability-style main-content extraction: one row per input
-    with ``main_text``, ``n_blocks`` (kept blocks), ``total_chars``
-    (of the kept text) and ``extract_error`` (NULL on success).
-
-    Heuristic (the Arc90/boilerpipe family, simplified to a
-    deterministic rule): drop ``CHROME_TAGS`` subtrees wholesale, then
-    walk the remaining block-level elements (p, li, td, blockquote,
-    pre, h1-h6, and leaf divs); keep a block when its direct text is at
-    least ``min_block_chars`` characters AND the fraction of its text
-    inside anchors is below ``max_link_density`` (link-heavy blocks are
-    menus). Kept blocks join with newlines in document order.
-
-    One bounded ``mapInPandas`` projection — no shuffle; the DOM never
-    leaves the executor.
-    """
-    from zacks_estimates_financial_statements_spark import util
-
-    spark = df.sparkSession
-    util.ensure_package_on_executors(spark)
-    # integral ids ride as strings (util.pandas_safe_id, r12)
-    df, id_type, restore = util.pandas_safe_id(df, id_col)
-    schema = (f"{id_col} {id_type}, main_text string, n_blocks bigint, "
-              f"total_chars bigint, extract_error string")
-    min_chars = int(min_block_chars)
-    max_ld = float(max_link_density)
-
-    def extract_batches(batches):
-        import pandas as pd
-
-        from zacks_estimates_financial_statements_spark.parse.html import Node, parse_html
-
-        block_tags = {"p", "li", "td", "blockquote", "pre",
-                      "h1", "h2", "h3", "h4", "h5", "h6"}
-        chrome = set(CHROME_TAGS)
-
-        def link_len(node: Node) -> int:
-            n = 0
-            for a in node.descendants("a"):
-                n += len(a.text())
-            return n
-
-        def walk(node: Node, out: list) -> None:
-            for c in node.children:
-                if not isinstance(c, Node) or c.tag in chrome:
-                    continue
-                is_block = (c.tag in block_tags
-                            or (c.tag == "div"
-                                and not c.child_elems()))
-                if is_block:
-                    txt = " ".join(c.text().split())
-                    if len(txt) >= min_chars:
-                        ll = link_len(c)
-                        if not txt or ll / max(len(c.text()), 1) < max_ld:
-                            out.append(txt)
-                    continue    # a kept/rejected block is a leaf here
-                walk(c, out)
-
-        for pdf in batches:
-            texts, nblocks, chars, errs = [], [], [], []
-            for html in pdf[html_col]:
-                try:
-                    root = parse_html("" if html is None else str(html))
-                    blocks: list = []
-                    walk(root, blocks)
-                    joined = "\n".join(blocks)
-                    texts.append(joined)
-                    nblocks.append(len(blocks))
-                    chars.append(len(joined))
-                    errs.append(None)
-                except Exception as exc:  # noqa: BLE001 — quarantine, don't die
-                    texts.append(None)
-                    nblocks.append(0)
-                    chars.append(0)
-                    errs.append(f"{type(exc).__name__}: {exc}"[:200])
-            yield pd.DataFrame({id_col: pdf[id_col], "main_text": texts,
-                                "n_blocks": nblocks, "total_chars": chars,
-                                "extract_error": errs})
-
-    return restore(df.select(id_col, html_col)
-                   .mapInPandas(extract_batches, schema))
 
 
 def extract_links(df: DataFrame, id_col: str, html_col: str,

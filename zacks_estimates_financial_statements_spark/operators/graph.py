@@ -230,7 +230,7 @@ def resolve_duplicate_clusters(df: DataFrame, pairs: DataFrame,
     physical copies of one id each receive the (identical) label row,
     and ``cluster_size`` counts logical ids, not physical rows (sizes
     aggregate over the label set, never the corpus). Collapsing exact
-    copies is ``dedup_exact``'s job, upstream of cluster resolution.
+    copies is ``exact_dup_groups``' job, upstream of cluster resolution.
     """
     df = df.filter(F.col(id_col).isNotNull())
     labels = connected_components(pairs, src=src, dst=dst)

@@ -7,18 +7,16 @@ signatures) is real and tested. Codec status per modality:
 - **images** — REAL decode for baseline JPEG (huffman + IDCT,
   4:4:4/4:2:2/4:2:0, restart markers), PNG (8-bit non-interlaced,
   stdlib zlib inflate + scanline unfilter), PPM (P6) and uncompressed
-  24-bit BMP (``functions/codecs.py``, pure numpy): true width/height
-  and content-derived luma-histogram features. Remaining exclusions
-  (progressive/arithmetic/12-bit JPEG; 16-bit/interlaced PNG) fall back
-  to a clearly-flagged deterministic byte-histogram stand-in
-  (``decode_error`` records the stub) or raise in ``strict`` mode.
-- **audio** — REAL decode for PCM WAV (stdlib ``wave``): duration, RMS,
-  peak, zero-crossing rate from the decoded samples. Other containers
-  are quarantined per row.
+  24-bit BMP (``functions/codecs.py``, pure numpy), feeding the
+  perceptual hashes. Payloads without a codec here
+  (progressive/arithmetic/12-bit JPEG; 16-bit/interlaced PNG) are
+  quarantined with ``decode_error``.
+- **audio** — REAL decode for PCM WAV (stdlib ``wave``), feeding the
+  audio fingerprints and the decode-invariant round trip.
 - **video** — container metadata is REAL (stdlib ISO-BMFF box walker:
   ftyp brand, mvhd duration v0/v1, tkhd dimensions, hdlr track
-  classification — ``parse_video_metadata``), and frame extraction is
-  REAL for MJPEG-in-MP4 (sample-table demux slices each scheduled
+  classification — ``codecs.parse_mp4_metadata``), and frame extraction
+  is REAL for MJPEG-in-MP4 (sample-table demux slices each scheduled
   tick's JPEG sample; the bytes decode with the baseline JPEG codec).
   Non-MJPEG codecs (H.264/HEVC) still fall back to a clearly-flagged
   stub marker row (``source = 'stub:…'``) or raise in strict mode —
@@ -31,7 +29,7 @@ Design notes for 100 TB:
   emits small rows — project early, never carry the bytes past decode;
 - binary payloads should live in their own column family / file group
   (Parquet stores them contiguously), so metadata-only queries prune the
-  media column entirely (column pruning is verified in tests).
+  media column entirely.
 """
 
 from __future__ import annotations
@@ -60,188 +58,10 @@ MEDIA_SCHEMA = StructType([
     StructField("duration_ms", LongType(), True),    # audio/video
 ])
 
-IMAGE_FEATURES_SCHEMA = (
-    "media_id long, width int, height int, n_bytes long, "
-    "features array<float>, decode_error string"
-)
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, duration_ms long, sample_rate int, n_channels int, "
-    "rms double, peak double, zero_crossing_rate double, "
-    "decode_error string"
-)
-
 FRAME_SAMPLE_SCHEMA = (
     "media_id long, frame_idx int, ts_ms long, frame_bytes binary, "
     "source string"
 )
-
-VIDEO_METADATA_SCHEMA = (
-    "media_id long, brand string, duration_ms long, n_tracks int, "
-    "width int, height int, has_video boolean, has_audio boolean, "
-    "decode_error string"
-)
-
-
-def parse_video_metadata(media: DataFrame,
-                         strict: bool = False) -> DataFrame:
-    """Video payloads → REAL ISO-BMFF container metadata (stdlib box
-    walker in ``functions/codecs.py``): brand, movie duration, track
-    count, presentation dimensions, video/audio track flags. This is
-    the demux-metadata half of a video pipeline — the filter/route step
-    that runs BEFORE any (still stubbed) frame decode; non-BMFF rows
-    are quarantined with ``decode_error`` (or raise in ``strict``)."""
-    import pandas as pd
-
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-    ensure_package_on_executors(media.sparkSession)
-
-    cols = ["media_id", "brand", "duration_ms", "n_tracks", "width",
-            "height", "has_video", "has_audio", "decode_error"]
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from zacks_estimates_financial_statements_spark.functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    meta = codecs.parse_mp4_metadata(payload)
-                    rows.append({"media_id": mid, **meta,
-                                 "decode_error": None})
-                except Exception as exc:  # noqa: BLE001 — quarantine row
-                    if strict:
-                        raise
-                    rows.append({"media_id": mid, "brand": None,
-                                 "duration_ms": None, "n_tracks": None,
-                                 "width": None, "height": None,
-                                 "has_video": None, "has_audio": None,
-                                 "decode_error": str(exc)})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return (media.filter(F.col("kind") == "video")
-            .select("media_id", "payload")
-            .mapInPandas(fn, VIDEO_METADATA_SCHEMA))
-
-
-def _fake_features(payload: bytes, dims: int) -> list[float]:
-    """Deterministic stand-in for a real image embedding: byte histogram
-    folded to ``dims`` buckets, L1-normalized. STUB — replace with a real
-    model/codec in production."""
-    counts = [0] * dims
-    for i, b in enumerate(payload or b""):
-        counts[(b + i) % dims] += 1
-    total = sum(counts) or 1
-    return [c / total for c in counts]
-
-
-def decode_image_features(media: DataFrame, dims: int = 8,
-                          strict: bool = False) -> DataFrame:
-    """Image payloads → feature rows via Arrow-batched ``mapInPandas``.
-
-    PPM/BMP payloads are REALLY decoded (``functions/codecs.py``): width
-    and height come from the pixel data and ``features`` is the decoded
-    luma histogram. Formats without an in-container codec either raise
-    (``strict=True``) or emit the deterministic byte-histogram stand-in
-    with ``decode_error`` flagging the stub — the row is never silently
-    presented as a real decode.
-    """
-    import pandas as pd
-
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-    ensure_package_on_executors(media.sparkSession)
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from zacks_estimates_financial_statements_spark.functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, payload, w, h in zip(pdf["media_id"], pdf["payload"],
-                                          pdf["width"], pdf["height"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    arr = codecs.decode_image(payload)
-                    rows.append({
-                        "media_id": mid,
-                        "width": int(arr.shape[1]),
-                        "height": int(arr.shape[0]),
-                        "n_bytes": len(payload),
-                        "features": codecs.image_features(arr, dims),
-                        "decode_error": None,
-                    })
-                except NotImplementedError as exc:
-                    if strict:
-                        raise
-                    rows.append({
-                        "media_id": mid,
-                        "width": None if pd.isna(w) else int(w),
-                        "height": None if pd.isna(h) else int(h),
-                        "n_bytes": len(payload),
-                        "features": _fake_features(payload, dims),
-                        "decode_error": f"stub:byte-histogram ({exc})",
-                    })
-                except Exception as exc:  # noqa: BLE001 — quarantine row
-                    rows.append({"media_id": mid, "width": None,
-                                 "height": None, "n_bytes": len(payload),
-                                 "features": None,
-                                 "decode_error": str(exc)})
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height",
-                                              "n_bytes", "features",
-                                              "decode_error"])
-
-    return (media.filter(F.col("kind") == "image")
-            .select("media_id", "payload", "width", "height")
-            .mapInPandas(fn, IMAGE_FEATURES_SCHEMA))
-
-
-def decode_audio_features(media: DataFrame,
-                          strict: bool = False) -> DataFrame:
-    """Audio payloads → real signal features (PCM WAV decoded via the
-    stdlib codec): duration, sample rate, channels, RMS, peak,
-    zero-crossing rate. Undecodable rows are quarantined with
-    ``decode_error`` (or raise in ``strict`` mode)."""
-    import pandas as pd
-
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-    ensure_package_on_executors(media.sparkSession)
-
-    cols = ["media_id", "duration_ms", "sample_rate", "n_channels",
-            "rms", "peak", "zero_crossing_rate", "decode_error"]
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from zacks_estimates_financial_statements_spark.functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    if codecs.sniff(payload) != "wav":
-                        raise NotImplementedError(
-                            "no codec for this audio container "
-                            "(supported here: PCM WAV)")
-                    samples, rate = codecs.decode_wav(payload)
-                    rows.append({"media_id": mid,
-                                 **codecs.audio_features(samples, rate),
-                                 "decode_error": None})
-                except Exception as exc:  # noqa: BLE001 — quarantine row
-                    if strict:
-                        raise
-                    rows.append({"media_id": mid, "duration_ms": None,
-                                 "sample_rate": None, "n_channels": None,
-                                 "rms": None, "peak": None,
-                                 "zero_crossing_rate": None,
-                                 "decode_error": str(exc)})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return (media.filter(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(fn, AUDIO_FEATURES_SCHEMA))
-
 
 def sample_video_frames(media: DataFrame, every_ms: int = 1000,
                         strict: bool = False) -> DataFrame:
@@ -251,12 +71,8 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000,
     tables are demuxed (``codecs.parse_mp4_samples``) and each sampled
     tick emits the actual JPEG sample nearest-at-or-before it
     (``source = 'mjpeg'``; the bytes feed ``codecs.decode_jpeg``
-    directly) and for any codec with a REGISTERED external decoder
-    (``codecs.register_video_decoder``; ``source = 'ext:<fourcc>'`` —
-    the registry is snapshotted at plan build and shipped in the
-    closure, since Python workers don't share driver module state).
-    Payloads whose video codec has neither (H.264/HEVC … with no
-    plugin) fall back to a clearly-flagged deterministic stub marker
+    directly). Payloads whose video codec is not MJPEG (H.264/HEVC …)
+    fall back to a clearly-flagged deterministic stub marker
     (``source = 'stub:…'``) or raise in ``strict`` mode; the sampling
     schedule stays real either way — when the ``duration_ms`` metadata
     column is null the duration comes from the payload's actual
@@ -266,9 +82,6 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000,
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
 
     ensure_package_on_executors(media.sparkSession)
-
-    from zacks_estimates_financial_statements_spark.functions import codecs as _c
-    decoders = _c.video_decoder_snapshot()
 
     cols = ["media_id", "frame_idx", "ts_ms", "frame_bytes", "source"]
 
@@ -281,8 +94,7 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000,
                                          pdf["duration_ms"]):
                 payload = bytes(payload) if payload is not None else b""
                 try:
-                    src_tag, frames = codecs.extract_video_frames(
-                        payload, decoders)
+                    frames = codecs.extract_mjpeg_frames(payload)
                     # schedule end: metadata duration, else up to the
                     # last demuxed frame (same ticks the container
                     # duration would give)
@@ -303,7 +115,7 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000,
                         rows.append({"media_id": mid, "frame_idx": i,
                                      "ts_ms": tick,
                                      "frame_bytes": frames[fi][1],
-                                     "source": src_tag})
+                                     "source": "mjpeg"})
                     continue
                 except (ValueError, NotImplementedError) as exc:
                     if strict:
@@ -527,14 +339,6 @@ def synthesize_decode_invariants(ids: DataFrame,
             .mapInPandas(fn, MEDIA_ROUNDTRIP_SCHEMA))
 
 
-def media_metadata_only(media: DataFrame) -> DataFrame:
-    """Metadata projection — must NOT read the payload column (verified by
-    checking the scan's ReadSchema in tests; at 100 TB this is the
-    difference between a metadata query and a full-corpus scan)."""
-    return media.select("media_id", "kind", "mime", "width", "height",
-                        "duration_ms")
-
-
 PHASH_SCHEMA = "media_id long, dhash long, decode_error string"
 
 
@@ -651,10 +455,9 @@ def video_fingerprints(media: DataFrame, every_ms: int = 1000,
                        hash_size: int = 8) -> DataFrame:
     """Per-video perceptual fingerprint: the sampled-frame sequence
     hashed frame-by-frame with the same dHash the image tier uses.
-    Only REAL decoded frames are hashed (``source = 'mjpeg'`` or an
-    external-decoder ``'ext:<fourcc>'``) — stub frames from codecs this
-    process cannot decode are excluded, never silently hashed from byte
-    slices. Failed frame decodes quarantine with ``decode_error``. One
+    Only REAL decoded frames are hashed (``source = 'mjpeg'``) — stub
+    frames from codecs this process cannot decode are excluded, never
+    silently hashed from byte slices. Failed frame decodes quarantine with ``decode_error``. One
     bounded ``mapInPandas`` over the demuxed frames; upstream sampling
     bounds rows at duration/every_ms per video."""
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors

@@ -25,8 +25,7 @@ Scale notes:
   the pipeline it guards.
 
 The long (one-row-per-column) output shape is deliberate: profiles of
-different tables/snapshots union and join by ``column`` for drift
-comparison (see ``profile_drift``).
+different tables/snapshots union and join by ``column``.
 """
 
 from __future__ import annotations
@@ -121,43 +120,6 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
                  F.col(f"{c}__al").alias("avg_len"))
         for c in cols])
     return (row.select(F.explode(panels).alias("p")).select("p.*"))
-
-
-def profile_drift(baseline: DataFrame, current: DataFrame,
-                  null_rate_jump: float = 0.05,
-                  distinct_ratio_band: tuple[float, float] = (0.5, 2.0),
-                  ) -> DataFrame:
-    """Join two profiles by column and flag contract drift: null-rate
-    jumps beyond ``null_rate_jump`` (absolute), distinct-cardinality
-    ratio outside ``distinct_ratio_band``, and min/max range excursions
-    (current min below baseline min or max above it — textual compare
-    only flags when both sides render). |columns| rows: driver-scale.
-    """
-    b = baseline.select(
-        "column", F.col("n_rows").alias("b_rows"),
-        F.col("n_nulls").alias("b_nulls"),
-        F.col("n_distinct").alias("b_distinct"),
-        F.col("min_value").alias("b_min"), F.col("max_value").alias("b_max"))
-    c = current.select(
-        "column", F.col("n_rows").alias("c_rows"),
-        F.col("n_nulls").alias("c_nulls"),
-        F.col("n_distinct").alias("c_distinct"),
-        F.col("min_value").alias("c_min"), F.col("max_value").alias("c_max"))
-    j = b.join(c, "column", "full_outer")
-    b_nr = F.col("b_nulls") / F.col("b_rows")
-    c_nr = F.col("c_nulls") / F.col("c_rows")
-    lo, hi = distinct_ratio_band
-    ratio = F.col("c_distinct") / F.nullif(F.col("b_distinct"), F.lit(0))
-    return j.select(
-        "column",
-        F.col("b_rows").isNull().alias("added"),
-        F.col("c_rows").isNull().alias("removed"),
-        F.round(c_nr - b_nr, 6).alias("null_rate_delta"),
-        (F.coalesce(F.abs(c_nr - b_nr) > null_rate_jump, F.lit(False))
-         ).alias("null_drift"),
-        F.round(ratio, 6).alias("distinct_ratio"),
-        (F.coalesce((ratio < lo) | (ratio > hi), F.lit(False))
-         ).alias("distinct_drift"))
 
 
 def distribution_drift(reference: DataFrame, current: DataFrame,

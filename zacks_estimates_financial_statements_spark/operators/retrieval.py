@@ -48,7 +48,7 @@ def bm25_score(df: DataFrame, id_col: str, text_col: str,
     # Duplicate-id contract (r9 fuzz): postings key on the id, so rows
     # sharing an id MERGE — their token streams concatenate into one
     # logical document (dl/tf sum across rows; N counts ids). Ids are
-    # expected unique upstream (dedup_exact); merging keeps the index
+    # expected unique upstream (exact_dup_groups); merging keeps the index
     # deterministic and zero-extra-shuffle when they are not.
     df = df.filter(F.col(id_col).isNotNull())
     toks = df.select(F.col(id_col), F.explode_outer(_word_array(text_col))

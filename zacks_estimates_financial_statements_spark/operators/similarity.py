@@ -22,15 +22,13 @@ All math is native Spark (higher-order functions, see
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions import vectors as V
-from zacks_estimates_financial_statements_spark.util import dec6
+from zacks_estimates_financial_statements_spark.util import dec6, persist
 
 
 def _scorable(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -324,28 +322,24 @@ class IvfIndex:
     is localized to a literal relation (n_centroids rows), so the probe
     side never touches the corpus lineage either.
 
-    Call ``unpersist()`` when done — mirrors dropping the index."""
+    ``assigned`` is persisted through ``util.persist``, so the caller's
+    ``cache_scope()`` drops the index when it exits."""
 
     assigned: DataFrame    # corpus columns + centroid_id, persisted
     centroids: DataFrame   # (centroid_id, centroid_vec), literal relation
     id_col: str
     vec_col: str
 
-    def unpersist(self) -> None:
-        self.assigned.unpersist()
-
 
 def ivf_build(corpus: DataFrame, n_centroids: int = 16,
               id_col: str = "vec_id", vec_col: str = "embedding",
-              kmeans_iters: int = 0,
-              storage_level: StorageLevel | None = None) -> IvfIndex:
+              kmeans_iters: int = 0) -> IvfIndex:
     """Build (and materialize) the IVF index once, for reuse across
-    query batches via ``topk_ivf(..., index=...)``. MEMORY_AND_DISK by
-    default: at 100 TB the inverted lists spill rather than evict."""
+    query batches via ``topk_ivf(..., index=...)``. MEMORY_AND_DISK: at
+    100 TB the inverted lists spill rather than evict."""
     assign, centroids = ivf_assign(corpus, n_centroids, id_col, vec_col,
                                    kmeans_iters)
-    assigned = (corpus.join(assign, id_col)
-                .persist(storage_level or StorageLevel.MEMORY_AND_DISK))
+    assigned = persist(corpus.join(assign, id_col))
     assigned.count()   # materialize eagerly: build cost is paid here
     centroids = corpus.sparkSession.createDataFrame(
         centroids.collect(), schema=centroids.schema)
@@ -463,65 +457,6 @@ def quantize_embeddings(df: DataFrame, id_col: str,
     return staged.select(
         F.col(id_col), F.round("__scale", 6).alias("scale"),
         F.col("qvec"), F.round(mae, 6).alias("mae"))
-
-
-def ivf_add(index: IvfIndex, batch: DataFrame,
-            storage_level: StorageLevel | None = None) -> IvfIndex:
-    """Incremental index growth — the FAISS ``add``-after-``train``
-    path: new vectors are assigned to the index's FROZEN centroid set
-    (no re-training, no corpus re-scan) and appended to the inverted
-    lists.
-
-    Cost is O(batch): only the batch scores against the
-    n_centroids-row broadcast centroid relation; the existing lists are
-    reused from the persisted index and never recomputed. The combined
-    lists are persisted (and materialized) as a NEW index; the old
-    index's cache is released. Queries through ``topk_ivf(...,
-    index=...)`` see the batch immediately.
-
-    Centroids drift as the corpus grows — recall on added regions
-    degrades gracefully, exactly as in any IVF deployment; rebuild
-    (``ivf_build``) when additions dominate the trained distribution.
-    """
-    assign = _nearest_centroid(batch, index.centroids,
-                               index.id_col, index.vec_col)
-    fresh = batch.join(assign, index.id_col)
-    combined = (index.assigned.unionByName(
-        fresh.select(*index.assigned.columns))
-        .persist(storage_level or StorageLevel.MEMORY_AND_DISK))
-    combined.count()   # materialize before dropping the old cache
-    index.assigned.unpersist()
-    return IvfIndex(assigned=combined, centroids=index.centroids,
-                    id_col=index.id_col, vec_col=index.vec_col)
-
-
-def ivf_save(index: IvfIndex, path: str) -> None:
-    """Persist an IVF index to parquet: the inverted lists
-    directory-PARTITIONED by ``centroid_id`` (cardinality = n_centroids,
-    bounded — the legitimate partitionBy case), centroids as a tiny
-    side table. The partitioned layout is what makes loaded-index
-    probes read only the probed lists: the centroid_id join against the
-    (broadcast) probe set qualifies for dynamic partition pruning, so a
-    corpus-sized index on disk serves a query batch by scanning nprobe
-    partitions per query, not the corpus.
-    """
-    (index.assigned.write.partitionBy("centroid_id")
-     .mode("overwrite").parquet(os.path.join(path, "lists")))
-    (index.centroids.write.mode("overwrite")
-     .parquet(os.path.join(path, "centroids")))
-
-
-def ivf_load(spark, path: str, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> IvfIndex:
-    """Reopen a saved IVF index. The lists stay on disk (no persist —
-    the partitioned parquet IS the materialization); centroids localize
-    to a literal relation exactly as ``ivf_build`` leaves them, so the
-    probe side never touches the lists' lineage."""
-    assigned = spark.read.parquet(os.path.join(path, "lists"))
-    cent = spark.read.parquet(os.path.join(path, "centroids"))
-    centroids = spark.createDataFrame(cent.collect(), schema=cent.schema)
-    return IvfIndex(assigned=assigned, centroids=centroids,
-                    id_col=id_col, vec_col=vec_col)
 
 
 # ---------------------------------------------------------------------------

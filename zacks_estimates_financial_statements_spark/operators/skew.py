@@ -1,54 +1,16 @@
-"""Skew-join handling: detection + deterministic salting.
+"""Skew-join handling: an explicit bloom semi-join reduction.
 
 AQE's skew-join splitting (enabled in ``session.py``) handles most skew
-at runtime by splitting oversized shuffle partitions. Salting is the
-explicit fallback for the cases AQE cannot fix — e.g. a single hot key
-that exceeds one executor's memory in a sort-merge join, or a
-broadcast-ineligible dimension with hot keys.
-
-``salted_join`` replicates the *small* side ``buckets`` times and sprays
-the large side's rows across buckets with a deterministic hash of the
-whole row (no ``rand()`` — results and retries stay deterministic), so a
-hot key's rows land in ``buckets`` different shuffle partitions.
+at runtime by splitting oversized shuffle partitions. ``bloom_semi_join``
+is the explicit lever for joins whose small side is too big to broadcast
+exactly but whose key set compresses into a bitmap: the large side is
+pre-filtered against that bitmap before the real join's exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_SALT = "__salt"
-
-
-def skewed_keys(df: DataFrame, key_cols: list[str],
-                ratio: float = 8.0, min_rows: int = 1000) -> DataFrame:
-    """Keys whose row count exceeds ``ratio`` × the mean key size (and
-    ``min_rows``): the candidates worth salting. One aggregation pass."""
-    counts = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
-    mean = counts.agg(F.avg("n").alias("m"))
-    return (counts.join(F.broadcast(mean))
-            .filter((F.col("n") >= F.col("m") * ratio)
-                    & (F.col("n") >= min_rows))
-            .drop("m"))
-
-
-def salted_join(large: DataFrame, small: DataFrame, on: list[str],
-                how: str = "inner", buckets: int = 16) -> DataFrame:
-    """Equi-join with the large side salted and the small side replicated
-    ``buckets``×. Supports inner / left joins (the shapes the engine's
-    upserts and dimension joins use). Join output equals the unsalted
-    join exactly; only the physical distribution changes."""
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"salted_join does not support how={how!r}")
-    spray = F.pmod(F.xxhash64(*[F.col(c) for c in large.columns]),
-                   F.lit(buckets)).cast("int")
-    salted_large = large.withColumn(_SALT, spray)
-    replicated_small = small.withColumn(
-        _SALT, F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    ).withColumn(_SALT, F.col(_SALT).cast("int"))
-    out = salted_large.join(replicated_small, on=[*on, _SALT], how=how)
-    return out.drop(_SALT)
-
 
 def bloom_semi_join(large: DataFrame, small: DataFrame,
                     on: list[str] | str, how: str = "inner",

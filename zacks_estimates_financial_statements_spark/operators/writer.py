@@ -6,11 +6,9 @@ Semantics implemented:
 - ``upsert_ignore``   — W1: ``INSERT … ON CONFLICT (pk) DO NOTHING``
   (estimate-transform-load.rkt:195 et al.): dedup the batch on PK, anti-join
   against the stored PKs, append only the new keys. Re-runs are no-ops.
-- ``overwrite``       — wholesale rewrite (the calendar loaders' fused
-  W4/W5/W1 merge lands through it).
-- ``replace_window``  — W4/W5 fused (earnings-calendar-transform-load.rkt:45-51,
-  :79-87): keep stored rows NOT matching a predicate, union the new batch,
-  rewrite.
+- ``overwrite``       — wholesale rewrite: the calendar loaders' fused
+  W4/W5/W1 merge (earnings-calendar-transform-load.rkt:45-51, :79-87;
+  ``merge_calendar``) lands through it.
 - ``delete_where``    — W6/J3 (earnings-calendar-transform-load.rkt:109-148):
   anti-join the stored table against a condemned-keys DataFrame, rewrite.
 - W7 ``vacuum``       — every pointer flip drops the superseded versions
@@ -30,7 +28,7 @@ Atomicity & scale:
   not assumed: every mutating method takes an advisory per-table lock file
   and a second concurrent writer fails fast with ``ConcurrentWriteError``
   (swap in Delta/Iceberg when true multi-writer transactions are needed).
-- Rewrites (replace/delete) write to a fresh versioned directory and flip a
+- Rewrites (overwrite/delete) write to a fresh versioned directory and flip a
   pointer file, so readers never observe a half-written table and the swap
   is O(1) metadata, not data movement. This is the plain-Parquet stand-in
   for Delta's transaction log, per BASELINE.json's "DataFrame ops + Parquet
@@ -462,19 +460,6 @@ class TableStore:
             if parts:
                 writer = writer.partitionBy(*parts)
             writer.parquet(live)
-
-    def replace_window(self, batch: DataFrame, keep_condition) -> None:
-        """W4/W5 — windowed replace: stored rows satisfying
-        ``keep_condition`` survive; everything else is replaced by the batch.
-
-        e.g. W4 future-horizon reload: ``keep_condition = col("date") <
-        folder_date``; W5 rolling-week per-symbol replace is expressed by
-        ``delete_where`` + ``upsert_ignore`` in the pipeline.
-        """
-        with self.write_lock():
-            existing = self.read()
-            kept = existing.filter(keep_condition)
-            self._overwrite_locked(kept.unionByName(batch))
 
     def delete_where(self, condemned_keys: DataFrame, on: list[str]) -> None:
         """W6/J3 — delete-via-join: remove stored rows matching

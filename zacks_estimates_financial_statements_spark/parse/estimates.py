@@ -37,9 +37,6 @@ from zacks_estimates_financial_statements_spark.parse.html import Node, parse_ht
 PERIODS = [("cq", 2), ("nq", 3), ("cy", 4), ("ny", 5)]  # → table column
 QUARTERS = [("lq", 2), ("q2", 3), ("q3", 4), ("q4", 5)]
 
-PERIOD_DECODE = {"cq": "current-quarter", "nq": "next-quarter",
-                 "cy": "current-year", "ny": "next-year"}
-
 _SALES_ROWS = [("consensus", 1), ("count", 2), ("high", 3), ("low", 4),
                ("year_ago", 5)]
 _EPS_ROWS = [("consensus", 1), ("count", 2), ("recent", 3), ("high", 4),

@@ -64,12 +64,6 @@ class Node:
                 return d
         return None
 
-    def find_by_class(self, cls: str, tag: str | None = None) -> "Node | None":
-        for d in self.descendants(tag):
-            if cls in (d.attrs.get("class") or "").split():
-                return d
-        return None
-
     # -- text ---------------------------------------------------------------
 
     def text_children(self) -> list[str]:

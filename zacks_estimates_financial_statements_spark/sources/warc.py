@@ -14,15 +14,16 @@ response (status line + HTTP headers + payload) inside the body.
 
 Scale design (100 TB of WARC = a normal CommonCrawl slice):
 
-- files arrive via ``spark.read.format("binaryFile")`` — one file per
-  task, pathGlobFilter-prunable, no driver-side listing loops. WARC
-  shards are written ~1 GiB by convention, the right task granularity;
+- ``parse_warc_blobs`` takes ``(path, content)`` rows, the shape of
+  ``spark.read.format("binaryFile")`` — one file per task, no
+  driver-side listing loops. WARC shards are written ~1 GiB by
+  convention, the right task granularity;
 - the member scan is ONE ``mapInPandas`` pass per file (Arrow-batched;
   the only Python in the path — gzip-member framing and HTTP header
   parsing are not expressible in Spark SQL), emitting one row per
   record with typed header fields and the raw payload as ``binary``;
 - malformed members QUARANTINE (``parse_error`` non-NULL, evidence
-  kept) instead of aborting — the jsonl/codec convention; a truncated
+  kept) instead of aborting — the codec convention; a truncated
   final member, a bad gzip CRC, or a header violating the grammar
   costs one row, not the shard;
 - downstream is the existing kit: payloads feed
@@ -40,7 +41,7 @@ from __future__ import annotations
 import io
 from typing import Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from zacks_estimates_financial_statements_spark import util
@@ -202,19 +203,6 @@ def parse_warc_blobs(df: DataFrame, path_col: str = "path",
     return (df.select(F.col(path_col).alias(path_col),
                       F.col(content_col).alias(content_col))
             .mapInPandas(fn, WARC_RECORDS_SCHEMA))
-
-
-def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed WARC record scan: ``binaryFile`` rows (one task per
-    shard — the ~1 GiB convention is the right granularity) through
-    ``parse_warc_blobs``. Returns one row per record; filter
-    ``parse_error IS NULL AND warc_type = 'response'`` for the usual
-    crawl-payload feed into ``extraction.html_to_text``."""
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.warc.gz")
-           .load(path_glob)
-           .select("path", "content"))
-    return parse_warc_blobs(raw)
 
 
 def build_warc_bytes(records: list[dict]) -> bytes:

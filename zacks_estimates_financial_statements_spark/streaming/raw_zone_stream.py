@@ -21,25 +21,26 @@ does NOT give: read isolation between epochs (a reader between crash
 and restart can observe the partial prefix — the same window the
 reference's per-document transactions close per doc but its cron
 re-runs leave open per day). ``tests/test_streaming.py::
-test_dedup_gate_stream_mid_batch_crash_recovery`` and
-``test_estimates_stream_mid_batch_crash_recovery`` kill a loader after
+test_estimates_stream_mid_batch_crash_recovery`` and
+``test_statements_stream_mid_batch_crash_recovery`` kill a loader after
 its first table write of an epoch and assert end-state equality.
 
 Components:
 
-- ``stream_calendar_rows``   — whole-file text stream over calendar JSON
-  day-files → the same parse surface as ``parse.calendars`` (pure SQL).
-  The calendar *load* stays batch-only on purpose: ``merge_calendar`` is
-  run-scoped (last-file-wins within one complete folder), and a file
-  stream may split a folder across microbatches, silently changing the
-  winner — document-level loads (estimates, statements) order their
-  cross-folder conflicts by folder date (the earliest folder wins, as in
-  one run per folder), so only they get streaming loaders.
+- ``run_estimates_stream`` / ``run_statements_stream`` — the document
+  loaders over ``stream_documents``. The calendar *load* stays
+  batch-only on purpose: ``merge_calendar`` is run-scoped
+  (last-file-wins within one complete folder), and a file stream may
+  split a folder across microbatches, silently changing the winner —
+  document-level loads (estimates, statements) order their cross-folder
+  conflicts by folder date (the earliest folder wins, as in one run per
+  folder), so only they get streaming loaders.
 - ``windowed_event_counts``  — event-time tumbling-window aggregation with
   watermarked late-data handling.
-- ``sessionize_events``      — custom stateful operator
-  (``applyInPandasWithState``): gap-based sessionization per user, the
-  canonical "operator Spark lacks" shape (SURVEY §2.9 extension).
+- ``schedule_fetches``       — custom stateful operator
+  (``applyInPandasWithState``): the politeness scheduler carries each
+  key's last dispatch time across microbatches, the canonical "operator
+  Spark lacks" shape (SURVEY §2.9 extension).
 """
 
 from __future__ import annotations
@@ -48,31 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from zacks_estimates_financial_statements_spark.parse.calendars import parse_calendar_rows
 from zacks_estimates_financial_statements_spark.util import dec6
-
-
-def stream_calendar_files(spark: SparkSession, folder_glob: str) -> DataFrame:
-    """File-source stream of whole calendar JSON documents:
-    (path, event_date, content). ``folder_glob`` e.g.
-    ``<base>/earnings-calendar/*/``; new day-files are picked up
-    incrementally across restarts via the checkpoint."""
-    raw = (spark.readStream.format("text")
-           .option("wholetext", "true")
-           .load(folder_glob))
-    path = F.input_file_name()
-    return raw.select(
-        path.alias("path"),
-        # ansi-ok: pipeline-written dated layout; a malformed stem must abort loudly (layout-drift/tamper detection)
-        F.to_date(F.regexp_extract(path, r"([^/]+)\.json$", 1), "yyyy-MM-dd")
-         .alias("event_date"),
-        F.col("value").alias("content"))
-
-
-def stream_calendar_rows(spark: SparkSession, folder_glob: str) -> DataFrame:
-    """Parsed positional calendar rows from the stream — the batch
-    parser (T8) over the file stream."""
-    return parse_calendar_rows(stream_calendar_files(spark, folder_glob))
 
 
 def stream_documents(spark: SparkSession, base: str,
@@ -172,52 +149,6 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
                     "event_type", "n", "sum_value"))
 
 
-SESSION_SCHEMA = ("user_id bigint, session_start timestamp, "
-                  "session_end timestamp, n_events int")
-_STATE_SCHEMA = "start bigint, last bigint, n int"
-
-
-def _sessionize_fn(gap_seconds: int):
-    import pandas as pd
-
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            start, last, n = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id,
-                "session_start": pd.Timestamp(start, unit="us"),
-                "session_end": pd.Timestamp(last, unit="us"),
-                "n_events": n,
-            }])
-            return
-        ts_us: list[int] = []
-        for pdf in pdfs:
-            ts_us.extend(int(t.value // 1000) for t in pd.to_datetime(pdf["ts"]))
-        ts_us.sort()
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start, last, n = ts_us[0], ts_us[0], 0
-        out = []
-        for t in ts_us:
-            if t - last > gap_seconds * 1_000_000:
-                out.append({"user_id": user_id,
-                            "session_start": pd.Timestamp(start, unit="us"),
-                            "session_end": pd.Timestamp(last, unit="us"),
-                            "n_events": n})
-                start, n = t, 0
-            last = t
-            n += 1
-        state.update((start, last, n))
-        state.setTimeoutDuration(gap_seconds * 1000)
-        yield pd.DataFrame(out, columns=["user_id", "session_start",
-                                         "session_end", "n_events"])
-
-    return fn
-
-
 def dedup_events(events: DataFrame, keys: list[str] | None = None,
                  watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup: keep the first occurrence of each key, with
@@ -234,154 +165,6 @@ def dedup_events(events: DataFrame, keys: list[str] | None = None,
     return (events
             .withWatermark("ts", watermark)
             .dropDuplicatesWithinWatermark(keys))
-
-
-def sessionize_events(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
-    """Gap-based sessionization per user as a custom stateful streaming
-    operator (``applyInPandasWithState`` + processing-time timeout to
-    flush idle sessions). Emits closed sessions."""
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
-
-    ensure_package_on_executors(events.sparkSession)
-    return (events
-            .selectExpr("user_id", "ts")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _sessionize_fn(gap_seconds),
-                outputStructType=SESSION_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))
-
-
-def run_dedup_gate_stream(spark: SparkSession, input_glob: str,
-                          tables_root: str, checkpoint: str,
-                          threshold: float = 0.7, k: int = 12,
-                          bands: int = 4,
-                          dedup_within_batch: bool = False,
-                          min_quality: float | None = None):
-    """Streaming ingestion dedup gate: new JSONL documents stream in,
-    and each microbatch probes the STORED corpus LSH index before
-    admission — near-dups (est_jaccard >= threshold) land in a
-    quarantine table with their best match; fresh documents append to
-    the corpus AND their signature rows append to the index, so the
-    next batch probes an up-to-date store.
-
-    The scale contract is inherited from ``incremental_minhash_pairs``:
-    per batch, only the batch is sketched; the stored index is probed
-    (broadcast batch buckets), never re-sketched or shuffled. Writes go
-    through the versioned ``TableStore`` with PK upserts, so an
-    at-least-once replay of a crashed batch is a no-op.
-
-    ``dedup_within_batch=True`` additionally resolves near-dups INSIDE
-    each microbatch before the index probe (MinHash pairs → connected
-    components → one keeper per cluster, the ``resolve_duplicate_
-    clusters`` path); dropped intra-batch rows are quarantined against
-    their cluster keeper with a NULL est_jaccard (membership is
-    transitive, not a direct pair estimate). Off by default: it adds the
-    in-batch pair sweep's cost, unnecessary when the source is already
-    unique per batch.
-
-    ``min_quality`` (opt-in) runs the heuristic quality gate FIRST —
-    before any sketch work is spent: documents scoring below the
-    threshold (``functions.text.quality_score``, [0, 1]) land in a
-    ``gate_lowquality`` table with their score and never reach the
-    dedup probe, the corpus, or the index. Replay-safe like the other
-    tables (PK upserts). Returns the started query
-    (``trigger(availableNow=True)``, one incremental pass per call).
-    """
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    from zacks_estimates_financial_statements_spark.operators import dedup
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-
-    corpus = TableStore(spark, tables_root, "gate_corpus")
-    index = TableStore(spark, tables_root, "gate_index")
-    rejects = TableStore(spark, tables_root, "gate_rejects")
-    lowq = TableStore(spark, tables_root, "gate_lowquality")
-
-    def _gate(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if min_quality is not None:
-            from zacks_estimates_financial_statements_spark.functions import text as T
-
-            # score once (localCheckpoint), route both sides from it
-            scored = (batch_df.withColumn(
-                "__q", F.round(T.quality_score(F.col("text")), 6))
-                .localCheckpoint(eager=True))
-            bad = scored.filter(F.col("__q") < min_quality)
-            if not bad.isEmpty():
-                lowq.upsert_ignore(
-                    bad.select("doc_id", F.col("__q").alias("quality")),
-                    pk=("doc_id",))
-            batch_df = (scored.filter(F.col("__q") >= min_quality)
-                        .drop("__q"))
-            if batch_df.isEmpty():
-                return
-        if dedup_within_batch:
-            from zacks_estimates_financial_statements_spark.operators import graph
-
-            in_pairs = dedup.minhash_near_dup_pairs(
-                batch_df, "doc_id", "text", k=k, bands=bands)
-            resolved = graph.resolve_duplicate_clusters(
-                batch_df, in_pairs, "doc_id").localCheckpoint(eager=True)
-            # est_jaccard NULL: cluster membership is transitive, not a
-            # direct pair estimate against the keeper
-            dropped = (resolved.filter(~F.col("keep"))
-                       .select("doc_id",
-                               F.col("component").alias("matched_id"),
-                               F.lit(None).cast("double")
-                               .alias("est_jaccard")))
-            if not dropped.isEmpty():
-                rejects.upsert_ignore(dropped, pk=("doc_id",))
-            batch_df = (resolved.filter(F.col("keep"))
-                        .select(*batch_df.columns))
-        if index.exists():
-            # the stored index is parquet-backed, so the probed-bucket
-            # In() pushdown prunes its scan to the batch's buckets
-            pairs = dedup.incremental_minhash_pairs(
-                index.read(), batch_df, "doc_id", "text",
-                k=k, bands=bands, prune_index_scan=True)
-            # max(struct) breaks est_jaccard ties by the larger
-            # corpus_id — deterministic across runs/replays, unlike a
-            # bare max_by; localCheckpoint materializes the sketch +
-            # index-probe lineage ONCE (hits feeds the quarantine
-            # write AND the admission anti-join)
-            hits = (pairs.filter(F.col("est_jaccard") >= threshold)
-                    .groupBy("batch_id")
-                    .agg(F.max(F.struct("est_jaccard", "corpus_id"))
-                         .alias("m"))
-                    .select("batch_id",
-                            F.col("m.corpus_id").alias("matched_id"),
-                            F.col("m.est_jaccard").alias("est_jaccard"))
-                    .localCheckpoint(eager=True))
-            admitted = (batch_df.join(
-                hits.select(F.col("batch_id").alias("doc_id")),
-                "doc_id", "left_anti"))
-            rejects.upsert_ignore(
-                hits.select(F.col("batch_id").alias("doc_id"),
-                            "matched_id", "est_jaccard"),
-                pk=("doc_id",))
-        else:
-            admitted = batch_df
-        corpus.upsert_ignore(admitted, pk=("doc_id",))
-        index.upsert_ignore(
-            dedup.minhash_index(admitted, "doc_id", "text",
-                                k=k, bands=bands),
-            pk=("doc_id", "band"))
-
-    schema = StructType([StructField("doc_id", LongType()),
-                         StructField("text", StringType())])
-    docs = (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .json(input_glob))
-    return (docs.writeStream
-            .foreachBatch(_gate)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
 
 
 def attribute_conversions(impressions: DataFrame, conversions: DataFrame,
@@ -454,64 +237,6 @@ def last_touch(pairs: DataFrame) -> DataFrame:
                     (F.unix_micros("conv_ts")
                      - F.unix_micros("m.imp_ts")).alias("lag_us"),
                     "n_candidates"))
-
-
-def run_profile_monitor_stream(spark: SparkSession, input_glob: str,
-                               tables_root: str, checkpoint: str,
-                               schema: str,
-                               null_rate_jump: float = 0.05,
-                               distinct_ratio_band: tuple[float, float]
-                               = (0.5, 2.0)):
-    """Streaming ingestion observability: every microbatch's per-column
-    profile (operators/profiling.py — ONE map-side-combined agg over
-    the batch) appends to a ``profile_history`` table keyed
-    ``(epoch, column)``, and each batch after the first is
-    drift-compared against the PREVIOUS batch's stored profile —
-    null-rate jumps / cardinality collapse land in ``profile_drift``
-    with the epoch that tripped them.
-
-    This is the monitoring twin of the dedup/quality gates: the same
-    foreachBatch + PK-upsert shape (replays are no-ops), with profile
-    rows |columns|-sized regardless of batch volume, so the monitor's
-    own cost never scales with the delivery. Returns the started query
-    (``trigger(availableNow=True)``)."""
-    from pyspark.sql import functions as SF
-
-    from zacks_estimates_financial_statements_spark.operators import profiling
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-
-    history = TableStore(spark, tables_root, "profile_history")
-    drift = TableStore(spark, tables_root, "profile_drift")
-
-    def _monitor(batch_df: DataFrame, epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        prof = (profiling.profile_table(batch_df)
-                .localCheckpoint(eager=True))
-        if history.exists():
-            prev = history.read()
-            last = prev.agg(SF.max("epoch").alias("m")).collect()[0]["m"]
-            flags = profiling.profile_drift(
-                prev.filter(SF.col("epoch") == last).drop("epoch"),
-                prof, null_rate_jump, distinct_ratio_band)
-            bad = flags.filter(SF.col("null_drift")
-                               | SF.col("distinct_drift")
-                               | SF.col("added") | SF.col("removed"))
-            if not bad.isEmpty():
-                drift.upsert_ignore(
-                    bad.withColumn("epoch", SF.lit(epoch)),
-                    pk=("epoch", "column"))
-        history.upsert_ignore(prof.withColumn("epoch", SF.lit(epoch)),
-                              pk=("epoch", "column"))
-
-    docs = (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .json(input_glob))
-    return (docs.writeStream
-            .foreachBatch(_monitor)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
 
 
 def _schedule_fn(interval_us: int, key_name: str, id_name: str):
