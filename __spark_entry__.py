@@ -1525,8 +1525,7 @@ WHERE {_COS_SQL.format(a='a.embedding', b='b.embedding')} >= 0.2
 
 def q_semantic_dedup(spark, sf):
     """SemDeDup-style semantic dedup (operators/dedup.py): IVF-cluster
-    the embedding corpus (deterministic seed centroids, the
-    oracle-reproducible kmeans_iters=0 path), then drop every vector
+    the embedding corpus (deterministic lowest-id seed centroids), then drop every vector
     with a smaller-id intra-cluster twin at cosine >= threshold. The
     low 0.2 threshold makes the synthetic random embeddings actually
     produce duplicate verdicts worth checking."""
@@ -5597,8 +5596,7 @@ GROUP BY d.lang
 def q_pq_adc_topk(spark, sf):
     """Product-quantization ADC top-k (operators/similarity.py): 64-dim
     embeddings compress to 4 one-byte codes (4 subspaces × 16 codes,
-    deterministic seed codebooks — kmeans_iters=0 so the oracle can
-    re-derive them); queries score candidates through per-query M×ks
+    deterministic seed codebooks the oracle re-derives); queries score candidates through per-query M×ks
     lookup tables, never through the floats. The DuckDB twin replays
     codebook slicing, argmin encoding, table build, and the
     decimal-summed ADC ranking."""

@@ -186,20 +186,6 @@ def test_winnow_fingerprints_overlap_properties(spark):
     assert 5 not in by_doc                  # shorter than k: no grams
 
 
-def test_topk_ivf_kmeans_refinement(emb):
-    q = _queries(emb, 5)
-    exact = {(r["query_id"], r["vec_id"])
-             for r in similarity.topk_bruteforce(emb, q, k=5).collect()}
-    refined = similarity.topk_ivf(emb, q, k=5, n_centroids=8, nprobe=3,
-                                  kmeans_iters=2)
-    rows = refined.collect()
-    got = {(r["query_id"], r["vec_id"]) for r in rows}
-    # self-match survives refinement (a vector's list is always probed
-    # by its own query) and recall stays useful
-    assert all((i, i) in got for i in range(5))
-    assert len(got & exact) / len(exact) >= 0.3
-
-
 def test_simhash_banding_exact_recall(docs):
     """Pigeonhole guarantee: the banded equi-join finds EXACTLY the pairs
     with hamming <= max_hamming (verified against Python brute force)."""
@@ -357,13 +343,6 @@ def test_pair_generators_stream_outside_codegen(spark):
                           and "Generate" not in ln
                           and "collect_list" not in ln]
         assert all("element_at(" not in ln for ln in fallback_lines), name
-
-
-def test_simhash_bands_must_exceed_hamming(spark):
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="pigeonhole"):
-        dedup.simhash_near_dup_pairs(df, "doc_id", "text",
-                                     max_hamming=3, bands=3)
 
 
 def test_ivf_index_reused_across_query_batches(emb):
@@ -725,11 +704,11 @@ def test_containment_ensemble_size_skewed_corpus(spark):
 
 
 def test_pair_measures_on_candidate_tier(spark):
-    """r12 ``candidates=`` contract: measures stay EXACT (identical to
-    the full shared-shingle tier for admitted pairs), recall becomes
-    the candidate tier's — pairs outside the given relation are never
-    measured, pairs sharing no shingle drop, duplicate candidate rows
-    collapse."""
+    """r12 ``candidates=`` contract of ``ngram_jaccard_pairs``: measures
+    stay EXACT (identical to the full shared-shingle tier for admitted
+    pairs), recall becomes the candidate tier's — pairs outside the
+    given relation are never measured, pairs sharing no shingle drop,
+    duplicate candidate rows collapse."""
     from zacks_estimates_financial_statements_spark.operators import dedup
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -751,11 +730,6 @@ def test_pair_measures_on_candidate_tier(spark):
     # only the admitted overlapping pair, measured exactly, once
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in got] == \
         [(1, 2, exact[(1, 2)])]
-    ct = dedup.containment_pairs(docs, "doc_id", "text", shingle_k=3,
-                                 min_containment=0.5,
-                                 candidates=cands).collect()
-    assert [(r["id_a"], r["id_b"]) for r in ct] == [(1, 2)]
-    assert ct[0]["containment_a"] == 1.0   # doc 1 wholly inside doc 2
 
 
 def test_tfidf_cosine_pairs_ranking_and_df_cap(spark):
@@ -815,58 +789,6 @@ def test_pq_adc_codes_compress_and_self_match(emb):
             for r in out.collect() if r["rank"] == 1}
     # queries 0..4 are seed vectors: their own codes reproduce exactly
     assert all(top1[i] == (i, 0.0) for i in range(5))
-
-
-def test_pq_adc_full_rerank_equals_bruteforce(emb):
-    """With rerank = |corpus| the refine stage rescores everything
-    exactly, so the result must equal the exact L2 top-k — the
-    exactness anchor for the ADC+refine path."""
-    from pyspark.sql import Window
-
-    from zacks_estimates_financial_statements_spark.functions import vectors as V
-
-    n = emb.count()
-    q = _queries(emb, 4)
-    out = similarity.topk_pq_adc(emb, q, k=5, dims=64, n_subspaces=4,
-                                 n_codes=16, rerank=n)
-    w = Window.partitionBy("query_id").orderBy(F.asc("d"),
-                                               F.col("vec_id"))
-    exact = (emb.crossJoin(F.broadcast(q))
-             .select("query_id", "vec_id",
-                     F.round(V.sq_l2(F.col("embedding"),
-                                     F.col("query_vec")), 6).alias("d"))
-             .withColumn("r", F.row_number().over(w)).filter("r <= 5"))
-    a = [(r["query_id"], r["vec_id"], r["rank"]) for r in out.collect()]
-    b = [(r["query_id"], r["vec_id"], r["r"]) for r in exact.collect()]
-    assert sorted(a) == sorted(b)
-
-
-def test_pq_rerank_improves_recall(emb):
-    """The refine stage must recover recall over raw ADC on the same
-    codebooks (the documented IVFADC+R property)."""
-    from pyspark.sql import Window
-
-    from zacks_estimates_financial_statements_spark.functions import vectors as V
-
-    q = _queries(emb, 8)
-    w = Window.partitionBy("query_id").orderBy(F.asc("d"),
-                                               F.col("vec_id"))
-    exact = (emb.crossJoin(F.broadcast(q))
-             .select("query_id", "vec_id",
-                     V.sq_l2(F.col("embedding"),
-                             F.col("query_vec")).alias("d"))
-             .withColumn("r", F.row_number().over(w)).filter("r <= 5"))
-    truth = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
-    raw = similarity.topk_pq_adc(emb, q, k=5, dims=64, n_subspaces=4,
-                                 n_codes=16)
-    ref = similarity.topk_pq_adc(emb, q, k=5, dims=64, n_subspaces=4,
-                                 n_codes=16, rerank=60)
-    r_raw = len({(r["query_id"], r["vec_id"])
-                 for r in raw.collect()} & truth) / len(truth)
-    r_ref = len({(r["query_id"], r["vec_id"])
-                 for r in ref.collect()} & truth) / len(truth)
-    assert r_ref >= r_raw
-    assert r_ref >= 0.5, (r_raw, r_ref)
 
 
 def test_mine_hard_negatives_excludes_positives_and_self(emb):
@@ -951,9 +873,8 @@ def test_random_projection_deterministic_and_validates(spark):
                                      "embedding", in_dim=8,
                                      out_dim=4).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    # sign matrix is a pure function of the seed
+    # sign matrix is a pure function of its shape
     assert similarity.rp_signs(8, 4) == similarity.rp_signs(8, 4)
-    assert similarity.rp_signs(8, 4) != similarity.rp_signs(8, 4, "x")
     with pytest.raises(ValueError):
         similarity.random_projection(df, "vec_id", "embedding",
                                      in_dim=8, out_dim=9)

@@ -55,21 +55,9 @@ def test_extract_links_attribute_name_boundary(spark):
             "<a class='m' href='https://real.com/b'>r</a>"
             '<a href="https://real.com/c">r</a>')
     df = spark.createDataFrame([(1, page)], "doc_id bigint, page string")
-    out = extraction.extract_links(df, "doc_id", "page",
-                                   canonicalize=False)
+    out = extraction.extract_links(df, "doc_id", "page")
     assert sorted(r["url"] for r in out.collect()) == [
         "https://real.com/a", "https://real.com/b", "https://real.com/c"]
-
-
-def test_extract_links_no_canonical_column_when_disabled(spark):
-    from zacks_estimates_financial_statements_spark.operators import extraction
-    df = spark.createDataFrame(
-        [(1, '<a href="https://x.io/p?utm_source=t&b=1">z</a>')],
-        "doc_id bigint, page string")
-    out = extraction.extract_links(df, "doc_id", "page",
-                                   canonicalize=False)
-    assert out.columns == ["doc_id", "link_pos", "url"]
-    assert out.collect()[0]["url"] == "https://x.io/p?utm_source=t&b=1"
 
 
 # ------------------------------------------------------------ table extraction

@@ -40,6 +40,30 @@ def test_profile_table_single_shuffle(spark):
     assert plan.count("Exchange") == 1 and "Join" not in plan
 
 
+def test_profile_table_exact_rejects_nondeterministic_input(spark):
+    """The exact panel scans its input twice and joins the two 1-row
+    aggregates on their row counts. A filter whose kept rows differ per
+    scan (a non-deterministic UDF keyed on the stage id) must fail the
+    job loudly, not return an empty profile; the rejoin must stay a
+    broadcast hash join."""
+    import pytest
+    from pyspark import TaskContext
+    from pyspark.sql import functions as F
+
+    @F.udf("boolean")
+    def kept(x):
+        # each scan runs in its own stage: the two counts differ
+        return x < TaskContext.get().stageId() % 1000
+
+    df = (spark.range(1000).coalesce(1)
+          .filter(kept.asNondeterministic()(F.col("id"))))
+    prof = profiling.profile_table(df, exact=True)
+    plan = prof._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "NestedLoop" not in plan
+    with pytest.raises(Exception, match="non-deterministic input"):
+        prof.collect()
+
+
 def test_robust_outliers_flags_planted_anomaly(spark):
     """A single wild value in an otherwise tight bucket is flagged; the
     tight values are not; MAD is immune to the outlier itself (a
@@ -110,11 +134,6 @@ def test_standardize_and_histogram(spark):
     assert z[1]["x__scaled"] == -z[3]["x__scaled"] != 0
     assert z[2]["x__scaled"] == 0.0
     assert z[1]["c__scaled"] is None            # zero variance
-    mm = {r["id"]: r["x__scaled"] for r in profiling.standardize(
-        df, ["x"], method="minmax").collect()}
-    assert (mm[1], mm[2], mm[3]) == (0.0, 0.5, 1.0)
-    with pytest.raises(ValueError):
-        profiling.standardize(df, ["x"], method="robust")
 
     h = spark.createDataFrame(
         [("a", -5.0), ("a", 5.0), ("a", 15.0), ("a", 15.0),

@@ -7,6 +7,7 @@ read-back that feeds the same parsers as the live folder scan."""
 from __future__ import annotations
 
 import os
+import shutil
 import tarfile
 
 import pytest
@@ -56,23 +57,13 @@ def test_archive_day_refuses_mismatch_and_missing(tmp_path):
         raw_zone.archive_day(str(base), "estimates", "2024-05-03")
 
 
-def test_archive_remove_source_after_verify(tmp_path):
-    base = tmp_path
-    folder = _make_day(base, "estimates", "2024-05-04", ["AAPL", "MSFT"])
-    m = raw_zone.archive_day(str(base), "estimates", "2024-05-04",
-                             remove_source=True)
-    assert not folder.exists()
-    assert os.path.exists(m["archive"])
-
-
 def test_read_archived_documents_distributed(spark, tmp_path):
     base = tmp_path
-    _make_day(base, "estimates", "2024-05-05", ["AAPL", "MSFT"])
-    _make_day(base, "estimates", "2024-05-06", ["NVDA"])
-    raw_zone.archive_day(str(base), "estimates", "2024-05-05",
-                         remove_source=True)
-    raw_zone.archive_day(str(base), "estimates", "2024-05-06",
-                         remove_source=True)
+    for date, syms in (("2024-05-05", ["AAPL", "MSFT"]),
+                       ("2024-05-06", ["NVDA"])):
+        folder = _make_day(base, "estimates", date, syms)
+        raw_zone.archive_day(str(base), "estimates", date)
+        shutil.rmtree(folder)   # history lives only in the archives
     df = raw_zone.read_archived_documents(
         spark, str(base / "estimates"), ".detailed-estimates.html")
     rows = {(r["file_stem"], str(r["folder_date"])): r["content"]

@@ -26,10 +26,12 @@ def test_bloom_semi_join_exact_and_sound(spark):
     bs = skew.bloom_semi_join(large, small, "k", "left_semi")
     assert sorted(map(tuple, bs.collect())) == \
         sorted(map(tuple, ps.collect()))
-    # tiny bitmap -> many false positives -> STILL exact
-    noisy = skew.bloom_semi_join(large, small, "k", "inner", n_bits=64,
-                                 n_hashes=2)
-    assert noisy.count() == plain.count()
+    # a key set big enough for the bitmap to false-positive (~4% at
+    # 150k keys): odd probe keys never match the even keys, so every
+    # row that passes the filter is a false positive the join drops
+    evens = spark.range(150_000).select((F.col("id") * 2).alias("k"))
+    odds = spark.range(40_000).select((F.col("id") * 2 + 1).alias("k"))
+    assert skew.bloom_semi_join(odds, evens, "k", "inner").count() == 0
     with pytest.raises(ValueError, match="inner/left_semi"):
         skew.bloom_semi_join(large, small, "k", "left")
     # empty filter side: empty result, no crash

@@ -124,8 +124,7 @@ def test_link_extract_scheme_gate_is_ascii(spark):
         [(1, '<a href="HTTPS://h.com/x">a</a><a href="httpſ://h.com/y">b</a>')],
         "id bigint, page string")
     urls = [r["url"] for r in
-            extraction.extract_links(df, "id", "page",
-                                     canonicalize=False).collect()]
+            extraction.extract_links(df, "id", "page").collect()]
     assert urls == ["HTTPS://h.com/x"]  # ſ-scheme must NOT pass the gate
 
 
@@ -143,7 +142,7 @@ def test_fuzzy_join_multibyte_edit_counts_once(spark):
     left = spark.createDataFrame([("ab😀cd",)], "k string")
     right = spark.createDataFrame([("abcd",)], "r string")
     out = linkage.fuzzy_join(left, right, "k", "r",
-                             max_dist=1, block_chars=2).collect()
+                             max_dist=1).collect()
     # '😀' is stripped by the projection: normalized keys are equal
     assert len(out) == 1 and out[0]["dist"] == 0
 
@@ -173,7 +172,7 @@ def test_fuzzy_join_empty_projection_exact_tier(spark):
     right = spark.createDataFrame(
         [("中文",), ("кирил",), ("abc",)], "r string")
     out = linkage.fuzzy_join(left, right, "k", "r",
-                             max_dist=2, block_chars=1).collect()
+                             max_dist=2).collect()
     got = sorted((r["k"], r["r"], r["dist"]) for r in out)
     # 中文字 is one edit from 中文 but has no ASCII projection → no
     # distance tier for it; кирил matches nothing
@@ -187,4 +186,4 @@ def test_fuzzy_join_empty_raw_key_stays_unlinkable(spark):
     left = spark.createDataFrame([("",), (None,)], "k string")
     right = spark.createDataFrame([("",), (None,)], "r string")
     assert linkage.fuzzy_join(left, right, "k", "r",
-                              max_dist=2, block_chars=1).count() == 0
+                              max_dist=2).count() == 0

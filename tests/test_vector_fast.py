@@ -29,7 +29,7 @@ from pyspark.sql.types import (ArrayType, FloatType, LongType, StructField,
 
 from zacks_estimates_financial_statements_spark.functions import vectors as V
 
-DIMS = 8  # small dims keep the fixture readable; the builders are dim-generic
+DIMS = V.EMB_DIMS  # the width the cosine/norm builders run flat at
 
 POOL = [0.0, -0.0, 1.0, -1.5, float("nan"), float("inf"), float("-inf"),
         1e38, -1e38, 5e-324, 1.17549435e-38, 3.4028235e38, 0.25]
@@ -81,7 +81,7 @@ def test_cosine_fast_bitwise(pairs_df):
     out = pairs_df.select(
         "i",
         V.cosine(F.col("a"), F.col("b")).alias("ref"),
-        V.cosine_fast("a", "b", DIMS).alias("fast")).collect()
+        V.cosine_fast("a", "b").alias("fast")).collect()
     _assert_bitwise(out)
 
 
@@ -91,11 +91,11 @@ def test_cosine_prenorm_bitwise(pairs_df):
     # NULLIF guard)
     out = (pairs_df
            .select("i", "a", "b",
-                   V.norm_fast("a", DIMS).alias("__na"),
-                   V.norm_fast("b", DIMS).alias("__nb"))
+                   V.norm_fast("a").alias("__na"),
+                   V.norm_fast("b").alias("__nb"))
            .select("i",
                    V.cosine(F.col("a"), F.col("b")).alias("ref"),
-                   V.cosine_prenorm("a", "b", "__na", "__nb", DIMS)
+                   V.cosine_prenorm("a", "b", "__na", "__nb")
                    .alias("fast"))
            .collect())
     _assert_bitwise(out)
@@ -193,5 +193,5 @@ def test_cosine_fast_dims_mismatch_falls_back(spark):
                     StructField("b", ArrayType(FloatType()))]))
     r = df.select(
         V.cosine(F.col("a"), F.col("b")).alias("ref"),
-        V.cosine_fast("a", "b", 64).alias("fast")).collect()[0]
+        V.cosine_fast("a", "b").alias("fast")).collect()[0]
     assert _bits(r["ref"]) == _bits(r["fast"])

@@ -39,8 +39,8 @@ def test_canonical_url_and_host(spark):
 
 def test_content_significant_ref_survives_default_strip(spark):
     """Bare ``ref`` frequently selects content (?ref=branch on code
-    hosts) — the DEFAULT strip set must keep it so distinct resources
-    don't collapse; callers can opt in via strip_params."""
+    hosts) — the strip set must keep it so distinct resources don't
+    collapse."""
     df = spark.createDataFrame(
         [(1, "https://host.com/repo?ref=main&utm_source=x"),
          (2, "https://host.com/repo?ref=dev")], ["i", "u"])
@@ -48,11 +48,6 @@ def test_content_significant_ref_survives_default_strip(spark):
         "i", web.canonical_url(F.col("u")).alias("c")).collect()}
     assert default[1] == "https://host.com/repo?ref=main"
     assert default[2] == "https://host.com/repo?ref=dev"
-    widened = {r.i: r.c for r in df.select(
-        "i", web.canonical_url(
-            F.col("u"),
-            web.DEFAULT_TRACKING_PARAMS + ("ref",)).alias("c")).collect()}
-    assert widened[1] == widened[2] == "https://host.com/repo"
 
 
 def test_url_dedup_keep_first(spark):

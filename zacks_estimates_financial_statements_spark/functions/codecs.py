@@ -1169,16 +1169,16 @@ def encode_mjpeg_mp4(frames: list[np.ndarray], fps: int = 5,
     return ftyp + mdat + box(b"moov", mvhd + trak)
 
 
-def dhash64(arr: np.ndarray, hash_size: int = 8) -> int:
+def dhash64(arr: np.ndarray) -> int:
     """64-bit difference hash (dHash) of a decoded RGB image: luma →
-    nearest-neighbor resize to (hash_size, hash_size+1) → one bit per
+    nearest-neighbor resize to 8×9 → one bit per
     horizontally adjacent pair (1 iff left < right), row-major from the
     MSB. Gradient-based, so it is invariant to global brightness shifts
     and robust to re-encoding/resizing — the standard cheap perceptual
     fingerprint for crawl-image dedup (Krawetz's dHash)."""
-    g = resize_nn(luma(arr), hash_size, hash_size + 1)
+    g = resize_nn(luma(arr), 8, 9)
     bits = 0
-    for r in range(hash_size):
-        for c in range(hash_size):
+    for r in range(8):
+        for c in range(8):
             bits = (bits << 1) | int(g[r, c] < g[r, c + 1])
     return bits

@@ -56,11 +56,11 @@ def strip_commas(col: Column) -> Column:
     return F.regexp_replace(col, ",", "")
 
 
-def na_to_null(col: Column, sentinel: str = "NA") -> Column:
-    """F5 — ``'NA'`` (or F6's ``'--'``) sentinel → NULL; pass anything else
-    through (estimate-transform-load.rkt:227-246,
+def na_to_null(col: Column) -> Column:
+    """F5 — ``'NA'`` sentinel → NULL; pass anything else through
+    (estimate-transform-load.rkt:227-246,
     earnings-calendar-transform-load.rkt:96-100)."""
-    return F.when(col == sentinel, F.lit(None).cast("string")).otherwise(col)
+    return F.when(col == "NA", F.lit(None).cast("string")).otherwise(col)
 
 
 def strip_dollar(col: Column) -> Column:
@@ -96,8 +96,9 @@ def clean_statement_cell(col: Column) -> Column:
 
 def scale_millions(col: Column) -> Column:
     """F7 — statement money cells are published in millions; stored value is
-    ×1e6 (income-statement-transform-load.rkt:201-226). Apply only to
-    ``schemas.SCALED_COLUMNS``; per-share columns stay unscaled."""
+    ×1e6 (income-statement-transform-load.rkt:201-226). The statement
+    loader applies it to every money column; the per-share columns it
+    leaves unscaled are listed once, in ``statement_pipeline._UNSCALED``."""
     return (col * F.lit(1_000_000)).cast(DEC)
 
 
@@ -158,11 +159,11 @@ _WHEN_DECODE = {"amc": "After market close", "bmo": "Before market open"}
 _RANK_TO_INT = {"Strong Buy": 1, "Buy": 2, "Hold": 3, "Sell": 4, "Strong Sell": 5}
 
 
-def _map_literal(col: Column, mapping: dict, default=None) -> Column:
+def _map_literal(col: Column, mapping: dict) -> Column:
     expr = None
     for k, v in mapping.items():
         expr = F.when(col == k, F.lit(v)) if expr is None else expr.when(col == k, F.lit(v))
-    return expr.otherwise(F.lit(default))
+    return expr.otherwise(F.lit(None))
 
 
 def decode_statement_period(col: Column) -> Column:

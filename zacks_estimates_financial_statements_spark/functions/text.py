@@ -127,12 +127,11 @@ def let_once(bindings: dict[str, Column], body) -> Column:
     return F.element_at(F.transform(F.array(s), body), 1)
 
 
-def detect_language(col: Column,
-                    markers: dict[str, list[str]] | None = None) -> Column:
-    """Stopword-panel language ID: per language, count whole-word marker
-    hits; return the language with the max count (ties broken by language
-    code order, 'und' when nothing matches)."""
-    markers = markers or LANG_MARKERS
+def detect_language(col: Column) -> Column:
+    """Stopword-panel language ID: per ``LANG_MARKERS`` language, count
+    whole-word marker hits; return the language with the max count (ties
+    broken by language code order, 'und' when nothing matches)."""
+    markers = LANG_MARKERS
     langs = sorted(markers)
     names = F.array(*[F.lit(lang) for lang in langs])
     # One tokenization pass, then per-language hit counts over the bound
@@ -163,15 +162,14 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(p.cast("double") / n.cast("double"))
 
 
-def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
+def stopword_ratio(col: Column) -> Column:
     """English stopword tokens / whitespace tokens (0 for empty text).
 
     Stopword hits are counted in one tokenization pass (see
     ``word_tokens``) instead of one regexp scan per stopword."""
-    stopwords = stopwords or _STOPWORDS_EN
     return let_once(
         {"hits": F.size(F.filter(word_tokens(col),
-                                 lambda tok: tok.isin(*stopwords))),
+                                 lambda tok: tok.isin(*_STOPWORDS_EN))),
          "toks": whitespace_token_count(col)},
         lambda x: F.when(x["toks"] == F.lit(0), F.lit(0.0)).otherwise(
             x["hits"].cast("double") / x["toks"].cast("double")),

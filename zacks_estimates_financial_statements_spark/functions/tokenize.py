@@ -144,8 +144,7 @@ def wordpiece_encode(df: DataFrame, id_col: str, text_col: str,
         df.select(id_col, text_col).mapInPandas(encode_batches, schema))
 
 
-def bpe_word_counts(df: DataFrame, text_col: str,
-                    min_word_count: int = 1) -> DataFrame:
+def bpe_word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """The ``(w, cnt)`` vocabulary relation ``bpe_train`` aggregates —
     exposed so a caller running train AND encode over the same corpus
     can build it once, persist it, and pass it to both via their
@@ -155,12 +154,10 @@ def bpe_word_counts(df: DataFrame, text_col: str,
     replay the regex split otherwise). The persist/release contract is
     the caller's."""
     return (df.select(F.explode(_words(F.col(text_col))).alias("w"))
-            .groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-            .filter(F.col("cnt") >= min_word_count))
+            .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
 
 
 def bpe_train(df: DataFrame, text_col: str, n_merges: int = 6,
-              min_word_count: int = 1,
               max_local_vocab: int = 2_000_000,
               words: DataFrame | None = None) -> list[tuple[str, str]]:
     """Distributed BPE merge learning (Sennrich, Haddow, Birch, ACL
@@ -208,12 +205,7 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 6,
     the resulting pieces to ``wordpiece_encode`` as the vocabulary.
     """
     if words is None:   # ``words=``: see bpe_word_counts
-        words = bpe_word_counts(df, text_col, min_word_count)
-    elif min_word_count != 1:
-        raise ValueError(
-            "bpe_train: min_word_count applies only when bpe_train counts "
-            "the words itself; pass it to bpe_word_counts when building "
-            "words= instead")
+        words = bpe_word_counts(df, text_col)
     seg = (words.select(
         "cnt",
         F.concat(F.lit("  "),
@@ -327,10 +319,10 @@ def bpe_encode(df: DataFrame, id_col: str, text_col: str,
     # ``words=`` (r14): a caller that already built the (w, cnt)
     # vocabulary relation (bpe_word_counts, typically persisted and
     # shared with bpe_train) supplies it here, replacing this leg's
-    # corpus tokenize + distinct exchange with a cache read. It MUST
-    # cover every corpus word (min_word_count=1) — the occurrence
-    # join below is inner, so a pruned vocabulary would silently drop
-    # rare-word occurrences from the encoding. The
+    # corpus tokenize + distinct exchange with a cache read. It covers
+    # every corpus word — the occurrence join below is inner, so a
+    # pruned vocabulary would silently drop rare-word occurrences from
+    # the encoding. The
     # occurrence leg ``w`` above still tokenizes once — it needs the
     # per-document positions no vocabulary relation carries.
     vocab_src = (w.select(F.col("__w").alias("w")).distinct()
@@ -434,8 +426,12 @@ def unigram_seed_vocab(df: DataFrame, text_col: str,
     return out
 
 
+#: cost of a character the unigram vocabulary lacks
+UNK_COST = 20.0
+
+
 def unigram_encode(df: DataFrame, id_col: str, text_col: str,
-                   vocab: DataFrame, unk_cost: float = 20.0) -> DataFrame:
+                   vocab: DataFrame) -> DataFrame:
     """Viterbi (min total cost) subword segmentation under a unigram
     LM vocabulary — SentencePiece's inference rule (Kudo, ACL 2018:
     the most probable segmentation under piece unigram probs), the
@@ -444,7 +440,7 @@ def unigram_encode(df: DataFrame, id_col: str, text_col: str,
 
     ``vocab`` is a ``(piece, cost)`` relation (``unigram_seed_vocab``
     or an EM-refined model). Characters missing from the vocabulary
-    encode at ``unk_cost`` — segmentation always succeeds.
+    encode at ``UNK_COST`` — segmentation always succeeds.
 
     The DP runs ENTIRELY in Catalyst on the DISTINCT-WORD relation
     (vocabulary-sized, the bpe_encode discipline — higher-order
@@ -480,7 +476,7 @@ def unigram_encode(df: DataFrame, id_col: str, text_col: str,
     # is evaluated exactly once, at the eager probe below (r13)
     vocab = persist(vocab)
     max_l = vocab.agg(F.max(F.length("piece"))).collect()[0][0] or 1
-    pieces = _viterbi_pieces(dw, vocab, float(unk_cost), int(max_l))
+    pieces = _viterbi_pieces(dw, vocab, UNK_COST, int(max_l))
     joined = w.join(pieces, w["__w"] == pieces["w"]).drop("w")
     agg = (joined.groupBy(id_col)
            .agg(F.flatten(F.transform(

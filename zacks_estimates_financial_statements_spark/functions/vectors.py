@@ -114,11 +114,12 @@ def _normsq_fold(a: str) -> str:
             "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))")
 
 
-def cosine_fast(a: str, b: str, dims: int = EMB_DIMS) -> Column:
+def cosine_fast(a: str, b: str) -> Column:
     """``cosine`` over SQL fragments: flat codegen when both arrays are
-    exactly ``dims`` long, the exact fold otherwise. ``dot/NULLIF(d,0)``
+    exactly ``EMB_DIMS`` long, the exact fold otherwise. ``dot/NULLIF(d,0)``
     equals ``when(d == 0, NULL).otherwise(dot/d)`` for every double
     (0/-0 -> NULL, NULL -> NULL, NaN -> NaN)."""
+    dims = EMB_DIMS
     flat = (f"({_dot_flat(a, b, dims)}) / NULLIF("
             f"SQRT({_normsq_flat(a, dims)}) * SQRT({_normsq_flat(b, dims)})"
             ", 0.0D)")
@@ -128,31 +129,31 @@ def cosine_fast(a: str, b: str, dims: int = EMB_DIMS) -> Column:
                   f"THEN {flat} ELSE {fold} END")
 
 
-def norm_sql(a: str, dims: int = EMB_DIMS) -> str:
+def norm_sql(a: str) -> str:
     """The guarded-norm SQL fragment ``norm_fast`` wraps (also usable
     inline, e.g. over a literal query vector where it constant-folds)."""
-    return (f"CASE WHEN size({a}) = {dims} "
-            f"THEN SQRT({_normsq_flat(a, dims)}) "
+    return (f"CASE WHEN size({a}) = {EMB_DIMS} "
+            f"THEN SQRT({_normsq_flat(a, EMB_DIMS)}) "
             f"ELSE SQRT({_normsq_fold(a)}) END")
 
 
-def norm_fast(a: str, dims: int = EMB_DIMS) -> Column:
+def norm_fast(a: str) -> Column:
     """``norm`` over a SQL fragment — the exact subexpression the
     cosine denominator uses (``SQRT`` of the same left-assoc square
     sum), exposed so hot pair paths can HOIST it per row: a pair scorer
     that recomputes both norms per pair does 3x the multiply-adds and
     3x the generated code of a dot (slower C2 warm-up) for values that
     are per-ROW invariants."""
-    return F.expr(norm_sql(a, dims))
+    return F.expr(norm_sql(a))
 
 
-def cosine_prenorm(a: str, b: str, na: str, nb: str,
-                   dims: int = EMB_DIMS) -> Column:
+def cosine_prenorm(a: str, b: str, na: str, nb: str) -> Column:
     """``cosine`` from hoisted norms: ``na``/``nb`` are SQL fragments
     holding ``norm_fast`` values computed per row. Bit-identical to
     ``cosine_fast`` (the same dot and the same NULLIF(denom, 0) guard;
     the norms are the same doubles, just evaluated in an upstream
     projection)."""
+    dims = EMB_DIMS
     flat = f"({_dot_flat(a, b, dims)}) / NULLIF(({na}) * ({nb}), 0.0D)"
     fold = f"({_dot_fold(a, b)}) / NULLIF(({na}) * ({nb}), 0.0D)"
     return F.expr(f"CASE WHEN size({a}) = {dims} AND size({b}) = {dims} "

@@ -20,13 +20,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from zacks_estimates_financial_statements_spark.functions.text import ascii_lower
 
-#: default strip set: parameters that are UNAMBIGUOUSLY analytics/click
+#: strip set: parameters that are UNAMBIGUOUSLY analytics/click
 #: tracking. Deliberately excludes bare ``ref``/``source``-style names —
 #: on plenty of sites (code hosts' ``?ref=branch``, docs sites'
 #: ``?ref=section``) they select CONTENT, and stripping them collapses
 #: distinct resources into one canonical URL so keep-first dedup drops
-#: real documents. Crawls that know their domains can widen the set via
-#: the ``strip_params`` argument.
+#: real documents.
 DEFAULT_TRACKING_PARAMS = ("utm_*", "gclid", "fbclid", "msclkid",
                            "mc_cid", "mc_eid")
 
@@ -41,23 +40,21 @@ def _strip_re(params: tuple[str, ...]) -> str:
     return "^(" + "|".join(alts) + ")="
 
 
-#: prebuilt regex for the default strip set (kept for oracle SQL reuse)
+#: prebuilt regex for the strip set (also inlined by the oracle SQL)
 TRACKING_PARAM_RE = _strip_re(DEFAULT_TRACKING_PARAMS)
 
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
 
 
-def canonical_url(url: Column,
-                  strip_params: tuple[str, ...] = DEFAULT_TRACKING_PARAMS,
-                  ) -> Column:
+def canonical_url(url: Column) -> Column:
     """RFC 3986-style canonical form of an absolute http(s) URL:
 
     - fragment dropped;
     - scheme and host lowercased (path/query case is significant and
       preserved);
     - leading ``www.`` and the scheme's default port stripped;
-    - tracking parameters removed (``strip_params``, default
-      ``DEFAULT_TRACKING_PARAMS``; ``*`` suffix = prefix match),
+    - tracking parameters removed (``DEFAULT_TRACKING_PARAMS``; ``*``
+      suffix = prefix match),
       remaining query parameters sorted bytewise;
     - trailing path slashes trimmed (empty path becomes ``/``).
 
@@ -78,10 +75,9 @@ def canonical_url(url: Column,
                             "/+$", "")
     path = F.when(path == "", F.lit("/")).otherwise(path)
     q = F.regexp_extract(pathq, r"\?(.*)$", 1)
-    strip_re = _strip_re(tuple(strip_params))
     params = F.filter(
         F.split(q, "&"),
-        lambda p: (p != "") & ~p.rlike(strip_re))
+        lambda p: (p != "") & ~p.rlike(TRACKING_PARAM_RE))
     qs = F.array_join(F.array_sort(params), "&")
     # scheme-less inputs keep their shape (no bare '://' prefix), which
     # is also what makes canonical(canonical(u)) a fixed point for them
@@ -102,23 +98,20 @@ def url_host(url: Column) -> Column:
                             r":[0-9]+$", "")
 
 
-def url_dedup(df: DataFrame, id_col: str, url_col: str,
-              strip_params: tuple[str, ...] = DEFAULT_TRACKING_PARAMS,
-              ) -> DataFrame:
+def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     """Crawl-level URL dedup: canonicalize, then keep the minimum-id row
     per canonical URL. Adds ``canonical_url``, ``n_variants`` (rows
     collapsing to this canonical form) and ``keep``.
 
     One shuffle (the window on the canonical string); canonicalization
     itself is projection-only. The same keep-first-by-id convention as
-    ``dedup.exact_dup_groups``. ``strip_params`` passes through to
-    ``canonical_url``.
+    ``dedup.exact_dup_groups``.
     """
     from pyspark.sql import Window
 
     w = Window.partitionBy("canonical_url")
     out = (df.withColumn("canonical_url",
-                         canonical_url(F.col(url_col), strip_params))
+                         canonical_url(F.col(url_col)))
            .withColumn("n_variants", F.count("*").over(w))
            .withColumn("keep",
                        F.col(id_col) == F.min(id_col).over(w)))

@@ -104,14 +104,13 @@ def split_thresholds(weights: Mapping[str, float]) -> list[tuple[str, int]]:
 
 def stratified_sample(df: DataFrame, strata_col: str, id_col: str,
                       fractions: Mapping[str, float] | float,
-                      default_fraction: float = 0.0,
-                      seed: str = "sample") -> DataFrame:
+                      default_fraction: float = 0.0) -> DataFrame:
     """Deterministic per-stratum sample: keep a row iff its keyed hash
     bucket falls below its stratum's fraction threshold.
 
     Unlike ``DataFrame.sampleBy`` this is exactly reproducible across
     runs, engines and repartitioning (the keep decision is a pure
-    function of ``(seed, id)``), and it needs no per-stratum counts —
+    function of the id), and it needs no per-stratum counts —
     one filter projection, zero shuffles, any corpus size. Strata not
     named in ``fractions`` use ``default_fraction``.
     """
@@ -128,20 +127,19 @@ def stratified_sample(df: DataFrame, strata_col: str, id_col: str,
             F.lit(int(round(float(default_fraction) * _BUCKETS)))
     else:
         thresh = F.lit(int(round(float(fractions) * _BUCKETS)))
-    return (df.withColumn("bucket", _bucket(id_col, seed))
+    return (df.withColumn("bucket", _bucket(id_col, "sample"))
             .filter(F.col("bucket") < thresh))
 
 
 def weighted_sample(df: DataFrame, id_col: str, weight_col: str, n: int,
-                    strata_col: str | None = None,
-                    seed: str = "wsample") -> DataFrame:
+                    strata_col: str | None = None) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement: top-``n``
     rows by the Efraimidis–Spirakis A-ES key (IPL 2006), where each
     row's inclusion probability is proportional to its weight.
 
     The A-ES key is ``u^(1/w)`` for uniform ``u``; ranking by the
     monotone-equivalent ``ln(u)/w`` avoids the overflow-prone power.
-    ``u`` is not random but a pure function of ``(seed, id)`` — the
+    ``u`` is not random but a pure function of the id — the
     keyed md5 bucket mapped to ``(0, 1)`` — so the sample is exactly
     reproducible across runs, engines and repartitioning, the property
     ``hash_split`` gives splits (``rand(seed)`` changes with partition
@@ -166,7 +164,7 @@ def weighted_sample(df: DataFrame, id_col: str, weight_col: str, n: int,
     """
     from pyspark.sql import Window
 
-    u = (_bucket(id_col, seed) + F.lit(0.5)) / F.lit(float(_BUCKETS))
+    u = (_bucket(id_col, "wsample") + F.lit(0.5)) / F.lit(float(_BUCKETS))
     key = F.round(F.log(u) / F.col(weight_col).cast("double"), 6)
     scored = (df.filter(F.col(weight_col) > 0)
               .filter(F.col(id_col).isNotNull())
@@ -249,8 +247,8 @@ def _gram_array(words: Column, n: int) -> Column:
 
 
 def benchmark_contamination(corpus: DataFrame, benchmark: DataFrame,
-                            id_col: str, text_col: str, n: int = 13,
-                            broadcast_benchmark: bool = True) -> DataFrame:
+                            id_col: str, text_col: str,
+                            n: int = 13) -> DataFrame:
     """Benchmark decontamination: per corpus document, how many of its
     distinct token ``n``-grams also occur in the benchmark set (the
     GPT-3-style n-gram overlap check — Brown et al., arXiv:2005.14165
@@ -275,8 +273,7 @@ def benchmark_contamination(corpus: DataFrame, benchmark: DataFrame,
     pays; the corpus-width totals projection never shuffles.
 
     Scale shape: benchmarks are tiny next to a training corpus, so the
-    distinct benchmark gram set is broadcast (flip
-    ``broadcast_benchmark=False`` if it is not small) — the corpus-side
+    distinct benchmark gram set is broadcast — the corpus-side
     gram stream joins it map-side and never shuffles at corpus width;
     the only aggregations after the join carry matched grams (bounded
     by the benchmark's gram count × collision rate). The final attach
@@ -308,11 +305,9 @@ def benchmark_contamination(corpus: DataFrame, benchmark: DataFrame,
                    .select(F.explode_outer(_gram_array(F.col("__w"), n))
                            .alias("gram"))
                    .distinct())
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     corpus_grams = per_doc.select(id_col, "__k",
                                   F.explode_outer("__grams").alias("gram"))
-    overlaps = (corpus_grams.join(bench_grams, "gram")
+    overlaps = (corpus_grams.join(F.broadcast(bench_grams), "gram")
                 .groupBy(id_col, "__k")
                 .agg(F.countDistinct("gram").alias("overlap_grams")))
     return (totals.join(overlaps, [id_col, "__k"], "left")
@@ -324,9 +319,7 @@ def benchmark_contamination(corpus: DataFrame, benchmark: DataFrame,
 
 def semantic_contamination(corpus: DataFrame, benchmark: DataFrame,
                            id_col: str, vec_col: str,
-                           threshold: float = 0.9,
-                           candidates: DataFrame | None = None
-                           ) -> DataFrame:
+                           threshold: float = 0.9) -> DataFrame:
     """Embedding-tier benchmark decontamination — the semantic sibling
     of ``benchmark_contamination``: n-gram overlap misses paraphrased
     or translated eval leakage, so modern pipelines (e.g. the
@@ -338,19 +331,15 @@ def semantic_contamination(corpus: DataFrame, benchmark: DataFrame,
     the nearest benchmark item, rounded 6), ``nearest_bench_id`` (ties
     break to the smallest benchmark id — deterministic), and
     ``contaminated`` (max_cosine >= threshold). Documents never
-    compared (empty benchmark, or absent from ``candidates``) keep
-    their row with NULL cosine and ``contaminated = false`` —
-    annotate, don't drop (the gopher_gate convention).
+    compared (empty benchmark) keep their row with NULL cosine and
+    ``contaminated = false`` — annotate, don't drop (the gopher_gate
+    convention).
 
     Scale shape: eval benchmarks are tiny next to a training corpus,
-    so the default pairing is the broadcast nested-loop cross —
+    so the pairing is the broadcast nested-loop cross —
     |corpus| × |bench| cosine evaluations in the codegen stage, then
     ONE map-side-combined ``max_by`` per corpus id (shuffle = |corpus|
-    narrow rows). When the benchmark outgrows broadcast, pass
-    ``candidates`` — ``(id_col, bench_id)`` pairs from any ANN tier
-    (``topk_lsh`` / ``topk_ivf`` / ``pq_adc_topk``), the
-    ``mine_hard_negatives`` pattern — and only candidate pairs are
-    scored. Self-pairs (same id in both frames) are excluded so a
+    narrow rows). Self-pairs (same id in both frames) are excluded so a
     benchmark drawn from the corpus does not flag itself.
     """
     from zacks_estimates_financial_statements_spark.functions import vectors as V
@@ -359,13 +348,7 @@ def semantic_contamination(corpus: DataFrame, benchmark: DataFrame,
         V.norm_fast(f"`{vec_col}`").alias("__bn"))
     withn = corpus.select(F.col(id_col), F.col(vec_col),
                           V.norm_fast(f"`{vec_col}`").alias("__n"))
-    if candidates is None:
-        pairs = withn.crossJoin(F.broadcast(bench))
-    else:
-        pairs = (candidates.select(F.col(id_col),
-                                   F.col("bench_id").alias("__bid"))
-                 .join(withn, id_col)
-                 .join(bench, "__bid"))
+    pairs = withn.crossJoin(F.broadcast(bench))
     scored = (pairs.filter(F.col(id_col) != F.col("__bid"))
               .select(F.col(id_col), F.col("__bid"),
                       F.round(V.cosine_prenorm(f"`{vec_col}`", "__bvec",
@@ -398,26 +381,23 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scan(df: DataFrame, id_col: str, text_col: str,
-             patterns: Mapping[str, str] | None = None) -> DataFrame:
+def pii_scan(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document PII detection and redaction: one ``<kind>_count``
-    column per pattern plus ``redacted`` text with every match replaced
-    by its ``[KIND]`` tag (patterns applied in mapping order).
+    column per ``PII_PATTERNS`` entry plus ``redacted`` text with every
+    match replaced by its ``[KIND]`` tag (patterns applied in mapping
+    order).
 
     A pure projection — regexp_count/regexp_replace run inside
-    whole-stage codegen, zero shuffles at any corpus size. The default
+    whole-stage codegen, zero shuffles at any corpus size. The
     patterns stay within the Java-regex ∩ RE2 common subset so a SQL
     twin on another engine counts the same matches.
     """
-    pats = dict(patterns) if patterns is not None else dict(PII_PATTERNS)
-    if not pats:
-        raise ValueError("patterns must name at least one PII kind")
     out = df.select(
         F.col(id_col),
         *[F.regexp_count(F.col(text_col), F.lit(p)).cast("bigint")
-          .alias(f"{kind}_count") for kind, p in pats.items()],
+          .alias(f"{kind}_count") for kind, p in PII_PATTERNS.items()],
         F.col(text_col).alias("redacted"))
-    for kind, p in pats.items():
+    for kind, p in PII_PATTERNS.items():
         out = out.withColumn(
             "redacted",
             F.regexp_replace("redacted", p, f"[{kind.upper()}]"))
@@ -426,7 +406,6 @@ def pii_scan(df: DataFrame, id_col: str, text_col: str,
 
 def chunk_tokens(df: DataFrame, id_col: str, text_col: str,
                  chunk_size: int = 512,
-                 token_array: Column | None = None,
                  stride: int | None = None) -> DataFrame:
     """Split each document's token stream into training-context chunks:
     one row per ``chunk_size``-token window (last chunk ragged), with
@@ -437,11 +416,6 @@ def chunk_tokens(df: DataFrame, id_col: str, text_col: str,
     chunk boundaries depend only on the row itself, so there is no
     shuffle at any corpus size and Catalyst keeps the whole plan in one
     codegen stage. Zero-token documents yield no rows.
-
-    ``token_array`` overrides the whitespace-word default with a real
-    token column (e.g. ``tokens`` from
-    ``functions.tokenize.wordpiece_encode``) so chunk boundaries fall
-    on MODEL tokens; ``text_col`` is ignored then.
 
     ``stride`` < ``chunk_size`` gives OVERLAPPING windows (RAG passage
     extraction: a fact straddling a boundary appears whole in the next
@@ -455,8 +429,7 @@ def chunk_tokens(df: DataFrame, id_col: str, text_col: str,
     if not 1 <= stride <= chunk_size:
         raise ValueError(
             f"stride must be in [1, chunk_size], got {stride}")
-    toks = token_array if token_array is not None else _word_array(text_col)
-    base = df.select(F.col(id_col), toks.alias("__w"))
+    base = df.select(F.col(id_col), _word_array(text_col).alias("__w"))
     n_chunks = (F.floor((F.size("__w") - 1) / F.lit(stride)) + 1) \
         .cast("int")
     idx = F.when(F.size("__w") >= 1,
@@ -475,33 +448,28 @@ def chunk_tokens(df: DataFrame, id_col: str, text_col: str,
 
 
 def quantile_gate(df: DataFrame, strata_col: str, score_col: str,
-                  q: float = 0.5, exact: bool = True) -> DataFrame:
+                  q: float = 0.5) -> DataFrame:
     """Per-stratum quantile thresholding: keep rows whose ``score_col``
     is at or above their stratum's ``q``-quantile (e.g. "top half per
     domain" quality filtering). Adds a ``threshold`` column.
 
-    ``exact=True`` uses Spark's exact ``percentile`` (linear
-    interpolation, ≡ SQL ``quantile_cont``) — its aggregation buffers
-    each group's values, which is fine for bounded strata counts
-    (domains, languages) but NOT for high-cardinality strata; pass
-    ``exact=False`` there to use the Greenwald-Khanna
-    ``percentile_approx`` sketch (mergeable, bounded memory,
-    engine-local tolerance). The thresholds frame is one row per
-    stratum and is broadcast into the gate filter.
+    The quantile is Spark's exact ``percentile`` (linear interpolation,
+    ≡ SQL ``quantile_cont``) — its aggregation buffers each group's
+    values, which suits bounded strata counts (domains, languages).
+    The thresholds frame is one row per stratum and is broadcast into
+    the gate filter.
     """
     if not 0.0 <= q <= 1.0:
         raise ValueError(f"q must be in [0, 1], got {q}")
-    agg = F.percentile(score_col, q) if exact else \
-        F.percentile_approx(score_col, q)
-    th = df.groupBy(strata_col).agg(agg.alias("threshold"))
+    th = df.groupBy(strata_col).agg(
+        F.percentile(score_col, q).alias("threshold"))
     return (df.join(F.broadcast(th), strata_col)
             .filter(F.col(score_col) >= F.col("threshold")))
 
 
 def token_budget_fill(df: DataFrame, strata_col: str, text_col: str,
                       order_col: str, id_col: str,
-                      budget: int,
-                      token_count: Column | None = None) -> DataFrame:
+                      budget: int) -> DataFrame:
     """Budget-constrained subset selection: walk each stratum's rows in
     priority order (``order_col`` descending, id ascending as the
     deterministic tie-break) and keep rows until the stratum's token
@@ -514,11 +482,6 @@ def token_budget_fill(df: DataFrame, strata_col: str, text_col: str,
     within each stratum) for the running sum, then a filter — the sort
     is the operator's semantics (a priority fill is an ordered scan),
     and strata partition it.
-
-    ``token_count`` overrides the whitespace-word default with a real
-    per-row token count (e.g. ``n_tokens`` from
-    ``functions.tokenize.wordpiece_encode``) so the budget means MODEL
-    tokens; ``text_col`` is ignored then.
 
     NULL contract: NULL-id rows are excluded — the deterministic
     tie-break needs an id, Spark and SQL engines disagree on where
@@ -544,9 +507,8 @@ def token_budget_fill(df: DataFrame, strata_col: str, text_col: str,
         raise ValueError(f"budget must be >= 0, got {budget}")
     from pyspark.sql import Window
     df = df.filter(F.col(id_col).isNotNull())
-    nt = (token_count if token_count is not None
-          else F.size(_word_array(text_col)))
-    df = df.withColumn("n_tokens", nt.cast("bigint"))
+    df = df.withColumn("n_tokens",
+                       F.size(_word_array(text_col)).cast("bigint"))
     w_ord = (Window.partitionBy(strata_col)
              .orderBy(F.col(order_col).desc(), F.col(id_col).asc(),
                       F.col("n_tokens").asc()))
@@ -561,8 +523,7 @@ def token_budget_fill(df: DataFrame, strata_col: str, text_col: str,
 
 
 def mixture_plan(df: DataFrame, strata_col: str, text_col: str,
-                 targets: Mapping[str, float],
-                 token_count: Column | None = None) -> DataFrame:
+                 targets: Mapping[str, float]) -> DataFrame:
     """Data-mixing plan: per stratum (source/domain/language), the token
     accounting and the resampling knobs needed to hit a target mixture.
 
@@ -583,11 +544,6 @@ def mixture_plan(df: DataFrame, strata_col: str, text_col: str,
     |strata| rows (the single-partition windows are over that tiny
     frame, not the corpus). Double math is rounded to 6 digits at the
     output edge only, from identical expression shapes both engines.
-
-    ``token_count`` overrides the whitespace-word default with a real
-    per-row token count (``functions.tokenize.wordpiece_encode``) so
-    shares and repeat factors are in MODEL tokens; ``text_col`` is
-    ignored then.
     """
     if not targets:
         raise ValueError("targets must name at least one stratum")
@@ -601,8 +557,7 @@ def mixture_plan(df: DataFrame, strata_col: str, text_col: str,
         cond = F.col(strata_col) == F.lit(name)
         tgt = F.when(cond, share) if tgt is None else tgt.when(cond, share)
     tgt = tgt.otherwise(F.lit(0.0))
-    nt = (token_count if token_count is not None
-          else F.size(_word_array(text_col)))
+    nt = F.size(_word_array(text_col))
     per = (df.groupBy(strata_col)
            .agg(F.count("*").alias("n_docs"),
                 F.sum(nt.cast("bigint")).alias("n_tokens")))
@@ -637,9 +592,7 @@ def mixture_plan(df: DataFrame, strata_col: str, text_col: str,
 
 
 def pack_sequences(df: DataFrame, id_col: str, text_col: str,
-                   budget: int = 2048, n_streams: int = 64,
-                   seed: str = "pack",
-                   token_count: Column | None = None) -> DataFrame:
+                   budget: int = 2048, n_streams: int = 64) -> DataFrame:
     """Concat-and-chunk sequence packing: lay documents end-to-end into
     token streams and record where each document lands, so a training
     job can cut ``budget``-token windows with documents crossing window
@@ -667,14 +620,10 @@ def pack_sequences(df: DataFrame, id_col: str, text_col: str,
     if n_streams < 1:
         raise ValueError(f"n_streams must be >= 1, got {n_streams}")
     from pyspark.sql import Window
-    # token_count (e.g. tokenize.wordpiece_encode's n_tokens) switches
-    # packing offsets from whitespace words to MODEL tokens
-    nt = (token_count if token_count is not None
-          else F.size(_word_array(text_col)))
     base = df.select(
         F.col(id_col),
-        nt.cast("bigint").alias("n_tokens"),
-        _bucket(id_col, seed))
+        F.size(_word_array(text_col)).cast("bigint").alias("n_tokens"),
+        _bucket(id_col, "pack"))
     w = (Window.partitionBy(F.col("bucket") % n_streams)
          .orderBy("bucket", id_col)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -690,8 +639,7 @@ def pack_sequences(df: DataFrame, id_col: str, text_col: str,
 
 
 def repetition_stats(df: DataFrame, id_col: str, text_col: str,
-                     ns: Iterable[int] = (1, 2, 3),
-                     hash_grams: bool = False) -> DataFrame:
+                     ns: Iterable[int] = (1, 2, 3)) -> DataFrame:
     """Gopher-style repetition signals per (document, n):
 
     - ``total_ngrams`` / ``distinct_ngrams`` — token n-gram counts,
@@ -731,19 +679,6 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str,
     already imposed, and a giant-document straggler is AQE-invisible
     either way.
 
-    ``hash_grams=True`` reduces each gram to ``xxhash64`` BEFORE the
-    shuffle (fixed-width ``(id, n, int64)`` rows instead of gram text).
-    Measured at sf0.1 it is NOT a win and stays off by default: the
-    hash evaluates inside the gram-building ``transform`` lambda —
-    outside whole-stage codegen, like all HOF bodies — and that
-    per-element overhead exceeds the ~10-15 shuffle bytes saved on
-    word-sized grams (an md5 reduction was ~1.5× slower end-to-end;
-    xxhash64 still no better than strings). Flip it on for corpora with
-    long tokens or large ``n``, where gram bytes dominate: the output
-    columns are hash-agnostic counts, so results agree with the raw
-    form exactly unless a 64-bit collision merges two grams within one
-    document (~n_grams²/2⁶⁵, deterministic, perturbs
-    ``distinct``/``top`` by ±1).
     """
     ns = sorted(set(int(n) for n in ns))
     if not ns or ns[0] < 1:
@@ -759,23 +694,13 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str,
     def tagged(n: int):
         # sequence(1, 0) counts DOWN — guard short docs before
         # generating gram positions
-        if hash_grams:
-            def one(i):
-                return F.struct(
-                    F.lit(n).alias("n"),
-                    F.xxhash64(F.concat_ws(" ", F.slice("__w", i, n)))
-                    .alias("gram"))
-            elem = "bigint"
-        else:
-            def one(i):
-                return F.struct(F.lit(n).alias("n"),
-                                F.concat_ws(" ", F.slice("__w", i, n))
-                                .alias("gram"))
-            elem = "string"
         gram = F.transform(
-            F.sequence(F.lit(1), F.size("__w") - (n - 1)), one)
+            F.sequence(F.lit(1), F.size("__w") - (n - 1)),
+            lambda i: F.struct(F.lit(n).alias("n"),
+                               F.concat_ws(" ", F.slice("__w", i, n))
+                               .alias("gram")))
         return F.when(F.size("__w") >= n, gram).otherwise(
-            F.array().cast(f"array<struct<n:int,gram:{elem}>>"))
+            F.array().cast("array<struct<n:int,gram:string>>"))
 
     all_grams = F.concat(*[tagged(n) for n in ns]) if len(ns) > 1 \
         else tagged(ns[0])
@@ -894,11 +819,14 @@ def repeated_spans(df: DataFrame, id_col: str, text_col: str,
                     "n_spans"))
 
 
+#: salt buckets of ``domain_quota``'s skew-safe two-phase top-N
+QUOTA_SALT_BUCKETS = 16
+
+
 def domain_quota(df: DataFrame, host_col: str, id_col: str,
                  max_per_host: int,
                  priority_col: str | None = None,
-                 exact_ranks: bool = True,
-                 salt_buckets: int = 16) -> DataFrame:
+                 exact_ranks: bool = True) -> DataFrame:
     """Per-site quota capping — the anti-domination guard of a crawl
     corpus (a handful of hosts otherwise contribute most of the rows).
     Keeps at most ``max_per_host`` rows per host: highest
@@ -912,9 +840,9 @@ def domain_quota(df: DataFrame, host_col: str, id_col: str,
     order (AQE splits skewed joins, not windows).
 
     ``exact_ranks=False`` is the SKEW-SAFE path for crawl-scale data:
-    two-phase top-N. Rows salt into ``salt_buckets`` by id hash; a
-    per-(host, salt) window keeps each bucket's local top-N (≤ 1/B of
-    the mega-host per task), and a second window over the ≤ B·N
+    two-phase top-N. Rows salt into B = ``QUOTA_SALT_BUCKETS`` by id
+    hash; a per-(host, salt) window keeps each bucket's local top-N
+    (≤ 1/B of the mega-host per task), and a second window over the ≤ B·N
     candidates per host assigns final ranks. Candidate rank provably
     equals true rank for the global top-N (every row preceding a true
     top-N row is itself top-N, hence a candidate), so kept rows carry
@@ -964,7 +892,7 @@ def domain_quota(df: DataFrame, host_col: str, id_col: str,
     kept = (df
             .withColumn("__salt",
                         F.pmod(F.xxhash64(F.col(id_col)),
-                               F.lit(salt_buckets)))
+                               F.lit(QUOTA_SALT_BUCKETS)))
             .withColumn("__lr", lrank(w1))
             .filter(F.col("__lr") <= max_per_host)
             .withColumn("__r", lrank(w2))
@@ -1014,15 +942,20 @@ def corpus_report(df: DataFrame, strata_col: str,
                 .cast("double") / n, 6).alias("pct_short"))
 
 
-def bigram_lm_perplexity(df: DataFrame, id_col: str, text_col: str,
-                         alpha: float = 0.5) -> DataFrame:
+#: add-alpha smoothing of the self-trained bigram LM
+LM_ALPHA = 0.5
+
+
+def bigram_lm_perplexity(df: DataFrame, id_col: str,
+                         text_col: str) -> DataFrame:
     """Per-document perplexity under a bigram LM trained on the corpus
     itself — the self-scoring quality signal (KenLM-style, simplified
     to add-alpha smoothing) that flags machine-generated repetition
     (suspiciously low ppl) and encoding garbage (suspiciously high).
 
     ``P(w2|w1) = (C(w1 w2) + alpha) / (C(w1 ·) + alpha * V)`` with
-    ``V`` = distinct tokens of the bigram-eligible corpus;
+    ``alpha`` = ``LM_ALPHA`` and ``V`` = distinct tokens of the
+    bigram-eligible corpus;
     ``ppl = exp(mean -ln P)`` over a document's bigrams. Documents with
     fewer than two tokens drop out (no bigrams to score).
 
@@ -1104,8 +1037,8 @@ def bigram_lm_perplexity(df: DataFrame, id_col: str, text_col: str,
     pair_model = bi.groupBy("w1", "w2").agg(F.count("*").alias("__c12"))
     annot = bi.join(pair_model, ["w1", "w2"])
     nll = F.round(
-        -F.log((F.col("__c12") + F.lit(alpha))
-               / (F.col("__c1") + F.lit(alpha) * F.col("__v"))),
+        -F.log((F.col("__c12") + F.lit(LM_ALPHA))
+               / (F.col("__c1") + F.lit(LM_ALPHA) * F.col("__v"))),
         6).cast("decimal(38,6)")
     scored = (annot.join(head_model.withColumnRenamed("__tok", "w1"), "w1")
               .withColumn("__k", F.lit(1))
@@ -1118,8 +1051,11 @@ def bigram_lm_perplexity(df: DataFrame, id_col: str, text_col: str,
     return out
 
 
-def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
-                  discount: float = 0.75) -> DataFrame:
+#: Kneser–Ney absolute discount (Chen & Goodman's usual d)
+KN_DISCOUNT = 0.75
+
+
+def kn_perplexity(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document perplexity under an interpolated Kneser–Ney bigram
     LM trained on the corpus itself — the smoothing KenLM actually
     ships (Kneser & Ney, ICASSP 1995; Chen & Goodman, CSL 1999 for
@@ -1131,7 +1067,7 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
         P(w2|w1) = max(C(w1 w2) − d, 0) / C(w1 ·)
                  + d · N1+(w1 ·) / C(w1 ·) · N1+(· w2) / N1+(· ·)
 
-    with ``d = discount``, ``N1+(w1 ·)`` = distinct continuations of
+    with ``d = KN_DISCOUNT``, ``N1+(w1 ·)`` = distinct continuations of
     w1, ``N1+(· w2)`` = distinct left-contexts of w2, ``N1+(· ·)`` =
     distinct bigram types. ``ppl = exp(mean −ln P)`` over a document's
     bigrams; documents with < 2 tokens drop out.
@@ -1153,8 +1089,6 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
     is model-sized.
     """
 
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
     toks = (df.select(F.col(id_col), _word_array(text_col).alias("__t"))
             .filter(F.size("__t") >= 2))
     n1 = F.size("__t") - 1
@@ -1192,7 +1126,7 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
     r2 = pair_model.groupBy("w2").agg(F.count("*").alias("__n1l"))
     nb = (pair_model.agg(F.count("*").cast("double").alias("__nb"))
           .withColumn("__k", F.lit(1)))
-    d = F.lit(float(discount))
+    d = F.lit(KN_DISCOUNT)
     p = (F.greatest(F.col("__c12") - d, F.lit(0.0)) / F.col("__c1")
          + d * F.col("__n1r") / F.col("__c1")
          * (F.col("__n1l") / F.col("__nb")))
@@ -1225,12 +1159,12 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
 
 
 def classifier_quality_score(df: DataFrame, id_col: str, text_col: str,
-                             weights: DataFrame, dim: int = 1 << 20,
-                             bias: float = 0.0) -> DataFrame:
+                             weights: DataFrame,
+                             dim: int = 1 << 20) -> DataFrame:
     """Model-based quality scoring — the CCNet/fastText linear-classifier
     tier of the quality ladder (heuristics → LM perplexity → trained
     classifier): score each document with a hashed bag-of-words linear
-    model, ``sigmoid(bias + mean(w[h(token) % dim]))`` (fastText's mean
+    model, ``sigmoid(mean(w[h(token) % dim]))`` (fastText's mean
     pooling over hashing-trick unigram features).
 
     ``weights`` is the trained model as a relation ``(bucket bigint,
@@ -1265,7 +1199,7 @@ def classifier_quality_score(df: DataFrame, id_col: str, text_col: str,
                                     F.lit(0).cast("decimal(38,6)")))
                    .alias("__s"),
                    F.count("*").alias("n_features")))
-    x = F.lit(bias) + F.col("__s").cast("double") / F.col("n_features")
+    x = F.col("__s").cast("double") / F.col("n_features")
     return scored.select(
         F.col(id_col), F.col("n_features"),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-x)), 6).alias("score"))
@@ -1308,8 +1242,7 @@ def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def leakage_safe_split(df: DataFrame, id_col: str, pairs: DataFrame,
                        weights: Mapping[str, float],
-                       src: str = "id_a", dst: str = "id_b",
-                       seed: str = "split") -> DataFrame:
+                       src: str = "id_a", dst: str = "id_b") -> DataFrame:
     """Split assignment that structurally CANNOT leak near-duplicates
     across train/val/test: the near-dup pair relation collapses to
     connected components (``graph.connected_components``), the
@@ -1332,7 +1265,7 @@ def leakage_safe_split(df: DataFrame, id_col: str, pairs: DataFrame,
              .withColumn("__g", F.coalesce(F.col("component"),
                                            F.col(id_col)))
              .drop("component"))
-    return hash_split(keyed, "__g", weights, seed).drop("__g")
+    return hash_split(keyed, "__g", weights).drop("__g")
 
 
 #: Gopher §A1.1 stopword probe set: a document passing the gate must
@@ -1342,30 +1275,20 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have",
 
 
 def gopher_gate(df: DataFrame, id_col: str, text_col: str,
-                min_words: int = 50, max_words: int = 100_000,
-                min_word_len: float = 3.0, max_word_len: float = 10.0,
-                max_symbol_ratio: float = 0.1,
-                max_bullet_frac: float = 0.9,
-                max_ellipsis_frac: float = 0.3,
-                min_alpha_frac: float = 0.8,
                 min_stopwords: int = 2) -> DataFrame:
     """The full Gopher quality-rule battery (Rae et al., arXiv:2112.11446
     §A1.1) as one zero-shuffle projection: per-document measurements,
     one boolean per rule, and the conjunction ``keep``.
 
-    Rules (defaults are the paper's):
+    Rules (the paper's thresholds):
 
-    - word count in ``[min_words, max_words]``         → ``ok_words``
-    - mean word length in ``[min_word_len, max_word_len]``
-                                                       → ``ok_word_len``
-    - (# ``#`` + # ``...``) / words <= ``max_symbol_ratio``
-                                                       → ``ok_symbols``
+    - word count in ``[50, 100000]``                   → ``ok_words``
+    - mean word length in ``[3, 10]``                  → ``ok_word_len``
+    - (# ``#`` + # ``...``) / words <= 0.1             → ``ok_symbols``
     - fraction of lines starting with a bullet (``-``/``*``/``•``)
-      <= ``max_bullet_frac``                           → ``ok_bullets``
-    - fraction of lines ending with ``...`` <= ``max_ellipsis_frac``
-                                                       → ``ok_ellipsis``
-    - fraction of words containing a letter >= ``min_alpha_frac``
-                                                       → ``ok_alpha``
+      <= 0.9                                           → ``ok_bullets``
+    - fraction of lines ending with ``...`` <= 0.3     → ``ok_ellipsis``
+    - fraction of words containing a letter >= 0.8     → ``ok_alpha``
     - >= ``min_stopwords`` DISTINCT probe stopwords present
                                                        → ``ok_stopwords``
 
@@ -1419,18 +1342,12 @@ def gopher_gate(df: DataFrame, id_col: str, text_col: str,
 
     flags = measured.select(
         "*",
-        ok(F.col("n_words").between(min_words, max_words))
-        .alias("ok_words"),
-        ok(F.col("mean_word_len").between(min_word_len, max_word_len))
-        .alias("ok_word_len"),
-        ok(F.col("symbol_ratio") <= max_symbol_ratio)
-        .alias("ok_symbols"),
-        ok(F.col("bullet_line_frac") <= max_bullet_frac)
-        .alias("ok_bullets"),
-        ok(F.col("ellipsis_line_frac") <= max_ellipsis_frac)
-        .alias("ok_ellipsis"),
-        ok(F.col("alpha_word_frac") >= min_alpha_frac)
-        .alias("ok_alpha"),
+        ok(F.col("n_words").between(50, 100_000)).alias("ok_words"),
+        ok(F.col("mean_word_len").between(3.0, 10.0)).alias("ok_word_len"),
+        ok(F.col("symbol_ratio") <= 0.1).alias("ok_symbols"),
+        ok(F.col("bullet_line_frac") <= 0.9).alias("ok_bullets"),
+        ok(F.col("ellipsis_line_frac") <= 0.3).alias("ok_ellipsis"),
+        ok(F.col("alpha_word_frac") >= 0.8).alias("ok_alpha"),
         ok(F.col("n_stopwords") >= min_stopwords)
         .alias("ok_stopwords"))
     rule_cols = [c for c in flags.columns if c.startswith("ok_")]
@@ -1442,8 +1359,7 @@ def gopher_gate(df: DataFrame, id_col: str, text_col: str,
 
 def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
                 text_col: str, n: int | None = None,
-                buckets: int = 8192, smoothing: float = 1.0,
-                seed: str = "dsir") -> DataFrame:
+                buckets: int = 8192) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al.,
     NeurIPS 2023, arXiv:2302.03169): pick raw-corpus documents whose
     hashed n-gram profile looks like the ``target`` corpus.
@@ -1451,7 +1367,7 @@ def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
     1. Featurize: unigram + bigram counts hashed into ``buckets``
        cells (keyed 60-bit md5 — cross-engine deterministic, unlike
        ``hashingTF``'s murmur).
-    2. Fit add-``smoothing`` bucket unigram models over raw and
+    2. Fit add-one bucket unigram models over raw and
        target; per-bucket log ratio ``ln p_tgt(b) − ln p_raw(b)``.
     3. Per raw doc: ``log_weight = Σ_b count_doc(b) · ratio(b)``.
     4. Gumbel-top-k resampling WITHOUT replacement: a deterministic
@@ -1518,7 +1434,7 @@ def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
             .alias("__g"))
         return g.filter(F.col("__g").isNotNull()).select(
             F.col(id_col),
-            (hash60(F.concat(F.lit(seed), F.lit("|"), F.col("__g")))
+            (hash60(F.concat(F.lit("dsir|"), F.col("__g")))
              % buckets).alias("bucket"))
 
     raw_part = (raw.select(F.col(id_col), F.col(text_col))
@@ -1537,18 +1453,18 @@ def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
              .select(
                  "bucket",
                  (F.round(F.log(
-                     (F.coalesce("__ct", F.lit(0)) + F.lit(smoothing))
-                     / (F.col("__tot_tgt") + smoothing * buckets)), 6)
+                     (F.coalesce("__ct", F.lit(0)) + F.lit(1.0))
+                     / (F.col("__tot_tgt") + float(buckets))), 6)
                   - F.round(F.log(
-                      (F.col("__cr") + F.lit(smoothing))
-                      / (F.col("__tot_raw") + smoothing * buckets)), 6))
+                      (F.col("__cr") + F.lit(1.0))
+                      / (F.col("__tot_raw") + float(buckets))), 6))
                  .alias("__lr")))
     weighted = (feats.join(F.broadcast(model), "bucket")
                 .groupBy(id_col)
                 .agg(F.sum("__c").alias("n_grams"),
                      F.sum(F.round(F.col("__c") * F.col("__lr"), 6)
                            .cast("decimal(38,6)")).alias("__lw")))
-    u = ((hash60(F.concat(F.lit("gumbel|"), F.lit(seed), F.lit("|"),
+    u = ((hash60(F.concat(F.lit("gumbel|dsir|"),
                           F.col(id_col).cast("string")))
           % _BUCKETS).cast("double") + F.lit(0.5)) / _BUCKETS
     scored = weighted.select(
@@ -1562,15 +1478,11 @@ def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
 
 
 def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
-                       strata_col: str, alpha: float = 0.5,
-                       cuts: tuple[float, float] = (1.0 / 3, 2.0 / 3),
-                       labels: tuple[str, str, str] = ("head", "middle",
-                                                       "tail"),
-                       exact: bool = True) -> DataFrame:
+                       strata_col: str) -> DataFrame:
     """CCNet-style per-stratum perplexity bucketing (Wenzek et al.,
     LREC 2020): score every document with the self-trained bigram LM
-    (``bigram_lm_perplexity``), cut each stratum (language) at the
-    ``cuts`` quantiles, and label documents ``head`` (lowest ppl ≈
+    (``bigram_lm_perplexity``), cut each stratum (language) at its
+    tertiles, and label documents ``head`` (lowest ppl ≈
     cleanest), ``middle``, ``tail`` — the standard pre-training
     curriculum/filter axis.
 
@@ -1580,10 +1492,8 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
 
     Determinism: ppl is the 6-digit decimal-routed score; cuts round
     to 6 digits before the boundary compare, so both engines bucket
-    identically. ``exact=True`` uses exact percentile (≡ SQL
-    ``quantile_cont``) — fine for bounded strata counts (languages);
-    ``exact=False`` switches to the GK sketch for high-cardinality
-    strata (engine-local tolerance, no SQL twin).
+    identically. The cuts are exact percentiles (≡ SQL
+    ``quantile_cont``) — fine for bounded strata counts (languages).
 
     Scale: the LM scoring is the token-linear plan documented on
     ``bigram_lm_perplexity``; everything after is doc-cardinality —
@@ -1596,27 +1506,20 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
     The returned labels read the same cache until the caller's
     ``cache_scope`` exits.
     """
-    q1, q2 = cuts
-    if not 0.0 <= q1 < q2 <= 1.0:
-        raise ValueError(f"cuts must satisfy 0 <= q1 < q2 <= 1: {cuts}")
-    ppl = bigram_lm_perplexity(df, id_col, text_col, alpha=alpha)
+    ppl = bigram_lm_perplexity(df, id_col, text_col)
     scored = persist(ppl.join(df.select(F.col(id_col), F.col(strata_col)),
                               id_col))
-    agg1 = F.percentile("ppl", q1) if exact else \
-        F.percentile_approx("ppl", q1)
-    agg2 = F.percentile("ppl", q2) if exact else \
-        F.percentile_approx("ppl", q2)
     th = (scored.groupBy(strata_col)
-          .agg(F.round(agg1, 6).alias("head_cut"),
-               F.round(agg2, 6).alias("middle_cut")))
-    lo, mid, hi = labels
+          .agg(F.round(F.percentile("ppl", 1.0 / 3), 6).alias("head_cut"),
+               F.round(F.percentile("ppl", 2.0 / 3), 6)
+               .alias("middle_cut")))
     out = (scored.join(F.broadcast(th), strata_col)
            .select(id_col, strata_col, "n_bigrams", "ppl",
                    "head_cut", "middle_cut",
-                   F.when(F.col("ppl") <= F.col("head_cut"), F.lit(lo))
+                   F.when(F.col("ppl") <= F.col("head_cut"), F.lit("head"))
                    .when(F.col("ppl") <= F.col("middle_cut"),
-                         F.lit(mid))
-                   .otherwise(F.lit(hi)).alias("bucket")))
+                         F.lit("middle"))
+                   .otherwise(F.lit("tail")).alias("bucket")))
     return out
 
 
@@ -1759,8 +1662,7 @@ def train_quality_classifier(df: DataFrame, id_col: str, text_col: str,
 
 
 def temperature_mixture(df: DataFrame, strata_col: str, text_col: str,
-                        tau: float = 2.0,
-                        token_count: Column | None = None) -> DataFrame:
+                        tau: float = 2.0) -> DataFrame:
     """Temperature-scaled mixture shares — the multilingual sampling
     formula (mT5 / XLM-R): resampling weights ``q_s ∝ p_s^(1/τ)``
     flatten the stratum distribution for τ > 1 (τ→∞ → uniform, τ=1 →
@@ -1785,8 +1687,7 @@ def temperature_mixture(df: DataFrame, strata_col: str, text_col: str,
         raise ValueError(f"tau must be > 0, got {tau}")
     from pyspark.sql import Window
 
-    nt = (token_count if token_count is not None
-          else F.size(_word_array(text_col)))
+    nt = F.size(_word_array(text_col))
     per = (df.groupBy(strata_col)
            .agg(F.count("*").alias("n_docs"),
                 F.sum(nt.cast("bigint")).alias("n_tokens")))
@@ -1949,19 +1850,23 @@ def decontaminate_spans(corpus: DataFrame, benchmark: DataFrame,
     return _remove_intervals(corpus, id_col, text_col, spans)
 
 
+#: C4 line rules: terminal punctuation, minimum words, dropped phrases
+C4_TERMINAL_PUNCT = (".", "!", "?", "\"")
+C4_MIN_LINE_WORDS = 3
+C4_DROP_LINE_PHRASES = ("javascript",)
+#: C4 document markers: placeholder text, a ``{`` hinting at source code
+C4_DOC_DROP_SUBSTRINGS = ("lorem ipsum", "{")
+
+
 def c4_clean(df: DataFrame, id_col: str, text_col: str, *,
-             min_line_words: int = 3,
-             terminal_punct: tuple[str, ...] = (".", "!", "?", "\""),
-             drop_line_phrases: tuple[str, ...] = ("javascript",),
              badwords: tuple[str, ...] = (),
-             doc_drop_substrings: tuple[str, ...] = ("lorem ipsum", "{"),
              min_kept_lines: int = 1) -> DataFrame:
     """C4-style line-level corpus cleaning (Raffel et al., JMLR 2020
     §2.2 — the rules behind the C4/"colossal clean crawl" corpus): keep
-    only lines that end in terminal punctuation, have at least
-    ``min_line_words`` words, and mention none of
-    ``drop_line_phrases``; flag (never silently drop) documents that
-    contain a blocked word token, a ``doc_drop_substrings`` marker
+    only lines that end in terminal punctuation (``C4_TERMINAL_PUNCT``),
+    have at least ``C4_MIN_LINE_WORDS`` words, and mention none of
+    ``C4_DROP_LINE_PHRASES``; flag (never silently drop) documents that
+    contain a blocked word token, a ``C4_DOC_DROP_SUBSTRINGS`` marker
     ("lorem ipsum" placeholder text, a ``{`` hinting at source code),
     or fewer than ``min_kept_lines`` surviving lines.
 
@@ -1985,11 +1890,6 @@ def c4_clean(df: DataFrame, id_col: str, text_col: str, *,
     doc-level flag projection. Linear in corpus bytes; no UDF, no
     driver collect.
     """
-    if min_line_words < 1:
-        raise ValueError(f"min_line_words must be >= 1: {min_line_words}")
-    if not terminal_punct:
-        raise ValueError("terminal_punct must name at least one char")
-
     base = df.select(F.col(id_col), F.col(text_col).alias("__txt"))
     lo = simple_lower(F.col("__txt"))
     has_bad = F.lit(False)
@@ -1998,7 +1898,7 @@ def c4_clean(df: DataFrame, id_col: str, text_col: str, *,
             _word_array("__txt"),
             F.array(*[F.lit(b.lower()) for b in badwords]))
     has_drop = F.lit(False)
-    for s in doc_drop_substrings:
+    for s in C4_DOC_DROP_SUBSTRINGS:
         has_drop = has_drop | F.contains(lo, F.lit(s.lower()))
     docs = base.select(
         F.col(id_col),
@@ -2011,11 +1911,11 @@ def c4_clean(df: DataFrame, id_col: str, text_col: str, *,
                          F.posexplode(F.split("__txt", "\n"))
                          .alias("__p", "__l"))
              .withColumn("__t", F.trim("__l")))
-    ends_ok = F.right(F.col("__t"), F.lit(1)).isin(*terminal_punct)
+    ends_ok = F.right(F.col("__t"), F.lit(1)).isin(*C4_TERMINAL_PUNCT)
     words_ok = (F.regexp_count(simple_lower(F.col("__t")), F.lit("[a-z0-9_]+"))
-                >= min_line_words)
+                >= C4_MIN_LINE_WORDS)
     phrase_ok = F.lit(True)
-    for p in drop_line_phrases:
+    for p in C4_DROP_LINE_PHRASES:
         phrase_ok = phrase_ok & ~F.contains(simple_lower(F.col("__t")),
                                             F.lit(p.lower()))
     # duplicate-id contract (r9 fuzz): the reassembly is keyed on the
@@ -2329,8 +2229,7 @@ def corpus_diff(old: DataFrame, new: DataFrame, id_col: str,
 
 def epoch_plan(df: DataFrame, strata_col: str, text_col: str,
                budget_tokens: int, max_epochs: float = 4.0,
-               tau: float = 1.0,
-               token_count: Column | None = None) -> DataFrame:
+               tau: float = 1.0) -> DataFrame:
     """Data-constrained mixture allocation (the Muennighoff et al.
     2023 "data-constrained scaling" regime): fill a training budget
     across strata proportionally to temperature-``tau`` weights, but
@@ -2363,8 +2262,7 @@ def epoch_plan(df: DataFrame, strata_col: str, text_col: str,
         raise ValueError(f"tau must be > 0, got {tau}")
     from pyspark.sql import Window
 
-    nt = (token_count if token_count is not None
-          else F.size(_word_array(text_col)))
+    nt = F.size(_word_array(text_col))
     per = (df.groupBy(strata_col)
            .agg(F.sum(nt.cast("bigint")).alias("n_tokens"))
            .filter(F.col("n_tokens") > 0))

@@ -46,12 +46,8 @@ from zacks_estimates_financial_statements_spark.functions import vectors as V
 from zacks_estimates_financial_statements_spark.util import persist
 
 
-def hash60(col, salt=None):
-    """The shared 60-bit md5 hash; ``salt`` (int or Column) prepends
-    ``"<salt>|"`` for hash-family indexing."""
-    if salt is not None:
-        col = F.concat(F.lit(str(salt)) if isinstance(salt, int) else salt.cast("string"),
-                       F.lit("|"), col)
+def hash60(col):
+    """The shared 60-bit md5 hash."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
@@ -80,11 +76,11 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
 # ---------------------------------------------------------------------------
 
 
-def exact_dup_groups(df: DataFrame, id_col: str, text_col: str,
-                     normalized: bool = True) -> DataFrame:
-    """Groups of exact (or normalization-invariant) duplicates:
+def exact_dup_groups(df: DataFrame, id_col: str,
+                     text_col: str) -> DataFrame:
+    """Groups of normalization-invariant duplicates:
     (fingerprint, group_size, keep_id, doc_ids)."""
-    fp = T.fingerprint(F.col(text_col)) if normalized else F.md5(F.col(text_col))
+    fp = T.fingerprint(F.col(text_col))
     return (df.select(fp.alias("fingerprint"), F.col(id_col))
             .groupBy("fingerprint")
             .agg(F.count("*").alias("group_size"),
@@ -350,7 +346,6 @@ def _broadcast_threshold_bytes(spark) -> int:
 def incremental_minhash_pairs(index: DataFrame, batch: DataFrame,
                               id_col: str, text_col: str,
                               k: int = 12, bands: int = 4,
-                              shingle_k: int = 3,
                               prune_index_scan: bool = False,
                               max_prune_keys: int = 100_000) -> DataFrame:
     """Incremental near-dup check: which stored corpus documents is
@@ -403,8 +398,7 @@ def incremental_minhash_pairs(index: DataFrame, batch: DataFrame,
 
     Returns ``(batch_id, corpus_id, est_jaccard)``, distinct pairs.
     """
-    probe = (minhash_index(batch, id_col, text_col, k=k, bands=bands,
-                           shingle_k=shingle_k)
+    probe = (minhash_index(batch, id_col, text_col, k=k, bands=bands)
              .select(F.col(id_col).alias("__bid"),
                      F.col("sig").alias("__bsig"),
                      "band", "bucket"))
@@ -501,12 +495,11 @@ def minhash_pairs_from_index(index: DataFrame, id_col: str, k: int = 12,
 # ---------------------------------------------------------------------------
 
 
-def simhash_bits(df: DataFrame, id_col: str, text_col: str,
-                 nbits: int = 64) -> DataFrame:
+def simhash_bits(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash): per-bit majority vote over token hashes. Tokens are
     the whitespace tokens of the normalized text; token weight 1.
 
-    Plan shape: the votes are ``nbits`` FLAT sum expressions in ONE
+    Plan shape: the votes are 64 FLAT sum expressions in ONE
     hash aggregate over the token rows — not a tokens × nbits bit-row
     explode (the previous broadcast-range form moved 64× the token
     count through the first aggregation; measured 14 CPU-seconds vs
@@ -520,12 +513,12 @@ def simhash_bits(df: DataFrame, id_col: str, text_col: str,
     h = toks.withColumn("th", hash60(F.col("tok")))
     votes = h.groupBy(id_col).agg(*[
         F.sum(F.when(F.expr(f"(th >> {b}) & 1") == 1, 1).otherwise(-1))
-        .alias(f"__v{b}") for b in range(nbits)])
+        .alias(f"__v{b}") for b in range(64)])
     sketch = None
-    for b in range(nbits):
+    for b in range(64):
         # bit 63 is the sign bit: its signed contribution is -(2^63),
         # so the plain sum reproduces the two's-complement bit pattern
-        weight = (1 << b) if b < nbits - 1 or nbits < 64 else -(1 << 63)
+        weight = (1 << b) if b < 63 else -(1 << 63)
         term = F.when(F.col(f"__v{b}") > 0,
                       F.lit(weight).cast("long")).otherwise(F.lit(0))
         sketch = term if sketch is None else sketch + term
@@ -534,48 +527,36 @@ def simhash_bits(df: DataFrame, id_col: str, text_col: str,
 
 def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                            max_hamming: int = 3,
-                           bands: int | None = None,
                            max_bucket_size: int | None = 10000) -> DataFrame:
     """Pairs with hamming(simhash_a, simhash_b) ≤ max_hamming via
     pigeonhole banding (the Manku/Jain/Sarma WWW'07 simhash design): the
-    64-bit sketch splits into ``bands`` contiguous blocks, and a pair
-    within the hamming budget differs in at most ``max_hamming`` blocks,
-    so with ``bands = max_hamming + 1`` (the default) it must agree on
-    ≥1 whole block — candidates come from a block-value **equi-join**
-    with EXACT recall, never a quadratic hamming-predicate join. Returns
-    (id_a, id_b, hamming).
+    64-bit sketch splits into ``max_hamming + 1`` contiguous blocks, and a
+    pair within the hamming budget differs in at most ``max_hamming``
+    blocks, so it must agree on ≥1 whole block — candidates come from a
+    block-value **equi-join** with EXACT recall, never a quadratic
+    hamming-predicate join. Returns (id_a, id_b, hamming).
 
-    Tradeoff: more bands → narrower blocks → more accidental block
-    collisions (false candidates ~ n²/2^width per band). Keep
+    Tradeoff: a larger budget → more, narrower blocks → more accidental
+    block collisions (false candidates ~ n²/2^width per band). Keep
     ``max_hamming`` small (≤3 with 64-bit sketches → 16-bit blocks, the
     WWW'07 operating point); ``max_bucket_size`` additionally drops
     degenerate hot blocks (same guard + rationale as
-    ``minhash_near_dup_pairs``).
-
-    ``bands`` must exceed ``max_hamming`` — with fewer bands the
-    pigeonhole argument is void (a pair inside the hamming budget could
-    differ in every block and share no band), so that configuration is
-    rejected rather than silently losing the exact-recall guarantee."""
+    ``minhash_near_dup_pairs``)."""
     sh = simhash_bits(df, id_col, text_col)
     return hamming_near_dup_pairs(sh, id_col, "simhash",
-                                  max_hamming=max_hamming, bands=bands,
+                                  max_hamming=max_hamming,
                                   max_bucket_size=max_bucket_size)
 
 
 def hamming_near_dup_pairs(sketches: DataFrame, id_col: str,
                            sketch_col: str, max_hamming: int = 3,
-                           bands: int | None = None,
                            max_bucket_size: int | None = 10000) -> DataFrame:
     """Pigeonhole-banded hamming pairing over ANY 64-bit sketch relation
     ``(id, sketch)`` — the shared engine behind ``simhash_near_dup_
     pairs`` (text) and ``multimodal.media_near_dup_pairs`` (perceptual
     image hashes). Same exact-recall guarantee, same hot-bucket cap,
     same (id_a, id_b, hamming) contract."""
-    nbands = bands or (max_hamming + 1)
-    if nbands <= max_hamming:
-        raise ValueError(
-            f"bands={nbands} <= max_hamming={max_hamming}: pigeonhole "
-            f"exact recall requires bands >= max_hamming + 1")
+    nbands = max_hamming + 1
     width = 64 // nbands
     # band b covers bits [64 - (b+1)*width - rem, 64 - b*width); band 0
     # absorbs the 64 % nbands remainder bits (shift amounts are Python
@@ -617,8 +598,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     """Exact Jaccard over distinct word shingles. Returns
     (id_a, id_b, jaccard) ≥ min_jaccard.
 
-    Two admission tiers (r12; the same ``candidates=`` contract as
-    ``curation.semantic_contamination``):
+    Two admission tiers (r12):
 
     - ``candidates=None`` (default): every pair sharing ≥1 shingle is
       measured — fully exact, appropriate when the operator IS the
@@ -657,11 +637,8 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
                       shingle_k: int = 3,
                       min_containment: float = 0.5,
                       max_shingle_df: int | None = None,
-                      candidates: DataFrame | None = None,
                       admission: str = "exact",
-                      small_max_shingles: int = 16,
-                      minhash_k: int = 12,
-                      minhash_bands: int = 4) -> DataFrame:
+                      small_max_shingles: int = 16) -> DataFrame:
     """ASYMMETRIC near-dup detection: exact shingle containment
     ``|A∩B| / |A|`` per direction (Broder 1997's second resemblance
     measure). Jaccard misses the quote/inclusion case — a short document
@@ -671,8 +648,6 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
 
     Admission tiers:
 
-    - ``candidates=<relation>``: exact measures for the given pairs
-      (the same contract as ``ngram_jaccard_pairs``).
     - ``admission="exact"`` (default): every shingle-sharing pair is
       measured via the shared-shingle join — fully exact, but the
       pair×shingle fan-out is the network bill at scale (SHUFFLE.md
@@ -695,7 +670,7 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
         an index hit), which covers the planted-quote shape exactly.
       * pairs with BOTH sides > S share ≥ t·S shingles by definition,
         so they are sketchable: the existing banded MinHash admission
-        (``minhash_k``/``minhash_bands``) supplies them. Its recall is
+        (``minhash_near_dup_pairs``' defaults) supplies them. Its recall is
         the banding's — ratio-skewed large×large pairs fade with
         J = t/(1 + n_b/n_a), the documented trade (raise
         ``small_max_shingles`` to widen the exact partition).
@@ -712,11 +687,9 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     of a's (resp. b's) shingles present in the other — for pairs where
     EITHER direction ≥ ``min_containment``.
     """
-    if candidates is None and admission == "ensemble":
+    if admission == "ensemble":
         candidates = _ensemble_candidates(df, id_col, text_col, shingle_k,
-                                          small_max_shingles, minhash_k,
-                                          minhash_bands)
-    if candidates is not None:
+                                          small_max_shingles)
         shared = _candidate_shingle_counts(df, id_col, text_col,
                                            shingle_k, candidates)
     else:
@@ -731,8 +704,7 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 def _ensemble_candidates(df: DataFrame, id_col: str, text_col: str,
-                         shingle_k: int, small_max: int,
-                         minhash_k: int, minhash_bands: int) -> DataFrame:
+                         shingle_k: int, small_max: int) -> DataFrame:
     """Size-partitioned candidate pairs for ``containment_pairs``
     (``admission="ensemble"``): the union of (a) every pair sharing a
     shingle with a ≤ ``small_max``-shingle document — via a broadcast
@@ -759,8 +731,7 @@ def _ensemble_candidates(df: DataFrame, id_col: str, text_col: str,
                    .filter(F.col(id_col) != F.col("__sid"))
                    .select(F.least(id_col, "__sid").alias("id_a"),
                            F.greatest(id_col, "__sid").alias("id_b")))
-    mh_pairs = minhash_near_dup_pairs(df, id_col, text_col, k=minhash_k,
-                                      bands=minhash_bands,
+    mh_pairs = minhash_near_dup_pairs(df, id_col, text_col,
                                       shingle_k=shingle_k
                                       ).select("id_a", "id_b")
     return small_pairs.union(mh_pairs).distinct()
@@ -980,7 +951,6 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
 
 def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
                    n_centroids: int = 16, min_cosine: float = 0.9,
-                   kmeans_iters: int = 0,
                    max_cluster_size: int | None = 10000) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al.,
     arXiv:2303.09540): cluster the embedding corpus with the IVF coarse
@@ -1012,14 +982,13 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     paper (~sqrt(N) clusters) so the expected cluster stays bounded,
     and ``max_cluster_size`` drops degenerate hot clusters (their
     members are near-always exact/fingerprint dups — route those
-    through ``exact_dup_groups``). ``kmeans_iters=0`` (deterministic seed
-    centroids) is the oracle-reproducible path; Lloyd refinement
-    improves cluster balance on real corpora.
+    through ``exact_dup_groups``). The centroids are the deterministic
+    lowest-id seeds, so the result is oracle-reproducible.
     """
     from zacks_estimates_financial_statements_spark.operators.similarity \
         import ivf_assign
 
-    assign, _ = ivf_assign(df, n_centroids, id_col, vec_col, kmeans_iters)
+    assign, _ = ivf_assign(df, n_centroids, id_col, vec_col)
     clustered = df.select(F.col(id_col), F.col(vec_col)).join(assign, id_col)
     # payload = (vector, hoisted norm): one dot per pair, norms per row
     withn = clustered.select(
@@ -1038,8 +1007,8 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
             .withColumn("keep", F.col("dup_of").isNull()))
 
 
-def paragraph_dedup(df: DataFrame, id_col: str, text_col: str,
-                    sep: str = r"\n+") -> DataFrame:
+def paragraph_dedup(df: DataFrame, id_col: str,
+                    text_col: str) -> DataFrame:
     """CCNet-style paragraph-level deduplication (Wenzek et al.,
     arXiv:1911.00359 §3.1): drop every paragraph whose normalized
     fingerprint already occurred earlier in the corpus (first
@@ -1082,7 +1051,7 @@ def paragraph_dedup(df: DataFrame, id_col: str, text_col: str,
     # their output rows remain (n_paras 0, clean_text '').
     paras = (df.filter(F.col(id_col).isNotNull())
              .select(F.col(id_col),
-                     F.posexplode_outer(F.split(F.col(text_col), sep))
+                     F.posexplode_outer(F.split(F.col(text_col), r"\n+"))
                      .alias("__pidx", "__para"))
              .filter(F.col("__para").isNotNull()
                      & (F.trim(F.col("__para")) != ""))

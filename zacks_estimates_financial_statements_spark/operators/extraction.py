@@ -90,11 +90,10 @@ def strip_html_tags(col: Column) -> Column:
     return F.trim(F.regexp_replace(x, WS_RUN, " "))
 
 
-def extract_links(df: DataFrame, id_col: str, html_col: str,
-                  canonicalize: bool = True) -> DataFrame:
+def extract_links(df: DataFrame, id_col: str, html_col: str) -> DataFrame:
     """Outbound-link extraction from HTML — the crawl-frontier /
-    link-graph feeder (the edge source for ``graph.pagerank``'s
-    quality prior and for ``curation.domain_quota``'s host accounting).
+    link-graph feeder (the edge source for ``graph.pagerank``'s quality
+    prior and for ``curation.domain_quota``'s host accounting).
 
     Hrefs are pulled with two RE2∩Java-safe passes (double-quoted then
     single-quoted attribute values — alternation with per-quote groups
@@ -103,14 +102,13 @@ def extract_links(df: DataFrame, id_col: str, html_col: str,
     positions assigned by ``posexplode`` — so ``link_pos`` is 1-based
     over "all double-quoted matches in document order, then all
     single-quoted". Only absolute http(s) URLs survive (mailto:,
-    javascript:, relative paths drop); with ``canonicalize`` each
-    survivor also gets ``functions.web.canonical_url``'s normal form,
-    ready for host grouping and URL-level dedup.
-
+    javascript:, relative paths drop); each survivor also gets
+    ``functions.web.canonical_url``'s normal form, ready for host
+    grouping and URL-level dedup.
     One zero-shuffle projection + explode — token-linear in page
     bytes, no DOM construction, no UDF.
 
-    Output: ``(id, link_pos, url, canonical_url?)``.
+    Output: ``(id, link_pos, url, canonical_url)``.
     """
     from zacks_estimates_financial_statements_spark.functions import web
 
@@ -127,17 +125,13 @@ def extract_links(df: DataFrame, id_col: str, html_col: str,
         F.col(html_col),
         F.lit(HREF_SQ_RE),
         F.lit(1))
-    exploded = (df.select(F.col(id_col),
-                          F.posexplode_outer(F.concat(dq, sq))
-                          .alias("__p", "url"))
-                .filter(F.col("url").rlike(HTTP_SCHEME_RE))
-                .select(F.col(id_col),
-                        (F.col("__p") + 1).alias("link_pos"),
-                        "url"))
-    if not canonicalize:
-        return exploded
-    return exploded.withColumn("canonical_url",
-                               web.canonical_url(F.col("url")))
+    return (df.select(F.col(id_col),
+                      F.posexplode_outer(F.concat(dq, sq))
+                      .alias("__p", "url"))
+            .filter(F.col("url").rlike(HTTP_SCHEME_RE))
+            .select(F.col(id_col), (F.col("__p") + 1).alias("link_pos"),
+                    "url")
+            .withColumn("canonical_url", web.canonical_url(F.col("url"))))
 
 
 def extract_tables(df: DataFrame, id_col: str,

@@ -246,9 +246,12 @@ def resolve_duplicate_clusters(df: DataFrame, pairs: DataFrame,
             .withColumn("keep", F.col(id_col) == F.col("component")))
 
 
+#: PageRank damping factor (the paper's value)
+PAGERANK_DAMPING = 0.85
+
+
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             n_iter: int = 5, damping: float = 0.85,
-             reliable: bool = False) -> DataFrame:
+             n_iter: int = 5, reliable: bool = False) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge set (Page, Brin,
     Motwani, Winograd 1999) — the crawl-side quality prior: a host/page
     linked from many well-linked pages outranks orphaned spam farms,
@@ -273,7 +276,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     convergence signature) — never the graph.
 
     Returns (node, rank) with ranks summing to ~1 (quantization drift
-    bounded by 1e-6 · |V| · n_iter).
+    bounded by 1e-6 · |V| · n_iter). The damping factor is the
+    paper's 0.85 (``PAGERANK_DAMPING``).
     """
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
          .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -294,6 +298,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     if n == 0:
         return base.select("node", F.lit(0.0).alias("rank"))
     ranks = mat(base.withColumn("rank", F.lit(round(1.0 / n, 6))))
+    damping = PAGERANK_DAMPING
     teleport = (1.0 - damping) / n
     for _ in range(n_iter):
         dang = (ranks.filter(F.col("deg").isNull())

@@ -11,7 +11,8 @@ only inside buckets.
 ``fuzzy_join`` blocks on character prefix AND suffix keys: two
 broadcast/shuffle equi-joins whose union covers every pair that agrees
 on either end of the string. For a single character edit at position
-``p`` of a length-``L`` string, the prefix block (first ``m`` chars)
+``p`` of a length-``L`` string, the prefix block (first
+``m = BLOCK_CHARS`` chars)
 catches ``p >= m`` and the suffix block catches ``p <= L-m-1`` — full
 recall for one edit when ``L >= 2m``; multi-edit recall is best-effort,
 as in any blocking scheme (add more passes — sorted-neighborhood,
@@ -32,6 +33,10 @@ from zacks_estimates_financial_statements_spark.functions.text import ascii_fold
 from zacks_estimates_financial_statements_spark.util import persist
 
 
+#: prefix/suffix length of ``fuzzy_join``'s blocking keys
+BLOCK_CHARS = 3
+
+
 def linkage_key(col: Column) -> Column:
     """The normalized key edit distances are computed over: ascii_fold
     (the shared 162-pair diacritic translate table) then strip every
@@ -50,11 +55,11 @@ def linkage_key(col: Column) -> Column:
 
 def fuzzy_join(left: DataFrame, right: DataFrame,
                left_key: str, right_key: str,
-               max_dist: int = 2, block_chars: int = 3) -> DataFrame:
+               max_dist: int = 2) -> DataFrame:
     """All (left, right) pairs with ``levenshtein(left_key, right_key)
-    <= max_dist``, restricted to pairs sharing a ``block_chars`` prefix
+    <= max_dist``, restricted to pairs sharing a ``BLOCK_CHARS`` prefix
     OR suffix (exact recall for one edit on strings of length
-    ``>= 2*block_chars``; see module docstring).
+    ``>= 2*BLOCK_CHARS``; see module docstring).
 
     Output: every left column, every right column (caller aliases
     collisions), ``dist``.
@@ -110,10 +115,11 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
                    .withColumn("__rnorm", linkage_key(rk)))
     lkeys = lall.filter(ln.isNotNull() & (ln != ""))
     rkeys = rall.filter(rn.isNotNull() & (rn != ""))
-    l = lkeys.withColumn("__lpre", F.substring(ln, 1, block_chars)) \
-             .withColumn("__lsuf", F.substring(ln, -block_chars, block_chars))
-    r = rkeys.withColumn("__rpre", F.substring(rn, 1, block_chars)) \
-             .withColumn("__rsuf", F.substring(rn, -block_chars, block_chars))
+    m = BLOCK_CHARS
+    l = lkeys.withColumn("__lpre", F.substring(ln, 1, m)) \
+             .withColumn("__lsuf", F.substring(ln, -m, m))
+    r = rkeys.withColumn("__rpre", F.substring(rn, 1, m)) \
+             .withColumn("__rsuf", F.substring(rn, -m, m))
     pre = l.join(r, F.col("__lpre") == F.col("__rpre"))
     suf = l.join(r, F.col("__lsuf") == F.col("__rsuf"))
     cand = (pre.unionByName(suf)

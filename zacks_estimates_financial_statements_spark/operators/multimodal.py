@@ -19,8 +19,8 @@ signatures) is real and tested. Codec status per modality:
   is REAL for MJPEG-in-MP4 (sample-table demux slices each scheduled
   tick's JPEG sample; the bytes decode with the baseline JPEG codec).
   Non-MJPEG codecs (H.264/HEVC) still fall back to a clearly-flagged
-  stub marker row (``source = 'stub:…'``) or raise in strict mode —
-  their decoders need libraries not in this container.
+  stub marker row (``source = 'stub:…'``) — their decoders need
+  libraries the package does not depend on.
 
 Design notes for 100 TB:
 - media rows are large; ``mapInPandas`` with a bounded
@@ -63,20 +63,17 @@ FRAME_SAMPLE_SCHEMA = (
     "source string"
 )
 
-def sample_video_frames(media: DataFrame, every_ms: int = 1000,
-                        strict: bool = False) -> DataFrame:
+def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video payloads → sampled frame rows.
 
-    Frame extraction is REAL for MJPEG-in-MP4: the ISO-BMFF sample
-    tables are demuxed (``codecs.parse_mp4_samples``) and each sampled
-    tick emits the actual JPEG sample nearest-at-or-before it
-    (``source = 'mjpeg'``; the bytes feed ``codecs.decode_jpeg``
-    directly). Payloads whose video codec is not MJPEG (H.264/HEVC …)
-    fall back to a clearly-flagged deterministic stub marker
-    (``source = 'stub:…'``) or raise in ``strict`` mode; the sampling
-    schedule stays real either way — when the ``duration_ms`` metadata
-    column is null the duration comes from the payload's actual
-    ``mvhd`` box."""
+    Frame extraction is REAL for MJPEG-in-MP4: the ISO-BMFF sample tables
+    are demuxed (``codecs.parse_mp4_samples``) and each sampled tick emits
+    the actual JPEG sample nearest-at-or-before it (``source = 'mjpeg'``;
+    the bytes feed ``codecs.decode_jpeg`` directly). Payloads whose video
+    codec is not MJPEG (H.264/HEVC …) fall back to a clearly-flagged
+    deterministic stub marker (``source = 'stub:…'``); the sampling schedule
+    stays real either way — when the ``duration_ms`` metadata column is null
+    the duration comes from the payload's actual ``mvhd`` box."""
     import pandas as pd
 
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
@@ -118,9 +115,6 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000,
                                      "source": "mjpeg"})
                     continue
                 except (ValueError, NotImplementedError) as exc:
-                    if strict:
-                        raise NotImplementedError(
-                            f"real frame extraction unavailable: {exc}")
                     reason = str(exc)
                 if pd.isna(dur):
                     try:
@@ -342,8 +336,7 @@ def synthesize_decode_invariants(ids: DataFrame,
 PHASH_SCHEMA = "media_id long, dhash long, decode_error string"
 
 
-def perceptual_hashes(media: DataFrame,
-                      hash_size: int = 8) -> DataFrame:
+def perceptual_hashes(media: DataFrame) -> DataFrame:
     """64-bit dHash per image payload (REAL decode via
     ``functions/codecs.py``; Krawetz difference hash — brightness-shift
     invariant, robust to re-encode/resize). Rows whose payload has no
@@ -366,8 +359,7 @@ def perceptual_hashes(media: DataFrame,
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
                 try:
-                    h = codecs.dhash64(codecs.decode_image(payload),
-                                       hash_size)
+                    h = codecs.dhash64(codecs.decode_image(payload))
                     if h >= 1 << 63:
                         h -= 1 << 64
                     rows.append({"media_id": mid, "dhash": h,
@@ -386,7 +378,6 @@ def perceptual_hashes(media: DataFrame,
 
 
 def media_near_dup_pairs(media: DataFrame, max_hamming: int = 4,
-                         hash_size: int = 8,
                          max_bucket_size: int | None = 10000) -> DataFrame:
     """Near-duplicate IMAGE pairs: perceptual dHash sketches paired by
     the shared pigeonhole banding engine
@@ -400,7 +391,7 @@ def media_near_dup_pairs(media: DataFrame, max_hamming: int = 4,
     apart."""
     from zacks_estimates_financial_statements_spark.operators import dedup
 
-    sketches = (perceptual_hashes(media, hash_size)
+    sketches = (perceptual_hashes(media)
                 .filter(F.col("dhash").isNotNull())
                 .select("media_id", "dhash"))
     return dedup.hamming_near_dup_pairs(
@@ -451,8 +442,7 @@ VIDEO_FP_SCHEMA = ("media_id long, frame_idx int, ts_ms long, "
 _FRAME_ID_SPAN = 1_000_000
 
 
-def video_fingerprints(media: DataFrame, every_ms: int = 1000,
-                       hash_size: int = 8) -> DataFrame:
+def video_fingerprints(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Per-video perceptual fingerprint: the sampled-frame sequence
     hashed frame-by-frame with the same dHash the image tier uses.
     Only REAL decoded frames are hashed (``source = 'mjpeg'``) — stub
@@ -476,8 +466,7 @@ def video_fingerprints(media: DataFrame, every_ms: int = 1000,
             for mid, fi, ts, fb in zip(pdf["media_id"], pdf["frame_idx"],
                                        pdf["ts_ms"], pdf["frame_bytes"]):
                 try:
-                    h = codecs.dhash64(
-                        codecs.decode_jpeg(bytes(fb)), hash_size)
+                    h = codecs.dhash64(codecs.decode_jpeg(bytes(fb)))
                     if h >= 1 << 63:
                         h -= 1 << 64
                     rows.append({"media_id": mid, "frame_idx": fi,
@@ -497,9 +486,7 @@ def video_fingerprints(media: DataFrame, every_ms: int = 1000,
 
 
 def video_near_dup_pairs(media: DataFrame, every_ms: int = 1000,
-                         max_hamming: int = 4,
-                         min_overlap: float = 0.5,
-                         hash_size: int = 8) -> DataFrame:
+                         max_hamming: int = 4) -> DataFrame:
     """Cross-VIDEO near-duplicate detection: two videos are near-dups
     when a large share of the shorter one's sampled frames each have a
     perceptual near-match in the other (containment overlap — catches
@@ -512,13 +499,13 @@ def video_near_dup_pairs(media: DataFrame, every_ms: int = 1000,
     per video pair (map-side combined), and overlap compares matched
     distinct frames against each side's frame count. Output:
     ``(video_a, video_b, matched_a, matched_b, n_a, n_b, overlap)``
-    with ``video_a < video_b``, filtered to ``overlap >= min_overlap``.
+    with ``video_a < video_b``, filtered to ``overlap >= MIN_OVERLAP``.
     The banding/overlap tail is the shared ``sequence_near_dup_pairs``
     (audio reuses it over its own frame hashes).
     """
     out = sequence_near_dup_pairs(
-        video_fingerprints(media, every_ms, hash_size), "dhash",
-        max_hamming=max_hamming, min_overlap=min_overlap)
+        video_fingerprints(media, every_ms), "dhash",
+        max_hamming=max_hamming)
     return (out.withColumnRenamed("media_a", "video_a")
             .withColumnRenamed("media_b", "video_b"))
 
@@ -527,12 +514,11 @@ AUDIO_FP_SCHEMA = ("media_id long, frame_idx int, fp long, "
                    "decode_error string")
 
 
-def audio_fingerprints(media: DataFrame, frame_ms: int = 100,
-                       n_bands: int = 65) -> DataFrame:
+def audio_fingerprints(media: DataFrame, frame_ms: int = 100) -> DataFrame:
     """Per-window robust audio hash (the spectral-shape half of
     Haitsma & Kalker 2002's scheme): the signal is framed into
     ``frame_ms`` windows, each window's spectrum is split into
-    ``n_bands`` contiguous energy bands, and bit ``b`` is the sign of
+    65 contiguous energy bands, and bit ``b`` is the sign of
     the adjacent-band energy difference ``E[b+1] - E[b]``. Signs of
     differences are invariant to uniform volume scaling and robust to
     re-encode noise, which is the point: the same clip at -6 dB or
@@ -544,14 +530,12 @@ def audio_fingerprints(media: DataFrame, frame_ms: int = 100,
 
     REAL decode only (PCM WAV via ``functions/codecs.py``); rows whose
     payload cannot decode quarantine with ``decode_error``. One bounded
-    ``mapInPandas``; 64 bits per frame feed the same pigeonhole hamming
-    banding as every other sketch tier."""
+    ``mapInPandas``; the 64 difference bits per frame fill one long for
+    the same pigeonhole hamming banding as every other sketch tier."""
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
 
     ensure_package_on_executors(media.sparkSession)
-    if n_bands != 65:
-        raise ValueError("n_bands must be 65: 64 difference bits fill "
-                         "one long for the shared hamming banding")
+    n_bands = 65
 
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
@@ -593,9 +577,12 @@ def audio_fingerprints(media: DataFrame, frame_ms: int = 100,
             .mapInPandas(fn, AUDIO_FP_SCHEMA))
 
 
+#: share of the shorter sequence's frames that must match for a near-dup
+MIN_OVERLAP = 0.5
+
+
 def sequence_near_dup_pairs(fp: DataFrame, hash_col: str,
-                            max_hamming: int = 4,
-                            min_overlap: float = 0.5) -> DataFrame:
+                            max_hamming: int = 4) -> DataFrame:
     """Shared tail of the video/audio near-dup detectors: per-frame
     64-bit hashes ``(media_id, frame_idx, <hash_col>)`` → banded
     hamming frame pairs (surrogate id, equi-join on band values) →
@@ -632,18 +619,17 @@ def sequence_near_dup_pairs(fp: DataFrame, hash_col: str,
                                  F.col("matched_b") / F.col("n_b")), 6)
     return (out.select("media_a", "media_b", "matched_a", "matched_b",
                        "n_a", "n_b", overlap.alias("overlap"))
-            .filter(F.col("overlap") >= min_overlap))
+            .filter(F.col("overlap") >= MIN_OVERLAP))
 
 
 def audio_near_dup_pairs(media: DataFrame, frame_ms: int = 100,
-                         max_hamming: int = 6,
-                         min_overlap: float = 0.5) -> DataFrame:
+                         max_hamming: int = 6) -> DataFrame:
     """Cross-AUDIO near-duplicate detection: the audio tier of the
     dedup ladder — same containment-overlap contract as
     ``video_near_dup_pairs`` over the Haitsma-Kalker frame hashes."""
     return sequence_near_dup_pairs(
         audio_fingerprints(media, frame_ms), "fp",
-        max_hamming=max_hamming, min_overlap=min_overlap)
+        max_hamming=max_hamming)
 
 
 # ---------------------------------------------------------------------------

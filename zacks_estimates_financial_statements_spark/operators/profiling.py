@@ -51,17 +51,20 @@ def _render(col: F.Column, dt: Ty.DataType) -> F.Column:
     return col.cast("string")
 
 
-def profile_table(df: DataFrame, columns: list[str] | None = None,
-                  exact: bool = False, rsd: float = 0.05) -> DataFrame:
+def profile_table(df: DataFrame, exact: bool = False) -> DataFrame:
     """Per-column profile of ``df`` as one single-scan aggregation.
 
-    Output: one row per profiled column —
+    Output: one row per column of ``df`` —
     ``column, n_rows, n_nulls, n_distinct, min_value, max_value,
     avg_len`` (``avg_len`` is the mean string length, string columns
     only; min/max in the canonical text form; ``n_distinct`` excludes
     NULLs and is approximate unless ``exact``).
+
+    ``exact`` scans ``df`` twice; the job fails when the two scans
+    count different rows (a non-deterministic input), rather than
+    returning a profile of neither.
     """
-    cols = columns or df.columns
+    cols = df.columns
     aggs = [F.count(F.lit(1)).alias("__n")]
     dist_aggs = []
     for c in cols:
@@ -70,7 +73,7 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
         aggs.append(F.count(q).alias(f"{c}__nn"))
         if isinstance(dt, _ORDERED):
             nd = (F.countDistinct(q) if exact
-                  else F.approx_count_distinct(q, rsd))
+                  else F.approx_count_distinct(q))
             # EXACT distinct counts go into a SEPARATE aggregation
             # (r14): Catalyst rewrites multi-column count(DISTINCT)
             # with an Expand (one row replica per distinct column),
@@ -101,13 +104,20 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
         # BroadcastNestedLoopJoin (the plan_audit-banned shape):
         # lit(1) = lit(1) folds to true, count(*) * 0 folds to 0.
         # Joining the two panels on count(*) ITSELF is fold-proof and
-        # trivially equal on both sides (same relation, same scan) —
-        # the 1-row panels meet in a broadcast hash join.
+        # equal on both sides when ``df`` is deterministic — the 1-row
+        # panels meet in a broadcast hash join. The join is LEFT so
+        # that two scans counting different rows leave __k NULL and
+        # raise, instead of an inner join's silent empty profile.
         dist_aggs.append(F.count(F.lit(1)).alias("__k"))
         dist_row = F.broadcast(df.agg(*dist_aggs))
-        row = (df.agg(*aggs)
-               .join(dist_row, F.col("__n") == F.col("__k"))
-               .drop("__k"))
+        joined = df.agg(*aggs).join(dist_row, F.col("__n") == F.col("__k"),
+                                    "left")
+        row = joined.select(
+            *[c for c in joined.columns if c not in ("__n", "__k")],
+            F.coalesce(F.col("__k"), F.raise_error(F.lit(
+                "profile_table: the two scans of the input counted "
+                "different rows (non-deterministic input)"))
+                .cast("long")).alias("__n"))
     else:
         row = df.agg(*aggs)
     panels = F.array(*[
@@ -122,8 +132,12 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
     return (row.select(F.explode(panels).alias("p")).select("p.*"))
 
 
+#: add-alpha smoothing of ``distribution_drift``'s bucket shares
+DRIFT_ALPHA = 0.5
+
+
 def distribution_drift(reference: DataFrame, current: DataFrame,
-                       key, alpha: float = 0.5) -> DataFrame:
+                       key) -> DataFrame:
     """Per-bucket distribution drift between two corpus snapshots —
     PSI (population stability index, the model-monitoring standard)
     and KL divergence contributions over a categorical key (language,
@@ -131,9 +145,9 @@ def distribution_drift(reference: DataFrame, current: DataFrame,
     bucket for numerics).
 
     ``key`` is a column name or Column evaluated on BOTH frames. Per
-    bucket b with add-``alpha`` smoothing over the UNION of observed
-    buckets (so a bucket present on one side only cannot divide by
-    zero, and the totals still sum to 1):
+    bucket b with add-α smoothing (α = ``DRIFT_ALPHA``) over the UNION
+    of observed buckets (so a bucket present on one side only cannot
+    divide by zero, and the totals still sum to 1):
 
         p_b = (n_ref_b + α) / (N_ref + α·B)
         q_b = (n_cur_b + α) / (N_cur + α·B)
@@ -160,6 +174,7 @@ def distribution_drift(reference: DataFrame, current: DataFrame,
          .select("bucket",
                  F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
                  F.coalesce("n_cur", F.lit(0)).alias("n_cur")))
+    alpha = DRIFT_ALPHA
     tot = j.agg(F.sum("n_ref").alias("__tr"),
                 F.sum("n_cur").alias("__tc"),
                 F.count("*").alias("__b"))
@@ -179,13 +194,14 @@ def distribution_drift(reference: DataFrame, current: DataFrame,
 
 #: scale factor making MAD a consistent sigma estimator under normality
 MAD_SIGMA = 1.4826
+#: robust sigmas beyond the median that flag an outlier
+MAD_K = 3.5
 
 
 def robust_outliers(df: DataFrame, ts_col: str, group_cols: list[str],
-                    value_col: str, granularity: str = "day",
-                    k: float = 3.5) -> DataFrame:
-    """Per-time-bucket robust anomaly flags: a value is an outlier when
-    its absolute deviation from the bucket median exceeds ``k`` robust
+                    value_col: str) -> DataFrame:
+    """Per-day robust anomaly flags: a value is an outlier when
+    its absolute deviation from the day's median exceeds ``MAD_K`` robust
     sigmas (median absolute deviation × 1.4826 — Iglewicz & Hoaglin's
     modified z-score, the standard ingestion-drift detector; mean/stddev
     would let the outliers it hunts drag the threshold toward
@@ -210,7 +226,7 @@ def robust_outliers(df: DataFrame, ts_col: str, group_cols: list[str],
     """
     from pyspark.sql.functions import broadcast
 
-    bucket = F.date_trunc(granularity, F.col(ts_col)).alias("bucket")
+    bucket = F.date_trunc("day", F.col(ts_col)).alias("bucket")
     keys = group_cols + ["bucket"]
     v = F.col(value_col)
     if isinstance(df.schema[value_col].dataType,
@@ -229,7 +245,7 @@ def robust_outliers(df: DataFrame, ts_col: str, group_cols: list[str],
         *df.columns, "bucket",
         F.round("med", 6).alias("med"), F.round("mad", 6).alias("mad"),
         (F.abs(F.col("__v") - F.col("med"))
-         > F.lit(k) * F.lit(MAD_SIGMA) * F.col("mad")).alias("is_outlier"))
+         > F.lit(MAD_K) * F.lit(MAD_SIGMA) * F.col("mad")).alias("is_outlier"))
 
 
 def _mcast(col: F.Column, dec: str) -> F.Column:
@@ -313,22 +329,19 @@ def correlation_matrix(df: DataFrame, cols: list[str],
 
 
 def standardize(df: DataFrame, cols: list[str],
-                method: str = "zscore", exact: bool = True) -> DataFrame:
-    """Feature scaling for ML preprocessing: ``zscore`` ((x−μ)/σ) or
-    ``minmax`` ((x−min)/(max−min)) per column, appended as
-    ``<col>__scaled``. ONE stats aggregation over one scan; the 1-row
-    stats relation attaches as a literal-free broadcast (crossJoin of a
-    single aggregated row — the standard scalar-attach shape), so the
-    fact table is never shuffled. Zero-variance/constant columns scale
-    to NULL, not a division error. Means/σ are decimal-routed and the
-    per-row result rounds to 6 — deterministic cross-engine.
+                exact: bool = True) -> DataFrame:
+    """Feature scaling for ML preprocessing: the z-score (x−μ)/σ per column,
+    appended as ``<col>__scaled``. ONE stats aggregation over one scan; the
+    1-row stats relation attaches as a literal-free broadcast (crossJoin of
+    a single aggregated row — the standard scalar-attach shape), so the fact
+    table is never shuffled. Zero-variance/constant columns scale to NULL,
+    not a division error. Means/σ are decimal-routed and the per-row result
+    rounds to 6 — deterministic cross-engine.
 
     σ is the POPULATION standard deviation (``/n``): scaling is a
     transform, not an inference; both engines compute it from the same
     exact decimal moments.
     """
-    if method not in ("zscore", "minmax"):
-        raise ValueError(f"method must be zscore|minmax, got {method!r}")
     # exact=False: double moments, ~4x faster, last-ulp drift — see
     # correlation_matrix's docstring for the measured tradeoff; the
     # guarded terms are hoisted into a projection below the agg for the
@@ -338,41 +351,30 @@ def standardize(df: DataFrame, cols: list[str],
     names: list = []
     for c in cols:
         x = F.col(c)
-        if method == "zscore":
-            proj += [_mcast(x, dec).alias(f"{c}__s"),
-                     _mcast(F.round(x * x, 6), dec).alias(f"{c}__ss")]
-            names += [(f"{c}__s", F.sum), (f"{c}__ss", F.sum)]
-        else:
-            proj += [x.alias(f"{c}__mn"), x.alias(f"{c}__mx")]
-            names += [(f"{c}__mn", F.min), (f"{c}__mx", F.max)]
+        proj += [_mcast(x, dec).alias(f"{c}__s"),
+                 _mcast(F.round(x * x, 6), dec).alias(f"{c}__ss")]
+        names += [f"{c}__s", f"{c}__ss"]
     stats = df.select(*proj).agg(
         F.count(F.lit(1)).alias("__n"),
-        *[fn(F.col(n)).alias(n) for n, fn in names])
+        *[F.sum(F.col(n)).alias(n) for n in names])
     out = df.crossJoin(F.broadcast(stats))
     for c in cols:
         x = F.col(c).cast("double")
-        if method == "zscore":
-            n = F.col("__n").cast("double")
-            mu = F.col(f"{c}__s").cast("double") / n
-            var = (F.col(f"{c}__ss").cast("double") / n) - mu * mu
-            # E[x²]−μ² from independently-rounded decimal moments can go
-            # microscopically negative on constant columns (>6 decimal
-            # digits) → sqrt = NaN instead of the promised NULL path.
-            sigma = F.sqrt(F.greatest(var, F.lit(0.0)))
-            scaled = F.round((x - mu) / F.nullif(sigma, F.lit(0.0)), 6)
-        else:
-            mn = F.col(f"{c}__mn").cast("double")
-            mx = F.col(f"{c}__mx").cast("double")
-            scaled = F.round((x - mn) / F.nullif(mx - mn, F.lit(0.0)), 6)
+        n = F.col("__n").cast("double")
+        mu = F.col(f"{c}__s").cast("double") / n
+        var = (F.col(f"{c}__ss").cast("double") / n) - mu * mu
+        # E[x²]−μ² from independently-rounded decimal moments can go
+        # microscopically negative on constant columns (>6 decimal
+        # digits) → sqrt = NaN instead of the promised NULL path.
+        sigma = F.sqrt(F.greatest(var, F.lit(0.0)))
+        scaled = F.round((x - mu) / F.nullif(sigma, F.lit(0.0)), 6)
         # out-of-domain x receives no scaled value (r12 extreme dial):
         # it carries no exact statistics — and round-to-6 of a 1e30
         # z-score differs between engines in the last ulp anyway
         from zacks_estimates_financial_statements_spark.util import DEC6_DOMAIN
         scaled = F.when(F.abs(x) < F.lit(DEC6_DOMAIN), scaled)
         out = out.withColumn(f"{c}__scaled", scaled)
-    drop = ["__n"] + [f"{c}__{suf}" for c in cols
-                      for suf in ("s", "ss", "mn", "mx")]
-    return out.drop(*[d for d in drop if d in out.columns])
+    return out.drop("__n", *names)
 
 
 def value_histogram(df: DataFrame, value_col: str, lo: float, hi: float,

@@ -9,6 +9,8 @@ pass. Formula (Robertson/Spärck Jones, TREC-3 Okapi):
                               (tf(t,d) + k1·(1 − b + b·|d|/avgdl))
     idf(t) = ln(1 + (N − df_t + 0.5) / (df_t + 0.5))
 
+with the usual k1 = 1.2, b = 0.75.
+
 Plan shape — the trick is that the QUERY is tiny, so everything heavy
 filters before it shuffles: the token explode drops every non-query
 term in the same codegen stage (an ``isin`` over the broadcast-able
@@ -28,10 +30,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: BM25 term-frequency saturation and length normalization
+BM25_K1 = 1.2
+BM25_B = 0.75
+#: reciprocal-rank-fusion offset (Cormack et al.'s k = 60)
+RRF_K = 60
+
 
 def bm25_score(df: DataFrame, id_col: str, text_col: str,
-               query: list[str], k1: float = 1.2,
-               b: float = 0.75) -> DataFrame:
+               query: list[str]) -> DataFrame:
     """BM25 scores for every document matching ≥1 query term:
     ``(id, n_matched_terms, score)``. Query terms are lowercased and
     deduplicated; callers sort/limit for top-k (kept out of the
@@ -73,6 +80,7 @@ def bm25_score(df: DataFrame, id_col: str, text_col: str,
                    "__avgdl"))
     per_term = (tf.join(dl, id_col)
                 .join(F.broadcast(dft), "__tok"))
+    k1, b = BM25_K1, BM25_B
     denom = (F.col("__tf")
              + k1 * (1.0 - b + b * F.col("__dl") / F.col("__avgdl")))
     contrib = F.round(
@@ -83,12 +91,11 @@ def bm25_score(df: DataFrame, id_col: str, text_col: str,
                  F.sum(contrib).cast("double").alias("score")))
 
 
-def rrf_fuse(ranked: list[DataFrame], id_col: str,
-             rrf_k: int = 60) -> DataFrame:
+def rrf_fuse(ranked: list[DataFrame], id_col: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR'09)
     of candidate lists: each input carries ``(id, rank)`` (1-based
     within its own retriever); the fused score is
-    ``Σ 1/(rrf_k + rank)``, with absent ids simply contributing
+    ``Σ 1/(RRF_K + rank)``, with absent ids simply contributing
     nothing. RRF needs no score calibration between retrievers — only
     ranks — which is why it is the standard lexical+semantic fusion.
 
@@ -109,7 +116,7 @@ def rrf_fuse(ranked: list[DataFrame], id_col: str,
     score = None
     for i in range(1, len(ranked) + 1):
         term = F.when(F.col(f"rank_{i}").isNotNull(),
-                      F.lit(1.0) / (F.lit(float(rrf_k))
+                      F.lit(1.0) / (F.lit(float(RRF_K))
                                     + F.col(f"rank_{i}"))) \
             .otherwise(F.lit(0.0))
         score = term if score is None else score + term
@@ -122,7 +129,7 @@ def hybrid_search(docs: DataFrame, id_col: str, text_col: str,
                   query_terms: list[str],
                   emb: DataFrame, vec_id_col: str, vec_col: str,
                   query_vec: list[float],
-                  top_n: int = 100, rrf_k: int = 60) -> DataFrame:
+                  top_n: int = 100) -> DataFrame:
     """Hybrid lexical+semantic retrieval: BM25 candidates and
     cosine-similarity candidates (top-``top_n`` EACH, via distributed
     TakeOrdered — no global sort, no single-partition corpus window)
@@ -169,7 +176,7 @@ def hybrid_search(docs: DataFrame, id_col: str, text_col: str,
            .limit(top_n))
     sem = sem.withColumn("rank", F.row_number().over(
         Window.orderBy(F.col("s").desc(), F.col(id_col).asc())))
-    return rrf_fuse([lex, sem], id_col, rrf_k)
+    return rrf_fuse([lex, sem], id_col)
 
 
 def retrieval_metrics(results: DataFrame, qrels: DataFrame,

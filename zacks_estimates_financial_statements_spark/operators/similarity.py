@@ -198,8 +198,7 @@ def topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
              bucket_bits: int = 8, probe_hamming: int = 1,
              id_col: str = "vec_id", vec_col: str = "embedding",
              query_id_col: str = "query_id",
-             query_vec_col: str = "query_vec",
-             broadcast_queries: bool = True) -> DataFrame:
+             query_vec_col: str = "query_vec") -> DataFrame:
     """Approximate top-k: sign-bit buckets + multi-probe + exact re-rank.
     Same output shape as ``topk_bruteforce`` (fewer rows if a bucket has
     < k candidates).
@@ -229,12 +228,8 @@ def topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .withColumn("__bucket",
                           F.col("__qbucket").bitwiseXOR(F.col("__mask")))
               .drop("__qbucket", "__mask"))
-    # the bucket join stays a hash equi-join either way; the hint only
-    # decides whether the probe side ships to every executor (right for
-    # interactive query sets) or shuffles (right for huge batch query
-    # sets — pass broadcast_queries=False)
-    cand = c.join(F.broadcast(probes) if broadcast_queries else probes,
-                  "__bucket")
+    # the probe side ships to every executor: the corpus never shuffles
+    cand = c.join(F.broadcast(probes), "__bucket")
     cos = V.cosine_prenorm(f"`{vec_col}`", f"`{query_vec_col}`",
                            "__cn", "__qn")
     scored = cand.select(F.col(query_id_col), F.col(id_col),
@@ -261,50 +256,20 @@ def _nearest_centroid(corpus: DataFrame, centroids: DataFrame,
 
 
 def ivf_assign(corpus: DataFrame, n_centroids: int = 16,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               kmeans_iters: int = 0) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantization. Seed centroids are the ``n_centroids``
-    lowest-id vectors (deterministic, oracle-reproducible);
-    ``kmeans_iters`` Lloyd iterations refine them (assign → per-centroid
-    elementwise mean via posexplode + partial-agg avg → reassign). Empty
-    clusters keep their previous centroid. Returns
+               id_col: str = "vec_id",
+               vec_col: str = "embedding") -> tuple[DataFrame, DataFrame]:
+    """IVF coarse quantization. The centroids are the ``n_centroids``
+    lowest-id vectors (deterministic, oracle-reproducible); each vector
+    goes to its nearest one. Returns
     (assignments(id, centroid_id), centroids(centroid_id, centroid_vec)).
-
-    At scale each iteration is one broadcast-scored pass + one shuffle
-    bounded by n_centroids × dims; persist/checkpoint the centroids
-    between iterations on a real cluster to cut lineage replay. Float
-    means make refined runs deterministic up to summation order — the
-    exact-SQL oracle covers the seed path (``kmeans_iters=0``), recall
-    tests cover refinement. NULL-id/NULL-vector rows are excluded (see
-    ``_scorable``) — a NULL id would otherwise be picked as a seed
-    centroid first under Spark's NULLS-FIRST ascending sort."""
+    NULL-id/NULL-vector rows are excluded (see ``_scorable``) — a NULL
+    id would otherwise be picked as a centroid first under Spark's
+    NULLS-FIRST ascending sort."""
     corpus = _scorable(corpus, id_col, vec_col)
     centroids = (unique_seed_prefix(corpus, id_col)
                  .orderBy(F.col(id_col)).limit(n_centroids)
                  .select(F.col(id_col).alias("centroid_id"),
                          F.col(vec_col).alias("centroid_vec")))
-    for _ in range(kmeans_iters):
-        assign = _nearest_centroid(corpus, centroids, id_col, vec_col)
-        comp = (corpus.join(assign, id_col)
-                .select("centroid_id",
-                        F.posexplode(F.col(vec_col)).alias("pos", "v")))
-        means = (comp.groupBy("centroid_id", "pos")
-                 .agg(F.avg("v").alias("m")))
-        refreshed = (means.groupBy("centroid_id")
-                     .agg(F.transform(
-                         F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                         lambda s: s["m"].cast("float"))
-                         .alias("__new_vec")))
-        centroids = (centroids.join(refreshed, "centroid_id", "left")
-                     .select("centroid_id",
-                             F.coalesce(F.col("__new_vec"),
-                                        F.col("centroid_vec"))
-                             .alias("centroid_vec")))
-        # centroids are n_centroids rows — localize them so the next
-        # iteration (and the final assignment) broadcasts a literal
-        # relation instead of replaying the whole per-iteration lineage
-        centroids = corpus.sparkSession.createDataFrame(
-            centroids.collect(), schema=centroids.schema)
     assign = _nearest_centroid(corpus, centroids, id_col, vec_col)
     return assign, centroids
 
@@ -332,13 +297,11 @@ class IvfIndex:
 
 
 def ivf_build(corpus: DataFrame, n_centroids: int = 16,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              kmeans_iters: int = 0) -> IvfIndex:
+              id_col: str = "vec_id", vec_col: str = "embedding") -> IvfIndex:
     """Build (and materialize) the IVF index once, for reuse across
     query batches via ``topk_ivf(..., index=...)``. MEMORY_AND_DISK: at
     100 TB the inverted lists spill rather than evict."""
-    assign, centroids = ivf_assign(corpus, n_centroids, id_col, vec_col,
-                                   kmeans_iters)
+    assign, centroids = ivf_assign(corpus, n_centroids, id_col, vec_col)
     assigned = persist(corpus.join(assign, id_col))
     assigned.count()   # materialize eagerly: build cost is paid here
     centroids = corpus.sparkSession.createDataFrame(
@@ -352,12 +315,10 @@ def topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
              query_id_col: str = "query_id",
              query_vec_col: str = "query_vec",
-             kmeans_iters: int = 0,
              broadcast_queries: bool = True,
              index: IvfIndex | None = None) -> DataFrame:
     """Approximate top-k via IVF: probe the ``nprobe`` closest centroids'
-    lists, exact cosine re-rank within them. ``kmeans_iters`` > 0 turns
-    on Lloyd refinement of the coarse quantizer; ``broadcast_queries``
+    lists, exact cosine re-rank within them. ``broadcast_queries``
     controls whether the probe set ships to executors or shuffles (set
     False for huge batch query sets — the centroid-list join stays an
     equi-join either way).
@@ -370,7 +331,7 @@ def topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
         id_col, vec_col = index.id_col, index.vec_col
     else:
         assign, centroids = ivf_assign(corpus, n_centroids, id_col,
-                                       vec_col, kmeans_iters)
+                                       vec_col)
         corpus_assigned = corpus.join(assign, id_col)
     queries = _scorable(queries, query_id_col, query_vec_col)
     qc = queries.crossJoin(F.broadcast(centroids)).select(
@@ -472,16 +433,12 @@ def quantize_embeddings(df: DataFrame, id_col: str,
 
 def pq_codebook(corpus: DataFrame, dims: int, n_subspaces: int = 4,
                 n_codes: int = 16, id_col: str = "vec_id",
-                vec_col: str = "embedding",
-                kmeans_iters: int = 0) -> DataFrame:
+                vec_col: str = "embedding") -> DataFrame:
     """Train the PQ codebooks: ``(subspace, code_id, code_vec)``.
 
-    Seeds are the sub-vectors of the ``n_codes`` smallest-id corpus
+    The codes are the sub-vectors of the ``n_codes`` smallest-id corpus
     vectors (deterministic — the same convention as ``ivf_assign``, and
-    what makes the zero-iteration form oracle-checkable);
-    ``kmeans_iters`` Lloyd rounds refine each subspace independently
-    (assign by squared-L2, recompute sub-centroid means; empty codes
-    keep their previous centroid). The relation is bounded by
+    what makes the codebook oracle-checkable). The relation is bounded by
     ``n_subspaces × n_codes`` rows and is localized to a literal
     relation, so downstream encode/probe joins broadcast it without
     replaying corpus lineage."""
@@ -501,37 +458,6 @@ def pq_codebook(corpus: DataFrame, dims: int, n_subspaces: int = 4,
     book = (seeds.select("code_id", F.explode(parts).alias("p"))
             .select(F.col("p.subspace").alias("subspace"), "code_id",
                     F.col("p.code_vec").alias("code_vec")))
-    for _ in range(kmeans_iters):
-        sliced = corpus.select(
-            F.col(id_col), F.explode(F.array(*[
-                F.struct(F.lit(m).cast("int").alias("subspace"),
-                         F.slice(F.col(vec_col), m * sub + 1, sub)
-                         .alias("v"))
-                for m in range(n_subspaces)])).alias("p")
-        ).select(id_col, "p.subspace", "p.v")
-        d = F.round(V.sq_l2_fast("v", "code_vec", sub), 6)
-        assign = (sliced.join(F.broadcast(book), "subspace")
-                  .groupBy(id_col, "subspace")
-                  .agg(F.min(F.struct(d.alias("d"),
-                                      F.col("code_id").alias("c"),
-                                      F.col("v").alias("v"))).alias("m"))
-                  .select("subspace", F.col("m.c").alias("code_id"),
-                          F.col("m.v").alias("v")))
-        means = (assign.select("subspace", "code_id",
-                               F.posexplode("v").alias("pos", "x"))
-                 .groupBy("subspace", "code_id", "pos")
-                 .agg(F.avg("x").alias("mx")))
-        refreshed = (means.groupBy("subspace", "code_id")
-                     .agg(F.array_sort(F.collect_list(
-                         F.struct("pos", "mx"))).alias("s"))
-                     .select("subspace", "code_id",
-                             F.transform(F.col("s"),
-                                         lambda t: t["mx"].cast("float"))
-                             .alias("__new")))
-        book = (book.join(refreshed, ["subspace", "code_id"], "left")
-                .select("subspace", "code_id",
-                        F.coalesce("__new", "code_vec")
-                        .alias("code_vec")))
     return corpus.sparkSession.createDataFrame(
         book.collect(), schema="subspace int, code_id int, "
                                "code_vec array<float>")
@@ -568,9 +494,7 @@ def topk_pq_adc(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 query_id_col: str = "query_id",
                 query_vec_col: str = "query_vec",
-                kmeans_iters: int = 0,
-                codebook: DataFrame | None = None,
-                rerank: int | None = None) -> DataFrame:
+                codebook: DataFrame | None = None) -> DataFrame:
     """Approximate top-k by PQ/ADC: corpus vectors are scored through
     their codes against per-query lookup tables, never through their
     floats. Table build is queries × codebook (Q·M·ks rows, broadcast);
@@ -578,17 +502,9 @@ def topk_pq_adc(corpus: DataFrame, queries: DataFrame, k: int = 10,
     broadcast tables, and ONE (query, vec) sum-aggregation (sub-
     distances decimal-summed — exactly reproducible) feeds the per-query
     top-k window. Output: (query_id, vec_id, adc_dist, rank) — smallest
-    approximate distance first, ties to the smaller vec id.
-
-    ``rerank=R`` adds the standard refine stage (IVFADC+R): the ADC
-    window keeps R candidates per query, those R rows (and ONLY those —
-    a bounded semi-join against the float corpus) rescore with exact
-    squared L2, and the output ranks by the exact distance
-    (``exact_dist`` replaces ``adc_dist``). This is what restores
-    recall on hard corpora: ADC compresses the SCAN, the floats are
-    touched for Q·R rows only."""
+    approximate distance first, ties to the smaller vec id."""
     book = codebook if codebook is not None else pq_codebook(
-        corpus, dims, n_subspaces, n_codes, id_col, vec_col, kmeans_iters)
+        corpus, dims, n_subspaces, n_codes, id_col, vec_col)
     codes = pq_encode(corpus, book, dims, n_subspaces, id_col, vec_col)
     sub = dims // n_subspaces
     qparts = queries.select(
@@ -613,23 +529,8 @@ def topk_pq_adc(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .groupBy(query_id_col, id_col)
               .agg(F.round(F.sum("__d").cast("double"), 6)
                    .alias("adc_dist")))
-    if rerank is None:
-        return _rank_topk(scored, query_id_col, k,
-                          [F.asc("adc_dist"), F.col(id_col)])
-    cand = (_rank_topk(scored, query_id_col, max(rerank, k),
-                       [F.asc("adc_dist"), F.col(id_col)])
-            .select(query_id_col, id_col))
-    refined = (cand
-               .join(corpus.select(id_col, vec_col), id_col)
-               .join(F.broadcast(queries.select(query_id_col,
-                                                query_vec_col)),
-                     query_id_col)
-               .select(query_id_col, id_col,
-                       F.round(V.sq_l2_fast(f"`{vec_col}`",
-                                            f"`{query_vec_col}`", dims), 6)
-                       .alias("exact_dist")))
-    return _rank_topk(refined, query_id_col, k,
-                      [F.asc("exact_dist"), F.col(id_col)])
+    return _rank_topk(scored, query_id_col, k,
+                      [F.asc("adc_dist"), F.col(id_col)])
 
 
 def mine_hard_negatives(corpus: DataFrame, anchors: DataFrame,
@@ -683,11 +584,15 @@ def mine_hard_negatives(corpus: DataFrame, anchors: DataFrame,
                     "cosine", "neg_rank"))
 
 
-def rp_signs(in_dim: int, out_dim: int, seed: str = "rproj") -> list[list[int]]:
+#: key of the random-projection sign hash
+RP_SEED = "rproj"
+
+
+def rp_signs(in_dim: int, out_dim: int) -> list[list[int]]:
     """Deterministic ±1 Achlioptas sign matrix (in_dim × out_dim) from
     the repo's keyed-md5 hash: ``sign(i, j) = +1 if
-    md5_60bit(f"{seed}|{i}|{j}") is even else −1``. A pure function of
-    the seed, so the projection is reproducible across runs, engines
+    md5_60bit(f"{RP_SEED}|{i}|{j}") is even else −1``. A pure function of
+    its key, so the projection is reproducible across runs, engines
     and partitionings, and the SQL twin embeds the identical literals
     (generated by THIS function — the matrices cannot drift)."""
     import hashlib
@@ -695,13 +600,12 @@ def rp_signs(in_dim: int, out_dim: int, seed: str = "rproj") -> list[list[int]]:
     def h60(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
-    return [[1 if h60(f"{seed}|{i}|{j}") % 2 == 0 else -1
+    return [[1 if h60(f"{RP_SEED}|{i}|{j}") % 2 == 0 else -1
              for j in range(out_dim)] for i in range(in_dim)]
 
 
 def random_projection(df: DataFrame, id_col: str, vec_col: str,
-                      in_dim: int, out_dim: int = 16,
-                      seed: str = "rproj") -> DataFrame:
+                      in_dim: int, out_dim: int = 16) -> DataFrame:
     """Johnson–Lindenstrauss dimensionality reduction with a
     deterministic ±1 sign matrix (Achlioptas, JCSS 2003: the database-
     friendly sparse projection — E[|y_a − y_b|²] = |x_a − x_b|², so
@@ -735,7 +639,7 @@ def random_projection(df: DataFrame, id_col: str, vec_col: str,
     if not (1 <= out_dim <= in_dim):
         raise ValueError(
             f"need 1 <= out_dim <= in_dim, got {out_dim} vs {in_dim}")
-    signs = rp_signs(in_dim, out_dim, seed)
+    signs = rp_signs(in_dim, out_dim)
     inv_root = 1.0 / (out_dim ** 0.5)
     pre = df.select(
         F.col(id_col),

@@ -12,36 +12,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: bloom bitmap size and hash count: ≈ 1.7% false positives at ~100k
+#: keys, a 128 KiB broadcast
+BLOOM_BITS = 1 << 20
+BLOOM_HASHES = 3
+
+
 def bloom_semi_join(large: DataFrame, small: DataFrame,
-                    on: list[str] | str, how: str = "inner",
-                    n_bits: int = 1 << 20,
-                    n_hashes: int = 3) -> DataFrame:
+                    on: list[str] | str, how: str = "inner") -> DataFrame:
     """Exact ``large.join(small, on, how)`` with an explicit BLOOM
     semi-join reduction on the large side — the 100 TB lever for joins
     whose small side is too big to broadcast exactly but whose KEY SET
     compresses into a bitmap.
 
-    Spark's own runtime bloom filter exists but is conf-gated (and
-    hangs this container's local mode — see session.py's note on
+    Spark's own runtime bloom filter exists but is conf-gated (and hangs
+    local mode — see session.py's note on
     ``spark.sql.optimizer.runtime.bloomFilter``); this operator is the
     deterministic, always-available form. The filter side builds
-    ``n_hashes`` bit positions per distinct key (seeded ``xxhash64``),
-    ORs them into a ``n_bits/64``-word bitmap relation, and folds that
-    into ONE row holding a DENSE ``array<long>`` (O(1) ``element_at``
-    probes — a map column would linear-scan its entries per lookup,
-    measured 6x slower at 10M probes). The probe side attaches it via
-    the whitelisted
-    1-row broadcast crossJoin (the scalar-attach shape — the big side
-    never shuffles for the filter) and keeps only rows whose every bit
-    is set, BEFORE the real join's exchange. False positives survive to
-    the exact join and are eliminated there; false negatives cannot
-    occur (every key set its own bits), so the result is byte-equal to
-    the plain join.
+    ``BLOOM_HASHES`` bit positions per distinct key (seeded ``xxhash64``),
+    ORs them into a ``BLOOM_BITS/64``-word bitmap relation, and folds that
+    into ONE row holding a DENSE ``array<long>`` (O(1) ``element_at`` probes
+    — a map column would linear-scan its entries per lookup, measured 6x
+    slower at 10M probes). The probe side attaches it via the whitelisted
+    1-row broadcast crossJoin (the scalar-attach shape — the big side never
+    shuffles for the filter) and keeps only rows whose every bit is set,
+    BEFORE the real join's exchange. False positives survive to the exact
+    join and are eliminated there; false negatives cannot occur (every key
+    set its own bits), so the result is byte-equal to the plain join.
 
     Only ``inner`` and ``left_semi`` are allowed: for outer joins a
     pre-filter on the probe side would drop rows the join must keep.
-    Default sizing: 2^20 bits / 3 hashes ≈ 1.7% false-positive rate at
-    ~100k keys, a 128 KiB broadcast.
     """
     if how not in ("inner", "left_semi"):
         raise ValueError(
@@ -49,10 +49,11 @@ def bloom_semi_join(large: DataFrame, small: DataFrame,
             f"got {how!r}")
     keys = [on] if isinstance(on, str) else list(on)
     kcols = [F.col(k) for k in keys]
+    n_bits = BLOOM_BITS
 
     def positions(prefix_cols):
         return [F.pmod(F.xxhash64(F.lit(i), *prefix_cols),
-                       F.lit(n_bits)) for i in range(n_hashes)]
+                       F.lit(n_bits)) for i in range(BLOOM_HASHES)]
 
     pos = (small.select(*keys).distinct()
            .select(F.explode(F.array(*positions(kcols))).alias("p")))

@@ -19,9 +19,9 @@ This is the 100 TB-safe plan; a broadcast range join is only viable
 while one whole side fits in memory.
 
 Semantics match DuckDB's ``ASOF JOIN`` (the oracle twin) and pandas
-``merge_asof``: for each left row, the right row with the greatest
-(``backward``) / smallest (``forward``) timestamp satisfying
-``right_ts <= left_ts`` / ``>=``, equal timestamps matching. Callers
+``merge_asof``'s default ``backward`` direction: for each left row, the
+right row with the greatest timestamp satisfying ``right_ts <=
+left_ts``, equal timestamps matching. Callers
 must make the right side unique per (key, timestamp) — with duplicate
 right timestamps "the" as-of row is undefined in every engine; this
 implementation deterministically takes the last one in union order,
@@ -45,44 +45,29 @@ from zacks_estimates_financial_statements_spark.util import dec6
 
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               left_ts: str, right_ts: str,
-              value_cols: list[str] | None = None,
-              direction: str = "backward",
-              tolerance_ms: int | None = None,
               matched_ts_col: str | None = "matched_ts") -> DataFrame:
-    """Attach to every ``left`` row the as-of ``right`` row's values.
+    """Attach to every ``left`` row the values of the latest ``right``
+    row at or before it.
 
     ``on`` is the equality key present in both inputs; ``left_ts`` /
-    ``right_ts`` are timestamp columns. ``value_cols`` (default: every
-    right column except the key and timestamp) are appended to the left
-    schema, NULL when no right row qualifies. ``direction`` is
-    ``"backward"`` (latest right at-or-before, the default) or
-    ``"forward"`` (earliest right at-or-after). ``tolerance_ms`` nulls
-    the attached values when the matched right row is further than the
-    given tolerance from the left timestamp (DuckDB has no tolerance —
-    apply it SQL-side as a CASE when comparing). ``matched_ts_col``
-    names the column carrying the matched right timestamp (None drops
-    it).
+    ``right_ts`` are timestamp columns. Every right column except the
+    key and timestamp is appended to the left schema, NULL when no
+    right row qualifies. ``matched_ts_col`` names the column carrying
+    the matched right timestamp (None drops it).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, "
-                         f"got {direction!r}")
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (on, right_ts)]
-    missing = [c for c in value_cols if c not in right.columns]
-    if missing:
-        raise ValueError(f"value_cols not in right side: {missing}")
+    value_cols = [c for c in right.columns if c not in (on, right_ts)]
     overlap = [c for c in value_cols if c in left.columns]
     if overlap:
-        raise ValueError(f"value_cols collide with left columns: {overlap}"
-                         " — alias the right side first")
+        raise ValueError("right value columns collide with left columns: "
+                         f"{overlap} — alias the right side first")
     if matched_ts_col is not None and matched_ts_col in left.columns:
         raise ValueError(
             f"matched_ts_col {matched_ts_col!r} collides with a left "
             "column — rename it or pass matched_ts_col=None")
 
     if "__rts" in value_cols:
-        raise ValueError("value_cols may not contain the reserved "
-                         "name '__rts'")
+        raise ValueError("the right side may not carry the reserved "
+                         "column name '__rts'")
     # the matched row travels as ONE struct (__rts + every value col):
     # last(struct, ignorenulls) skips only left-row NULL structs, never
     # a right row whose value column happens to be NULL — field-level
@@ -103,30 +88,12 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
         *lcols)
 
     merged = r.unionByName(l)
-    if direction == "backward":
-        w = (Window.partitionBy("__k").orderBy(F.asc("__ts"), F.asc("__side"))
-             .rowsBetween(Window.unboundedPreceding, 0))
-    else:
-        # forward: scan the timeline in reverse (ts desc), so "last
-        # right seen so far" is the SMALLEST right_ts >= left_ts; side
-        # asc keeps the right row ahead of the left at equal timestamps
-        # (inclusive match), mirroring the backward case
-        w = (Window.partitionBy("__k").orderBy(F.desc("__ts"),
-                                               F.asc("__side"))
-             .rowsBetween(Window.unboundedPreceding, 0))
+    w = (Window.partitionBy("__k").orderBy(F.asc("__ts"), F.asc("__side"))
+         .rowsBetween(Window.unboundedPreceding, 0))
     carried = F.last("__rv", ignorenulls=True).over(w).alias("__arv")
 
     out = (merged.select("*", carried)
            .filter(F.col("__side") == 1))
-
-    if tolerance_ms is not None:
-        mts = F.col("__arv").getField("__rts")
-        gap = F.abs(F.unix_micros(F.col("__ts"))
-                    - F.unix_micros(mts)) / 1000
-        keep = mts.isNotNull() & (gap <= F.lit(tolerance_ms))
-        out = out.select(
-            *[c for c in out.columns if c != "__arv"],
-            F.when(keep, F.col("__arv")).alias("__arv"))
 
     final = [F.col(f"__l_{c}").alias(c) for c in left.columns]
     final += [F.col("__arv").getField(c).alias(c) for c in value_cols]

@@ -32,19 +32,16 @@ def topic_summaries(docs: DataFrame, emb: DataFrame,
                     id_col: str = "doc_id", text_col: str = "text",
                     vec_id_col: str = "vec_id",
                     vec_col: str = "embedding",
-                    n_clusters: int = 16, top_terms: int = 5,
-                    kmeans_iters: int = 0) -> DataFrame:
+                    n_clusters: int = 16, top_terms: int = 5) -> DataFrame:
     """Top characteristic terms per embedding cluster:
     ``(centroid_id, n_docs, rank, term, score)`` — ``top_terms`` rows
-    per non-empty cluster. ``kmeans_iters=0`` (deterministic seed
-    centroids) is the oracle-reproducible path; Lloyd refinement gives
-    tighter topics on real corpora (see the SemDeDup recall study for
-    the same trade measured)."""
+    per non-empty cluster. The clusters are ``ivf_assign``'s
+    deterministic lowest-id centroids, so the result is
+    oracle-reproducible."""
     from zacks_estimates_financial_statements_spark.operators.curation import _word_array
     from zacks_estimates_financial_statements_spark.operators.similarity import ivf_assign
 
-    assign, _ = ivf_assign(emb, n_clusters, vec_id_col, vec_col,
-                           kmeans_iters)
+    assign, _ = ivf_assign(emb, n_clusters, vec_id_col, vec_col)
     clustered = docs.join(
         assign.withColumnRenamed(vec_id_col, id_col), id_col)
     n_docs = clustered.groupBy("centroid_id").agg(

@@ -245,8 +245,8 @@ class TableStore:
                               ignore_errors=True)
 
     @contextlib.contextmanager
-    def snapshot(self, version: str | None = None):
-        """Pin a version for the duration of a long multi-action read
+    def snapshot(self):
+        """Pin the live version for the duration of a long multi-action read
         job. ``read()`` resolves ``_CURRENT`` at call time, so a job
         that triggers several Spark actions can otherwise span a
         concurrent writer's pointer flip *and* the GC of the version it
@@ -259,7 +259,7 @@ class TableStore:
             with store.snapshot() as snap:
                 df = snap.read()          # stable across writer flips
         """
-        version = version or self.current_version()
+        version = self.current_version()
         if version is None or not os.path.isdir(
                 os.path.join(self.path, version)):
             raise ValueError(f"cannot pin: version {version!r} of table "
@@ -427,8 +427,7 @@ class TableStore:
         existing_keys = stored.select(*pk).distinct()
         return deduped.join(existing_keys, on=list(pk), how="left_anti")
 
-    def upsert_ignore(self, batch: DataFrame,
-                      pk: tuple[str, ...] | None = None) -> None:
+    def upsert_ignore(self, batch: DataFrame) -> None:
         """W1 — first-write-wins idempotent insert.
 
         1. dedup the batch on PK, one arbitrary row per key (a loader
@@ -439,7 +438,7 @@ class TableStore:
            the PK (see ``_fresh_rows`` for the at-scale rationale),
         3. append.
         """
-        pk = pk or PRIMARY_KEYS[self.name]
+        pk = PRIMARY_KEYS[self.name]
         from pyspark.sql import Window
 
         w = Window.partitionBy(*[F.col(c) for c in pk]).orderBy(F.lit(1))

@@ -70,7 +70,10 @@ _KIND_COLS = {
     "cash_flow": CASH_FLOW_STATEMENT_COLS,
 }
 
-#: unscaled (per-share) columns per kind — everything else is ×1e6 (F7)
+#: unscaled (per-share) columns per kind — everything else is ×1e6 (F7;
+#: income-statement-transform-load.rkt:201-226,
+#: balance-sheet-transform-load.rkt:423-432,
+#: cash-flow-statement-transform-load.2024-02-01.rkt:201-225)
 _UNSCALED = {
     "income": {"diluted_eps_before_non_recurring_items", "diluted_net_eps"},
     "balance": {"book_value_per_share"},

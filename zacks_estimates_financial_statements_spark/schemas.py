@@ -20,7 +20,6 @@ Mapping decisions (SURVEY §1.2/§1.4):
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    BooleanType,
     DateType,
     DecimalType,
     ShortType,
@@ -232,39 +231,6 @@ PRIMARY_KEYS: dict[str, tuple[str, ...]] = {
     "dividend_calendar": ("act_symbol", "ex_date"),
     "earnings_calendar": ("act_symbol", "date"),
 }
-
-#: statement columns stored ×1e6 (parsed "millions" cells). The per-share /
-#: per-unit columns are deliberately NOT in these lists
-#: (income-statement-transform-load.rkt:201-226,
-#: balance-sheet-transform-load.rkt:423-432,
-#: cash-flow-statement-transform-load.2024-02-01.rkt:201-225).
-SCALED_COLUMNS: dict[str, list[str]] = {
-    "income_statement": [
-        c for c in INCOME_STATEMENT_COLS
-        if c not in ("diluted_eps_before_non_recurring_items",
-                     "diluted_net_eps")
-    ],
-    "balance_sheet_assets": list(BALANCE_SHEET_ASSETS_COLS),
-    "balance_sheet_liabilities": list(BALANCE_SHEET_LIABILITIES_COLS),
-    "balance_sheet_equity": [
-        c for c in BALANCE_SHEET_EQUITY_COLS if c != "book_value_per_share"
-    ],
-    "cash_flow_statement": [
-        c for c in CASH_FLOW_STATEMENT_COLS if c != "diluted_net_eps"
-    ],
-}
-
-#: the external symbol dimension (subset of columns the universe query uses,
-#: estimate-extract.rkt:57-83; FIXTURES.md §A).
-SYMBOL_SCHEMA = _t(
-    ("act_symbol", StringType(), False),
-    ("nasdaq_symbol", StringType(), True),
-    ("security_name", StringType(), True),
-    ("is_etf", BooleanType(), True),
-    ("is_test_issue", BooleanType(), True),
-    ("is_next_shares", BooleanType(), True),
-    ("last_seen", DateType(), True),
-)
 
 
 def not_null_columns(table: str) -> list[str]:

@@ -94,9 +94,7 @@ def _sha256(data: bytes) -> str:
     return hashlib.sha256(data).hexdigest()
 
 
-def archive_day(base: str, dataset: str, folder_date: str,
-                suffix: str | None = None,
-                remove_source: bool = False) -> dict:
+def archive_day(base: str, dataset: str, folder_date: str) -> dict:
     """Archive one dated folder into ``<base>/<dataset>/
     <folder_date>.tar.xz`` (members stored under their basenames,
     sorted — byte-deterministic for identical content).
@@ -104,16 +102,14 @@ def archive_day(base: str, dataset: str, folder_date: str,
     Idempotent: an existing archive is VERIFIED against the live folder
     (member names + content hashes) and reused when it matches; a
     mismatching archive raises instead of silently clobbering history.
-    ``remove_source=True`` deletes the folder only after the written
-    archive re-reads clean — the crash-safe order. Returns a manifest
+    The live folder stays. Returns a manifest
     ``{archive, n_members, bytes_in, bytes_out}``.
     """
     import glob as _glob
     import os
-    import shutil
     import tarfile
 
-    suffix = suffix or SUFFIXES.get(dataset, "")
+    suffix = SUFFIXES.get(dataset, "")
     folder = os.path.join(base, dataset, folder_date)
     if not os.path.isdir(folder):
         raise ValueError(f"no raw-zone folder {folder}")
@@ -148,8 +144,6 @@ def archive_day(base: str, dataset: str, folder_date: str,
             os.unlink(tmp)
             raise ValueError(f"archive verification failed for {archive}")
         os.replace(tmp, archive)
-    if remove_source:
-        shutil.rmtree(folder)
     return {"archive": archive, "n_members": len(want),
             "bytes_in": bytes_in,
             "bytes_out": os.path.getsize(archive)}

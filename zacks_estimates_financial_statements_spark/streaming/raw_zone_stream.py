@@ -134,8 +134,12 @@ def run_statements_stream(spark: SparkSession, base: str, tables_root: str,
     return queries
 
 
+#: late-data horizon of the event-time operators below
+WATERMARK = "2 hours"
+
+
 def windowed_event_counts(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
+                          watermark: str = WATERMARK) -> DataFrame:
     """Event-time tumbling-window counts per event_type with late-data
     watermark; works on a streaming OR batch events DataFrame (same code
     path — Spark's unified semantics)."""
@@ -149,8 +153,8 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
                     "event_type", "n", "sum_value"))
 
 
-def dedup_events(events: DataFrame, keys: list[str] | None = None,
-                 watermark: str = "2 hours") -> DataFrame:
+def dedup_events(events: DataFrame,
+                 keys: list[str] | None = None) -> DataFrame:
     """Streaming exact dedup: keep the first occurrence of each key, with
     state evicted once the watermark passes (``dropDuplicatesWithinWatermark``
     — unbounded-key ``dropDuplicates`` state would grow forever on an
@@ -163,13 +167,12 @@ def dedup_events(events: DataFrame, keys: list[str] | None = None,
         # input is present — plain key dedup is the same result
         return events.dropDuplicates(keys)
     return (events
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", WATERMARK)
             .dropDuplicatesWithinWatermark(keys))
 
 
 def attribute_conversions(impressions: DataFrame, conversions: DataFrame,
-                          horizon: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
+                          horizon: str = "1 hour") -> DataFrame:
     """Watermarked stream-stream interval join: every conversion paired
     with each same-user impression inside the look-back ``horizon``
     (``imp_ts`` in ``[conv_ts - horizon, conv_ts]``) — the
@@ -181,7 +184,7 @@ def attribute_conversions(impressions: DataFrame, conversions: DataFrame,
     Scale contract (streaming): a stream-stream inner join buffers both
     sides in state, and Spark can only evict that state when the join
     condition bounds event time on BOTH inputs — which the two-sided
-    range predicate here does. With a ``watermark`` of W and a horizon
+    range predicate here does. With a ``WATERMARK`` of W and a horizon
     of H, impression state is held for ~W+H and conversion state for
     ~W, independent of total stream length; without the time bound the
     state would grow forever. Late rows beyond W are dropped at the
@@ -208,9 +211,9 @@ def attribute_conversions(impressions: DataFrame, conversions: DataFrame,
         F.col("user_id").alias("user_id"),
         F.col("ts").alias("conv_ts"))
     if imp.isStreaming:
-        imp = imp.withWatermark("imp_ts", watermark)
+        imp = imp.withWatermark("imp_ts", WATERMARK)
     if conv.isStreaming:
-        conv = conv.withWatermark("conv_ts", watermark)
+        conv = conv.withWatermark("conv_ts", WATERMARK)
     cond = ((conv["user_id"] == imp["imp_user"])
             & (imp["imp_ts"] <= conv["conv_ts"])
             & (imp["imp_ts"] >= conv["conv_ts"] - F.expr(
