@@ -47,18 +47,36 @@ One more (protocol v3, round 10):
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": 0.1, "n": 3}
+
+This module is also the one timing harness of ``tools/``: every tool
+that times queries, builds a session, loads the registry or reads
+stage metrics calls ``registry()``, ``session()``, ``force()`` and
+``new_stages()`` below instead of keeping its own copy
+(``tests/test_surface.py`` pins it). ``tools/bench_gate.py`` is the
+one process that runs this script.
 """
 
 from __future__ import annotations
 
+import contextlib
 import importlib.util
 import json
 import os
 import statistics
 import sys
 import time
+import urllib.error
+import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+#: core count of every harness session unless a caller passes its own
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: session conf that serves the status REST API ``new_stages`` reads
+STAGE_UI = {"spark.ui.enabled": "true", "spark.ui.port": "0"}
+#: seconds the status store gets to register a finished job's stages
+SETTLE_S = 0.5
 
 HEADLINE = [
     "pricing_summary",      # grouped decimal aggregation (TPC-H Q1 shape)
@@ -222,6 +240,89 @@ TRACKED_NON_HEADLINE = [
 ]
 
 
+def registry():
+    """``__spark_entry__`` loaded by file path: the query registry
+    (``queries()``, ``fast_variants()``), its DuckDB twins
+    (``oracle_sql()``) and the table readers."""
+    spec = importlib.util.spec_from_file_location(
+        "spark_entry", os.path.join(ROOT, "__spark_entry__.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def session(cpus=CPUS, **conf):
+    """The harness SparkSession on ``local[cpus]``: the engine defaults,
+    the UI off unless ``conf`` turns it on (``**STAGE_UI``), then
+    ``conf``, then two overrides for oversized runs that win over both:
+    ``SPARK_GRAFT_DRIVER_MEM`` (the 1g default heap, measured fastest at
+    sf0.1, OOMs the synthesized sf1 decade) and
+    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (more, smaller tasks; AQE
+    re-coalesces, so it only bounds per-task memory)."""
+    from zacks_estimates_financial_statements_spark.session import get_spark
+
+    conf = {"spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false", **conf}
+    for var, key in (("SPARK_GRAFT_DRIVER_MEM", "spark.driver.memory"),
+                     ("SPARK_GRAFT_SHUFFLE_PARTITIONS",
+                      "spark.sql.shuffle.partitions")):
+        if os.environ.get(var):
+            conf[key] = os.environ[var]
+    return get_spark(master=f"local[{cpus}]", extra_conf=conf)
+
+
+def force(spark, query, sf_dir: str) -> float:
+    """Seconds to evaluate ``query(spark, sf_dir)`` in full through the
+    noop sink inside its own ``cache_scope()``; the catalog cache is
+    cleared after it, also when the query fails (the honesty rules of
+    the module docstring). The time excludes releasing the caches."""
+    from zacks_estimates_financial_statements_spark.util import cache_scope
+
+    try:
+        with cache_scope():
+            t0 = time.time()
+            query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return time.time() - t0
+    finally:
+        spark.catalog.clearCache()
+
+
+@contextlib.contextmanager
+def new_stages(spark, tasks: bool = False):
+    """Yields a list that, when the ``with`` block exits without error,
+    holds the status-REST records of the stages completed inside it
+    (the session needs ``**STAGE_UI``). The read waits ``SETTLE_S``
+    first so the status store has registered the last job. With
+    ``tasks`` each record gains ``task_ms``: the (min, median, max)
+    executor run time of its tasks; a stage whose task summary is not
+    served yet is left out."""
+    sc = spark.sparkContext
+    api = (f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+           "/stages")
+
+    def get(path):
+        with urllib.request.urlopen(api + path) as r:
+            return json.load(r)
+
+    before = {(s["stageId"], s["attemptId"])
+              for s in get("?status=complete")}
+    got: list[dict] = []
+    yield got
+    time.sleep(SETTLE_S)
+    for s in get("?status=complete"):
+        if (s["stageId"], s["attemptId"]) in before:
+            continue
+        if tasks:
+            try:
+                lo, med, hi = get(
+                    f"/{s['stageId']}/{s['attemptId']}/taskSummary"
+                    "?quantiles=0.0,0.5,1.0")["executorRunTime"]
+            except (urllib.error.URLError, KeyError, ValueError):
+                continue  # not summarized yet
+            s["task_ms"] = (lo, med, hi)
+        got.append(s)
+
+
 def _calibration_run(spark) -> float:
     """One pass of the host-speed probe: a fixed, data-independent
     synthetic workload (hash + shuffle + agg over spark.range) whose
@@ -249,25 +350,13 @@ def _calibration_run(spark) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
 
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                    "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from zacks_estimates_financial_statements_spark.session import get_spark
-    from zacks_estimates_financial_statements_spark.util import cache_scope
-    spark = get_spark(app_name="zacks-spark-bench",
-                      master=f"local[{cpus}]",
-                      extra_conf={"spark.ui.enabled": "false",
-                                  "spark.ui.showConsoleProgress": "false",
-                                  "spark.sql.shuffle.partitions": cpus})
+    mod = registry()
+    spark = session()
 
     qs = mod.queries()
     qs.update(mod.fast_variants())
@@ -294,18 +383,12 @@ def main() -> None:
     # driver's N=3 median straddles the decay). The warm pass makes
     # the median measure steady state at ANY N.
     for name in tracked:
-        t0 = time.time()
         try:
-            with cache_scope():
-                df = qs[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
+            dt = force(spark, qs[name], sf_dir)
+            print(f"# warm {name}: {dt:.2f}s (untimed)", file=sys.stderr)
         except Exception as exc:  # noqa: BLE001 — warm pass is best-effort
             print(f"# warm {name}: FAILED {str(exc)[:120]}",
                   file=sys.stderr)
-        finally:
-            spark.catalog.clearCache()
-        print(f"# warm {name}: {time.time() - t0:.2f}s (untimed)",
-              file=sys.stderr)
     samples: dict[str, list[float]] = {name: [] for name in tracked}
     cal_per_pass: list[float] = []
     for it in range(n_iters):
@@ -317,23 +400,15 @@ def main() -> None:
         print(f"# pass {it + 1}/{n_iters} calibration: "
               f"{cal_per_pass[-1]:.2f}s", file=sys.stderr)
         for name in tracked:
-            fn = qs[name]
-            with cache_scope():
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
+            # force() runs the query in its own cache_scope() and clears
+            # the catalog cache after it: without that, a cache-carrying
+            # query's per-pass times form a staircase (measured:
+            # perplexity_buckets 3.7 -> 1.8 -> 0.8 within one run) and
+            # its median measures N, not the code.
+            dt = force(spark, qs[name], sf_dir)
             samples[name].append(dt)
             print(f"# pass {it + 1}/{n_iters} {name}: {dt:.2f}s",
                   file=sys.stderr)
-            # Honesty: a query must not inherit the previous pass's
-            # caches. The scope above released the query's persists;
-            # the catalog clear catches anything cached outside it.
-            # Without this, a cache-carrying query's per-pass times
-            # form a staircase (measured: perplexity_buckets 3.7 ->
-            # 1.8 -> 0.8 within one run) and its median measures N,
-            # not the code.
-            spark.catalog.clearCache()
     cal_sec = round(statistics.median(cal_per_pass), 3)
 
     timings = {name: round(statistics.median(s), 3)
@@ -347,8 +422,7 @@ def main() -> None:
     # honest-timing reference; the r1-r5 count-era series is invalid
     # for projection queries). Ratios > ~1.5x flag to stderr; the
     # ratio dict rides the JSON line so the driver records it too.
-    base_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_BASELINE.json")
+    base_path = os.path.join(ROOT, "BENCH_BASELINE.json")
     vs_baseline = {}
     host_factor = None
     if os.path.exists(base_path):
@@ -379,7 +453,8 @@ def main() -> None:
                       file=sys.stderr)
     else:
         print("# no BENCH_BASELINE.json — per-query deltas unavailable "
-              "(tools/bench_baseline.py regenerates it)", file=sys.stderr)
+              "(tools/bench_gate.py --record-baseline writes it)",
+              file=sys.stderr)
 
     print(json.dumps({
         "metric": "headline_queries_total_runtime",

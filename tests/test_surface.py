@@ -18,6 +18,13 @@ Each scan must return exactly its keep-dict below, where every entry
 names why it stays. A new definition or option that only a test
 reaches fails here: delete it, give it a non-test caller, or add it to
 the keep-dict with its reason.
+
+A third scan, ``harness_scan``, pins the one timing harness: across
+``tools/*.py`` and ``bench.py``, only bench.py's ``registry``,
+``session`` and ``new_stages`` may call ``get_spark(``, load
+``__spark_entry__.py`` through ``spec_from_file_location`` or open a
+status-REST ``/api/v1/`` URL. A tool that needs one of them calls the
+harness instead of copying it.
 """
 
 from __future__ import annotations
@@ -178,6 +185,43 @@ def parameter_scan() -> list[str]:
                   if (id(fn), p) in dropped)
 
 
+HARNESS = {"registry", "session", "new_stages"}
+
+
+def harness_scan() -> list[str]:
+    def strings(node):
+        return [n.value for n in ast.walk(node)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)]
+
+    found = []
+    for path in sorted((ROOT / "tools").glob("*.py")) + [ROOT / "bench.py"]:
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "bench.py":
+            allowed = {id(n) for fn in tree.body
+                       if isinstance(fn, ast.FunctionDef)
+                       and fn.name in HARNESS for n in ast.walk(fn)}
+        for n in ast.walk(tree):
+            if id(n) in allowed:
+                continue
+            what = None
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else "")
+                if name == "get_spark":
+                    what = "get_spark("
+                elif name == "spec_from_file_location" and any(
+                        "__spark_entry__" in v for v in strings(n)):
+                    what = "loads __spark_entry__.py"
+            elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                  and "/api/v1/" in n.value):
+                what = "opens /api/v1/"
+            if what:
+                found.append(f"{path.relative_to(ROOT)}:{n.lineno} {what}")
+    return found
+
+
 def _keep(reason: str, *entries: str) -> dict[str, str]:
     return dict.fromkeys(entries, reason)
 
@@ -318,3 +362,7 @@ def test_no_definition_only_tests_reach():
 
 def test_no_option_only_tests_set():
     assert parameter_scan() == sorted(KEEP_PARAMETERS)
+
+
+def test_one_timing_harness():
+    assert harness_scan() == []

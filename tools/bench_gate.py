@@ -1,6 +1,6 @@
-"""Perf leg for the round stamp — run ``bench.py`` and REFUSE on a
-timing regression, the way ``shuffle_audit`` already refuses on a
-shuffle-shape regression.
+"""Perf leg for the round stamp — the one process that runs ``bench.py``.
+It REFUSES on a timing regression, the way ``shuffle_audit`` refuses on
+a shuffle-shape regression.
 
 Until round 11 bench was advisory: `run_gates.py` excluded it (it
 needs an idle host) and a wall-time regression could never block a
@@ -9,16 +9,21 @@ gate. This tool closes it:
 
 1. runs ``bench.py`` (protocol v3: untimed warm pass, noop-sink,
    median of N) and captures its one-line JSON;
-2. sanity-checks ``host_factor`` — the calibration probe's ratio vs
+2. refuses to judge when ``BENCH_BASELINE.json`` was recorded at a
+   different N than this run: decay-class queries settle over several
+   passes, so an n=3 median lands mid-decay while an n=5 baseline sits
+   in the warm tail (the r13 phantom flags: media_curate 5.99×,
+   bpe_train 3.22× on bit-identical code);
+3. sanity-checks ``host_factor`` — the calibration probe's ratio vs
    the baseline host. Outside [0.5, 1.25] the host is not comparable
    (co-tenancy, thermal, wrong box) and the verdict is UNUSABLE, not
    pass/fail: rerun idle or stamp with an explicit
    ``--bench-waiver`` (which `run_gates.py` records);
-3. judges per-query ratios QUERY-RELATIVELY (v2, see below): fail on
-   any host-normalized ratio > --max-ratio x the MEDIAN ratio;
-4. if the median itself shifted beyond --uniform-threshold, refuses
-   unless ``--uniform-shift-evidence`` records an A/B result;
-5. writes the full bench JSON plus the verdict to ``BENCH_local.json``
+4. judges per-query ratios QUERY-RELATIVELY (v2, see below): fail on
+   any host-normalized ratio > 1.5× the MEDIAN ratio;
+5. if the median itself shifted beyond 1.25×, refuses unless this run
+   also ran a neutral A/B (``--ab REF``);
+6. writes the full bench JSON plus the verdict to ``BENCH_local.json``
    at the repo root — the builder-side bench artifact the stamp
    includes, sibling to ``CORRECTNESS_local.json``.
 
@@ -35,40 +40,32 @@ shift from a uniform code regression; what it CAN detect robustly is
 a QUERY-SPECIFIC regression (one query slowing relative to the fleet
 of queries measured in the same run). So:
 
-- per-query rule: host-normalized ratio / median ratio > --max-ratio
-  (default 1.5) fails — catches the real signature of a code
-  regression on any host class;
-- uniform rule: median host-normalized ratio > --uniform-threshold
-  (default 1.25) fails UNLESS evidence supplies the A/B result proving
-  host-neutrality (bench the previous round's commit in a ``git
-  worktree`` on the SAME host; near-identical totals = host shift, a
-  gap = real global regression). Evidence is either
-  ``--uniform-shift-evidence-file`` — ``tools/bench_ab.py``'s
-  machine-generated JSON, validated here (neutral ratio, matching HEAD)
-  — or the legacy ``--uniform-shift-evidence`` free text. Either form
-  is recorded verbatim in the artifact for the judge to read — it is
-  an attestation, not a bypass: providing it without running the A/B
-  is falsifying a record.
+- per-query rule: host-normalized ratio / median ratio > 1.5 fails —
+  catches the real signature of a code regression on any host class;
+- uniform rule: median host-normalized ratio > 1.25 fails UNLESS the
+  gate ran the A/B itself: ``--ab REF`` benches REF (normally the
+  previous round's commit) in a ``git worktree`` right after the HEAD
+  run, on the same host. A HEAD/REF total ratio inside [0.9, 1.1] is a
+  host shift; outside it the A/B shows a code regression and the gate
+  fails on that alone. The ref commit, both totals and the ratio are
+  recorded in the artifact's ``gate`` block.
 
-Evidence limits (v3, r12 ADVICE): evidence is only accepted up to
-``--evidence-median-cap`` (default 1.6) — beyond that the baseline
-itself is stale for this host class and must be refreshed via
-``tools/bench_baseline.py``, not waived per-round. And once evidence
-is in play, the per-query bar STOPS widening with the shift: queries
-are judged against ``min(median, uniform_threshold) × max_ratio``
-host-normalized, so the A/B attestation cannot simultaneously relax
-the query-specific rule (r11's accepted median 1.488 would otherwise
-have passed a ~2.2× host-normalized single-query regression; under v3
-the three queries the r11 verdict flagged — bpe_train 2.1, url_filter
+Evidence limits (v3, r12 ADVICE): an A/B waives a median shift only up
+to 1.6× — beyond that the baseline itself is stale for this host class
+and must be re-recorded (``--record-baseline``), not waived per round.
+And once the A/B is in play, the per-query bar STOPS widening with the
+shift: queries are judged against ``min(median, 1.25) × 1.5``
+host-normalized, so the A/B cannot simultaneously relax the
+query-specific rule (r11's accepted median 1.488 would otherwise have
+passed a ~2.2× host-normalized single-query regression; under v3 the
+three queries the r11 verdict flagged — bpe_train 2.1, url_filter
 1.96, media_curate 1.89 — would all have failed the gate).
 
-Usage: python tools/bench_gate.py [--max-ratio 1.5]
-           [--uniform-threshold 1.25] [--evidence-median-cap 1.6]
-           [--uniform-shift-evidence TEXT]
-           [--uniform-shift-evidence-file BENCH_AB.json] [--skip-run]
-``--skip-run`` re-judges the newest existing bench JSON on disk
-(BENCH_local.json) without re-running bench — for re-adjudicating a
-finished run, never for dodging one.
+Usage: python tools/bench_gate.py [--ab REF | --record-baseline]
+``--record-baseline`` writes ``BENCH_BASELINE.json`` from this run
+(at its own ``SPARK_GRAFT_BENCH_N``) instead of judging it; run it on
+an IDLE host — the shared host shows ±30-60% CPU-steal noise under
+load (PERFORMANCE.md), and a noisy baseline poisons every later ratio.
 """
 
 from __future__ import annotations
@@ -77,19 +74,73 @@ import argparse
 import datetime as _dt
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ARTIFACT = os.path.join(ROOT, "BENCH_local.json")
+BASELINE = os.path.join(ROOT, "BENCH_BASELINE.json")
 
 HOST_FACTOR_WINDOW = (0.5, 1.25)
+MAX_RATIO = 1.5            # per-query bar, relative to the run's median
+UNIFORM_THRESHOLD = 1.25   # median shift that needs a neutral A/B
+EVIDENCE_MEDIAN_CAP = 1.6  # largest median shift an A/B can waive
+AB_WINDOW = (0.9, 1.1)     # HEAD/REF total ratio that counts as neutral
 
 
-def _judge(doc: dict, max_ratio: float, uniform_threshold: float,
-           evidence: str | None,
-           evidence_median_cap: float = 1.6) -> tuple[list[str], dict]:
+def _utc_now() -> str:
+    return _dt.datetime.now(_dt.timezone.utc).isoformat(timespec="seconds")
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(["git", *args], cwd=ROOT, capture_output=True,
+                          text=True, check=True).stdout.strip()
+
+
+def _bench_json(cwd: str) -> dict:
+    p = subprocess.run([sys.executable, "bench.py"], cwd=cwd,
+                       capture_output=True, text=True)
+    sys.stderr.write(p.stderr)
+    lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    if p.returncode != 0 or not lines:
+        raise RuntimeError(f"bench.py rc={p.returncode}, {len(lines)} JSON "
+                           f"lines in {cwd}: {p.stdout[-2000:]}")
+    return json.loads(lines[-1])
+
+
+def run_bench(ref: str | None = None) -> dict:
+    """bench.py's JSON doc for the working tree, or, given ``ref``, for
+    that commit checked out in a throwaway ``git worktree`` (the doc
+    then carries the resolved ``commit``). Both honour the caller's
+    SPARK_GRAFT_* environment."""
+    if ref is None:
+        return _bench_json(ROOT)
+    commit = _git("rev-parse", "--verify", f"{ref}^{{commit}}")
+    wt = tempfile.mkdtemp(prefix=f"bench_ab_{commit[:12]}_")
+    try:
+        _git("worktree", "add", "--detach", wt, commit)
+        print(f"# bench_gate: benching ref {commit[:12]} in {wt}",
+              file=sys.stderr)
+        return {**_bench_json(wt), "commit": commit}
+    finally:
+        subprocess.run(["git", "worktree", "remove", "--force", wt],
+                       cwd=ROOT, capture_output=True)
+        shutil.rmtree(wt, ignore_errors=True)
+
+
+def _judge(doc: dict, baseline_n: int | None,
+           ab: dict | None = None) -> tuple[list[str], dict]:
+    """Failures and stats for one bench doc. ``baseline_n`` is the N
+    BENCH_BASELINE.json was recorded at; ``ab`` is the same-host A/B
+    this run made (``ratio`` = HEAD total / REF total) or None."""
+    if baseline_n != doc.get("n"):
+        return [f"BENCH_BASELINE.json n={baseline_n} but this run "
+                f"n={doc.get('n')} — median-of-N ratios need matched N; "
+                "re-record the baseline (--record-baseline) or rerun "
+                f"with SPARK_GRAFT_BENCH_N={baseline_n}"], {}
     fails: list[str] = []
     hf = doc.get("host_factor")
     if hf is None:
@@ -101,6 +152,13 @@ def _judge(doc: dict, max_ratio: float, uniform_threshold: float,
             f"host_factor {hf} outside {list(HOST_FACTOR_WINDOW)} — host "
             "not idle/comparable; rerun on an idle box or stamp with "
             "--bench-waiver")
+    ab_neutral = False
+    if ab is not None:
+        ab_neutral = AB_WINDOW[0] <= ab["ratio"] <= AB_WINDOW[1]
+        if not ab_neutral:
+            fails.append(f"A/B HEAD/ref total ratio {ab['ratio']} outside "
+                         f"{list(AB_WINDOW)} — the A/B itself shows a "
+                         "code regression")
     divisor = hf if hf and hf > 0.1 else 1.0
     vb = doc.get("vs_baseline", {})
     if not vb:
@@ -111,147 +169,102 @@ def _judge(doc: dict, max_ratio: float, uniform_threshold: float,
     med = statistics.median(norm.values())
     stats = {"median_normalized_ratio": round(med, 3)}
     # uniform rule first — its outcome pins the per-query bar (v3)
-    evidence_active = False
-    if med > uniform_threshold:
-        if med > evidence_median_cap:
+    waived = False
+    if med > UNIFORM_THRESHOLD:
+        if med > EVIDENCE_MEDIAN_CAP:
             fails.append(
                 f"median host-normalized ratio {med:.2f} > evidence cap "
-                f"{evidence_median_cap} — no A/B attestation can waive a "
-                "shift this large: refresh BENCH_BASELINE via "
-                "tools/bench_baseline.py on a representative idle host "
-                "(or fix the global regression)")
-        elif evidence:
-            evidence_active = True
-            stats["uniform_shift_evidence"] = evidence
-            print(f"# uniform shift median {med:.2f} accepted on "
-                  f"recorded A/B evidence")
+                f"{EVIDENCE_MEDIAN_CAP} — no A/B can waive a shift this "
+                "large: re-record BENCH_BASELINE (--record-baseline) on "
+                "a representative idle host (or fix the global "
+                "regression)")
+        elif ab_neutral:
+            waived = True
+            print(f"# uniform shift median {med:.2f} accepted on the "
+                  "neutral A/B", file=sys.stderr)
         else:
             fails.append(
                 f"median host-normalized ratio {med:.2f} > "
-                f"{uniform_threshold} — uniform shift: either the host "
-                "class changed or the code regressed globally. Run the "
-                "A/B (tools/bench_ab.py <prev-round-commit> on THIS "
-                "host) and re-judge with --uniform-shift-evidence-file, "
-                "or fix the regression")
+                f"{UNIFORM_THRESHOLD} — uniform shift: either the host "
+                "class changed or the code regressed globally. Rerun "
+                "with --ab <prev-round-commit> on THIS host, or fix the "
+                "regression")
     # query-relative rule: a code regression is query-specific. A FAST
-    # fleet must not hide a slow query (floor 1.0); an evidence-waived
-    # shift must not WIDEN the bar (cap at uniform_threshold — v3).
-    rel_base = max(min(med, uniform_threshold) if evidence_active
-                   else med, 1.0)
+    # fleet must not hide a slow query (floor 1.0); an A/B-waived shift
+    # must not WIDEN the bar (cap at UNIFORM_THRESHOLD — v3).
+    rel_base = max(min(med, UNIFORM_THRESHOLD) if waived else med, 1.0)
     for name, r in sorted(norm.items(), key=lambda kv: -kv[1]):
-        if r / rel_base > max_ratio:
+        if r / rel_base > MAX_RATIO:
             fails.append(
                 f"{name}: {vb[name]:.2f}x baseline ({r:.2f}x "
                 f"host-normalized, {r / rel_base:.2f}x the judging base "
-                f"{rel_base:.2f}) > {max_ratio}x")
+                f"{rel_base:.2f}) > {MAX_RATIO}x")
     return fails, stats
 
 
-def _load_evidence_file(path: str) -> tuple[list[str], str]:
-    """Validate a ``tools/bench_ab.py`` artifact: the A/B must be
-    neutral (ratio within its own recorded neutrality window), run
-    against the CURRENT HEAD, and fresh enough that 'same host' is
-    plausible. Returns (failures, compact-evidence-string)."""
-    fails: list[str] = []
-    try:
-        ab = json.load(open(path))
-    except (OSError, ValueError) as exc:
-        return [f"unreadable: {exc}"], ""
-    ratio = ab.get("head_over_ref_ratio")
-    # the window is the artifact's self-recorded claim — clamp it to the
-    # gate's own accepted bounds so a hand-widened JSON can't waive a
-    # real regression (r13, ADVICE)
-    window = ab.get("neutrality_window", [0.9, 1.1])
-    if (not isinstance(window, (list, tuple)) or len(window) != 2
-            or not (0.8 <= window[0] <= window[1] <= 1.25)):
-        fails.append(f"A/B neutrality_window {window} outside the gate's "
-                     "accepted bounds [0.8, 1.25] — regenerate with "
-                     "tools/bench_ab.py")
-        window = [0.9, 1.1]
-    if ratio is None or not (window[0] <= ratio <= window[1]):
-        fails.append(f"A/B ratio {ratio} outside neutral window "
-                     f"{window} — the A/B itself shows a regression")
-    head = subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT,
-                          capture_output=True, text=True).stdout.strip()
-    # a missing head_commit is a truncated/hand-made artifact, not a
-    # valid one — an attestation must bind to the tree it attests
-    if ab.get("head_commit") != head:
-        fails.append(f"A/B head_commit {str(ab.get('head_commit'))[:12]} "
-                     f"is not the current HEAD {head[:12]} — rerun "
-                     "tools/bench_ab.py")
-    when = ab.get("recorded_utc", "")
-    try:
-        age_h = (_dt.datetime.now(_dt.timezone.utc)
-                 - _dt.datetime.fromisoformat(when)).total_seconds() / 3600
-    except ValueError:
-        age_h = None
-    if age_h is None or age_h > 48:
-        fails.append(f"A/B recorded_utc {when!r} missing or older than "
-                     "48h — same-host comparability is stale")
-    text = (f"bench_ab.py A/B on this host: ref {ab.get('ref_commit', '')[:12]} "
-            f"{ab.get('ref_total_sec')}s vs HEAD {ab.get('head_total_sec')}s "
-            f"(ratio {ratio}), recorded {when}")
-    return fails, text
+def _record_baseline(doc: dict) -> int:
+    baseline = {
+        "recorded_utc": _utc_now(),
+        "n": doc["n"],
+        "sf": doc["sf"],
+        "protocol": "v3: untimed warm pass, then noop-sink full "
+                    "evaluation, round-robin, median of n passes "
+                    "(see bench.py docstring)",
+        "headline_total_sec": doc["value"],
+        "calibration_sec": doc.get("calibration_sec"),
+        "queries": {**doc["queries"], **doc.get("non_headline", {})},
+    }
+    with open(BASELINE, "w") as f:
+        json.dump(baseline, f, indent=2, sort_keys=True)
+    print(f"bench_gate: wrote {BASELINE}: {len(baseline['queries'])} "
+          f"queries, headline total {doc['value']}s (n={doc['n']})")
+    return 0
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--max-ratio", type=float, default=1.5)
-    ap.add_argument("--uniform-threshold", type=float, default=1.25)
-    ap.add_argument("--evidence-median-cap", type=float, default=1.6,
-                    help="largest median shift any A/B evidence can "
-                         "waive; beyond it refresh the baseline")
-    ap.add_argument("--uniform-shift-evidence", default=None, metavar="TEXT",
-                    help="A/B result proving a uniform shift is the host, "
-                         "not the code (recorded verbatim in the artifact)")
-    ap.add_argument("--uniform-shift-evidence-file", default=None,
-                    metavar="JSON",
-                    help="tools/bench_ab.py output; validated (neutral "
-                         "ratio, HEAD match) then recorded as evidence")
-    ap.add_argument("--skip-run", action="store_true",
-                    help="re-judge the existing BENCH_local.json")
-    args = ap.parse_args()
-    if args.uniform_shift_evidence_file:
-        ev_fails, ev_text = _load_evidence_file(
-            args.uniform_shift_evidence_file)
-        if ev_fails:
-            for f_ in ev_fails:
-                print(f"bench_gate: evidence file rejected: {f_}")
-            return 1
-        args.uniform_shift_evidence = ev_text
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--ab", metavar="REF",
+                      help="after the HEAD run, bench REF (normally the "
+                           "previous round's commit) in a git worktree on "
+                           "this host; a neutral ratio waives a uniform "
+                           "median shift up to the evidence cap")
+    mode.add_argument("--record-baseline", action="store_true",
+                      help="write BENCH_BASELINE.json from this run "
+                           "instead of judging it")
+    args = ap.parse_args(argv)
 
-    if args.skip_run:
-        if not os.path.exists(ARTIFACT):
-            print("bench_gate: --skip-run but no BENCH_local.json")
-            return 1
-        doc = json.load(open(ARTIFACT))
-    else:
-        p = subprocess.run([sys.executable, "bench.py"], cwd=ROOT,
-                           capture_output=True, text=True)
-        sys.stderr.write(p.stderr)
-        json_lines = [ln for ln in p.stdout.splitlines()
-                      if ln.startswith("{")]
-        if p.returncode != 0 or not json_lines:
-            print(f"bench_gate: bench.py rc={p.returncode}, "
-                  f"{len(json_lines)} JSON lines — run failed")
-            sys.stdout.write(p.stdout[-2000:])
-            return 1
-        doc = json.loads(json_lines[-1])
+    ab = None
+    try:
+        doc = run_bench()
+        if args.record_baseline:
+            return _record_baseline(doc)
+        if args.ab:
+            ref = run_bench(args.ab)
+            ab = {"ref_commit": ref["commit"],
+                  "ref_total_sec": ref["value"],
+                  "head_total_sec": doc["value"],
+                  "ratio": round(doc["value"] / ref["value"], 4)}
+    except (RuntimeError, subprocess.CalledProcessError) as exc:
+        print(f"bench_gate: run failed: {exc}")
+        return 1
 
-    fails, stats = _judge(doc, args.max_ratio, args.uniform_threshold,
-                          args.uniform_shift_evidence,
-                          args.evidence_median_cap)
+    baseline_n = (json.load(open(BASELINE)).get("n")
+                  if os.path.exists(BASELINE) else None)
+    fails, stats = _judge(doc, baseline_n, ab)
     doc["gate"] = {
         "verdict": "pass" if not fails else "fail",
         "fails": fails,
-        "max_ratio": args.max_ratio,
-        "uniform_threshold": args.uniform_threshold,
-        "evidence_median_cap": args.evidence_median_cap,
+        "max_ratio": MAX_RATIO,
+        "uniform_threshold": UNIFORM_THRESHOLD,
+        "evidence_median_cap": EVIDENCE_MEDIAN_CAP,
         "host_factor_window": list(HOST_FACTOR_WINDOW),
-        "judged_utc": _dt.datetime.now(_dt.timezone.utc)
-        .isoformat(timespec="seconds"),
+        "baseline_n": baseline_n,
+        "judged_utc": _utc_now(),
         **stats,
     }
+    if ab is not None:
+        doc["gate"]["ab"] = {**ab, "neutral_window": list(AB_WINDOW)}
     with open(ARTIFACT, "w") as f:
         json.dump(doc, f, indent=1, sort_keys=True)
         f.write("\n")

@@ -27,15 +27,15 @@ Usage: python tools/bloom_study.py [--large 10000000] [--keys 100000]
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 
 def main() -> int:
@@ -48,23 +48,15 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from zacks_estimates_financial_statements_spark.operators import skew
-    from zacks_estimates_financial_statements_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="bloom-study",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0",
-                    "spark.ui.showConsoleProgress": "false",
-                    "spark.sql.shuffle.partitions": "32",
-                    # Spark's STOCK threshold (the engine session
-                    # raises it to 64 MB): both sides here exceed
-                    # 10 MB, which is the 100 TB regime in miniature —
-                    # at real scale both sides exceed ANY threshold
-                    # and the plain join is a full-shuffle SMJ
-                    "spark.sql.autoBroadcastJoinThreshold":
-                        str(10 * 1024 * 1024)})
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
+    spark = bench.session(**{
+        **bench.STAGE_UI,
+        "spark.sql.shuffle.partitions": "32",
+        # Spark's STOCK threshold (the engine session raises it to
+        # 64 MB): both sides here exceed 10 MB, which is the 100 TB
+        # regime in miniature — at real scale both sides exceed ANY
+        # threshold and the plain join is a full-shuffle SMJ
+        "spark.sql.autoBroadcastJoinThreshold": str(10 * 1024 * 1024)})
     scratch = tempfile.mkdtemp(prefix="bloom_study_")
     try:
         (spark.range(args.large)
@@ -92,12 +84,6 @@ def main() -> int:
               f"autoBroadcastJoinThreshold={thresh} -> SMJ regime",
               file=sys.stderr)
 
-        def stages():
-            with urllib.request.urlopen(
-                    f"{ui}/api/v1/applications/{app}/stages"
-                    "?status=complete") as r:
-                return json.load(r)
-
         def xor_hash(df):
             # order-insensitive exact table digest: xor-fold row hashes
             cols = [F.col(c).cast("string") for c in sorted(df.columns)]
@@ -107,15 +93,12 @@ def main() -> int:
             return (r["n"], r["x"])
 
         def measure(name, df):
-            before = {(s["stageId"], s["attemptId"]) for s in stages()}
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            time.sleep(0.5)
+            with bench.new_stages(spark) as stages:
+                t0 = time.time()
+                df.write.format("noop").mode("overwrite").save()
+                wall = time.time() - t0
             shb = shr = inr = 0
-            for s in stages():
-                if (s["stageId"], s["attemptId"]) in before:
-                    continue
+            for s in stages:
                 shb += s.get("shuffleWriteBytes", 0)
                 shr += s.get("shuffleWriteRecords", 0)
                 inr += s.get("inputRecords", 0)

@@ -37,8 +37,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from zacks_estimates_financial_statements_spark.operators import similarity  # noqa: E402
-from zacks_estimates_financial_statements_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 K = 4
@@ -102,16 +102,13 @@ def pin_plan(df, allowed_bnlj: int, tag: str) -> None:
 
 
 def main() -> int:
-    spark = get_spark(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.sql.shuffle.partitions": "32",
-                    # NOT the bench default-1g rule (that's a timing
-                    # protocol): the x10 leg streams ~10^8 candidate
-                    # pairs through 32 concurrent tasks — a 1g heap
-                    # OOMs in the score stage (measured); a real
-                    # cluster spreads the same rows over executors
-                    "spark.driver.memory": "8g"})
+    spark = bench.session(**{
+        "spark.sql.shuffle.partitions": "32",
+        # NOT the bench default-1g rule (that's a timing protocol): the
+        # x10 leg streams ~10^8 candidate pairs through 32 concurrent
+        # tasks — a 1g heap OOMs in the score stage (measured); a real
+        # cluster spreads the same rows over executors
+        "spark.driver.memory": "8g"})
     base = (spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
             .select("vec_id", F.col("embedding").cast("array<double>")
                     .alias("embedding")))

@@ -65,8 +65,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from zacks_estimates_financial_statements_spark.operators import dedup  # noqa: E402
-from zacks_estimates_financial_statements_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 K, BANDS = 12, 4
@@ -104,21 +104,17 @@ def pin_plan(df, tag: str) -> None:
 
 
 def main() -> int:
-    spark = get_spark(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.sql.shuffle.partitions": "32",
-                    # default 10: a longer pushed In degrades to a
-                    # min/max range, which uniformly-hashed bucket
-                    # keys always span — the prune would silently
-                    # stop pruning (see module docstring)
-                    "spark.sql.parquet.pushdown.inFilterThreshold":
-                        "100000",
-                    # the pushed 2000-value In builds a deep predicate
-                    # tree in the parquet filter layer — default 1m
-                    # thread stacks StackOverflow (measured); a real
-                    # cluster sets this once per executor JVM
-                    "spark.driver.extraJavaOptions": "-Xss32m"})
+    spark = bench.session(**{
+        "spark.sql.shuffle.partitions": "32",
+        # default 10: a longer pushed In degrades to a min/max range,
+        # which uniformly-hashed bucket keys always span — the prune
+        # would silently stop pruning (see module docstring)
+        "spark.sql.parquet.pushdown.inFilterThreshold": "100000",
+        # the pushed 2000-value In builds a deep predicate tree in the
+        # parquet filter layer — default 1m thread stacks
+        # StackOverflow (measured); a real cluster sets this once per
+        # executor JVM
+        "spark.driver.extraJavaOptions": "-Xss32m"})
 
     def force(df):
         df.write.format("noop").mode("overwrite").save()

@@ -26,7 +26,6 @@ lesson: a hand-emitted file missed the last-added query).
 from __future__ import annotations
 
 import hashlib
-import importlib.util
 import json
 import os
 import sys
@@ -35,6 +34,8 @@ import time
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -99,29 +100,13 @@ def main() -> int:
         else "/root/testdata/sf0.01"
     only = [a for a in argv if not os.path.isdir(a)]
 
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from zacks_estimates_financial_statements_spark.session import get_spark
     from zacks_estimates_financial_statements_spark.util import cache_scope
-    extra = {"spark.ui.enabled": "false",
-             "spark.ui.showConsoleProgress": "false"}
-    # Honored for oversized runs only (the synth-sf1 attestation OOMs
-    # the measured-faster 1g default heap at tfidf_pairs); same env
-    # contract as tools/scale_study.py.
-    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
-        extra["spark.driver.memory"] = os.environ["SPARK_GRAFT_DRIVER_MEM"]
-    if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
-        # more, smaller tasks for oversized runs (AQE re-coalesces, so
-        # a high number only bounds per-task memory, not small-query
-        # speed) — the sf1-synth pair stages OOM per-task otherwise
-        extra["spark.sql.shuffle.partitions"] = \
-            os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"]
-    spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-                      extra_conf=extra)
+
+    mod = bench.registry()
+    # the synth-sf1 attestation needs bench.session()'s oversized-run
+    # overrides: the 1g default heap OOMs at tfidf_pairs and the pair
+    # stages OOM per task at the default shuffle partitions
+    spark = bench.session()
 
     # Spec leg for the mirrored twins (r12, ADVICE): the URL/HTML
     # oracles re-state the Spark pipeline, so the pipeline itself is
@@ -256,8 +241,7 @@ def main() -> int:
         # refreshes so it cannot lag the registry. Other data dirs
         # (sf0.001 smoke runs, contract-fuzz datasets) must never
         # clobber the canonical artifact.
-        outs.append(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "CORRECTNESS_local.json"))
+        outs.append(os.path.join(bench.ROOT, "CORRECTNESS_local.json"))
     elif not only:
         print(f"# non-canonical sf_dir {sf_dir}: "
               "NOT refreshing CORRECTNESS_local.json")

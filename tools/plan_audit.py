@@ -21,12 +21,13 @@ Usage: python tools/plan_audit.py [sf_dir] [out_md]
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 #: queries whose BNLJ is deliberate and bounded — broadcast of a tiny
 #: constant-size side (hash/bit index range, centroid table, or the
@@ -253,21 +254,12 @@ def audit(plan: str, name: str) -> dict:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "PLANS.md")
+        bench.ROOT, "PLANS.md")
 
-    spec = importlib.util.spec_from_file_location(
-        "entry_plan_audit", os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from zacks_estimates_financial_statements_spark.session import get_spark
     from zacks_estimates_financial_statements_spark.util import cache_scope
-    spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-                      extra_conf={"spark.ui.enabled": "false",
-                                  "spark.ui.showConsoleProgress": "false"})
+
+    mod = bench.registry()
+    spark = bench.session()
 
     rows = []
     bad = 0

@@ -53,14 +53,15 @@ bench.py, sanity-checks ``host_factor``, judges per-query ratios
 QUERY-RELATIVELY (v2: fail at > 1.5x the run's median — round
 boundaries land on heterogeneous VMs and a uniform fleet-wide shift
 is host class, not code; a genuine code regression is query-specific),
-refuses a median shift > 1.25x unless ``--bench-evidence`` records the
-worktree A/B proving host-neutrality, and writes ``BENCH_local.json``.
+refuses a median shift > 1.25x unless ``--bench-ab REF`` has the gate
+run the same-host worktree A/B against REF and it comes out neutral,
+and writes ``BENCH_local.json``.
 It is opt-in because it needs an idle host — but STAMPING requires
 it: ``--round N`` refuses unless the bench gate ran green or an
 explicit ``--bench-waiver REASON`` is recorded (r10 verdict #4: a
 timing regression must be able to block a stamp).
-``tools/bench_baseline.py`` remains the tool for deliberate baseline
-updates.
+``tools/bench_gate.py --record-baseline`` remains the tool for
+deliberate baseline updates.
 
 All gates run even after a failure (one pass diagnoses everything);
 the stamp step alone is withheld unless everything is green. Per-gate
@@ -85,7 +86,7 @@ GATES = [
                       "/root/testdata/sf0.01"]),
     ("plan_audit", [sys.executable, "tools/plan_audit.py"]),
     ("shuffle_audit", [sys.executable, "tools/shuffle_audit.py"]),
-    ("skew_sweep", [sys.executable, "tools/skew_sweep.py", "--json"]),
+    ("skew_sweep", [sys.executable, "tools/skew_sweep.py"]),
     ("contract_fuzz", [sys.executable, "tools/contract_fuzz.py",
                        "--dup-rate", "0.02", "--nan-rate", "0.02",
                        "--conflict-rate", "0.02", "--permute-rows",
@@ -164,16 +165,11 @@ def main() -> int:
     ap.add_argument("--bench", action="store_true",
                     help="run tools/bench_gate.py as the last gate "
                          "(needs an idle host; writes BENCH_local.json)")
-    ap.add_argument("--bench-evidence", default=None, metavar="TEXT",
-                    help="passed to the bench gate as "
-                         "--uniform-shift-evidence: the A/B result that "
-                         "proves a fleet-wide timing shift is the host "
-                         "class, not the code (see tools/bench_gate.py)")
-    ap.add_argument("--bench-evidence-file", default=None, metavar="JSON",
-                    help="passed to the bench gate as "
-                         "--uniform-shift-evidence-file: a "
-                         "tools/bench_ab.py artifact (machine-generated "
-                         "A/B; preferred over --bench-evidence prose)")
+    ap.add_argument("--bench-ab", default=None, metavar="REF",
+                    help="passed to the bench gate as --ab: also bench "
+                         "REF on this host, so a neutral A/B can prove "
+                         "a fleet-wide timing shift is the host class, "
+                         "not the code (see tools/bench_gate.py)")
     ap.add_argument("--bench-waiver", default=None, metavar="REASON",
                     help="stamp without the bench gate, recording REASON "
                          "(e.g. 'no idle window; driver benches r11') — "
@@ -191,11 +187,8 @@ def main() -> int:
     if args.bench:
         # last: it wants the quietest host the battery can give it
         cmd = [sys.executable, "tools/bench_gate.py"]
-        if args.bench_evidence:
-            cmd += ["--uniform-shift-evidence", args.bench_evidence]
-        if args.bench_evidence_file:
-            cmd += ["--uniform-shift-evidence-file",
-                    args.bench_evidence_file]
+        if args.bench_ab:
+            cmd += ["--ab", args.bench_ab]
         gates.append(("bench", cmd))
     results: dict[str, bool] = {}
     for name, cmd in gates:

@@ -6,8 +6,8 @@ This is the harness behind PERFORMANCE.md's two-scale table — run it
 after operator changes so the table never drifts from measurement.
 
 Usage:
-  python tools/scale_study.py [--small DIR] [--big DIR] [--n 3]
-      [--top-bench N] [--synth-big] [query ...]
+  python tools/scale_study.py [--small DIR] [--big DIR]
+      [--top-bench N] [--synth-big] [--cores-leg C] [query ...]
 
 Defaults: sf0.01 -> sf0.1, median of 3, all bench HEADLINE queries.
 Emits a markdown table on stdout (paste-ready) and one JSON line on
@@ -28,45 +28,40 @@ applies unchanged.
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import math
 import os
 import statistics
+import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 
-def median_seconds(spark, query, sf: str, n: int) -> float:
-    """One warm pass, then the median of ``n`` timed passes of ``query``
-    through a noop sink. Each pass runs in one ``cache_scope()`` and ends
-    with ``clearCache()``: bench.py's per-pass honesty rule, or pass N
-    measures pass N-1's cache (CacheManager matches canonicalized
-    plans)."""
-    from zacks_estimates_financial_statements_spark.util import cache_scope
+N = 3                   # timed passes per median
+CORES_FLOOR_S = 10.0    # core-scaling gate: smaller low-core times are
+                        # fixed-cost dominated and not gated
+CORES_MIN_SPEEDUP = 2.0  # 4x the cores must buy at least 2x
+#: headroom for the synthesized-sf1 decade; the session factory
+#: deliberately keeps the bench default at 1g (see session.py
+#: measurement note)
+HEAP = {"spark.driver.memory": "12g"}
 
-    def once():
-        with cache_scope():
-            # full eval, no count-pruning
-            query(spark, sf).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
 
-    once()  # warm (plan + page cache)
-    ts = []
-    for _ in range(n):
-        t0 = time.time()
-        once()
-        ts.append(time.time() - t0)
-    return statistics.median(ts)
+def median_seconds(spark, query, sf: str) -> float:
+    """One warm pass, then the median of ``N`` timed passes of ``query``
+    through bench.py's ``force`` (noop sink, one ``cache_scope()`` per
+    pass, catalog cache cleared after it)."""
+    bench.force(spark, query, sf)  # warm (plan + page cache)
+    return statistics.median(bench.force(spark, query, sf)
+                             for _ in range(N))
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--small", default="/root/testdata/sf0.01")
     ap.add_argument("--big", default="/root/testdata/sf0.1")
-    ap.add_argument("--n", type=int, default=3)
     ap.add_argument("--top-bench", type=int, default=None, metavar="N",
                     help="run the N most expensive tracked queries by "
                          "BENCH_BASELINE.json seconds (third-decade set)")
@@ -83,54 +78,22 @@ def main() -> int:
                          "8-vs-32-core ratio sat at ~1), so this leg "
                          "belongs on the synthetic third decade where "
                          "per-query work is tens of seconds")
-    ap.add_argument("--cores-floor", type=float, default=10.0,
-                    help="gate only queries whose low-core time is at "
-                         "least this many seconds (smaller ones are "
-                         "fixed-cost dominated)")
-    ap.add_argument("--cores-min-speedup", type=float, default=2.0,
-                    help="minimum t_low/t_high speedup for gated "
-                         "queries (4x the cores should buy >= 2x)")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if args.synth_big and not os.path.isdir(args.big):
-        import subprocess
         print(f"# building synthetic fixture {args.big} "
               f"(tools/synth_scale.py)", flush=True)
         subprocess.run([sys.executable,
-                        os.path.join(root, "tools", "synth_scale.py"),
-                        "--out", args.big], check=True, cwd=root)
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(root, "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    bench_spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(root, "bench.py"))
-    bench = importlib.util.module_from_spec(bench_spec)
-    bench_spec.loader.exec_module(bench)
-
-    from zacks_estimates_financial_statements_spark.session import get_spark
-    extra = {"spark.ui.enabled": "false",
-             "spark.ui.showConsoleProgress": "false",
-             # headroom for the synthesized-sf1 decade; the
-             # session factory deliberately keeps the bench
-             # default at 1g (see session.py measurement note)
-             "spark.driver.memory":
-                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")}
-    if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
-        # more, smaller tasks for oversized runs — same env contract as
-        # tools/oracle_check.py (AQE re-coalesces, so this only bounds
-        # per-task memory)
-        extra["spark.sql.shuffle.partitions"] = \
-            os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"]
-    spark = get_spark(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        extra_conf=extra)
+                        os.path.join(bench.ROOT, "tools", "synth_scale.py"),
+                        "--out", args.big], check=True, cwd=bench.ROOT)
+    mod = bench.registry()
+    spark = bench.session(**HEAP)
 
     qs = mod.queries()
     if args.top_bench:
-        base = json.load(open(os.path.join(root, "BENCH_BASELINE.json")))
+        base = json.load(open(os.path.join(bench.ROOT,
+                                           "BENCH_BASELINE.json")))
         secs = dict(base.get("queries", {}))
         secs.update(base.get("non_headline", {}))
         names = [q for q, _ in
@@ -142,7 +105,7 @@ def main() -> int:
     print("| query | small s | big s | ratio | exp |")
     print("|---|---|---|---|---|")
     for name in names:
-        med = {sf: median_seconds(spark, qs[name], sf, args.n)
+        med = {sf: median_seconds(spark, qs[name], sf)
                for sf in (args.small, args.big)}
         ratio = med[args.big] / med[args.small]
         exp = math.log10(ratio)
@@ -152,7 +115,7 @@ def main() -> int:
         print(f"| {name} | {med[args.small]:.2f} | {med[args.big]:.2f} "
               f"| {ratio:.2f}x | {exp:.2f} |", flush=True)
     doc = {"small": args.small, "big": args.big,
-           "n": args.n, "queries": out}
+           "n": N, "queries": out}
     rc = 0 if max(out.values(), key=lambda d: d["exp"])["exp"] <= 1.0 \
         else 1
 
@@ -161,16 +124,14 @@ def main() -> int:
         # partitions scaled to it (a constant tuned for either count
         # would penalize the other; AQE re-coalesces, so the number only
         # sets the pre-coalesce task grain).
-        high_cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        high_cores = int(bench.CPUS)
         spark.stop()
         t = {}
         for cores in (args.cores_leg, high_cores):
-            session = get_spark(
-                master=f"local[{cores}]",
-                extra_conf={**extra, "spark.sql.shuffle.partitions":
-                            str(max(cores * 2, 8))})
-            t[cores] = {name: median_seconds(session, qs[name], args.big,
-                                             args.n)
+            session = bench.session(
+                cores, **HEAP,
+                **{"spark.sql.shuffle.partitions": str(max(cores * 2, 8))})
+            t[cores] = {name: median_seconds(session, qs[name], args.big)
                         for name in names}
             session.stop()
         cores_out = {}
@@ -180,21 +141,21 @@ def main() -> int:
         for name in names:
             t_low, t_high = t[args.cores_leg][name], t[high_cores][name]
             speedup = t_low / t_high if t_high else float("nan")
-            gated = t_low >= args.cores_floor
+            gated = t_low >= CORES_FLOOR_S
             cores_out[name] = {"t_low": round(t_low, 3),
                                "t_high": round(t_high, 3),
                                "speedup": round(speedup, 2),
                                "gated": gated}
             flag = ""
-            if gated and speedup < args.cores_min_speedup:
+            if gated and speedup < CORES_MIN_SPEEDUP:
                 rc = 1
                 flag = "  <-- FAIL core-scaling gate"
             print(f"| {name} | {t_low:.2f} | {t_high:.2f} "
                   f"| {speedup:.2f}x |{flag}", flush=True)
         doc["cores_leg"] = {"low_cores": args.cores_leg,
                             "high_cores": high_cores,
-                            "floor_s": args.cores_floor,
-                            "min_speedup": args.cores_min_speedup,
+                            "floor_s": CORES_FLOOR_S,
+                            "min_speedup": CORES_MIN_SPEEDUP,
                             "queries": cores_out}
 
     print(json.dumps(doc), file=sys.stderr)

@@ -18,34 +18,27 @@ SHUFFLE.md baseline (> 1.5x the recorded rows_ratio + 0.5 absolute):
 a plan edit that starts shuffling what it used to combine map-side
 fails the audit even though nothing is "slow" at test sf.
 
-Usage: python tools/shuffle_audit.py [sf_dir] [--json OUT] [query ...]
-Writes a markdown table to SHUFFLE.md by default.
+Usage: python tools/shuffle_audit.py [sf_dir] [query ...] [--bootstrap]
+Writes the markdown table to SHUFFLE.md.
 """
 
 from __future__ import annotations
 
 import argparse
-import importlib.util
-import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
+
+OUT_MD = os.path.join(bench.ROOT, "SHUFFLE.md")
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
     ap.add_argument("queries", nargs="*")
-    ap.add_argument("--json", dest="json_out")
-    ap.add_argument("--out-md", default=os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SHUFFLE.md"))
-    ap.add_argument("--max-ratio", type=float, default=None,
-                    help="optional absolute ratio bound (default: "
-                         "regression-vs-baseline only)")
     ap.add_argument("--bootstrap", action="store_true",
                     help="allow running WITHOUT a committed SHUFFLE.md "
                          "baseline (first run / deliberate reset)")
@@ -55,39 +48,20 @@ def main() -> int:
     # no-op (it happened: SHUFFLE.md was deleted in an unrelated
     # commit and the >1.5x check ran dead for a round). Fail LOUDLY
     # before Spark even starts unless the caller owns the reset.
-    if not os.path.exists(args.out_md) and not args.bootstrap:
-        print(f"ERROR: baseline {args.out_md} is missing — the "
+    if not os.path.exists(OUT_MD) and not args.bootstrap:
+        print(f"ERROR: baseline {OUT_MD} is missing — the "
               "regression gate would be a no-op. Restore the committed "
               "SHUFFLE.md or pass --bootstrap to regenerate it.",
               file=sys.stderr)
         return 2
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "entry_shuffle_audit", os.path.join(root, "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from zacks_estimates_financial_statements_spark.session import get_spark
-    from zacks_estimates_financial_statements_spark.util import cache_scope
-    spark = get_spark(
-        app_name="shuffle-audit",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0",
-                    "spark.ui.showConsoleProgress": "false"})
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
-
-    def stages():
-        with urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages?status=complete"
-        ) as r:
-            return json.load(r)
+    mod = bench.registry()
+    spark = bench.session(**bench.STAGE_UI)
 
     # previous committed rows_ratio column = the regression baseline
     baseline: dict[str, float] = {}
-    if os.path.exists(args.out_md):
-        for line in open(args.out_md):
+    if os.path.exists(OUT_MD):
+        for line in open(OUT_MD):
             parts = [c.strip() for c in line.strip().strip("|").split("|")]
             if len(parts) == 8 and parts[0] not in ("query", "---"):
                 try:
@@ -99,28 +73,15 @@ def main() -> int:
     names = args.queries or list(qs)
     rows, flagged = {}, []
     for name in names:
-        before = {(s["stageId"], s["attemptId"]) for s in stages()}
         try:
-            with cache_scope():
-                t0 = time.time()
-                df = qs[name](spark, args.sf_dir)
-                df.write.format("noop") \
-                    .mode("overwrite").save()  # full eval, no count-pruning
-                wall = time.time() - t0
+            with bench.new_stages(spark) as stages:
+                wall = bench.force(spark, qs[name], args.sf_dir)
         except Exception as exc:  # noqa: BLE001
             rows[name] = {"err": str(exc)[:120]}
             flagged.append((name, "ERR"))
             continue
-        finally:
-            # per-query honesty (bench.py's rule): no later query's
-            # shuffle numbers are measured against this query's
-            # leftover cache
-            spark.catalog.clearCache()
-        time.sleep(0.3)
         inb = shw = spill = inr = shr = 0
-        for s in stages():
-            if (s["stageId"], s["attemptId"]) in before:
-                continue
+        for s in stages:
             inb += s.get("inputBytes", 0)
             shw += s.get("shuffleWriteBytes", 0)
             spill += s.get("diskBytesSpilled", 0)
@@ -134,8 +95,6 @@ def main() -> int:
                       "spill_mb": round(spill / 1e6, 2),
                       "ratio": round(ratio, 2),
                       "wall_s": round(wall, 2)}
-        if args.max_ratio is not None and ratio > args.max_ratio:
-            flagged.append((name, f"ratio {ratio:.1f}"))
         old = baseline.get(name)
         if old is not None and ratio > old * 1.5 + 0.5:
             flagged.append((name, f"ratio {ratio:.1f} vs baseline {old}"))
@@ -146,7 +105,7 @@ def main() -> int:
               file=sys.stderr)
 
     spark.stop()
-    with open(args.out_md, "w") as f:
+    with open(OUT_MD, "w") as f:
         f.write(
             "# Shuffle-volume audit (auto-generated by "
             "tools/shuffle_audit.py)\n\n"
@@ -177,10 +136,7 @@ def main() -> int:
                 f"**{len(flagged)}**"
                 + (": " + ", ".join(f"{n} ({w})" for n, w in flagged)
                    if flagged else "") + "\n")
-    if args.json_out:
-        with open(args.json_out, "w") as f:
-            json.dump(rows, f, indent=2)
-    print(f"wrote {args.out_md}; {len(flagged)} flagged")
+    print(f"wrote {OUT_MD}; {len(flagged)} flagged")
     return 1 if flagged else 0
 
 

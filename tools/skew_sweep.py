@@ -43,21 +43,23 @@ AQE stays ON (production-shaped); only the advisory partition size is
 lowered so runtime coalescing does not merge the whole fixture into a
 single task and hide the distribution being tested.
 
-Usage: python tools/skew_sweep.py [--rows 20000] [--json]
-Exit 0 = no straggler violations.
+Usage: python tools/skew_sweep.py
+Prints one JSON line (violations and the worst stage per operator);
+exit 0 = no straggler violations.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
+ROWS = 20_000       # fixture size
 FLOOR_MS = 250      # ignore stages whose slowest task is below this
 SLACK_MS = 300      # additive allowance on top of 4x median
 RATIO = 4.0
@@ -101,55 +103,19 @@ def build_fixture(spark, rows: int):
     return df.localCheckpoint(eager=True)
 
 
-def stage_summaries(ui: str, app: str, before: set) -> list[dict]:
-    with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages?status=complete") as r:
-        stages = json.load(r)
-    out = []
-    for s in stages:
-        key = (s["stageId"], s["attemptId"])
-        if key in before:
-            continue
-        try:
-            with urllib.request.urlopen(
-                    f"{ui}/api/v1/applications/{app}/stages/"
-                    f"{s['stageId']}/{s['attemptId']}/taskSummary"
-                    f"?quantiles=0.0,0.5,1.0") as r:
-                d = json.load(r)
-        except Exception:
-            continue  # 1-task stages sometimes have no summary yet
-        mn, med, mx = d["executorRunTime"]
-        out.append({"stage": s["stageId"], "tasks": s["numTasks"],
-                    "min_ms": mn, "med_ms": med, "max_ms": mx})
-    return out
-
-
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--rows", type=int, default=20000)
-    ap.add_argument("--json", action="store_true")
-    args = ap.parse_args()
-
     from pyspark.sql import functions as F
 
     from zacks_estimates_financial_statements_spark.operators import curation, dedup
-    from zacks_estimates_financial_statements_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="skew-sweep",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.sql.shuffle.partitions": "8",
-            # keep AQE; stop it from coalescing the small fixture into
-            # one task (which would hide the distribution under test)
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "262144",
-        })
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
-    df = build_fixture(spark, args.rows)
+    spark = bench.session(**{
+        **bench.STAGE_UI,
+        "spark.sql.shuffle.partitions": "8",
+        # keep AQE; stop it from coalescing the small fixture into
+        # one task (which would hide the distribution under test)
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "262144",
+    })
+    df = build_fixture(spark, ROWS)
 
     dim = 1 << 20
     from zacks_estimates_financial_statements_spark.operators.curation import _word_array
@@ -186,7 +152,7 @@ def main() -> int:
             exact_ranks=False)),
         "tfidf_pairs": lambda: force(dedup.tfidf_cosine_pairs(
             df, "doc_id", "text", min_cosine=0.3,
-            max_token_df=max(args.rows // 10, 1))),
+            max_token_df=max(ROWS // 10, 1))),
         "classifier_score": lambda: force(curation.classifier_quality_score(
             df, "doc_id", "text", weights, dim=dim)),
         # "the" heads ~every bigram: head-count model via groupBy
@@ -250,14 +216,12 @@ def main() -> int:
 
     report, violations = {}, []
     for name, fn in ops.items():
-        with urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages?status=complete"
-        ) as r:
-            before = {(s["stageId"], s["attemptId"]) for s in json.load(r)}
         t0 = time.time()
-        fn()
-        time.sleep(0.5)  # let the status store settle
-        stages = stage_summaries(ui, app, before)
+        with bench.new_stages(spark, tasks=True) as found:
+            fn()
+        stages = [{"stage": s["stageId"], "tasks": s["numTasks"],
+                   "min_ms": s["task_ms"][0], "med_ms": s["task_ms"][1],
+                   "max_ms": s["task_ms"][2]} for s in found]
         worst = None
         for st in stages:
             if st["tasks"] < 4 or st["max_ms"] < FLOOR_MS:
@@ -278,11 +242,9 @@ def main() -> int:
               f"max={w['max_ms']:.0f}ms", file=sys.stderr)
 
     spark.stop()
-    if args.json:
-        print(json.dumps({"rows": args.rows, "violations": len(violations),
-                          "ops": {k: {"wall_s": v["wall_s"],
-                                      "worst": v["worst"]}
-                                  for k, v in report.items()}}))
+    print(json.dumps({"rows": ROWS, "violations": len(violations),
+                      "ops": {k: {"wall_s": v["wall_s"], "worst": v["worst"]}
+                              for k, v in report.items()}}))
     for name, st in violations:
         print(f"STRAGGLER {name}: stage {st['stage']} "
               f"max {st['max_ms']:.0f}ms > {st['bound_ms']:.0f}ms "

@@ -90,10 +90,9 @@ def run(spark) -> list[str]:
 
 
 def main() -> int:
-    from zacks_estimates_financial_statements_spark.session import get_spark
-    spark = get_spark(master="local[4]",
-                      extra_conf={"spark.ui.enabled": "false"})
-    fails = run(spark)
+    import bench
+
+    fails = run(bench.session())
     for f in fails:
         print("SPEC FAIL", f)
     print(f"spec_probe: {len(URL_CASES) + len(HTML_CASES) - len(fails)}"

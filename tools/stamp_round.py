@@ -20,7 +20,6 @@ registry key set, so a stale stamp fails the suite.
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import shutil
@@ -28,6 +27,9 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import bench  # noqa: E402
 
 
 def head_newer_than_artifact(src: str) -> str | None:
@@ -50,14 +52,6 @@ def head_newer_than_artifact(src: str) -> str | None:
     return None
 
 
-def registry_keys() -> set[str]:
-    spec = importlib.util.spec_from_file_location(
-        "entry_stamp", os.path.join(ROOT, "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return set(mod.queries())
-
-
 def main() -> int:
     if len(sys.argv) != 2 or not sys.argv[1].isdigit():
         print(__doc__, file=sys.stderr)
@@ -70,7 +64,7 @@ def main() -> int:
               "tools/oracle_check.py first", file=sys.stderr)
         return 1
     results = json.load(open(src))
-    keys = registry_keys()
+    keys = set(bench.registry().queries())
     if set(results) != keys:
         print("refusing to stamp: canonical attestation lags the "
               f"registry (missing={sorted(keys - set(results))} "

@@ -43,11 +43,9 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from zacks_estimates_financial_statements_spark.session import get_spark
-    spark = get_spark(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.ui.showConsoleProgress": "false"})
+    import bench
+
+    spark = bench.session()
 
     os.makedirs(args.out, exist_ok=True)
     for t in TABLES:
