@@ -111,6 +111,33 @@ def test_statements_stream_incremental_load(spark, tmp_path):
     assert got == {"AAPL", "MSFT"}
 
 
+def test_stream_skips_non_document_files(spark, tmp_path):
+    """A stray file in a dated folder is not a document: the stream
+    reads only the dataset's suffix, as the batch reader does, and both
+    take the symbol and folder date from the same path parse."""
+    from fixtures import estimate_page
+
+    from zacks_estimates_financial_statements_spark.sources.raw_zone import read_documents
+
+    base = tmp_path / "raw"
+    d = base / "estimates" / "2024-06-01"
+    d.mkdir(parents=True)
+    (d / "AAPL.detailed-estimates.html").write_text(estimate_page())
+    (d / "junk.txt").write_text("not a page")
+
+    q = (S.stream_documents(spark, str(base), "estimates")
+         .select("act_symbol", "folder_date").writeStream.format("memory")
+         .queryName("stray_file_docs")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    streamed = spark.sql("select * from stray_file_docs").collect()
+    batch = (read_documents(spark, str(base), "estimates", "2024-06-01")
+             .select("act_symbol", "folder_date").collect())
+    assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch)) == \
+        [("AAPL", datetime.date(2024, 6, 1))]
+
+
 def test_attribution_stream_batch_parity(spark, tmp_path):
     """The watermarked stream-stream interval join must emit the same
     attribution pairs as the batch twin, across microbatch boundaries

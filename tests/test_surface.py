@@ -230,8 +230,6 @@ KEEP_DEFINITIONS = {
     **_keep("package metadata", "__init__.__version__"),
     **_keep("the reference's calendar re-export",
             "export.reexport_earnings_calendar"),
-    **_keep("called by the kept reexport_earnings_calendar",
-            "export.publish_command"),
     **_keep("builds the BMFF payloads the video metadata and frame tests "
             "parse", "functions.codecs.encode_mp4_stub"),
     **_keep("builds the planted-duplicate image corpus of the media tests",

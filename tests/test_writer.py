@@ -69,33 +69,27 @@ def test_delete_where_equi_and_condition(spark, store):
                             ("MSFT", D(2024, 5, 2), None)]
 
 
-def test_delete_where_size_gated_broadcast(spark, store):
-    """The condemned-key broadcast hint is size-gated: with
-    broadcasting disabled (the stand-in for a key set too large to
-    ship) delete_where degrades to an un-hinted join with identical
-    results — the forced-broadcast OOM class closed repo-wide in r11."""
-    from zacks_estimates_financial_statements_spark.util import maybe_broadcast
-
+def test_delete_where_joins_without_a_hint(spark, store, monkeypatch):
+    """The condemned keys arrive from outside the plan, so delete_where
+    hints no broadcast: AQE measures the key set at run time and
+    broadcasts it only when it is small, instead of a forced broadcast
+    OOMing every executor on an oversized set."""
     store.upsert_ignore(spark.createDataFrame(
         [("AAPL", D(2024, 5, 1), None), ("MSFT", D(2024, 5, 2), None)],
         "act_symbol string, date date, `when` string"))
     condemned = spark.createDataFrame([("AAPL", D(2024, 5, 1))],
                                       "act_symbol string, date date")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # direct helper check: no hint when broadcasting is disabled
-        probe = maybe_broadcast(condemned)
-        assert "UnresolvedHint" not in \
-            probe._jdf.queryExecution().logical().toString()
-        store.delete_where(condemned, on=["act_symbol", "date"])
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    written = []
+    rewrite = TableStore._overwrite_locked
+
+    def spy(self, df):
+        written.append(df._jdf.queryExecution().logical().toString())
+        rewrite(self, df)
+
+    monkeypatch.setattr(TableStore, "_overwrite_locked", spy)
+    store.delete_where(condemned, on=["act_symbol", "date"])
+    assert "Hint" not in written[0]
     assert _rows(store) == [("MSFT", D(2024, 5, 2), None)]
-    # and under the normal regime the hint IS applied
-    hinted = maybe_broadcast(condemned)
-    assert "UnresolvedHint broadcast" in \
-        hinted._jdf.queryExecution().logical().toString()
 
 
 def test_split_valid_enum_and_not_null(spark):
@@ -117,6 +111,33 @@ def test_read_empty_table_has_declared_schema(spark, tmp_path):
     assert df.count() == 0
     assert df.schema.fieldNames() == ["act_symbol", "date", "rank", "value",
                                       "growth", "momentum", "vgm"]
+
+
+def test_read_starts_no_spark_job(spark, tmp_path):
+    """read() takes the declared schema instead of inferring one from
+    Parquet footers, so even a written, partitioned table is read
+    without a Spark job."""
+    store = TableStore(spark, str(tmp_path), "rank_score")
+    store.upsert_ignore(spark.createDataFrame(
+        [("AAPL", D(2024, 5, 1), "Hold", "A", "B", "C", "D"),
+         ("MSFT", D(2024, 5, 8), "Buy", "A", "A", "A", "A")],
+        "act_symbol string, date date, rank string, value string, "
+        "growth string, momentum string, vgm string"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("read-probe", "TableStore.read")
+    try:
+        df = store.read()
+        assert df.schema.fieldNames() == ["act_symbol", "date", "rank",
+                                          "value", "growth", "momentum",
+                                          "vgm"]
+        assert tracker.getJobIdsForGroup("read-probe") == []
+        # the probe sees this thread's jobs: an action does show up
+        assert df.count() == 2
+        assert tracker.getJobIdsForGroup("read-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_upsert_antijoin_prunes_stored_side_to_batch_partitions(spark, tmp_path):
@@ -308,29 +329,29 @@ def test_snapshot_pin_survives_flip_and_gc(spark, tmp_path):
     released, the next GC reclaims the old version."""
     import os
 
-    import pytest
-    from pyspark.sql import functions as F
+    def rows(n):
+        return spark.createDataFrame(
+            [(f"S{i}", D(2025, 1, 1), None) for i in range(n)],
+            "act_symbol string, date date, `when` string")
 
-    from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-
-    store = TableStore(spark, str(tmp_path), "pinned")
-    store.overwrite(spark.range(5).select(F.col("id")))
+    store = TableStore(spark, str(tmp_path), "earnings_calendar")
+    store.overwrite(rows(5))
     with store.snapshot() as snap:
         v0 = snap.version
         assert snap.read().count() == 5
         # concurrent writer flips twice; GC runs after each flip but
         # must retain the pinned version
-        store.overwrite(spark.range(9).select(F.col("id")))
-        store.overwrite(spark.range(3).select(F.col("id")))
+        store.overwrite(rows(9))
+        store.overwrite(rows(3))
         assert os.path.isdir(os.path.join(store.path, v0))
         assert snap.read().count() == 5          # still the snapshot
         assert store.read().count() == 3         # live moved on
     # pin released: the next writer GC reclaims v0
-    store.overwrite(spark.range(7).select(F.col("id")))
+    store.overwrite(rows(7))
     assert not os.path.isdir(os.path.join(store.path, v0))
     # a table with no live version has nothing to pin
     with pytest.raises(ValueError, match="cannot pin"):
-        TableStore(spark, str(tmp_path), "empty").snapshot().__enter__()
+        TableStore(spark, str(tmp_path), "dividend_calendar").snapshot().__enter__()
 
 
 def test_snapshot_stale_pin_is_reaped(spark, tmp_path):

@@ -6,17 +6,22 @@ per-stage metrics from the Spark status REST API: bytes/records read
 10 MB of lineitem reads ~18 KB, which is itself evidence the pruning
 works), shuffle write bytes/records, disk spill. The headline number
 is ROW AMPLIFICATION ``shuffle_write_records / input_records`` — how
-many rows cross the network per row scanned. It is scale-invariant
-(both sides grow with the data), so it characterizes the PLAN:
-~0 for zero-shuffle projections, <1 for map-side-combined
-aggregations, the explode fan-out factor (tokens/doc) for the
-shingle/pair queries — by design, not by accident.
+many rows cross the network per row scanned: ~0 for zero-shuffle
+projections, <1 for map-side-combined aggregations, the explode
+fan-out factor (tokens/doc) for the shingle/pair queries — by design,
+not by accident. The ratio is NOT scale-invariant: how much a
+map-side combine collapses, and how large a fixed-size sample is next
+to its input, both change with the data, so the same plan reads up to
+10x apart at sf0.01 and sf0.1.
 
 The gate flags (a) any DISK SPILL — partitions no longer fit in
 memory — and (b) AMPLIFICATION REGRESSIONS against the committed
 SHUFFLE.md baseline (> 1.5x the recorded rows_ratio + 0.5 absolute):
 a plan edit that starts shuffling what it used to combine map-side
-fails the audit even though nothing is "slow" at test sf.
+fails the audit even though nothing is "slow" at test sf. The
+baseline only judges a run at the ``sf_dir`` its header names; any
+other ``sf_dir`` — like a missing baseline — exits 2 before Spark
+starts unless ``--bootstrap`` rewrites the baseline at the new scale.
 
 Usage: python tools/shuffle_audit.py [sf_dir] [query ...] [--bootstrap]
 Writes the markdown table to SHUFFLE.md.
@@ -26,6 +31,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,39 +41,57 @@ import bench  # noqa: E402
 OUT_MD = os.path.join(bench.ROOT, "SHUFFLE.md")
 
 
+def baseline_error(md_text: str | None, sf_dir: str) -> str | None:
+    """Why a SHUFFLE.md baseline (its text, None when the file is
+    missing) cannot judge a run at ``sf_dir``, or None when it can. A
+    missing baseline turns the gate into a no-op (it happened: SHUFFLE.md
+    was deleted in an unrelated commit and the check ran dead for a
+    round); one measured at another scale, read from its ``Measured
+    per-query at `…``` header, flags plans that did not change."""
+    if md_text is None:
+        return (f"baseline {OUT_MD} is missing — the regression gate "
+                "would be a no-op")
+    m = re.search(r"Measured per-query at `([^`]*)`", md_text)
+    measured_at = m.group(1) if m else None
+    if measured_at != sf_dir:
+        return (f"baseline {OUT_MD} was measured at {measured_at!r}, not "
+                f"{sf_dir!r} — its rows_ratio column does not judge this "
+                "scale")
+    return None
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--bootstrap", action="store_true",
-                    help="allow running WITHOUT a committed SHUFFLE.md "
-                         "baseline (first run / deliberate reset)")
+                    help="allow running without a SHUFFLE.md baseline "
+                         "measured at sf_dir and rewrite it (first run, "
+                         "new scale or deliberate reset)")
     args = ap.parse_args()
 
-    # A silently-missing baseline turns the regression gate into a
-    # no-op (it happened: SHUFFLE.md was deleted in an unrelated
-    # commit and the >1.5x check ran dead for a round). Fail LOUDLY
-    # before Spark even starts unless the caller owns the reset.
-    if not os.path.exists(OUT_MD) and not args.bootstrap:
-        print(f"ERROR: baseline {OUT_MD} is missing — the "
-              "regression gate would be a no-op. Restore the committed "
-              "SHUFFLE.md or pass --bootstrap to regenerate it.",
+    # Fail LOUDLY before Spark even starts unless the caller owns the
+    # reset.
+    text = open(OUT_MD).read() if os.path.exists(OUT_MD) else None
+    error = baseline_error(text, args.sf_dir)
+    if error and not args.bootstrap:
+        print(f"ERROR: {error}. Restore the committed SHUFFLE.md, run at "
+              "its sf_dir, or pass --bootstrap to regenerate it.",
               file=sys.stderr)
         return 2
 
-    mod = bench.registry()
-    spark = bench.session(**bench.STAGE_UI)
-
     # previous committed rows_ratio column = the regression baseline
     baseline: dict[str, float] = {}
-    if os.path.exists(OUT_MD):
-        for line in open(OUT_MD):
-            parts = [c.strip() for c in line.strip().strip("|").split("|")]
-            if len(parts) == 8 and parts[0] not in ("query", "---"):
-                try:
-                    baseline[parts[0]] = float(parts[5])
-                except ValueError:
-                    pass
+    for line in [] if error else text.splitlines():
+        parts = [c.strip() for c in line.strip().strip("|").split("|")]
+        if len(parts) == 8 and parts[0] not in ("query", "---"):
+            try:
+                baseline[parts[0]] = float(parts[5])
+            except ValueError:
+                pass
+
+    mod = bench.registry()
+    spark = bench.session(**bench.STAGE_UI)
 
     qs = mod.queries()
     names = args.queries or list(qs)
@@ -113,8 +137,9 @@ def main() -> int:
             "status REST API: bytes read from storage, bytes written to "
             "shuffle, disk spill. `ratio` = shuffle/input — the "
             "100 TB network number: rows shuffled per row scanned "
-            "(scale-invariant — it characterizes the PLAN, not the "
-            "test size; input bytes reflect column-pruned scans). "
+            "(it characterizes the PLAN at this scale — it moves with "
+            "the data, so it is only compared at this sf_dir; input "
+            "bytes reflect column-pruned scans). "
             "~0 = zero-shuffle projection, <1 = map-side-combined, "
             "token-fan-out for the shingle/pair explodes — by design. "
             "The gate flags disk spill and regressions vs this "

@@ -251,20 +251,8 @@ def reexport_earnings_calendar(df: DataFrame, out_dir: str,
     cmds = [["dolt", "sql", "-q",
              ("delete from earnings_calendar where date >= "
               f"date_sub('{as_of_date}', interval 7 day)")],
-            *publish_command("", "earnings_calendar", target, as_of_date)]
+            *publish_sequence("earnings_calendar", [target], as_of_date)]
     return target, cmds
-
-
-def publish_command(base_folder: str, table: str, csv_file: str,
-                    end_date: str) -> list[list[str]]:
-    """W9 — the dolt import/commit/push subprocess steps as argv lists for
-    an external publisher (dump-dolt-estimates.rkt:71, 86-87)."""
-    return [
-        ["dolt", "table", "import", "-u", "--continue", table, csv_file],
-        ["dolt", "add", table],
-        ["dolt", "commit", "-m", f"{table} {end_date} update"],
-        ["dolt", "push", "--silent"],
-    ]
 
 
 def publish_sequence(table: str, csv_files: list[str],

@@ -3,6 +3,11 @@ free, re-expressed over immutable Parquet (SURVEY §2.8 W1-W7).
 
 Semantics implemented:
 
+- ``read``            — the table's declared shape (``schemas.TABLES``),
+  never one inferred from Parquet footers: the read starts no Spark job,
+  columns come back in DDL order (partition columns included), and a
+  table never written — or a version directory with no data files, as a
+  zero-row partitioned write leaves — reads as empty.
 - ``upsert_ignore``   — W1: ``INSERT … ON CONFLICT (pk) DO NOTHING``
   (estimate-transform-load.rkt:195 et al.): dedup the batch on PK, anti-join
   against the stored PKs, append only the new keys. Re-runs are no-ops.
@@ -54,7 +59,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from zacks_estimates_financial_statements_spark.schemas import (
     ENUM_DOMAINS,
@@ -170,37 +174,20 @@ class TableStore:
 
     def read(self, version: str | None = None) -> DataFrame:
         """Current table contents (or a retained ``version``, which only
-        ``snapshot()`` pins); empty (schema-correct) DF if never
-        written."""
+        ``snapshot()`` pins), read against the declared schema; empty if
+        never written."""
+        schema = TABLES[self.name]
         if version is not None:
             vdir = os.path.join(self.path, version)
             if not os.path.isdir(vdir):
                 raise ValueError(f"version {version} of table {self.name} "
                                  "is not retained")
-            return self.spark.read.parquet(vdir)
-        live = self._live_dir()
-        if live is None:
-            schema = TABLES.get(self.name)
-            if schema is None:
-                raise ValueError(f"table {self.name} has never been written "
-                                 "and has no declared schema")
-            return self.spark.createDataFrame([], schema)
-        try:
-            df = self.spark.read.parquet(live)
-        except AnalysisException:
-            # a zero-row partitioned write leaves a version dir with no
-            # parquet files — schema inference fails, but the table is
-            # legitimately empty
-            schema = TABLES.get(self.name)
-            if schema is None:
-                raise
-            return self.spark.createDataFrame([], schema)
-        declared = TABLES.get(self.name)
-        if declared is not None and set(declared.fieldNames()) <= set(df.columns):
-            # partitioned reads append partition columns at the end;
-            # restore the declared column order
-            df = df.select(*declared.fieldNames())
-        return df
+        else:
+            vdir = self._live_dir()
+            if vdir is None:
+                return self.spark.createDataFrame([], schema)
+        return (self.spark.read.schema(schema).parquet(vdir)
+                .select(*schema.fieldNames()))
 
     # -- write primitives ---------------------------------------------------
 
@@ -415,7 +402,6 @@ class TableStore:
         hinting it with the *stored* set, as a naive reading suggests,
         inverts the intended plan.)
         """
-        # via read(): survives a zero-row live dir (no parquet files)
         stored = self.read()
         parts = [c for c in self._partition_cols() if c in deduped.columns]
         if parts:
@@ -439,11 +425,7 @@ class TableStore:
         3. append.
         """
         pk = PRIMARY_KEYS[self.name]
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*[F.col(c) for c in pk]).orderBy(F.lit(1))
-        deduped = (batch.withColumn("__rn", F.row_number().over(w))
-                   .filter(F.col("__rn") == 1).drop("__rn"))
+        deduped = batch.dropDuplicates(list(pk))
 
         with self.write_lock():
             live = self._live_dir()
@@ -462,18 +444,11 @@ class TableStore:
 
     def delete_where(self, condemned_keys: DataFrame, on: list[str]) -> None:
         """W6/J3 — delete-via-join: remove stored rows matching
-        ``condemned_keys`` (equi on ``on``), via left_anti + rewrite.
-
-        The condemned set is small by design (stale calendar keys) but
-        arrives from OUTSIDE this plan, so the broadcast hint is
-        size-gated (``util.maybe_broadcast``): an oversized key set
-        degrades to an un-hinted join AQE can plan, instead of OOMing
-        every executor through a forced broadcast."""
-        from zacks_estimates_financial_statements_spark.util import maybe_broadcast
-
+        ``condemned_keys`` (equi on ``on``), via left_anti + rewrite. No
+        join hint: AQE sees the condemned set's real size at run time
+        and broadcasts it when it is small."""
         with self.write_lock():
-            kept = self.read().join(maybe_broadcast(condemned_keys), on=on,
-                                    how="left_anti")
+            kept = self.read().join(condemned_keys, on=on, how="left_anti")
             self._overwrite_locked(kept)
 
 

@@ -42,13 +42,7 @@ from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions import expressions as E
 from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-from zacks_estimates_financial_statements_spark.schemas import (
-    BALANCE_SHEET_ASSETS_COLS,
-    BALANCE_SHEET_EQUITY_COLS,
-    BALANCE_SHEET_LIABILITIES_COLS,
-    CASH_FLOW_STATEMENT_COLS,
-    INCOME_STATEMENT_COLS,
-)
+from zacks_estimates_financial_statements_spark.schemas import PRIMARY_KEYS, TABLES
 from zacks_estimates_financial_statements_spark.util import cache_scope, persist
 
 #: statement kind → (raw dataset dir, destination tables)
@@ -63,12 +57,19 @@ STATEMENT_KINDS = {
 _DATE_FMT = {"income": "M/dd/yy", "balance": "M/dd/yyyy",
              "cash_flow": "M/dd/yyyy"}
 
-_KIND_COLS = {
-    "income": INCOME_STATEMENT_COLS,
-    "balance": (BALANCE_SHEET_ASSETS_COLS + BALANCE_SHEET_LIABILITIES_COLS
-                + BALANCE_SHEET_EQUITY_COLS),
-    "cash_flow": CASH_FLOW_STATEMENT_COLS,
-}
+
+def _sni_compare_sets(kind: str) -> list[list[str]]:
+    """Column groups with independent sni guards whose failures share one
+    transaction: each destination table's declared non-key columns —
+    one group for income/cash_flow, three (assets, liabilities, equity)
+    OR'd together for balance."""
+    return [[c for c in TABLES[t].fieldNames() if c not in PRIMARY_KEYS[t]]
+            for t in STATEMENT_KINDS[kind][1]]
+
+
+#: statement kind → its value columns, in page (and DDL) order
+_KIND_COLS = {kind: [c for group in _sni_compare_sets(kind) for c in group]
+              for kind in STATEMENT_KINDS}
 
 #: unscaled (per-share) columns per kind — everything else is ×1e6 (F7;
 #: income-statement-transform-load.rkt:201-226,
@@ -110,17 +111,6 @@ def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
             .select(F.col("act_symbol"), F.col("folder_date"),
                     date_col.alias("date"), period_col.alias("period"),
                     *typed))
-
-
-def _sni_compare_sets(kind: str) -> list[list[str]]:
-    """Column groups with independent sni guards whose failures share one
-    transaction. income/cash_flow: one group; balance: three (assets,
-    liabilities, equity) OR'd together."""
-    if kind == "balance":
-        return [list(BALANCE_SHEET_ASSETS_COLS),
-                list(BALANCE_SHEET_LIABILITIES_COLS),
-                list(BALANCE_SHEET_EQUITY_COLS)]
-    return [list(_KIND_COLS[kind])]
 
 
 def _prior_date(d: datetime.date, period: str) -> datetime.date:
@@ -227,42 +217,31 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
 def load_statement(raw: DataFrame, kind: str,
                    stores: dict[str, TableStore]) -> None:
     """One loader run: type the batch, run the sni chain against stored
-    state, split into destination tables, upsert each."""
-    candidates = typed_candidates(raw, kind)
-
-    if kind == "balance":
-        # stored compare state: join the three balance tables back into the
-        # page-shaped wide row on the shared PK. INNER joins, not outer
-        # (r10 crash-recovery find): a PK counts as "landed" (sni chain's
-        # ON CONFLICT DO NOTHING) only when ALL THREE tables carry it —
-        # a mid-fan-out crash leaves a PARTIAL row (e.g. assets written,
-        # liabilities/equity not), and an outer-joined wide row made the
-        # replay skip the candidate, stranding the row incomplete
-        # forever. With inner joins the partial PK is not "landed", the
-        # replay re-accepts the candidate, the already-written table's
-        # PK upsert is a no-op, and the missing tables complete — the
-        # module recovery contract tests/test_streaming.py pins. In
-        # crash-free operation the three tables always carry equal PK
-        # sets, so inner == outer there.
-        a = stores["balance_sheet_assets"].read()
-        li = stores["balance_sheet_liabilities"].read()
-        eq = stores["balance_sheet_equity"].read()
-        pk = ["act_symbol", "date", "period"]
-        stored = a.join(li, pk).join(eq, pk)
-        with cache_scope():
-            accepted = persist(apply_sni_chain(candidates, stored, kind),
-                               StorageLevel.MEMORY_AND_DISK_DESER)
-            accepted.count()
-            base = ["act_symbol", "date", "period"]
-            stores["balance_sheet_assets"].upsert_ignore(
-                accepted.select(*base, *BALANCE_SHEET_ASSETS_COLS))
-            stores["balance_sheet_liabilities"].upsert_ignore(
-                accepted.select(*base, *BALANCE_SHEET_LIABILITIES_COLS))
-            stores["balance_sheet_equity"].upsert_ignore(
-                accepted.select(*base, *BALANCE_SHEET_EQUITY_COLS))
-        return
-
-    table = "income_statement" if kind == "income" else "cash_flow_statement"
-    stored = stores[table].read()
-    accepted = apply_sni_chain(candidates, stored, kind)
-    stores[table].upsert_ignore(accepted)
+    state, and upsert the accepted rows' declared columns into each
+    destination table."""
+    dest = STATEMENT_KINDS[kind][1]
+    # stored compare state: the destination tables joined back into the
+    # page-shaped wide row on the shared PK. INNER joins, not outer
+    # (r10 crash-recovery find): a PK counts as "landed" (sni chain's
+    # ON CONFLICT DO NOTHING) only when EVERY destination table carries
+    # it — a mid-fan-out crash leaves a PARTIAL row (e.g. assets
+    # written, liabilities/equity not), and an outer-joined wide row made
+    # the replay skip the candidate, stranding the row incomplete
+    # forever. With inner joins the partial PK is not "landed", the
+    # replay re-accepts the candidate, the already-written table's PK
+    # upsert is a no-op, and the missing tables complete — the module
+    # recovery contract tests/test_streaming.py pins. In crash-free
+    # operation the tables always carry equal PK sets, so inner == outer
+    # there.
+    stored = stores[dest[0]].read()
+    for t in dest[1:]:
+        stored = stored.join(stores[t].read(), list(PRIMARY_KEYS[t]))
+    with cache_scope():
+        # each upsert reads the accepted rows twice (its partition-value
+        # collect, then the append), once per destination table: run the
+        # parse and the sni walk once
+        accepted = persist(
+            apply_sni_chain(typed_candidates(raw, kind), stored, kind),
+            StorageLevel.MEMORY_AND_DISK_DESER)
+        for t in dest:
+            stores[t].upsert_ignore(accepted.select(*TABLES[t].fieldNames()))

@@ -20,6 +20,8 @@ the operator surface below is unchanged either way.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,42 +34,48 @@ SUFFIXES = {
 }
 
 
-def read_dated_folder(spark: SparkSession, folder: str,
-                      suffix: str) -> DataFrame:
-    """Scan one dated folder; returns (path, content, file_stem) where
-    ``file_stem`` is the filename with ``suffix`` removed (the symbol for
-    document datasets, the event date for calendars)."""
-    df = (spark.read.format("binaryFile")
-          .option("pathGlobFilter", f"*{suffix}")
-          .load(folder))
-    stem = F.regexp_extract(F.col("path"), rf"([^/]+){suffix.replace('.', chr(92) + '.')}$", 1)
-    return df.select(
-        F.col("path"),
-        F.col("content").cast("string").alias("content"),
-        stem.alias("file_stem"),
-    )
+def load_documents(reader, dataset: str, path: str) -> DataFrame:
+    """(path, content, act_symbol, folder_date) of the ``dataset``
+    documents under ``path``, through a batch or a stream reader: only
+    files with the dataset's suffix, read as ``binaryFile``, the symbol
+    taken from the file name less the suffix and the folder date from
+    its parent directory (``<base>/<dataset>/<yyyy-MM-dd>/<SYM><suffix>``)."""
+    suffix = SUFFIXES[dataset]
+    path_col = F.col("path")
+    folder = F.regexp_extract(path_col, r"/(\d{4}-\d{2}-\d{2})/[^/]+$", 1)
+    return (reader.format("binaryFile")
+            .option("pathGlobFilter", f"*{suffix}")
+            .load(path)
+            .select(path_col,
+                    F.col("content").cast("string").alias("content"),
+                    F.regexp_extract(path_col, rf"([^/]+){re.escape(suffix)}$",
+                                     1).alias("act_symbol"),
+                    # ansi-ok: pipeline-written dated layout; a malformed folder must abort loudly (layout-drift/tamper detection)
+                    F.to_date(folder, "yyyy-MM-dd").alias("folder_date")))
 
 
 def read_documents(spark: SparkSession, base: str, dataset: str,
                    folder_date: str) -> DataFrame:
-    """HTML documents for one (dataset, folder_date): (symbol, content)."""
-    folder = f"{base}/{dataset}/{folder_date}"
-    return (read_dated_folder(spark, folder, SUFFIXES[dataset])
-            .withColumnRenamed("file_stem", "act_symbol")
-            .withColumn("folder_date", F.lit(folder_date).cast("date")))
+    """HTML documents for one (dataset, folder_date):
+    (path, content, act_symbol, folder_date)."""
+    return load_documents(spark.read, dataset,
+                          f"{base}/{dataset}/{folder_date}")
 
 
 def read_calendar_files(spark: SparkSession, base: str, dataset: str,
                         folder_date: str) -> DataFrame:
-    """Calendar JSON day-files: (event_date, content, row order preserved
-    via path). The event date is the file stem, NOT part of the payload
-    (earnings-calendar-transform-load.rkt:55-56)."""
-    folder = f"{base}/{dataset}/{folder_date}"
-    return (read_dated_folder(spark, folder, ".json")
-            # ansi-ok: day-file stems are pipeline-written YYYY-MM-DD names; abort loudly on layout drift
-            .withColumn("event_date", F.to_date(F.col("file_stem"), "yyyy-MM-dd"))
-            .withColumn("folder_date", F.lit(folder_date).cast("date"))
-            .drop("file_stem"))
+    """Calendar JSON day-files: (path, content, event_date, folder_date),
+    row order preserved via path. The event date is the file stem, NOT
+    part of the payload (earnings-calendar-transform-load.rkt:55-56)."""
+    stem = F.regexp_extract(F.col("path"), r"([^/]+)\.json$", 1)
+    return (spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.json")
+            .load(f"{base}/{dataset}/{folder_date}")
+            .select(F.col("path"),
+                    F.col("content").cast("string").alias("content"),
+                    # ansi-ok: day-file stems are pipeline-written YYYY-MM-DD names; abort loudly on layout drift
+                    F.to_date(stem, "yyyy-MM-dd").alias("event_date"),
+                    F.lit(folder_date).cast("date").alias("folder_date")))
 
 
 # ---------------------------------------------------------------------------

@@ -51,27 +51,24 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from zacks_estimates_financial_statements_spark.util import dec6
 
+#: the fixed schema of Spark's ``binaryFile`` source
+_BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
+                       "length bigint, content binary")
+
 
 def stream_documents(spark: SparkSession, base: str,
                      dataset: str) -> DataFrame:
     """File-source stream of whole HTML documents for one raw-zone
-    dataset across ALL dated folders: (act_symbol, folder_date, content)
-    — the streaming twin of ``sources.raw_zone.read_documents``. New
-    files (a new day's crawl, or stragglers inside a day) are picked up
-    incrementally via the checkpoint."""
-    from zacks_estimates_financial_statements_spark.sources.raw_zone import SUFFIXES
+    dataset across ALL dated folders: (path, content, act_symbol,
+    folder_date) — the streaming twin of
+    ``sources.raw_zone.read_documents``, with the same suffix filter, so
+    a stray non-document file never becomes a document. New files (a new
+    day's crawl, or stragglers inside a day) are picked up incrementally
+    via the checkpoint."""
+    from zacks_estimates_financial_statements_spark.sources.raw_zone import load_documents
 
-    suffix = SUFFIXES[dataset].replace(".", r"\.")
-    raw = (spark.readStream.format("text")
-           .option("wholetext", "true")
-           .load(f"{base}/{dataset}/*/"))
-    path = F.input_file_name()
-    return raw.select(
-        F.regexp_extract(path, rf"([^/]+){suffix}$", 1).alias("act_symbol"),
-        # ansi-ok: pipeline-written dated layout; a malformed folder must abort loudly (layout-drift/tamper detection)
-        F.to_date(F.regexp_extract(path, r"/(\d{4}-\d{2}-\d{2})/[^/]+$", 1),
-                  "yyyy-MM-dd").alias("folder_date"),
-        F.col("value").alias("content"))
+    return load_documents(spark.readStream.schema(_BINARY_FILE_SCHEMA),
+                          dataset, f"{base}/{dataset}/*/")
 
 
 def run_estimates_stream(spark: SparkSession, base: str, tables_root: str,
