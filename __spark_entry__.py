@@ -34,6 +34,7 @@ from zacks_estimates_financial_statements_spark.functions import tokenize  # noq
 from zacks_estimates_financial_statements_spark.functions import web  # noqa: E402
 from zacks_estimates_financial_statements_spark.operators import (  # noqa: E402
     curation, dedup, graph, multimodal, similarity, sketches, temporal)
+from zacks_estimates_financial_statements_spark.pipelines import calendar_pipeline  # noqa: E402
 from zacks_estimates_financial_statements_spark.util import persist  # noqa: E402
 
 DEC = "decimal(38,6)"
@@ -795,31 +796,20 @@ FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01'
 
 def q_stale_cleanup(spark, sf):
     """J2+A3+J3 composite — the earnings-calendar stale-estimate cleanup
-    shape: events per user superseded within orders-derived windows are
-    removed (survivors returned)."""
+    (W6) through the ELT's own kernel, ``stale_earnings_keys``: events
+    stand in for the calendar and orders for the balance sheet, both
+    keyed (act_symbol, date); condemned events are removed (survivors
+    returned)."""
     ev = (_t(spark, sf, "events")
-          .select(F.col("user_id").alias("uid"),
-                  F.col("ts").cast("date").alias("ed"), "event_id"))
-    orders = _t(spark, sf, "orders")
-    actual = (orders.select(F.col("o_custkey").alias("uid"),
-                            F.col("o_orderdate").cast("date").alias("wd"))
-              .distinct())
-    projected = (orders.groupBy(F.col("o_custkey").alias("uid"))
-                 .agg(F.max(F.col("o_orderdate").cast("date")).alias("mx"))
-                 .select("uid", E.next_quarter_end(F.col("mx")).alias("wd")))
-    windows = (actual.unionByName(projected).distinct()
-               .withColumn("we", E.next_quarter_end(F.col("wd"))))
-    joined = (ev.join(windows, "uid")
-              .filter((F.col("ed") > F.col("wd")) & (F.col("ed") <= F.col("we"))))
-    ecm = (joined.groupBy("uid", "wd", "we")
-           .agg(F.max("ed").alias("max_ed")))
-    condemned = (ev.join(ecm, "uid")
-                 .filter((F.col("ed") != F.col("max_ed"))
-                         & (F.col("ed") > F.col("wd"))
-                         & (F.col("ed") <= F.col("we")))
-                 .select("event_id").distinct())
-    return (ev.join(condemned, "event_id", "left_anti")
-            .select("event_id", "uid", "ed"))
+          .select(F.col("user_id").alias("act_symbol"),
+                  F.col("ts").cast("date").alias("date"), "event_id"))
+    orders = (_t(spark, sf, "orders")
+              .select(F.col("o_custkey").alias("act_symbol"),
+                      F.col("o_orderdate").cast("date").alias("date")))
+    condemned = calendar_pipeline.stale_earnings_keys(ev, orders)
+    return (ev.join(condemned, ["act_symbol", "date"], "left_anti")
+            .select("event_id", F.col("act_symbol").alias("uid"),
+                    F.col("date").alias("ed")))
 
 
 ORACLE_STALE_CLEANUP = """

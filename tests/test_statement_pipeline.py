@@ -158,3 +158,31 @@ def test_legacy_cash_flow_load(spark, tmp_path):
     r23 = [r for r in rows if r["date"] == D(2023, 12, 31)][0]
     assert r23["net_income"] == Decimal("100000000")
     assert r23["diluted_net_eps"] == Decimal("21100")
+
+
+FEB_ANNUAL_Y = ["2/29/24", "2/28/23", "2/28/22", "2/28/21", "2/29/20"]
+FEB_QTR_Y = ["5/31/24", "2/29/24", "11/30/23", "8/31/23", "5/31/23"]
+
+
+@pytest.mark.parametrize("copied", [True, False])
+def test_sni_prior_key_month_end_edges(spark, tmp_path, copied):
+    """F10 through the walk on a February fiscal year: the annual prior of
+    2/29/24 is 2/28/23 (add_months clamps) and the quarterly prior of
+    5/31/24 is 2/29/24 (+1 day -3 months -1 day). A copied column at
+    either key is suppressed; one changed cell lets it in."""
+    store = {"income_statement": TableStore(spark, str(tmp_path), "income_statement")}
+    av, qv = _vals(_INCOME_FIELDS), _vals(_INCOME_FIELDS, 500)
+    for f in _INCOME_FIELDS:
+        av[f][0], qv[f][0] = av[f][1], qv[f][1]
+    if not copied:
+        av["sales"][0], qv["net_income"][0] = "999", "777"
+    html = income_statement_page(FEB_ANNUAL_Y, FEB_QTR_Y, av, qv)
+    pipe.load_statement(_income_raw(spark, [("AAPL", D(2024, 7, 1), html)]),
+                        "income", store)
+    got = {(r["period"], r["date"])
+           for r in store["income_statement"].read().collect()}
+    newest = {("Year", D(2024, 2, 29)), ("Quarter", D(2024, 5, 31))}
+    assert len(got) == (8 if copied else 10)
+    assert (newest & got) == (set() if copied else newest)
+    # the priors themselves always land
+    assert {("Year", D(2023, 2, 28)), ("Quarter", D(2024, 2, 29))} <= got

@@ -241,9 +241,6 @@ KEEP_DEFINITIONS = {
             "writer's flip and GC", "operators.writer.TableStore.snapshot"),
     **_keep("the reader handle the kept snapshot yields",
             "operators.writer._Snapshot"),
-    **_keep("the enum/NOT-NULL gate", "operators.writer.split_valid"),
-    **_keep("called by the kept split_valid",
-            "operators.writer.validity_condition"),
     **_keep("HTMLParser callback the standard library invokes",
             "parse.html._TreeBuilder.handle_data",
             "parse.html._TreeBuilder.handle_endtag",

@@ -8,7 +8,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from zacks_estimates_financial_statements_spark.operators.writer import TableStore, split_valid
+from zacks_estimates_financial_statements_spark.operators.writer import TableStore
 
 D = datetime.date
 
@@ -90,19 +90,6 @@ def test_delete_where_joins_without_a_hint(spark, store, monkeypatch):
     store.delete_where(condemned, on=["act_symbol", "date"])
     assert "Hint" not in written[0]
     assert _rows(store) == [("MSFT", D(2024, 5, 2), None)]
-
-
-def test_split_valid_enum_and_not_null(spark):
-    df = spark.createDataFrame(
-        [("AAPL", D(2024, 5, 1), "After market close"),   # valid
-         ("MSFT", D(2024, 5, 2), None),                   # valid (when nullable)
-         ("BAD", D(2024, 5, 3), "at noon"),               # enum violation
-         (None, D(2024, 5, 4), None)],                    # NOT NULL violation
-        "act_symbol string, date date, `when` string")
-    valid, quarantined = split_valid(df, "earnings_calendar")
-    assert valid.count() == 2
-    q = [(r["act_symbol"]) for r in quarantined.collect()]
-    assert sorted(q, key=str) == ["BAD", None]
 
 
 def test_read_empty_table_has_declared_schema(spark, tmp_path):

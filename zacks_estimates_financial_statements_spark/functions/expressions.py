@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from zacks_estimates_financial_statements_spark.schemas import DEC
+from zacks_estimates_financial_statements_spark.schemas import (
+    DEC,
+    RANKS,
+    STATEMENT_PERIODS,
+    WHENS,
+)
 
 # ---------------------------------------------------------------------------
 # String cell normalization (F1-F5, F15)
@@ -68,19 +73,22 @@ def strip_dollar(col: Column) -> Column:
     return F.regexp_replace(col, r"[$]", "")
 
 
-def clean_numeric_cell(col: Column) -> Column:
-    """The full estimate-cell grammar: trim → lone-M→NA → magnitude →
-    paren strip → comma strip → NA→NULL → decimal cast
+def normalize_numeric_cell(col: Column) -> Column:
+    """The estimate-cell grammar up to the cast: trim → lone-M→NA →
+    magnitude → paren strip → comma strip → NA→NULL
     (estimate-transform-load.rkt:118-125 + the in-SQL ``case 'NA'`` at
-    :227-246). One composed expression used by every estimate parser."""
-    c = trim_cell(col)
-    c = expand_magnitude(c)
-    c = strip_parens(c)
-    c = strip_commas(c)
-    c = na_to_null(c)
+    :227-246). Written once: the values (``clean_numeric_cell``) and the
+    estimate document gate (``estimate_pipeline._cell_ok``) both start
+    here."""
+    return na_to_null(strip_commas(strip_parens(expand_magnitude(trim_cell(col)))))
+
+
+def clean_numeric_cell(col: Column) -> Column:
+    """The full estimate-cell grammar: ``normalize_numeric_cell`` →
+    decimal cast. One composed expression used by every estimate parser."""
     # try_cast: unexpected garbage becomes NULL instead of failing the job
     # (Spark 4 ANSI mode makes plain cast throw on malformed input).
-    return c.try_cast(DEC)
+    return normalize_numeric_cell(col).try_cast(DEC)
 
 
 def clean_statement_cell(col: Column) -> Column:
@@ -152,11 +160,11 @@ def next_quarter_end(date_col: Column) -> Column:
 # Enum codecs (F12, F13)
 # ---------------------------------------------------------------------------
 
-_STATEMENT_PERIOD_DECODE = {"annual": "Year", "quarterly": "Quarter"}
+_STATEMENT_PERIOD_DECODE = dict(zip(("annual", "quarterly"), STATEMENT_PERIODS))
 
-_WHEN_DECODE = {"amc": "After market close", "bmo": "Before market open"}
+_WHEN_DECODE = dict(zip(("bmo", "amc"), WHENS))
 
-_RANK_TO_INT = {"Strong Buy": 1, "Buy": 2, "Hold": 3, "Sell": 4, "Strong Sell": 5}
+_RANK_TO_INT = {rank: i for i, rank in enumerate(RANKS, 1)}
 
 
 def _map_literal(col: Column, mapping: dict) -> Column:

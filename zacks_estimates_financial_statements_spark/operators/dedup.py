@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from zacks_estimates_financial_statements_spark.functions import text as T
 from zacks_estimates_financial_statements_spark.functions.text import simple_lower
 from zacks_estimates_financial_statements_spark.functions import vectors as V
-from zacks_estimates_financial_statements_spark.util import persist
+from zacks_estimates_financial_statements_spark.util import broadcast_threshold_bytes, persist
 
 
 def hash60(col):
@@ -338,11 +338,6 @@ def minhash_index(df: DataFrame, id_col: str, text_col: str,
                     F.col("bb.bucket").alias("bucket")))
 
 
-def _broadcast_threshold_bytes(spark) -> int:
-    from zacks_estimates_financial_statements_spark.util import broadcast_threshold_bytes
-    return broadcast_threshold_bytes(spark)
-
-
 def incremental_minhash_pairs(index: DataFrame, batch: DataFrame,
                               id_col: str, text_col: str,
                               k: int = 12, bands: int = 4,
@@ -405,7 +400,7 @@ def incremental_minhash_pairs(index: DataFrame, batch: DataFrame,
     # one cheap count job sizes the batch (probe rows = batch × bands);
     # per-row footprint ≈ k 64-bit mins + 32-char md5 bucket + id/band
     n_batch = batch.count()
-    thr = _broadcast_threshold_bytes(batch.sparkSession)
+    thr = broadcast_threshold_bytes(batch.sparkSession)
     est_probe_bytes = n_batch * bands * (k * 8 + 160)
     probe_fits = 0 < thr and est_probe_bytes <= thr
     if prune_index_scan:

@@ -19,10 +19,6 @@ Semantics implemented:
 - W7 ``vacuum``       — every pointer flip drops the superseded versions
   (``_gc``); ``compact`` rewrites the live version with one file per
   partition value (``runner compact``).
-- ``split_valid``     — enum-domain + NOT-NULL enforcement (Spark has neither
-  CHECK constraints nor enums); invalid rows are split out, never thrown,
-  mirroring W2/W3's "bad document never lands" outcome via filtering
-  (SURVEY §7.3).
 
 Atomicity & scale:
 
@@ -60,12 +56,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zacks_estimates_financial_statements_spark.schemas import (
-    ENUM_DOMAINS,
-    PRIMARY_KEYS,
-    TABLES,
-    not_null_columns,
-)
+from zacks_estimates_financial_statements_spark.schemas import PRIMARY_KEYS, TABLES
 
 _POINTER = "_CURRENT"
 _LOCK = "_LOCK"
@@ -451,28 +442,3 @@ class TableStore:
             kept = self.read().join(condemned_keys, on=on, how="left_anti")
             self._overwrite_locked(kept)
 
-
-# ---------------------------------------------------------------------------
-# Validation (enum domains + NOT NULL) — W2/W3's outcome via filtering
-# ---------------------------------------------------------------------------
-
-
-def validity_condition(table: str):
-    """Boolean Column: row satisfies every NOT-NULL and enum-domain
-    constraint declared for ``table`` (schema.sql DDL)."""
-    cond = F.lit(True)
-    for c in not_null_columns(table):
-        cond = cond & F.col(c).isNotNull()
-    for c, domain in ENUM_DOMAINS.get(table, {}).items():
-        nullable = c not in not_null_columns(table)
-        in_domain = F.col(c).isin(*domain)
-        cond = cond & ((in_domain | F.col(c).isNull()) if nullable else in_domain)
-    return cond
-
-
-def split_valid(df: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined) — the engine's answer to the reference's
-    per-document rollback (W3): bad rows never land, good rows proceed,
-    and the quarantine side is observable instead of an exception."""
-    cond = validity_condition(table)
-    return df.filter(cond), df.filter(~F.coalesce(cond, F.lit(False)))

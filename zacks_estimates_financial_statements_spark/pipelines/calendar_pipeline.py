@@ -33,7 +33,7 @@ from zacks_estimates_financial_statements_spark.operators.writer import TableSto
 from zacks_estimates_financial_statements_spark.parse import calendars as P
 
 
-def last_row_per_symbol(new_rows: DataFrame, date_col: str) -> DataFrame:
+def last_row_per_symbol(new_rows: DataFrame) -> DataFrame:
     """The reference loop's observable winner: for each symbol, the last
     (file, row) processed — max (path, row_idx). Ties impossible (path,
     row_idx) is unique."""
@@ -53,7 +53,7 @@ def merge_calendar(existing: DataFrame, new_rows: DataFrame,
     (symbol ∈ batch AND date >= folder_date − 7 days) (W5);
     result = kept ∪ per-symbol winners of the batch.
     """
-    winners = last_row_per_symbol(new_rows, date_col)
+    winners = last_row_per_symbol(new_rows)
     batch_symbols = winners.select("act_symbol").distinct()
     week_ago = F.date_sub(F.lit(folder_date), 7)
     # W4 filter, then W5: drop rows of batch symbols within the trailing week
@@ -94,7 +94,8 @@ def stale_earnings_keys(ec: DataFrame, bsa: DataFrame) -> DataFrame:
     actual reporting dates plus one projected next-quarter-end per symbol
     (J5 union). Each calendar date falling in (bsa_date,
     next_quarter_end(bsa_date)] competes; only the max date per (symbol,
-    window) survives; others are condemned.
+    window) survives; others are condemned. The registry's
+    ``stale_cleanup`` query runs this kernel against its DuckDB twin.
     """
     actual = bsa.select("act_symbol", "date").distinct()
     projected = (bsa.groupBy("act_symbol")

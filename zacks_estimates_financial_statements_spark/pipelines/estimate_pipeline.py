@@ -32,22 +32,27 @@ from zacks_estimates_financial_statements_spark.parse.estimates import (
     _REV_ROWS,
     _SALES_ROWS,
 )
-from zacks_estimates_financial_statements_spark.schemas import RANKS, SCORES
+from zacks_estimates_financial_statements_spark.schemas import (
+    DEC,
+    ESTIMATE_PERIODS,
+    RANKS,
+    SCORES,
+)
 from zacks_estimates_financial_statements_spark.util import cache_scope, persist
 
-_PERIOD_ENUM = {"cq": "Current Quarter", "nq": "Next Quarter",
-                "cy": "Current Year", "ny": "Next Year"}
+#: page period code → its estimate-period enum value
+_PERIOD_ENUM = dict(zip((p for p, _ in PERIODS), ESTIMATE_PERIODS))
 
 
 def _cell_ok(name: str):
     """Reference cast semantics for one numeric cell: 'NA' → NULL is legal;
     anything else must be castable after the magnitude/paren/comma grammar
-    (estimate-transform-load.rkt:118-125, :227-246). The normalized chain
-    is built once and both branches derive from it (the grammar is ~6
-    regexps; this condition covers ~90 cells per document)."""
-    normalized = E.na_to_null(E.strip_commas(E.strip_parens(
-        E.expand_magnitude(E.trim_cell(F.col(name))))))
-    return normalized.isNull() | normalized.try_cast("decimal(38,6)").isNotNull()
+    (estimate-transform-load.rkt:118-125, :227-246) — the same
+    ``normalize_numeric_cell`` chain the values are cast from. The
+    normalized chain is built once and both branches derive from it (the
+    grammar is ~6 regexps; this condition covers ~90 cells per document)."""
+    normalized = E.normalize_numeric_cell(F.col(name))
+    return normalized.isNull() | normalized.try_cast(DEC).isNotNull()
 
 
 def doc_valid_condition():

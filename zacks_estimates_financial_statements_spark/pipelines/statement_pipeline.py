@@ -15,9 +15,10 @@ insert's CTE reads rows landed earlier in the same run
 (income-statement-transform-load.rkt:275-276: oldest column first) — so a
 fresh bulk load must evaluate the chain *within* the batch, not only
 against stored rows. That per-(symbol, period) sequential fold is a
-custom stateful operator: ``applyInPandas`` over tiny groups (≤5
-candidate rows + the symbol's stored rows), shuffled once on the natural
-key (act_symbol, period).
+custom stateful operator: a ``cogroup(...).applyInPandas`` of the
+candidates (≤5 per group, each carrying its prior key from
+``expressions.prior_period_date``) with the symbol's stored rows, both
+sides shuffled on the natural key (act_symbol, period).
 
 Balance-sheet pages land three tables in ONE transaction per (period,
 date) (balance-sheet-transform-load.rkt:139-460: assets → liabilities →
@@ -32,8 +33,6 @@ validity below reproduces that: every raw cell must either be absent
 """
 
 from __future__ import annotations
-
-import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -113,29 +112,6 @@ def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
                     *typed))
 
 
-def _prior_date(d: datetime.date, period: str) -> datetime.date:
-    if period == "Year":
-        # add_months(date, -12) with month-end clamping
-        m, y = d.month, d.year - 1
-        day = min(d.day, _days_in_month(y, m))
-        return datetime.date(y, m, day)
-    # date + 1 day - 3 months - 1 day
-    nxt = d + datetime.timedelta(days=1)
-    m = nxt.month - 3
-    y = nxt.year
-    while m < 1:
-        m += 12
-        y -= 1
-    day = min(nxt.day, _days_in_month(y, m))
-    return datetime.date(y, m, day) - datetime.timedelta(days=1)
-
-
-def _days_in_month(y: int, m: int) -> int:
-    if m == 12:
-        return 31
-    return (datetime.date(y, m + 1, 1) - datetime.timedelta(days=1)).day
-
-
 def _three_valued_all(pairs) -> bool | None:
     """bool_and of SQL equality comparisons: False dominates, else NULL,
     else True."""
@@ -154,7 +130,11 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
     stored ∪ previously-accepted rows, in the reference's order: folder by
     folder, oldest date first — so a batch spanning several folder dates
     keeps the earliest folder's row for a key, as one run per folder
-    would. Returns the accepted candidate rows without ``folder_date``."""
+    would. Returns the accepted candidate rows without ``folder_date``.
+
+    Each candidate carries its F10 prior key (``prior_period_date``)
+    from Spark; the walk cogroups the candidates with the stored rows of
+    the same (act_symbol, period) and keys landed rows by ``date``."""
     import pandas as pd
 
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
@@ -164,6 +144,7 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
     compare_sets = _sni_compare_sets(kind)
     out_schema = StructType([f for f in candidates.schema.fields
                              if f.name != "folder_date"])
+    out_cols = out_schema.fieldNames()
 
     # only stored rows of symbols present in the batch matter; semi-join
     # keeps the shuffled state small at scale
@@ -171,23 +152,14 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
         F.broadcast(candidates.select("act_symbol").distinct()),
         "act_symbol", "left_semi")
 
-    tagged = (candidates.withColumn("__src", F.lit("cand"))
-              .unionByName(stored_slim.withColumn("__src", F.lit("stored")),
-                           allowMissingColumns=True))
-    drop = ["__src", "folder_date"]
-
-    def process(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        cand = pdf[pdf["__src"] == "cand"].sort_values(
-            ["folder_date", "date"], kind="stable")
-        landed: dict[tuple, dict] = {}
-        for _, r in pdf[pdf["__src"] == "stored"].iterrows():
-            landed[(r["date"], r["period"])] = r
+    def walk(cand: "pd.DataFrame", landed_rows: "pd.DataFrame") -> "pd.DataFrame":
+        landed = {r["date"]: r for r in landed_rows.to_dict("records")}
         accepted = []
-        for _, r in cand.iterrows():
-            key = (r["date"], r["period"])
-            if key in landed:
+        for r in cand.sort_values(["folder_date", "date"],
+                                  kind="stable").to_dict("records"):
+            if r["date"] in landed:
                 continue  # ON CONFLICT DO NOTHING
-            prior = landed.get((_prior_date(r["date"], r["period"]), r["period"]))
+            prior = landed.get(r["prior_date"])
             sni_any = False
             if prior is not None:
                 for group in compare_sets:
@@ -204,14 +176,15 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
                         break
             if not sni_any:
                 accepted.append(r)
-                landed[key] = r
-        if not accepted:
-            return pd.DataFrame(columns=list(pdf.columns)).drop(columns=drop)
-        return pd.DataFrame(accepted).drop(columns=drop)
+                landed[r["date"]] = r
+        return pd.DataFrame(accepted, columns=out_cols)
 
-    grouped = tagged.groupBy("act_symbol", "period").applyInPandas(
-        lambda pdf: process(pdf), schema=out_schema)
-    return grouped.select(*[f.name for f in out_schema.fields])
+    keys = ["act_symbol", "period"]
+    return (candidates
+            .withColumn("prior_date",
+                        E.prior_period_date(F.col("date"), F.col("period")))
+            .groupBy(*keys).cogroup(stored_slim.groupBy(*keys))
+            .applyInPandas(walk, schema=out_schema))
 
 
 def load_statement(raw: DataFrame, kind: str,

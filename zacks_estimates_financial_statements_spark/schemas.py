@@ -10,11 +10,20 @@ Mapping decisions (SURVEY §1.2/§1.4):
   ×1e6 (units of dollars, parsed from millions) so need ≥18 integer digits;
   EPS/ratio values need a few fractional digits. 38,6 covers both exactly.
 - ``smallint`` → ``ShortType``.
-- enums → ``StringType`` with a domain list enforced by the writer
-  (Spark has no enum type); domains below mirror ``schema.sql:3-16``.
-- PKs → uniqueness contract of the writer (``operators.upsert``), matching
-  ``INSERT … ON CONFLICT DO NOTHING``; FKs → optional referential check
-  against the symbol dimension.
+- enums → ``StringType`` (Spark has no enum type); each domain below
+  (``schema.sql:3-16``) is written once and holds where rows are made,
+  not at write time: the estimate document gate
+  (``estimate_pipeline.doc_valid_condition``) rejects ranks and scores
+  outside ``RANKS``/``SCORES``; the decoders build their maps from these
+  tuples (``expressions.decode_statement_period``, ``decode_when``,
+  ``to_integer_rank``, ``estimate_pipeline._PERIOD_ENUM``), so a period
+  or ``when`` is in its domain or NULL.
+- NOT NULL → the loaders' own filters: the statement and estimate
+  validity gates, and the calendar loaders' NOT-NULL filters
+  (``calendar_pipeline.load_earnings_calendar`` /
+  ``load_dividend_calendar``).
+- PKs → uniqueness contract of the writer (``TableStore.upsert_ignore``),
+  matching ``INSERT … ON CONFLICT DO NOTHING``.
 """
 
 from __future__ import annotations
@@ -37,25 +46,6 @@ RANKS = ("Strong Buy", "Buy", "Hold", "Sell", "Strong Sell")
 SCORES = ("A", "B", "C", "D", "F")
 STATEMENT_PERIODS = ("Year", "Quarter")
 WHENS = ("Before market open", "After market close")
-
-#: enum domain per (table, column); writer validates membership (NULL allowed
-#: only where the DDL allows it — see NOT_NULL below).
-ENUM_DOMAINS: dict[str, dict[str, tuple[str, ...]]] = {
-    "balance_sheet_assets": {"period": STATEMENT_PERIODS},
-    "balance_sheet_equity": {"period": STATEMENT_PERIODS},
-    "balance_sheet_liabilities": {"period": STATEMENT_PERIODS},
-    "cash_flow_statement": {"period": STATEMENT_PERIODS},
-    "eps_estimate": {"period": ESTIMATE_PERIODS},
-    "eps_perception": {"period": ESTIMATE_PERIODS},
-    "eps_revision": {"period": ESTIMATE_PERIODS},
-    "income_statement": {"period": STATEMENT_PERIODS},
-    "rank_score": {
-        "rank": RANKS, "value": SCORES, "growth": SCORES,
-        "momentum": SCORES, "vgm": SCORES,
-    },
-    "sales_estimate": {"period": ESTIMATE_PERIODS},
-    "earnings_calendar": {"when": WHENS},
-}
 
 DEC = DecimalType(38, 6)
 
@@ -232,7 +222,3 @@ PRIMARY_KEYS: dict[str, tuple[str, ...]] = {
     "earnings_calendar": ("act_symbol", "date"),
 }
 
-
-def not_null_columns(table: str) -> list[str]:
-    """Columns declared NOT NULL in the DDL for ``table``."""
-    return [f.name for f in TABLES[table].fields if not f.nullable]
