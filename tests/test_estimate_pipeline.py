@@ -7,11 +7,19 @@ import datetime
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.fixtures import estimate_page
+from zacks_estimates_financial_statements_spark.functions import expressions as E
 from zacks_estimates_financial_statements_spark.operators.writer import TableStore
-from zacks_estimates_financial_statements_spark.parse.estimates import parse_estimates
+from zacks_estimates_financial_statements_spark.parse.estimates import (
+    DATA_FIELDS,
+    SCHEMA,
+    parse_estimate_doc,
+    parse_estimates,
+)
 from zacks_estimates_financial_statements_spark.pipelines import estimate_pipeline as pipe
+from zacks_estimates_financial_statements_spark.schemas import DEC, RANKS, SCORES
 
 D = datetime.date
 TABLES = ["rank_score", "sales_estimate", "eps_estimate", "eps_revision",
@@ -128,3 +136,84 @@ def test_failed_upsert_releases_loader_caches(spark, stores):
         with pytest.raises(ConcurrentWriteError):
             pipe.load_estimates(parsed, stores)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+#: one of every cell shape the grammar sees, NULL included
+CELLS = ["1.5B", "(2.3)", "M", "NA", "1,234", " 7 ", "abc", None]
+
+
+def _variant_rows():
+    """Fixture-page rows whose cells cycle through ``CELLS``: every
+    numeric and count cell, a bad cell in either kind, and bad, padded
+    and NULL header dates."""
+    base = parse_estimate_doc("BASE", D(2025, 1, 15), estimate_page())
+    cells = [f for f in DATA_FIELDS[5:] if not f.endswith("_date")]
+    dates = [f for f in DATA_FIELDS if f.endswith("_date")]
+    good = [c for c in CELLS if c != "abc"]
+    rows = [base]
+    for k in range(len(CELLS)):
+        for pool in (good, CELLS):
+            rows.append({**base, **{c: pool[(i + k) % len(pool)]
+                                    for i, c in enumerate(cells)}})
+    rows.append({**base, "cq_sales_count": "abc"})
+    rows.append({**base, dates[0]: "NA"})
+    rows.append({**base, dates[1]: None})
+    rows.append({**base, dates[2]: " 3/2025 "})
+    rows.append({**base, "rank": "NA"})
+    return [{**r, "act_symbol": f"R{i}"} for i, r in enumerate(rows)], cells, dates
+
+
+def _per_cell_gate(cells, dates):
+    """The per-cell document gate the array form replaced (reference)."""
+    cond = F.col("parse_error").isNull() & F.col("rank").isin(*RANKS)
+    for c in ("value", "growth", "momentum", "vgm"):
+        cond = cond & F.col(c).isin(*SCORES)
+    for c in dates:
+        cond = cond & E.month_end_from_mm_yyyy(F.col(c)).isNotNull()
+    for c in cells:
+        n = E.normalize_numeric_cell(F.col(c))
+        cond = cond & (n.isNull() | n.try_cast(DEC).isNotNull())
+    return F.coalesce(cond, F.lit(False))
+
+
+def test_array_form_matches_per_cell_grammar(spark):
+    rows, cells, dates = _variant_rows()
+    df = spark.createDataFrame(rows, SCHEMA)
+    shorts = [c for c in cells
+              if c.endswith("_count") or c.split("_", 1)[1].startswith(("up_", "down_"))]
+    nums = [c for c in cells if c not in shorts]
+    want = df.select(
+        "act_symbol", _per_cell_gate(cells, dates).alias("doc_valid"),
+        *[E.clean_numeric_cell(F.col(c)).alias(c) for c in nums],
+        *[E.na_to_null(F.trim(F.col(c))).try_cast("smallint").alias(c)
+          for c in shorts],
+        *[E.month_end_from_mm_yyyy(F.col(c)).alias(c) for c in dates])
+    got = pipe.typed_estimates(df).select(
+        "act_symbol", "doc_valid",
+        *[pipe._typed(c).alias(c) for c in nums + shorts + dates])
+    want_rows = {r["act_symbol"]: r.asDict() for r in want.collect()}
+    got_rows = {r["act_symbol"]: r.asDict() for r in got.collect()}
+    assert got_rows == want_rows
+    valid = {s for s, r in want_rows.items() if r["doc_valid"]}
+    assert {"R0", "R1", "R20"} <= valid
+    assert valid.isdisjoint({"R2", "R17", "R18", "R19", "R21"})
+    gate = df.select("act_symbol", F.coalesce(pipe.doc_valid_condition(),
+                                              F.lit(False)).alias("ok"))
+    assert {r["act_symbol"] for r in gate.collect() if r["ok"]} == valid
+
+
+def regexp_nodes(df) -> int:
+    """``regexp_replace`` nodes in the analyzed plan (its JSON form: the
+    printed plan truncates long expression lists)."""
+    return df._jdf.queryExecution().analyzed().toJSON().count(
+        '"class":"org.apache.spark.sql.catalyst.expressions.RegExpReplace"')
+
+
+def test_typed_plan_holds_one_copy_of_the_grammar(spark):
+    one = regexp_nodes(spark.range(1).select(
+        E.normalize_numeric_cell(F.lit("1.5B"))))
+    assert one > 0
+    typed = pipe.typed_estimates(spark.createDataFrame([], SCHEMA))
+    assert regexp_nodes(typed) == one
+    valid = typed.filter("doc_valid")
+    assert all(regexp_nodes(b(valid)) == one for b in pipe._BUILDERS.values())

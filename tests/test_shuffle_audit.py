@@ -46,3 +46,16 @@ def test_scale_mismatch_exits_2_before_spark(monkeypatch, tmp_path):
     monkeypatch.setattr(sys, "argv", ["shuffle_audit.py", "/data/sf0.01"])
     assert shuffle_audit.main() == 2
     assert md.read_text() == HEADER
+
+
+def test_filtered_run_keeps_the_other_baseline_rows():
+    rows = ["| a | 0.01 | 20.0 | 0.0 | 0.0 | 0.0 | 0.0 | 3.81 |",
+            "| b | 0.08 | 600.0 | 0.0 | 0.0 | 0.0 | 0.0 | 0.5 |",
+            "| c | 0.0 | 5.0 | 0.86 | 5.0 | 1.0 | 0.0 | 0.89 |"]
+    md = (HEADER + "|---|---|---|---|---|---|---|---|\n" + "\n".join(rows)
+          + "\n\nFlagged (spill or ratio regression): **0**\n")
+    b = "| b | 0.09 | 600.0 | 0.1 | 1.0 | 0.0 | 0.0 | 0.7 |"
+    assert shuffle_audit.merge_rows(md, {"b": b}) == [rows[0], b, rows[2]]
+    new = "| d | 0.0 | 1.0 | 0.0 | 0.0 | 0.0 | 0.0 | 0.1 |"
+    assert shuffle_audit.merge_rows(md, {"d": new}) == rows + [new]
+    assert shuffle_audit.merge_rows(None, {"b": b}) == [b]

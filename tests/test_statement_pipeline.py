@@ -8,12 +8,17 @@ import datetime
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.fixtures import _INCOME_FIELDS, balance_sheet_page, income_statement_page
+from tests.test_estimate_pipeline import regexp_nodes
+from zacks_estimates_financial_statements_spark.functions import expressions as E
 from zacks_estimates_financial_statements_spark.operators.writer import TableStore
 from zacks_estimates_financial_statements_spark.parse.statements import (
     BALANCE_COLS,
+    parse_statement_doc,
     parse_statements,
+    statement_schema,
 )
 from zacks_estimates_financial_statements_spark.pipelines import statement_pipeline as pipe
 
@@ -186,3 +191,46 @@ def test_sni_prior_key_month_end_edges(spark, tmp_path, copied):
     assert (newest & got) == (set() if copied else newest)
     # the priors themselves always land
     assert {("Year", D(2023, 2, 28)), ("Quarter", D(2024, 2, 29))} <= got
+
+
+def test_typed_candidates_match_per_cell_grammar(spark):
+    """The array form against the per-cell expressions it replaced:
+    the same rows survive validity and carry the same ×1e6 values."""
+    cells = ["1.5B", "(2.3)", "M", "NA", "1,234", " 7 ", "abc", None, "12.5"]
+    good = [" 7 ", "1,234", None, "12.5"]
+    html = balance_sheet_page(ANNUAL_DATES, QTR_DATES, _vals(BALANCE_COLS),
+                              _vals(BALANCE_COLS, 500))
+    base = parse_statement_doc("B", D(2024, 6, 1), html, "balance")
+    rows = []
+    for k, r in enumerate(base):
+        pool = good if k % 2 else cells
+        rows.append({**r, "act_symbol": f"R{k}",
+                     **{c: pool[(i + k) % len(pool)]
+                        for i, c in enumerate(BALANCE_COLS)}})
+    rows.append({**base[0], "act_symbol": "BADDATE", "date_raw": "13/45/2023"})
+    raw = spark.createDataFrame(rows, statement_schema("balance"))
+
+    unscaled = pipe._UNSCALED["balance"]
+    ok = F.col("parse_error").isNull() & \
+        E.parse_statement_date(F.col("date_raw"), "M/dd/yyyy").isNotNull()
+    for c in BALANCE_COLS:
+        ok = ok & (F.col(c).isNull() | E.clean_statement_cell(F.col(c)).isNotNull())
+    want = raw.filter(ok).select("act_symbol", *[
+        (E.clean_statement_cell(F.col(c)) if c in unscaled
+         else E.scale_millions(E.clean_statement_cell(F.col(c)))).alias(c)
+        for c in BALANCE_COLS])
+    got = pipe.typed_candidates(raw, "balance").select("act_symbol", *BALANCE_COLS)
+    want_rows = sorted(tuple(r) for r in want.collect())
+    assert sorted(tuple(r) for r in got.collect()) == want_rows
+    assert [r[0] for r in want_rows] == [f"R{k}" for k in range(1, len(base), 2)]
+    r1 = got.filter("act_symbol = 'R1'").first().asDict()
+    assert r1[BALANCE_COLS[0]] == Decimal("1234000000")   # "1,234" ×1e6
+
+
+def test_typed_candidates_plan_holds_one_copy_of_the_grammar(spark):
+    assert len(BALANCE_COLS) == 39
+    one = regexp_nodes(spark.range(1).select(
+        E.clean_statement_cell(F.lit("1,234"))))
+    assert one > 0
+    raw = spark.createDataFrame([], statement_schema("balance"))
+    assert regexp_nodes(pipe.typed_candidates(raw, "balance")) == one

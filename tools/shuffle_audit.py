@@ -24,7 +24,10 @@ other ``sf_dir`` — like a missing baseline — exits 2 before Spark
 starts unless ``--bootstrap`` rewrites the baseline at the new scale.
 
 Usage: python tools/shuffle_audit.py [sf_dir] [query ...] [--bootstrap]
-Writes the markdown table to SHUFFLE.md.
+Writes the markdown table to SHUFFLE.md. A run filtered to some queries
+rewrites only their rows; every other row of the baseline stays as
+committed, in its place (a ``--bootstrap`` run at a new scale writes
+only what it measured).
 """
 
 from __future__ import annotations
@@ -60,6 +63,28 @@ def baseline_error(md_text: str | None, sf_dir: str) -> str | None:
     return None
 
 
+def _table_rows(md_text: str) -> list[tuple[str, list[str], str]]:
+    """(query, cells, line) of each query row of a SHUFFLE.md table."""
+    rows = []
+    for line in md_text.splitlines():
+        parts = [c.strip() for c in line.strip().strip("|").split("|")]
+        if len(parts) == 8 and parts[0] not in ("query", "---"):
+            rows.append((parts[0], parts, line))
+    return rows
+
+
+def merge_rows(md_text: str | None, measured: dict[str, str]) -> list[str]:
+    """The table rows to write: the baseline's rows in their order, each
+    replaced by its ``measured`` row when this run measured that query,
+    then the measured queries the baseline lacks. A run filtered to a few
+    queries keeps every other query's baseline row verbatim."""
+    lines, seen = [], set()
+    for name, _, line in _table_rows(md_text or ""):
+        lines.append(measured.get(name, line))
+        seen.add(name)
+    return lines + [line for name, line in measured.items() if name not in seen]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
@@ -82,13 +107,11 @@ def main() -> int:
 
     # previous committed rows_ratio column = the regression baseline
     baseline: dict[str, float] = {}
-    for line in [] if error else text.splitlines():
-        parts = [c.strip() for c in line.strip().strip("|").split("|")]
-        if len(parts) == 8 and parts[0] not in ("query", "---"):
-            try:
-                baseline[parts[0]] = float(parts[5])
-            except ValueError:
-                pass
+    for name, parts, _ in [] if error else _table_rows(text):
+        try:
+            baseline[name] = float(parts[5])
+        except ValueError:
+            pass
 
     mod = bench.registry()
     spark = bench.session(**bench.STAGE_UI)
@@ -148,15 +171,18 @@ def main() -> int:
             "| query | input MB | input krows | shuffle MB "
             "| shuffle krows | rows_ratio | spill MB | wall s |\n"
             "|---|---|---|---|---|---|---|---|\n")
+        measured = {}
         for name in names:
-            r = rows.get(name, {})
+            r = rows[name]
             if "err" in r:
-                f.write(f"| {name} | ERR: {r['err'][:40]} | | | | | | |\n")
+                measured[name] = f"| {name} | ERR: {r['err'][:40]} | | | | | | |"
             else:
-                f.write(f"| {name} | {r['input_mb']} "
-                        f"| {r['input_krows']} | {r['shuffle_mb']} "
-                        f"| {r['shuffle_krows']} | {r['ratio']} "
-                        f"| {r['spill_mb']} | {r['wall_s']} |\n")
+                measured[name] = (f"| {name} | {r['input_mb']} "
+                                  f"| {r['input_krows']} | {r['shuffle_mb']} "
+                                  f"| {r['shuffle_krows']} | {r['ratio']} "
+                                  f"| {r['spill_mb']} | {r['wall_s']} |")
+        for line in merge_rows(None if error else text, measured):
+            f.write(line + "\n")
         f.write("\nFlagged (spill or ratio regression): "
                 f"**{len(flagged)}**"
                 + (": " + ", ".join(f"{n} ({w})" for n, w in flagged)

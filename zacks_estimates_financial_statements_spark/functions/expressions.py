@@ -77,15 +77,18 @@ def normalize_numeric_cell(col: Column) -> Column:
     """The estimate-cell grammar up to the cast: trim → lone-M→NA →
     magnitude → paren strip → comma strip → NA→NULL
     (estimate-transform-load.rkt:118-125 + the in-SQL ``case 'NA'`` at
-    :227-246). Written once: the values (``clean_numeric_cell``) and the
-    estimate document gate (``estimate_pipeline._cell_ok``) both start
-    here."""
+    :227-246). Written once, and applied once per plan: the estimate
+    loader runs it as the one lambda of a ``transform`` over the array of
+    a page's numeric cells (``estimate_pipeline.typed_estimates``), and
+    the document gate and the decimal values read that one normalized
+    array."""
     return na_to_null(strip_commas(strip_parens(expand_magnitude(trim_cell(col)))))
 
 
 def clean_numeric_cell(col: Column) -> Column:
-    """The full estimate-cell grammar: ``normalize_numeric_cell`` →
-    decimal cast. One composed expression used by every estimate parser."""
+    """The full estimate-cell grammar for one cell:
+    ``normalize_numeric_cell`` → decimal cast (the registry's
+    ``cell_grammar`` query)."""
     # try_cast: unexpected garbage becomes NULL instead of failing the job
     # (Spark 4 ANSI mode makes plain cast throw on malformed input).
     return normalize_numeric_cell(col).try_cast(DEC)

@@ -53,6 +53,7 @@ import socket
 import uuid
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -179,6 +180,21 @@ class TableStore:
                 return self.spark.createDataFrame([], schema)
         return (self.spark.read.schema(schema).parquet(vdir)
                 .select(*schema.fieldNames()))
+
+    def live_rows(self) -> int:
+        """Row count of the live version, read from its Parquet footers:
+        no Spark job. Skips the ``_``/``.``-prefixed paths Spark's reader
+        skips (``_temporary`` of an aborted append, checksums)."""
+        vdir = self._live_dir()
+        if vdir is None:
+            return 0
+        rows = 0
+        for d, dirs, files in os.walk(vdir):
+            dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+            rows += sum(pq.read_metadata(os.path.join(d, f)).num_rows
+                        for f in files
+                        if f.endswith(".parquet") and not f.startswith(("_", ".")))
+        return rows
 
     # -- write primitives ---------------------------------------------------
 

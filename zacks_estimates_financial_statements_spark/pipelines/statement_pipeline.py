@@ -89,27 +89,32 @@ _INCOME_NULL_QUARTERLY = ("income_before_depreciation_and_amortization",
 def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
     """Parsed raw rows → typed, scaled candidate rows with reference cast
     validity applied (invalid rows dropped = per-row rollback). The
-    ``folder_date`` rides along to order the sni walk."""
+    ``folder_date`` rides along to order the sni walk.
+
+    ``clean_statement_cell`` runs once per plan: one ``transform`` over
+    the array of the kind's cells, read by both the validity ``forall``
+    and the values."""
     cols = _KIND_COLS[kind]
     unscaled = _UNSCALED[kind]
     date_col = E.parse_statement_date(F.col("date_raw"), _DATE_FMT[kind])
     period_col = E.decode_statement_period(
         F.when(F.col("period") == "annual", "annual").otherwise("quarterly"))
+    cells = F.array(*[F.col(c) for c in cols])
 
-    validity = F.col("parse_error").isNull() & date_col.isNotNull()
-    for c in cols:
-        cast_ok = E.clean_statement_cell(F.col(c)).isNotNull()
-        validity = validity & (F.col(c).isNull() | cast_ok)
-
-    typed = [
-        (E.clean_statement_cell(F.col(c)) if c in unscaled
-         else E.scale_millions(E.clean_statement_cell(F.col(c)))).alias(c)
-        for c in cols
-    ]
-    return (raw.filter(validity)
-            .select(F.col("act_symbol"), F.col("folder_date"),
-                    date_col.alias("date"), period_col.alias("period"),
-                    *typed))
+    staged = raw.select(
+        "act_symbol", "folder_date", "parse_error",
+        date_col.alias("date"), period_col.alias("period"),
+        cells.alias("__raw"),
+        F.transform(cells, E.clean_statement_cell).alias("__cleaned"))
+    validity = (F.col("parse_error").isNull() & F.col("date").isNotNull()
+                & F.forall(F.zip_with("__raw", "__cleaned",
+                                      lambda r, t: r.isNull() | t.isNotNull()),
+                           lambda ok: ok))
+    cleaned = F.col("__cleaned")
+    typed = [(cleaned[i] if c in unscaled else E.scale_millions(cleaned[i])).alias(c)
+             for i, c in enumerate(cols)]
+    return (staged.filter(validity)
+            .select("act_symbol", "folder_date", "date", "period", *typed))
 
 
 def _three_valued_all(pairs) -> bool | None:

@@ -77,7 +77,7 @@ def run_statements(spark, raw: str, tables: str, date: str,
         docs = read_documents(spark, raw, dataset, date)
         statement_pipeline.load_statement(
             parse_statements(docs, kind), kind, _stores(spark, tables, dest))
-        return kind, {t: TableStore(spark, tables, t).read().count()
+        return kind, {t: TableStore(spark, tables, t).live_rows()
                       for t in dest}
 
     todo = kinds or list(STATEMENT_KINDS)
@@ -92,7 +92,7 @@ def run_earnings_calendar(spark, raw: str, tables: str, date: str) -> dict:
         store, files, datetime.date.fromisoformat(date))
     bsa = TableStore(spark, tables, "balance_sheet_assets").read()
     calendar_pipeline.cleanup_stale_earnings(store, bsa)
-    return {"earnings_calendar": store.read().count()}
+    return {"earnings_calendar": store.live_rows()}
 
 
 def run_dividend_calendar(spark, raw: str, tables: str, date: str) -> dict:
@@ -100,7 +100,7 @@ def run_dividend_calendar(spark, raw: str, tables: str, date: str) -> dict:
     files = read_calendar_files(spark, raw, "dividend-calendar", date)
     calendar_pipeline.load_dividend_calendar(
         store, files, datetime.date.fromisoformat(date))
-    return {"dividend_calendar": store.read().count()}
+    return {"dividend_calendar": store.live_rows()}
 
 
 def main(argv: list[str] | None = None) -> int:
