@@ -44,6 +44,18 @@ _DEFAULT_CONF: dict[str, str] = {
     # ~10-100 KB/class of metaspace; any long-lived production driver
     # wants the same.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # Cap G1's young generation at 30% of the heap (default 60%). The
+    # driver JVM's resident memory is every heap page it ever touched,
+    # and G1 grows eden towards the cap only as pauses allow: a job
+    # shorter than a few eden cycles ends at a different point of that
+    # growth each time. On a 4-vCPU VM with a fixed 2 GB heap, one
+    # daily ELT run's peak RSS spread 1.80-2.42 GB over six runs of one
+    # code version at the default and 1.63-1.85 GB over fifteen at 30%,
+    # with the same wall time; a 10-query pass dropped from ~2.2 GB to
+    # ~1.59 GB (PERFORMANCE.md, "Steady driver memory"). The
+    # driver's own options (extraJavaOptions) come after these and win.
+    "spark.driver.defaultJavaOptions":
+        "-XX:+UnlockExperimentalVMOptions -XX:G1MaxNewSizePercent=30",
 }
 
 # Measured on this harness (A/B, full bench.py at sf0.1): a 16g driver
