@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime
 import json
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 from zacks_estimates_financial_statements_spark.operators.writer import TableStore
 from zacks_estimates_financial_statements_spark.parse import calendars as C
 from zacks_estimates_financial_statements_spark.pipelines import calendar_pipeline as pipe
+from zacks_estimates_financial_statements_spark.schemas import TABLES
 from zacks_estimates_financial_statements_spark.sources.raw_zone import read_calendar_files
 
 D = datetime.date
@@ -164,3 +166,28 @@ def test_dividend_runner_path(spark, tmp_path):
                   for r in TableStore(spark, str(tmp_path / "tables"),
                                       "dividend_calendar").read().collect())
     assert rows == [("AAPL", "0.250000"), ("MSFT", "1.100000")]
+
+
+@pytest.mark.parametrize("dataset", ["earnings-calendar", "dividend-calendar"])
+def test_a_date_before_the_rolling_week_fails_the_run(spark, tmp_path, dataset):
+    """The fused W4/W5/W1 merge equals the reference loop only for
+    incoming dates >= folder_date - 7 days: an older row survives W5
+    beside its stored twin, two rows under one key. The assertion rides
+    the overwrite's own plan, so the run fails and the live table stays."""
+    earnings = dataset == "earnings-calendar"
+    name = "earnings_calendar" if earnings else "dividend_calendar"
+    store = TableStore(spark, str(tmp_path / "tables"), name)
+    old = D(2024, 5, 1)
+    store.overwrite(spark.createDataFrame(
+        [("AAPL", old, None)] if earnings
+        else [("AAPL", old, Decimal("0.25"), None)], TABLES[name]))
+    before = store.current_version()
+    row = (["AAPL", "", "", "amc"] if earnings
+           else ["AAPL", "Apple", "x", "$0.25", "x", str(old), "x", "--"])
+    _write_day_file(tmp_path, dataset, "2024-05-20", str(old), [row])
+    files = read_calendar_files(spark, str(tmp_path), dataset, "2024-05-20")
+    load = pipe.load_earnings_calendar if earnings else pipe.load_dividend_calendar
+    with pytest.raises(Exception, match="before folder_date - 7 days"):
+        load(store, files, D(2024, 5, 20))
+    assert store.current_version() == before
+    assert store.read().count() == 1

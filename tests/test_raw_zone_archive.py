@@ -12,6 +12,8 @@ import tarfile
 
 import pytest
 
+from tests.fixtures import estimate_page
+from zacks_estimates_financial_statements_spark.parse.estimates import parse_estimates
 from zacks_estimates_financial_statements_spark.sources import raw_zone
 
 
@@ -65,10 +67,28 @@ def test_read_archived_documents_distributed(spark, tmp_path):
         raw_zone.archive_day(str(base), "estimates", date)
         shutil.rmtree(folder)   # history lives only in the archives
     df = raw_zone.read_archived_documents(
-        spark, str(base / "estimates"), ".detailed-estimates.html")
-    rows = {(r["file_stem"], str(r["folder_date"])): r["content"]
+        spark, str(base / "estimates"), "estimates")
+    rows = {(r["act_symbol"], str(r["folder_date"])): r["content"]
             for r in df.collect()}
     assert set(rows) == {("AAPL", "2024-05-05"), ("MSFT", "2024-05-05"),
                          ("NVDA", "2024-05-06")}
     assert rows[("NVDA", "2024-05-06")] == \
         "<html><body>NVDA@2024-05-06</body></html>"
+
+
+def test_parsing_an_archive_equals_parsing_the_live_folder(spark, tmp_path):
+    folder = tmp_path / "estimates" / "2024-12-02"
+    folder.mkdir(parents=True)
+    for sym, rank in (("AAPL", "1-Strong Buy"), ("MSFT", "3-Hold")):
+        (folder / f"{sym}.detailed-estimates.html").write_text(
+            estimate_page(rank_text=rank))
+    live = raw_zone.read_documents(spark, str(tmp_path), "estimates",
+                                   "2024-12-02")
+    raw_zone.archive_day(str(tmp_path), "estimates", "2024-12-02")
+    archived = raw_zone.read_archived_documents(
+        spark, str(tmp_path / "estimates"), "estimates")
+    assert archived.columns == live.columns
+    want = sorted(parse_estimates(live).collect())
+    assert [(r["act_symbol"], r["parse_error"]) for r in want] == \
+        [("AAPL", None), ("MSFT", None)]
+    assert sorted(parse_estimates(archived).collect()) == want

@@ -5,6 +5,7 @@ scenario 2), balance three-table transaction."""
 from __future__ import annotations
 
 import datetime
+import os
 from decimal import Decimal
 
 import pytest
@@ -171,7 +172,7 @@ FEB_QTR_Y = ["5/31/24", "2/29/24", "11/30/23", "8/31/23", "5/31/23"]
 
 @pytest.mark.parametrize("copied", [True, False])
 def test_sni_prior_key_month_end_edges(spark, tmp_path, copied):
-    """F10 through the walk on a February fiscal year: the annual prior of
+    """F10 through the fold on a February fiscal year: the annual prior of
     2/29/24 is 2/28/23 (add_months clamps) and the quarterly prior of
     5/31/24 is 2/29/24 (+1 day -3 months -1 day). A copied column at
     either key is suppressed; one changed cell lets it in."""
@@ -231,6 +232,192 @@ def test_typed_candidates_plan_holds_one_copy_of_the_grammar(spark):
     assert len(BALANCE_COLS) == 39
     one = regexp_nodes(spark.range(1).select(
         E.clean_statement_cell(F.lit("1,234"))))
-    assert one > 0
+    assert 0 < one <= 2
     raw = spark.createDataFrame([], statement_schema("balance"))
     assert regexp_nodes(pipe.typed_candidates(raw, "balance")) == one
+
+
+# -- the fold against the Python walk it replaced -------------------------
+
+def _three_valued_all(pairs) -> bool | None:
+    """bool_and of SQL equality comparisons: False dominates, else NULL,
+    else True."""
+    saw_null = False
+    for ok in pairs:
+        if ok is False:
+            return False
+        if ok is None:
+            saw_null = True
+    return None if saw_null else True
+
+
+def reference_walk(cands, stored, kind, stats):
+    """The per-group Python walk ``apply_sni_chain`` ran before it became
+    one Catalyst fold, kept as the reference it is tested against:
+    ``cands`` and ``stored`` are one (act_symbol, period) group's rows as
+    dicts (candidates carry ``folder_date`` and ``prior_date``)."""
+    compare_sets = pipe._sni_compare_sets(kind)
+    landed = {r["date"]: r for r in stored}
+    accepted = []
+    for r in sorted(cands, key=lambda r: (r["folder_date"], r["date"])):
+        if r["date"] in landed:
+            stats["conflict"] += 1
+            continue  # ON CONFLICT DO NOTHING
+        prior = landed.get(r["prior_date"])
+        sni_any = saw_null = False
+        if prior is not None:
+            for group in compare_sets:
+                pairs = []
+                for c in group:
+                    if (kind == "income" and r["period"] == "Quarter"
+                            and c in pipe._INCOME_NULL_QUARTERLY):
+                        pairs.append(prior[c] is None)
+                        continue
+                    a, b = prior[c], r[c]
+                    pairs.append(None if (a is None or b is None) else a == b)
+                verdict = _three_valued_all(pairs)
+                saw_null |= verdict is None
+                if verdict is True:
+                    sni_any = True
+                    break
+        if sni_any:
+            stats["fired"] += 1
+        else:
+            stats["null_kept" if saw_null else "kept"] += 1
+            accepted.append(r)
+            landed[r["date"]] = r
+    return accepted
+
+
+def _period_ends(period):
+    """Consecutive period ends, each the F10 prior of the next."""
+    if period == "Year":
+        return [D(y, 12, 31) for y in range(2016, 2024)]
+    return [D(y, m, 31 if m in (3, 12) else 30)
+            for y in range(2021, 2024) for m in (3, 6, 9, 12)]
+
+
+def _random_groups(rng, kind, n):
+    """``n`` seeded (act_symbol, period) groups: a group's rows are one
+    base vector over {NULL, 1, 2} with a few cells redrawn from it, so
+    copies, alternations and NULL comparisons all occur; stored rows,
+    and two folders that may offer the same date. Income Quarter bases
+    mostly leave the ``IS NULL``-compared columns NULL, as pages do."""
+    cols = pipe._KIND_COLS[kind]
+    folders = [D(2024, 1, 5), D(2024, 2, 5)]
+    stored, cands = [], []
+    for g in range(n):
+        period = rng.choice(["Year", "Quarter"])
+        ends = _period_ends(period)
+        p_null = rng.choice([0, 0, 0.05])
+        base = {c: None if rng.random() < p_null else rng.choice([1, 2])
+                for c in cols}
+        if kind == "income" and period == "Quarter":
+            for c in pipe._INCOME_NULL_QUARTERLY:
+                base[c] = rng.choice([None, None, None, 1])
+
+        def values():
+            v = dict(base)
+            for c in rng.sample(cols, rng.choice([0, 0, 1, 2])):
+                v[c] = rng.choice([None, 1, 2])
+            return v
+
+        key = {"act_symbol": f"S{g}", "period": period}
+        for d in rng.sample(ends, rng.randint(0, 3)):
+            stored.append({**key, "date": d, **values()})
+        for f in folders:
+            start = rng.randint(0, len(ends) - 5)
+            for i in rng.sample(range(start, start + 5), rng.randint(1, 5)):
+                cands.append({**key, "folder_date": f, "date": ends[i],
+                              "prior_date": ends[i - 1] if i else None,
+                              **values()})
+    return stored, cands
+
+
+@pytest.mark.parametrize("kind", ["income", "balance"])
+def test_sni_fold_matches_the_python_walk(spark, kind):
+    import random
+
+    rng = random.Random(20 if kind == "income" else 21)
+    cols = pipe._KIND_COLS[kind]
+    stored, cands = _random_groups(rng, kind, 200)
+    dec = lambda r: [None if r[c] is None else Decimal(r[c]) for c in cols]  # noqa: E731
+    stored_df = spark.createDataFrame(
+        [(r["act_symbol"], r["date"], r["period"], *dec(r)) for r in stored],
+        pipe.typed_candidates(spark.createDataFrame(
+            [], statement_schema(kind)), kind).drop("folder_date").schema)
+    cands_df = spark.createDataFrame(
+        [(r["act_symbol"], r["folder_date"], r["date"], r["period"], *dec(r))
+         for r in cands],
+        pipe.typed_candidates(spark.createDataFrame(
+            [], statement_schema(kind)), kind).schema)
+
+    stats = {"conflict": 0, "fired": 0, "null_kept": 0, "kept": 0}
+    want = {}
+    groups = {}
+    for r in stored + cands:
+        groups.setdefault((r["act_symbol"], r["period"]), ([], []))[
+            "folder_date" in r].append(r)
+    for st, cs in groups.values():
+        for r in reference_walk(cs, st, kind, stats):
+            want[(r["act_symbol"], r["period"], r["date"])] = tuple(dec(r))
+    # every branch of the walk is exercised, the three-valued one included
+    assert min(stats.values()) >= 20, stats
+
+    got = {(r["act_symbol"], r["period"], r["date"]): tuple(r[c] for c in cols)
+           for r in pipe.apply_sni_chain(cands_df, stored_df, kind).collect()}
+    assert got == want
+
+
+def test_duplicate_stored_key_fails_the_chain(spark):
+    """A store holding two rows under one primary key is corrupt: the
+    fold's ``map_concat`` raises instead of keeping one of them."""
+    cands = pipe.typed_candidates(
+        spark.createDataFrame([], statement_schema("income")), "income")
+    row = ("AAPL", D(2023, 12, 31), "Year",
+           *[Decimal(1)] * len(pipe._KIND_COLS["income"]))
+    stored = spark.createDataFrame([row, row],
+                                   cands.drop("folder_date").schema)
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        pipe.apply_sni_chain(cands, stored, "income").collect()
+
+
+def test_sni_chain_plan_runs_no_python(spark, tmp_path):
+    """One ``MapInPandas`` — the page parser, once — and no Python in
+    the chain itself."""
+    html = income_statement_page(ANNUAL_DATES_Y, QTR_DATES_Y,
+                                 _vals(_INCOME_FIELDS),
+                                 _vals(_INCOME_FIELDS, 500))
+    stored = TableStore(spark, str(tmp_path), "income_statement").read()
+    chain = pipe.apply_sni_chain(
+        pipe.typed_candidates(
+            _income_raw(spark, [("AAPL", D(2024, 6, 1), html)]), "income"),
+        stored, "income")
+    plan = chain._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython",
+                 "BatchEvalPython"):
+        assert node not in plan, plan
+
+
+def test_income_load_writes_one_file_per_period(spark, income_store):
+    """The fold's output is not cached: a cached plan would keep all the
+    groupBy's shuffle partitions and the first write would split into a
+    file per partition."""
+    html = income_statement_page(ANNUAL_DATES_Y, QTR_DATES_Y,
+                                 _vals(_INCOME_FIELDS),
+                                 _vals(_INCOME_FIELDS, 500))
+    docs = [(f"S{i:02d}", D(2024, 6, 1), html) for i in range(16)]
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        pipe.load_statement(_income_raw(spark, docs), "income", income_store)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    live = income_store["income_statement"]._live_dir()
+    files = {p: [f for f in os.listdir(os.path.join(live, p))
+                 if f.endswith(".parquet")]
+             for p in os.listdir(live) if p.startswith("period=")}
+    assert sorted(files) == ["period=Quarter", "period=Year"]
+    assert [len(f) for f in files.values()] == [1, 1], files
+    assert income_store["income_statement"].live_rows() == 160

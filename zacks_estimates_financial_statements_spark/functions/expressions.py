@@ -65,7 +65,7 @@ def na_to_null(col: Column) -> Column:
     """F5 — ``'NA'`` sentinel → NULL; pass anything else through
     (estimate-transform-load.rkt:227-246,
     earnings-calendar-transform-load.rkt:96-100)."""
-    return F.when(col == "NA", F.lit(None).cast("string")).otherwise(col)
+    return F.nullif(col, F.lit("NA"))
 
 
 def strip_dollar(col: Column) -> Column:

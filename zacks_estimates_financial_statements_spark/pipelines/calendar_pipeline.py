@@ -52,17 +52,23 @@ def merge_calendar(existing: DataFrame, new_rows: DataFrame,
     kept = existing rows with ``date < folder_date`` (W4) that are NOT
     (symbol ∈ batch AND date >= folder_date − 7 days) (W5);
     result = kept ∪ per-symbol winners of the batch.
+
+    The fusion equals the reference loop only when every incoming date is
+    >= folder_date − 7 days (an older row would survive W5 beside its
+    stored twin, two rows under one key), so the batch asserts it inside
+    this plan: the write that runs it fails instead.
     """
-    winners = last_row_per_symbol(new_rows)
-    batch_symbols = winners.select("act_symbol").distinct()
     week_ago = F.date_sub(F.lit(folder_date), 7)
+    in_week = F.col(date_col) >= week_ago
+    winners = last_row_per_symbol(new_rows.filter(F.assert_true(
+        in_week, f"{date_col} before folder_date - 7 days").isNull()))
+    batch_symbols = winners.select("act_symbol").distinct()
     # W4 filter, then W5: drop rows of batch symbols within the trailing week
     kept = (existing
             .filter(F.col(date_col) < F.lit(folder_date))
             .join(F.broadcast(batch_symbols.withColumn("__inb", F.lit(True))),
                   "act_symbol", "left")
-            .filter(~(F.coalesce(F.col("__inb"), F.lit(False))
-                      & (F.col(date_col) >= week_ago)))
+            .filter(~(F.coalesce(F.col("__inb"), F.lit(False)) & in_week))
             .drop("__inb"))
     return kept.unionByName(winners)
 

@@ -14,11 +14,12 @@ The reference iterates (period × fifth…most-recent) SEQUENTIALLY and each
 insert's CTE reads rows landed earlier in the same run
 (income-statement-transform-load.rkt:275-276: oldest column first) — so a
 fresh bulk load must evaluate the chain *within* the batch, not only
-against stored rows. That per-(symbol, period) sequential fold is a
-custom stateful operator: a ``cogroup(...).applyInPandas`` of the
-candidates (≤5 per group, each carrying its prior key from
-``expressions.prior_period_date``) with the symbol's stored rows, both
-sides shuffled on the natural key (act_symbol, period).
+against stored rows. That per-(symbol, period) sequential fold is one
+Catalyst aggregate: each group's stored rows and candidates (≤5 per
+folder, each carrying its prior key from ``expressions.prior_period_date``)
+are collected into one sorted array and walked by ``aggregate`` into a
+``map<date, row>`` of landed rows; SQL's own ``=``/``AND`` give the
+three-valued compare. No Python runs in the chain.
 
 Balance-sheet pages land three tables in ONE transaction per (period,
 date) (balance-sheet-transform-load.rkt:139-460: assets → liabilities →
@@ -34,9 +35,12 @@ validity below reproduces that: every raw cell must either be absent
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DateType, MapType
 from pyspark.storagelevel import StorageLevel
 
 from zacks_estimates_financial_statements_spark.functions import expressions as E
@@ -89,7 +93,7 @@ _INCOME_NULL_QUARTERLY = ("income_before_depreciation_and_amortization",
 def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
     """Parsed raw rows → typed, scaled candidate rows with reference cast
     validity applied (invalid rows dropped = per-row rollback). The
-    ``folder_date`` rides along to order the sni walk.
+    ``folder_date`` rides along to order the sni fold.
 
     ``clean_statement_cell`` runs once per plan: one ``transform`` over
     the array of the kind's cells, read by both the validity ``forall``
@@ -117,16 +121,20 @@ def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
             .select("act_symbol", "folder_date", "date", "period", *typed))
 
 
-def _three_valued_all(pairs) -> bool | None:
-    """bool_and of SQL equality comparisons: False dominates, else NULL,
-    else True."""
-    saw_null = False
-    for ok in pairs:
-        if ok is False:
-            return False
-        if ok is None:
-            saw_null = True
-    return None if saw_null else True
+def _sni_fires(kind: str, prior: Column, r: Column) -> Column:
+    """sni IS TRUE for candidate ``r`` against the landed ``prior`` row:
+    some compare group's SQL ``AND`` of ``prior.c = r.c`` is TRUE (income
+    Quarter rows test ``prior.c IS NULL`` on ``_INCOME_NULL_QUARTERLY``).
+    A missing prior never fires, also for those ``IS NULL`` columns."""
+    def same(c: str) -> Column:
+        if kind == "income" and c in _INCOME_NULL_QUARTERLY:
+            return F.when(F.col("period") == "Quarter", prior[c].isNull()) \
+                .otherwise(prior[c] == r[c])
+        return prior[c] == r[c]
+
+    return prior.isNotNull() & reduce(operator.or_, [
+        reduce(operator.and_, map(same, group)).eqNullSafe(True)
+        for group in _sni_compare_sets(kind)])
 
 
 def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
@@ -137,59 +145,38 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
     keeps the earliest folder's row for a key, as one run per folder
     would. Returns the accepted candidate rows without ``folder_date``.
 
-    Each candidate carries its F10 prior key (``prior_period_date``)
-    from Spark; the walk cogroups the candidates with the stored rows of
-    the same (act_symbol, period) and keys landed rows by ``date``."""
-    import pandas as pd
+    Each row becomes one ``(src, folder_date, date, prior, values…)``
+    struct, stored rows ``src = 0``, so ``sort_array`` puts them first and
+    the candidates in (folder_date, date) order. ``aggregate`` folds the
+    array into a ``map<date, row>``: a stored row always lands (a
+    duplicate stored key makes ``map_concat`` raise); a candidate lands
+    when its date is free (ON CONFLICT DO NOTHING) and no compare group
+    fires against the row at its F10 prior key."""
+    cols = _KIND_COLS[kind]
+    no_date = F.lit(None).cast("date")
+    both = stored.withColumns(
+        {"src": F.lit(0), "folder_date": no_date, "prior": no_date}
+    ).unionByName(candidates.withColumns(
+        {"src": F.lit(1),
+         "prior": E.prior_period_date(F.col("date"), F.col("period"))}))
+    row = F.struct("src", "folder_date", "date", "prior", *cols)
+    landed = F.create_map().cast(
+        MapType(DateType(), both.select(row).schema[0].dataType))
 
-    from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
+    def step(acc: Column, r: Column) -> Column:
+        take = (r["src"] == 0) | (
+            ~F.map_contains_key(acc, r["date"])
+            & ~_sni_fires(kind, F.try_element_at(acc, r["prior"]), r))
+        return F.when(take, F.map_concat(acc, F.create_map(r["date"], r))) \
+            .otherwise(acc)
 
-    ensure_package_on_executors(candidates.sparkSession)
-
-    compare_sets = _sni_compare_sets(kind)
-    out_schema = StructType([f for f in candidates.schema.fields
-                             if f.name != "folder_date"])
-    out_cols = out_schema.fieldNames()
-
-    # only stored rows of symbols present in the batch matter; semi-join
-    # keeps the shuffled state small at scale
-    stored_slim = stored.join(
-        F.broadcast(candidates.select("act_symbol").distinct()),
-        "act_symbol", "left_semi")
-
-    def walk(cand: "pd.DataFrame", landed_rows: "pd.DataFrame") -> "pd.DataFrame":
-        landed = {r["date"]: r for r in landed_rows.to_dict("records")}
-        accepted = []
-        for r in cand.sort_values(["folder_date", "date"],
-                                  kind="stable").to_dict("records"):
-            if r["date"] in landed:
-                continue  # ON CONFLICT DO NOTHING
-            prior = landed.get(r["prior_date"])
-            sni_any = False
-            if prior is not None:
-                for group in compare_sets:
-                    pairs = []
-                    for c in group:
-                        if (kind == "income" and r["period"] == "Quarter"
-                                and c in _INCOME_NULL_QUARTERLY):
-                            pairs.append(prior[c] is None)
-                            continue
-                        a, b = prior[c], r[c]
-                        pairs.append(None if (a is None or b is None) else a == b)
-                    if _three_valued_all(pairs) is True:
-                        sni_any = True
-                        break
-            if not sni_any:
-                accepted.append(r)
-                landed[r["date"]] = r
-        return pd.DataFrame(accepted, columns=out_cols)
-
-    keys = ["act_symbol", "period"]
-    return (candidates
-            .withColumn("prior_date",
-                        E.prior_period_date(F.col("date"), F.col("period")))
-            .groupBy(*keys).cogroup(stored_slim.groupBy(*keys))
-            .applyInPandas(walk, schema=out_schema))
+    return (both.groupBy("act_symbol", "period")
+            .agg(F.aggregate(F.sort_array(F.collect_list(row)), landed, step)
+                 .alias("landed"))
+            .select("act_symbol", "period",
+                    F.explode(F.map_values("landed")).alias("r"))
+            .filter("r.src = 1")
+            .select("act_symbol", "r.date", "period", *[f"r.{c}" for c in cols]))
 
 
 def load_statement(raw: DataFrame, kind: str,
@@ -216,10 +203,13 @@ def load_statement(raw: DataFrame, kind: str,
         stored = stored.join(stores[t].read(), list(PRIMARY_KEYS[t]))
     with cache_scope():
         # each upsert reads the accepted rows twice (its partition-value
-        # collect, then the append), once per destination table: run the
-        # parse and the sni walk once
-        accepted = persist(
-            apply_sni_chain(typed_candidates(raw, kind), stored, kind),
-            StorageLevel.MEMORY_AND_DISK_DESER)
+        # collect, then the append), once per destination table: persist
+        # the typed batch so each page is parsed once. Not the fold's
+        # output: a cached plan keeps the groupBy's shuffle partitions
+        # (AQE does not coalesce a cached plan), and the write would
+        # split into a file per partition.
+        candidates = persist(typed_candidates(raw, kind),
+                             StorageLevel.MEMORY_AND_DISK_DESER)
+        accepted = apply_sni_chain(candidates, stored, kind)
         for t in dest:
             stores[t].upsert_ignore(accepted.select(*TABLES[t].fieldNames()))

@@ -158,17 +158,18 @@ def archive_day(base: str, dataset: str, folder_date: str) -> dict:
 
 
 def read_archived_documents(spark: SparkSession, pattern: str,
-                            suffix: str) -> DataFrame:
+                            dataset: str) -> DataFrame:
     """Distributed read-back of day archives: ``pattern`` may glob many
     ``<date>.tar.xz`` artifacts; each archive is one binaryFile row and
     unpacks inside ONE executor task (a day archive is bounded by the
     symbol universe), so parallelism comes from the ACROSS-archives
-    axis — the unbounded one. Emits the same (path, content, file_stem,
-    folder_date) shape as the live-folder scan, so parsers run
-    unchanged against history."""
+    axis — the unbounded one. Emits the ``dataset`` members as the
+    (path, content, act_symbol, folder_date) rows ``read_documents``
+    gives for the live folder, so the parsers run unchanged on history."""
     from zacks_estimates_financial_statements_spark.util import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
+    suffix = SUFFIXES[dataset]
     raw = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.tar.xz").load(pattern)
 
@@ -192,15 +193,15 @@ def read_archived_documents(spark: SparkSession, pattern: str,
                             "path": f"{path}!{m.name}",
                             "content":
                                 tf.extractfile(m).read().decode("utf-8"),
-                            "file_stem": m.name[:-len(suffix)],
+                            "act_symbol": m.name[:-len(suffix)],
                             "folder_date": date,
                         })
             yield pd.DataFrame(
-                rows, columns=["path", "content", "file_stem",
+                rows, columns=["path", "content", "act_symbol",
                                "folder_date"])
 
     out = raw.select("path", "content").mapInPandas(
-        fn, "path string, content string, file_stem string, "
+        fn, "path string, content string, act_symbol string, "
             "folder_date string")
     return out.withColumn("folder_date",  # ansi-ok: archive member dir name, written by archive_day; tampered archives abort loudly
                           F.col("folder_date").cast("date"))

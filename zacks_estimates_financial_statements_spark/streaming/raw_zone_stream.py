@@ -106,7 +106,7 @@ def run_statements_stream(spark: SparkSession, base: str, tables_root: str,
     per kind (disjoint raw datasets and destination tables), each
     microbatch through the same parse + load call as the batch runner.
     A microbatch may span several folder dates: the parser picks the
-    cash-flow layout era per document, and the sni walk keeps the
+    cash-flow layout era per document, and the sni fold keeps the
     earliest folder's row per key. Returns the started queries."""
     from zacks_estimates_financial_statements_spark.operators.writer import TableStore
     from zacks_estimates_financial_statements_spark.parse.statements import parse_statements
